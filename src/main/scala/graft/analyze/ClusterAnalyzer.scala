@@ -1,9 +1,9 @@
 package graft.analyze
 
 import graft.classify.IssueClassifier
-import graft.model.Recommendation
+import graft.model.{NodeStats, Recommendation}
 import graft.parse.LogLineParser
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship analysis — Spark mapping of `analyze_logs`
@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions._
   * (`:270-309`).
   *
   * Where the reference re-parses every loaded line on every call
-  * (`cassandra_log_analyzer.py:745,808,831,847`), we compute each
-  * sub-result as a DataFrame over ONE cached classified relation.
+  * (`cassandra_log_analyzer.py:745,808,831,847`), the catalog keeps
+  * each node's classified part cached and its [[nodeStats]] row on the
+  * driver; the summary, histogram and recommendations are then
+  * driver-side sums over those fixed-size rows ([[histogram]],
+  * [[recommendationsFromCounts]]). The DataFrame forms below stay for
+  * the oracle queries and as the reference the driver-side forms are
+  * tested against.
   *
-  * Scale notes (100 TB): [[summary]] is a single scan + single hash
+  * Scale notes (100 TB): [[nodeStats]] is a single scan + single hash
   * aggregate keyed by node (map-side partial then final — the node
   * cardinality is tiny so the shuffle is negligible); [[issueHistogram]]
   * explodes at most 14 structs per line and aggregates on a 14-value key.
@@ -38,17 +43,34 @@ object ClusterAnalyzer {
         col("parsed") && IssueClassifier.isWarning(col("level"), col("message")))
   }
 
+  /** The 14 issue types in reference order — the column order of
+    * [[nodeStats]] and the index order of `NodeStats.issueCounts`.
+    */
+  val issueTypes: Seq[String] = IssueClassifier.allPatterns.map(_._2)
+
+  private def countIf(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+
+  /** The per-node aggregate behind every analysis output: `node`,
+    * `errors`, `warnings`, `total_lines`, then one count per
+    * [[issueTypes]] entry — the lines whose `issues` contain that type.
+    * One scan, one aggregate; a node without rows has no row.
+    */
+  def nodeStats(classified: DataFrame): DataFrame =
+    classified.groupBy("node").agg(
+      countIf(col("is_error")).as("errors"),
+      countIf(col("is_warning")).as("warnings") +:
+        count(lit(1)).as("total_lines") +:
+        issueTypes.map(t =>
+          countIf(exists(col("issues"), _.getField("issueType") === t)).as(t)): _*)
+
   /** Per-node summary (`analysis['summary']`,
     * `cassandra_log_analyzer.py:259-263`): errors / warnings over PARSED
     * lines (dual counting allowed), `total_lines` over ALL lines
-    * including blanks and unparsed continuations (`:231,:262`).
-    * One scan, one aggregate.
+    * including blanks and unparsed continuations (`:231,:262`) — a
+    * projection of [[nodeStats]] (the unused counts are pruned).
     */
   def summary(classified: DataFrame): DataFrame =
-    classified.groupBy("node").agg(
-      sum(when(col("is_error"), 1L).otherwise(0L)).as("errors"),
-      sum(when(col("is_warning"), 1L).otherwise(0L)).as("warnings"),
-      count(lit(1)).as("total_lines"))
+    nodeStats(classified).select("node", "errors", "warnings", "total_lines")
 
   /** Global issue histogram (`analysis['issue_counts']`,
     * `cassandra_log_analyzer.py:253-254`): every (line, pattern) hit
@@ -63,6 +85,13 @@ object ClusterAnalyzer {
       .agg(count(lit(1)).as("occurrences"))
       .orderBy(desc("occurrences"), asc("issue_type"))
 
+  /** [[issueHistogram]] over collected per-node stats: the per-type
+    * sums that are non-zero, in the same (count desc, type asc) order.
+    */
+  def histogram(stats: Seq[NodeStats]): Seq[(String, Long)] =
+    issueTypes.indices.map(i => issueTypes(i) -> stats.map(_.issueCounts(i)).sum)
+      .filter(_._2 > 0).sortBy { case (t, n) => (-n, t) }
+
   /** `errors_by_node` (`cassandra_log_analyzer.py:247`): full parsed
     * entries of error lines, in (node, file order). Kept as a DataFrame —
     * not `collect_list` — so it never materializes a node's errors in one
@@ -70,21 +99,6 @@ object ClusterAnalyzer {
     */
   def errorsByNode(classified: DataFrame): DataFrame =
     classified.where(col("is_error"))
-      .select("node", "level", "timestamp", "thread", "clazz", "line", "message", "line_number")
-      .orderBy("node", "line_number")
-
-  /** `warnings_by_node` (`cassandra_log_analyzer.py:251`). */
-  def warningsByNode(classified: DataFrame): DataFrame =
-    classified.where(col("is_warning"))
-      .select("node", "level", "timestamp", "thread", "clazz", "line", "message", "line_number")
-      .orderBy("node", "line_number")
-
-  /** `timeline` (`cassandra_log_analyzer.py:256-257`): parsed entries with
-    * level in (ERROR, WARN), file order — computed but never rendered by
-    * the reference (quirk preserved; SURVEY.md §7.4.5).
-    */
-  def timeline(classified: DataFrame): DataFrame =
-    classified.where(col("parsed") && col("level").isin("ERROR", "WARN"))
       .select("node", "level", "timestamp", "thread", "clazz", "line", "message", "line_number")
       .orderBy("node", "line_number")
 

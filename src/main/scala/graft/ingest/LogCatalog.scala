@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.analyze.ClusterAnalyzer
-import graft.model.Schemas
+import graft.model.{NodeStats, Schemas}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,14 @@ import scala.collection.mutable
 /** The engine's replacement for the reference's session-global
   * `logs_storage: dict[node_key -> file content]`
   * (`cassandra_log_analyzer.py:336`): an explicit catalog of named raw
-  * line DataFrames, with the parse+classify relation computed once and
-  * cached (the reference recomputes it on every analytical call —
-  * `cassandra_log_analyzer.py:745,808,831,847`).
+  * line DataFrames with per-node analysis state — the reference
+  * re-parses every loaded line on every analytical call
+  * (`cassandra_log_analyzer.py:745,808,831,847`). Per node key:
+  *  - the parse+classify part, cached the first time anything uses it;
+  *  - its [[NodeStats]], computed for every node that lacks them in ONE
+  *    aggregate job ([[stats]]), then answered on the driver.
+  * A load replaces (and unpersists) only its own key's state, so the
+  * next analysis after loading 1 of k nodes parses 1 node, not k.
   *
   * Key semantics preserved (SURVEY.md §7.4.5):
   *  - SSH-style loads are keyed `{node}_{type}`
@@ -21,33 +26,39 @@ import scala.collection.mutable
   *    (`:729`);
   *  - `split('\n')` keeps a trailing empty line, which counts in
   *    `total_lines` (`:231,:730,:262`) — we split with limit -1;
-  *  - node iteration order = insertion order (LinkedHashMap).
+  *  - node iteration order = insertion order (LinkedHashMap); a reload
+  *    keeps the key's position, like a Python dict assignment.
   */
 final class LogCatalog(val spark: SparkSession) {
 
-  private val storage = mutable.LinkedHashMap.empty[String, DataFrame]
-  private var cachedClassified: Option[DataFrame] = None
-
-  private def invalidate(): Unit = synchronized {
-    cachedClassified.foreach(_.unpersist())
-    cachedClassified = None
+  /** One node key's raw lines and the state derived from them. */
+  private final class Node(val raw: DataFrame) {
+    var classified: Option[DataFrame] = None
+    var stats: Option[NodeStats] = None
   }
 
-  private def linesDf(nodeKey: String, lines: Seq[String]): DataFrame = {
-    val rows = lines.zipWithIndex.map { case (l, i) => Row(nodeKey, (i + 1).toLong, l) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), Schemas.rawLine)
+  private val storage = mutable.LinkedHashMap.empty[String, Node]
+
+  private def put(key: String, raw: DataFrame): Unit = {
+    storage.get(key).foreach(_.classified.foreach(_.unpersist()))
+    storage(key) = new Node(raw)
   }
+
+  private def putLines(key: String, lines: Seq[String]): (Long, Int) = {
+    val rows = lines.zipWithIndex.map { case (l, i) => Row(key, (i + 1).toLong, l) }
+    put(key, spark.createDataFrame(spark.sparkContext.parallelize(rows), Schemas.rawLine))
+    (lines.size.toLong, storage.size)
+  }
+
+  private def emptyRaw: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.rawLine)
 
   /** `load_logs` (`cassandra_log_analyzer.py:724-736`): inline content
     * under the BARE node name. Returns (line count incl. trailing empty,
     * total node keys) — the tool's reported numbers.
     */
-  def loadInline(nodeName: String, content: String): (Long, Int) = synchronized {
-    val lines = content.split("\n", -1).toSeq // Python str.split('\n') parity
-    storage(nodeName) = linesDf(nodeName, lines)
-    invalidate()
-    (lines.size.toLong, storage.size)
-  }
+  def loadInline(nodeName: String, content: String): (Long, Int) =
+    loadContent(nodeName, content)
 
   /** Load raw content under an EXPLICIT node key — the landing point
     * for [[RemoteFetcher]] fetches (SSH-style `{node}_{type}` keys,
@@ -55,10 +66,7 @@ final class LogCatalog(val spark: SparkSession) {
     * parity as [[loadInline]].
     */
   def loadContent(nodeKey: String, content: String): (Long, Int) = synchronized {
-    val lines = content.split("\n", -1).toSeq
-    storage(nodeKey) = linesDf(nodeKey, lines)
-    invalidate()
-    (lines.size.toLong, storage.size)
+    putLines(nodeKey, content.split("\n", -1).toSeq) // Python str.split('\n') parity
   }
 
   /** `load_logs_from_ssh`-shaped load from a (local or staged) file path,
@@ -85,10 +93,7 @@ final class LogCatalog(val spark: SparkSession) {
         else (all, Seq.empty[String])
       body.takeRight(n) ++ trailer
     }
-    val key = s"${nodeName}_$logType"
-    storage(key) = linesDf(key, lines)
-    invalidate()
-    (lines.size.toLong, storage.size)
+    putLines(s"${nodeName}_$logType", lines)
   }
 
   /** Scale-path file load: `spark.read.text` over a path/glob (no
@@ -99,9 +104,8 @@ final class LogCatalog(val spark: SparkSession) {
     */
   def loadDistributed(nodeName: String, logType: String, pathOrGlob: String): Unit = synchronized {
     val key = s"${nodeName}_$logType"
-    storage(key) = spark.read.text(pathOrGlob)
-      .select(lit(key).as("node"), lit(-1L).as("line_number"), col("value"))
-    invalidate()
+    put(key, spark.read.text(pathOrGlob)
+      .select(lit(key).as("node"), lit(-1L).as("line_number"), col("value")))
   }
 
   /** Node keys in insertion order (= reference dict order). */
@@ -122,7 +126,7 @@ final class LogCatalog(val spark: SparkSession) {
   /** UNION ALL of every node's raw lines (SURVEY.md §2.7 U1). */
   def raw: DataFrame = synchronized {
     require(storage.nonEmpty, "no logs loaded — use loadInline/loadFile first")
-    storage.values.reduce(_.unionByName(_))
+    storage.values.map(_.raw).reduce(_.unionByName(_))
   }
 
   /** Raw lines of one node key; a missing key yields an EMPTY relation,
@@ -130,18 +134,42 @@ final class LogCatalog(val spark: SparkSession) {
     * `cassandra_log_analyzer.py:780`).
     */
   def rawFor(nodeKey: String): DataFrame = synchronized {
-    storage.getOrElse(nodeKey, spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], Schemas.rawLine))
+    storage.get(nodeKey).fold(emptyRaw)(_.raw)
   }
 
-  /** The parse+classify relation, computed once and cached — the
-    * engine-side answer to the reference's recompute-per-call.
+  /** UNION ALL of the cached parse+classify parts of `keys` (unknown
+    * keys skipped; none left yields an empty classified relation). The
+    * union itself is never cached — its parts are.
     */
-  def classified: DataFrame = synchronized {
-    cachedClassified.getOrElse {
-      val df = ClusterAnalyzer.classify(raw).cache()
-      cachedClassified = Some(df)
-      df
+  def classifiedOf(keys: Seq[String]): DataFrame = synchronized {
+    val parts = keys.flatMap(storage.get).map { n =>
+      n.classified.getOrElse {
+        val df = ClusterAnalyzer.classify(n.raw).cache()
+        n.classified = Some(df)
+        df
+      }
     }
+    parts.reduceOption(_.unionByName(_)).getOrElse(ClusterAnalyzer.classify(emptyRaw))
+  }
+
+  /** The parse+classify relation of every node. */
+  def classified: DataFrame = classifiedOf(nodeKeys)
+
+  /** Per-node stats in insertion order, computing those of every node
+    * that lacks them in one [[ClusterAnalyzer.nodeStats]] job. A node
+    * whose relation has no rows is absent, as in the reference's
+    * summary.
+    */
+  def stats: Seq[(String, NodeStats)] = synchronized {
+    val missing = storage.collect { case (k, n) if n.stats.isEmpty => k }.toSeq
+    if (missing.nonEmpty) {
+      val rows = ClusterAnalyzer.nodeStats(classifiedOf(missing)).collect()
+        .map(r => r.getString(0) -> NodeStats(r.getLong(1), r.getLong(2), r.getLong(3),
+          (4 until r.length).map(r.getLong)))
+        .toMap
+      val none = NodeStats(0L, 0L, 0L, ClusterAnalyzer.issueTypes.map(_ => 0L).toIndexedSeq)
+      missing.foreach(k => storage(k).stats = Some(rows.getOrElse(k, none)))
+    }
+    storage.toSeq.collect { case (k, n) if n.stats.exists(_.totalLines > 0) => k -> n.stats.get }
   }
 }

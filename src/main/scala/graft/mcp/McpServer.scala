@@ -3,6 +3,7 @@ package graft.mcp
 import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, OutputStreamWriter, PrintWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.report.Reports
@@ -101,15 +102,19 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
         Right(if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
         else Reports.renderAnalysis(catalog))
       case "search_logs" =>
-        req(args, "pattern").map { pattern =>
-          Reports.renderSearch(catalog, pattern,
+        req(args, "pattern").flatMap { pattern =>
+          try Right(Reports.renderSearch(catalog, pattern,
             bool(args, "case_sensitive").getOrElse(false),
-            str(args, "node_filter"))
+            str(args, "node_filter")))
+          catch {
+            case e: java.util.regex.PatternSyntaxException =>
+              Left((-32602, s"Expression régulière invalide: ${e.getDescription}"))
+          }
         }
       case "get_errors" =>
-        Right(if (catalog.isEmpty) "Aucun log chargé."
-        else Reports.renderErrors(catalog, str(args, "node_name"),
-          int(args, "limit").getOrElse(50)))
+        limit(args, 50).map(n =>
+          if (catalog.isEmpty) "Aucun log chargé."
+          else Reports.renderErrors(catalog, str(args, "node_name"), n))
       case "compare_nodes" =>
         Right(Reports.renderCompare(catalog, strSeq(args, "nodes")))
       case "detect_issues" =>
@@ -120,20 +125,20 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
       // (q183), slot-anomaly screening (q191), exact-dedup (q25),
       // each through the same shared expressions its gate executes
       case "mine_templates" =>
-        Right(if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
-        else Reports.renderTemplates(catalog,
-          int(args, "limit").getOrElse(20)))
+        limit(args, 20).map(n =>
+          if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
+          else Reports.renderTemplates(catalog, n))
       case "detect_slot_anomalies" =>
         Right(if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
         else Reports.renderSlotAnomalies(catalog))
       case "deduplicate_lines" =>
-        Right(if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
-        else Reports.renderDedup(catalog,
-          int(args, "limit").getOrElse(20)))
+        limit(args, 20).map(n =>
+          if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
+          else Reports.renderDedup(catalog, n))
       case "group_stack_traces" =>
-        Right(if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
-        else Reports.renderStackTraces(catalog,
-          int(args, "limit").getOrElse(20)))
+        limit(args, 20).map(n =>
+          if (catalog.isEmpty) "Aucun log chargé. Utilisez load_logs d'abord."
+          else Reports.renderStackTraces(catalog, n))
       // lake + vector extension tools: each runs the gated registry
       // entry itself (q274/q284/q271+q295) over the caller's parquet
       // table directory — the engine's lake and vector tiers surfaced
@@ -282,6 +287,12 @@ object McpServer {
     }
   private[mcp] def req(j: JValue, k: String): Either[(Int, String), String] =
     str(j, k).toRight((-32602, s"Argument requis manquant: $k"))
+  /** The `limit` argument, or `default`; a negative one is rejected. */
+  private[mcp] def limit(j: JValue, default: Int): Either[(Int, String), Int] =
+    int(j, "limit").getOrElse(default) match {
+      case n if n < 0 => Left((-32602, s"Argument invalide: limit = $n (doit être >= 0)"))
+      case n => Right(n)
+    }
 
   /** The nine parity tools with the reference's names, descriptions,
     * and input schemas (`cassandra_log_analyzer.py:383-575`) — the
@@ -383,7 +394,9 @@ object McpServer {
       |]""".stripMargin)
 
   /** One JSON-RPC message in → at most one response out (notifications
-    * — no `id` — produce none).
+    * — no `id` — produce none). Whatever a handler throws fails that
+    * request alone: a -32603 error naming the exception class, never the
+    * loop or the loaded catalog.
     */
   def handleLine(line: String, dispatcher: McpDispatcher): Option[JValue] = {
     val msg =
@@ -394,14 +407,17 @@ object McpServer {
       }
     val id = msg \ "id"
     val method = msg \ "method" match { case JString(m) => m; case _ => "" }
+    def handle(): Either[(Int, String), JValue] =
+      try dispatcher.handle(method, msg \ "params")
+      catch {
+        case NonFatal(e) => Left((-32603, s"Erreur interne: ${e.getClass.getName}" +
+          Option(e.getMessage).flatMap(_.linesIterator.find(_.nonEmpty)).fold("")(": " + _)))
+      }
     if (id == JNothing || id == JNull) {
       // notification: execute state-changing methods, never respond
-      if (!method.startsWith("notifications/")) {
-        dispatcher.handle(method, msg \ "params")
-        ()
-      }
+      if (!method.startsWith("notifications/")) handle()
       None
-    } else dispatcher.handle(method, msg \ "params") match {
+    } else handle() match {
       case Right(result) => Some(JObject(
         "jsonrpc" -> JString("2.0"), "id" -> id, "result" -> result))
       case Left((code, m)) => Some(errorResponse(id, code, m))

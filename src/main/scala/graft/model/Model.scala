@@ -31,12 +31,18 @@ final case class LogEntry(
   */
 final case class Issue(severity: String, issueType: String)
 
-/** Per-node summary row (`analysis['summary']`,
-  * `cassandra_log_analyzer.py:259-263`). `totalLines` counts ALL split
-  * lines including blanks/unparsed; errors/warnings count parsed lines
-  * only (dual counting allowed — one line can be both).
+/** One node's analysis counts: its summary row (`analysis['summary']`,
+  * `cassandra_log_analyzer.py:259-263`) plus its share of the issue
+  * histogram. `totalLines` counts ALL split lines including
+  * blanks/unparsed; errors/warnings count parsed lines only (dual
+  * counting allowed — one line can be both). `issueCounts(i)` is the
+  * number of lines whose issues contain the i-th type of
+  * `IssueClassifier.allPatterns` — a type occurs at most once per line,
+  * so summing over nodes gives the global (line, pattern) histogram.
+  * Fixed size per node, whatever the node's line count.
   */
-final case class NodeSummary(node: String, errors: Long, warnings: Long, total_lines: Long)
+final case class NodeStats(errors: Long, warnings: Long, totalLines: Long,
+    issueCounts: IndexedSeq[Long])
 
 /** A threshold-rule recommendation (`cassandra_log_analyzer.py:270-309`). */
 final case class Recommendation(severity: String, issue: String, recommendation: String)

@@ -2,7 +2,7 @@ package graft.report
 
 import graft.analyze.ClusterAnalyzer
 import graft.ingest.LogCatalog
-import graft.model.Recommendation
+import graft.model.{NodeStats, Recommendation}
 import graft.query.LogQueries
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * `cassandra_log_analyzer.py:747-770` (analyze), `:790-797` (search),
   * `:821-825` (errors), `:833-841` (compare), `:849-855` (issues).
   *
-  * Every renderer collects an already-aggregated (tiny) DataFrame; node
-  * order follows catalog insertion order = reference dict order.
+  * The analysis, compare and issues renderers read the catalog's
+  * per-node stats on the driver; the others collect an
+  * already-aggregated (tiny) DataFrame. Node order follows catalog
+  * insertion order = reference dict order.
   */
 object Reports {
 
@@ -22,28 +24,31 @@ object Reports {
     else if (severity == "HIGH") "IMPORTANT"
     else "ATTENTION" // `cassandra_log_analyzer.py:764,853`
 
+  /** The analysis inputs from the catalog's per-node stats: summary rows
+    * in insertion order, histogram, recommendations — no Spark job once
+    * the stats exist.
+    */
+  private def analysis(catalog: LogCatalog)
+      : (Seq[(String, NodeStats)], Seq[(String, Long)], Seq[Recommendation]) = {
+    val stats = catalog.stats
+    val hist = ClusterAnalyzer.histogram(stats.map(_._2))
+    (stats, hist, ClusterAnalyzer.recommendationsFromCounts(hist.toMap))
+  }
+
   /** `analyze_cluster` Markdown (`cassandra_log_analyzer.py:747-767`). */
   def renderAnalysis(catalog: LogCatalog): String = {
-    val classified = catalog.classified
-    val summaryByNode = ClusterAnalyzer.summary(classified).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val hist = ClusterAnalyzer.issueHistogram(classified).collect()
-    val recs = ClusterAnalyzer.recommendationsFromCounts(
-      hist.map(r => r.getString(0) -> r.getLong(1)).toMap)
-
+    val (stats, hist, recs) = analysis(catalog)
     val sb = new StringBuilder("# Analyse du Cluster Cassandra\n\n")
     sb ++= "## Résumé par Node\n"
-    catalog.nodeKeys.foreach { node =>
-      summaryByNode.get(node).foreach { s =>
-        sb ++= s"\n### $node\n"
-        sb ++= s"- Erreurs: ${s.getLong(1)}\n"
-        sb ++= s"- Warnings: ${s.getLong(2)}\n"
-        sb ++= s"- Total lignes: ${s.getLong(3)}\n"
-      }
+    stats.foreach { case (node, s) =>
+      sb ++= s"\n### $node\n"
+      sb ++= s"- Erreurs: ${s.errors}\n"
+      sb ++= s"- Warnings: ${s.warnings}\n"
+      sb ++= s"- Total lignes: ${s.totalLines}\n"
     }
     sb ++= "\n## Problèmes Détectés\n"
-    hist.foreach { r =>
-      sb ++= s"- ${r.getString(0)}: ${r.getLong(1)} occurrences\n"
+    hist.foreach { case (t, n) =>
+      sb ++= s"- $t: $n occurrences\n"
     }
     if (recs.nonEmpty) {
       sb ++= "\n## Recommandations\n"
@@ -85,23 +90,21 @@ object Reports {
   /** `compare_nodes` Markdown table (`cassandra_log_analyzer.py:833-841`). */
   def renderCompare(catalog: LogCatalog, nodes: Seq[String] = Seq.empty): String = {
     val requested = if (nodes.nonEmpty) nodes else catalog.nodeKeys
-    val rows = LogQueries.compareNodes(catalog, requested).collect()
     val sb = new StringBuilder("# Comparaison des Nodes\n\n")
     sb ++= "| Node | Erreurs | Warnings | Lignes |\n"
     sb ++= "|------|---------|----------|--------|\n"
-    rows.foreach { r =>
-      sb ++= s"| ${r.getString(0)} | ${r.getLong(1)} | ${r.getLong(2)} | ${r.getLong(3)} |\n"
+    LogQueries.compareStats(catalog, requested).foreach { case (n, s) =>
+      sb ++= s"| $n | ${s.errors} | ${s.warnings} | ${s.totalLines} |\n"
     }
     sb.result()
   }
 
   /** `detect_issues` Markdown (`cassandra_log_analyzer.py:849-855`). */
   def renderIssues(catalog: LogCatalog, severity: String = "all"): String = {
-    val recs = LogQueries.detectIssues(catalog, severity).collect()
     val sb = new StringBuilder("# Problèmes Détectés\n\n")
-    recs.foreach { r =>
-      sb ++= s"${emoji(r.getString(0))} **${r.getString(1)}** (${r.getString(0)})\n"
-      sb ++= s"→ ${r.getString(2)}\n\n"
+    LogQueries.issueRecommendations(catalog, severity).foreach { rec =>
+      sb ++= s"${emoji(rec.severity)} **${rec.issue}** (${rec.severity})\n"
+      sb ++= s"→ ${rec.recommendation}\n\n"
     }
     sb.result()
   }
@@ -121,17 +124,11 @@ object Reports {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
-    val classified = catalog.classified
-    val summaryByNode = ClusterAnalyzer.summary(classified).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val hist = ClusterAnalyzer.issueHistogram(classified).collect()
-    val recs: Seq[Recommendation] = ClusterAnalyzer.recommendationsFromCounts(
-      hist.map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val summaryJson = catalog.nodeKeys.flatMap(n => summaryByNode.get(n).map(n -> _))
-      .map { case (n, s) =>
-        s"${jstr(n)}: {\"errors\": ${s.getLong(1)}, \"warnings\": ${s.getLong(2)}, \"total_lines\": ${s.getLong(3)}}"
-      }.mkString("{", ", ", "}")
-    val histJson = hist.map(r => s"${jstr(r.getString(0))}: ${r.getLong(1)}")
+    val (stats, hist, recs) = analysis(catalog)
+    val summaryJson = stats.map { case (n, s) =>
+      s"${jstr(n)}: {\"errors\": ${s.errors}, \"warnings\": ${s.warnings}, \"total_lines\": ${s.totalLines}}"
+    }.mkString("{", ", ", "}")
+    val histJson = hist.map { case (t, n) => s"${jstr(t)}: $n" }
       .mkString("{", ", ", "}")
     val recsJson = recs.map { rec =>
       s"{\"severity\": ${jstr(rec.severity)}, \"issue\": ${jstr(rec.issue)}, \"recommendation\": ${jstr(rec.recommendation)}}"

@@ -113,6 +113,12 @@ class GoldenCorpusSpec extends SparkSuite {
     assert(at.length == 1 && at.head.getString(2).startsWith("at org.apache"))
     // case-sensitive flag
     assert(LogQueries.searchLogs(catalog, "RUNTIMEEXCEPTION", caseSensitive = true).isEmpty)
+    // str.strip() parity: a tab-indented frame loses its tab (and a
+    // trailing tab/space mix), not only spaces
+    val tabbed = new LogCatalog(spark)
+    tabbed.loadInline("n", s"ERROR [${ts(1)}] [m] C:1 - boom\n\tat org.x.Y(Y.java:1)\t \n")
+    val frames = LogQueries.searchLogs(tabbed, "org\\.x").collect()
+    assert(frames.map(_.getString(2)).toSeq == Seq("at org.x.Y(Y.java:1)"))
   }
 
   test("search node_filter: missing node yields empty, not error (CLA:780)") {
@@ -135,6 +141,11 @@ class GoldenCorpusSpec extends SparkSuite {
     val rows = LogQueries.compareNodes(catalog,
       Seq("node2_system", "ghost", "node1_system")).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("node2_system", "node1_system"))
+    // a repeated node is listed once per request entry (CLA:837-840)
+    val twice = LogQueries.compareNodes(catalog,
+      Seq("node1_system", "node1_system")).collect()
+    assert(twice.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq("node1_system" -> 4L, "node1_system" -> 4L))
   }
 
   test("detect_issues severity filter (CLA:852)") {

@@ -252,6 +252,39 @@ class McpServerSpec extends SparkSuite {
     assert((unknown \ "id") === JInt(7))
   }
 
+  test("a bad request fails alone: the loop answers the next one, " +
+      "one response per id") {
+    // a transport that throws on every command: the escaped exception
+    // from load_logs_from_ssh must become a -32603, not end serve()
+    val d = new McpDispatcher(new LogCatalog(spark),
+      new RemoteFetcher(_ => new RemoteFetch.CommandRunner {
+        def run(command: String) = throw new IllegalStateException("transport down")
+      }))
+    def call(id: Int, name: String, args: String) =
+      s"""{"jsonrpc":"2.0","id":$id,"method":"tools/call","params":{"name":"$name","arguments":$args}}"""
+    val responses = roundTrip(d,
+      call(1, "load_logs", """{"node_name":"node1","log_content":"ERROR [2024-01-01 10:00:01,000] [r] C:5 - Connection timeout detected"}"""),
+      call(2, "get_errors", """{"limit":-1}"""),
+      call(3, "search_logs", """{"pattern":"([unclosed"}"""),
+      call(4, "mine_templates", """{"limit":-5}"""),
+      call(5, "configure_ssh_node", """{"node_name":"n1","host":"h","username":"u"}"""),
+      call(6, "load_logs_from_ssh", """{"node_name":"n1"}"""),
+      // the same failure as a notification: no response, loop survives
+      """{"jsonrpc":"2.0","method":"tools/call","params":{"name":"load_logs_from_ssh","arguments":{"node_name":"n1"}}}""",
+      call(7, "compare_nodes", """{"nodes":["node1","node1"]}"""),
+      call(8, "analyze_cluster", "{}"))
+    assert(responses.map(_ \ "id") === (1 to 8).map(JInt(_)))
+    def code(i: Int) = responses(i) \ "error" \ "code"
+    assert(code(1) === JInt(-32602) && code(2) === JInt(-32602) &&
+      code(3) === JInt(-32602))
+    assert(code(5) === JInt(-32603))
+    val JString(msg) = (responses(5) \ "error" \ "message"): @unchecked
+    assert(msg.contains("IllegalStateException"))
+    assert(resultText(responses(6)).contains(
+      "| node1 | 1 | 0 | 1 |\n| node1 | 1 | 0 | 1 |\n"))
+    assert(resultText(responses(7)).contains("Erreurs: 1"))
+  }
+
   test("ssh runner rejects option-shaped destinations (argv injection)") {
     intercept[IllegalArgumentException] {
       new RemoteFetch.SshProcessRunner("host", "-oProxyCommand=evil")
