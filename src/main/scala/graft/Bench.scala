@@ -1,44 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // comma-separated allowlist for targeted iteration (dev only; the
     // driver runs the full set)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).toSet)
     def included(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-adaptive post-shuffle sizing (optimization guide §2.2):
-      // with parallelismFirst (the default) AQE refuses to coalesce
-      // below the core count, so every exchange over this suite's
-      // KB-scale frames launches $cpus tasks whose scheduling dwarfs
-      // their work; `false` lets AQE size partitions by BYTES
-      // (advisoryPartitionSizeInBytes), which is exactly the behavior
-      // that scales — tiny inputs collapse to one task locally, TB
-      // inputs still fan out to thousands of partitions on a cluster.
-      // The Spark docs themselves recommend false for production.
-      // Parameterised (default unchanged) so the config pair can be
-      // A/B-measured at identical code — the round-18 verdict asked
-      // for a per-query A/B to clear its 26 suspected regressions.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      // let AQE re-size shuffles INSIDE cached plans too: the graph
-      // tier pins index-sized intermediates via CacheSlot, and with
-      // this off (the default) every cached subtree keeps the full
-      // static shuffle width — measured 32×-more tasks and 8× the
-      // executor time on q315/q327 for identical results
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-bench")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Warm EVERY query once at the smallest scale factor: plan shapes are
     // identical across SFs, so this compiles each query's generated code
     // (Janino, ~0.5-2s per distinct wholestage) without touching the
@@ -66,93 +36,51 @@ object Bench {
     // Timed phase: 3 FULL PASSES over the suite, per-query MIN across
     // passes (min over successful runs is the standard low-variance
     // steady-state estimator at these sub-second scales). A query's
-    // repetitions are deliberately NOT back-to-back: BENCH_r07 showed a
-    // ~2-minute transient (host contention / background JVM event)
-    // crushing 8 CONSECUTIVE queries 10-50× — with back-to-back
-    // repetitions both samples of a query sit inside any window longer
-    // than its own runtime, so the min cannot escape it, while
+    // repetitions are deliberately NOT back-to-back: a transient
+    // (host contention, a background JVM event) longer than a query's
+    // runtime would hold every back-to-back sample of it, while
     // pass-interleaving puts ~a full suite length between samples and a
     // transient must recur over the same region of EVERY pass to
-    // corrupt a min. All-failed reports -1.
+    // corrupt a min.
     val names = SparkEntry.queries.keys.toSeq.filter(included)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
+    val failures = scala.collection.mutable.Map.empty[String, String]
     val passTotals = (1 to 3).map { _ =>
       val p0 = System.nanoTime()
       SparkEntry.queries.foreach { case (name, fn) =>
         if (included(name)) {
           val t0 = System.nanoTime()
-          val ok =
-            try { run(fn(spark, sfDir)); true }
-            catch { case _: Throwable => false }
-          val dt = (System.nanoTime() - t0) / 1e9
+          try {
+            run(fn(spark, sfDir))
+            samples(name) = (System.nanoTime() - t0) / 1e9 :: samples(name)
+          } catch { case e: Throwable =>
+            failures(name) = e.getClass.getName
+            System.err.println(s"[bench] $name failed: $e")
+          }
           spark.catalog.clearCache()
-          if (ok) samples(name) = dt :: samples(name)
         }
       }
       (System.nanoTime() - p0) / 1e9
     }
     val results = names.map { name =>
       val dts = samples(name)
-      name -> (if (dts.nonEmpty) dts.min else -1.0)
+      name -> (if (dts.nonEmpty) Right(dts.min) else Left(failures(name)))
     }
-    // ms precision: full-precision doubles made the one-line JSON long
-    // enough to overflow the driver's stdout-tail capture window with
-    // 157 queries (BENCH_r09 recorded parsed:null) — 3 decimals is
-    // ample for sub-second steady-state timings and ~35% shorter
-    // Locale.ROOT explicitly: the f-interpolator uses the JVM default
-    // locale, and a comma-decimal locale (de_DE, ...) would emit "1,234"
-    // and make the one-line JSON unparseable
-    def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // pass_sec: wall-clock per pass — a pass total far above the others
-    // localizes a transient to that pass without re-running anything
-    val passJson = passTotals
-      .map(t => String.format(java.util.Locale.ROOT, "%.2f", Double.box(t)))
-      .mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","pass_sec":$passJson}"""
-    // The FULL contract line first, then a SHORT summary line last:
-    // the driver's artifact preserves only a stdout TAIL, and with
-    // 300+ queries the full line's head (including "metric"/"value")
-    // falls outside the capture window (BENCH_r15/r16 recorded
-    // parsed:null). The trailing line is complete, parseable JSON
-    // carrying the totals; the full per-query map lives in the line
-    // above AND in the machine-readable file below.
-    println(line)
-    // distinct metric name: two "total" lines would double-count in a
-    // line-oriented consumer that aggregates every total (round-17
-    // ADVICE); the summary stays last so a stdout TAIL always holds it.
-    // The summary's "queries" carried {} for two rounds (the full map
-    // overflows the driver's ~2.4 KB tail window), leaving PERF blind
-    // to per-query movement — it now carries the TOP-20 SLOWEST queries
-    // (the only ones whose movement is individually material) plus
-    // per-family subtotals in "families"; both measured to fit the tail
-    // window (~1.5 KB total). The full 333-entry map still prints on
-    // the line above AND persists to the cpus-keyed file below.
-    val top20 = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    val topJson = top20.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val famJson = SparkEntry.families.toSeq.sortBy(_._1).map {
-      case (fam, members) =>
-        val sub = results.collect {
-          case (k, v) if v >= 0 && members(k) => v }.sum
-        s"\"" + fam + "\":" + fmt(sub)
-    }.mkString("{", ",", "}")
-    // ALSO persist the full line to a machine-readable file: the file
-    // keeps round-over-round per-query comparison independent of
-    // tail-capture luck. Path is cwd-relative by default (running
-    // Bench from another checkout must not mutate /root/repo), and a
-    // failed write warns instead of vanishing. KEYED BY CPU COUNT:
-    // round 18's 8-core scaling run clobbered the 32-core run's file,
-    // destroying the primary per-query record of the driver's main run.
+    // KEYED BY CPU COUNT so an 8-core scaling run cannot clobber the
+    // main run's per-query record; cwd-relative so running Bench from
+    // another checkout leaves this one alone.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_queries_c$cpus.json")
-    println(s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec","queries":$topJson,"families":$famJson,"sf":"$sfDir","pass_sec":$passJson,"n_queries":${results.size},"queries_file":"$outPath"}""")
+    val (line, summary) =
+      report(results, SparkEntry.families, sfDir, passTotals, outPath)
+    // The FULL contract line first, then the SHORT summary line last:
+    // a run's recorded artifact keeps only a ~2.4 KB stdout TAIL, and
+    // with 300+ queries the full line's head falls outside it. The
+    // full line also persists to the queries file, so round-over-round
+    // per-query comparison does not depend on tail-capture luck.
+    println(line)
+    println(summary)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath).toAbsolutePath, line + "\n")
     catch {
@@ -160,5 +88,50 @@ object Bench {
         System.err.println(s"WARN: bench output write to $outPath failed: $e")
     }
     spark.stop()
+  }
+
+  /** Failed queries named in the summary line; the queries file has all. */
+  val summaryFailures = 5
+
+  /** The bench's two stdout lines from each query's outcome: its fastest
+    * successful pass in seconds, or the exception class of its last
+    * failure when every pass failed.
+    *
+    *  - the full line (`"metric":"total"`) carries every successful
+    *    query's time under `queries` and every failed one's exception
+    *    class under `failed`;
+    *  - the summary line (`"metric":"total_summary"`, a distinct name so
+    *    a line-oriented consumer never double-counts) carries the
+    *    top-20 slowest queries, the per-family subtotals, `n_failed` and
+    *    the first [[summaryFailures]] failures, sized to fit the
+    *    ~2.4 KB stdout tail a run's record keeps.
+    *
+    * `value` sums successful queries only: a failure has no time, and
+    * counting it would make a broken query look fast.
+    */
+  def report(results: Seq[(String, Either[String, Double])],
+             families: Map[String, Set[String]], sfDir: String,
+             passSec: Seq[Double], queriesFile: String): (String, String) = {
+    // ms precision keeps the one-line JSON inside the tail window.
+    // Locale.ROOT: a comma-decimal default locale would emit "1,234".
+    def fmt(v: Double, digits: Int = 3): String =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def str(s: String): String = "\"" + s + "\""
+    val ok = results.collect { case (k, Right(v)) => k -> v }
+    val failed = results.collect { case (k, Left(cls)) => k -> str(cls) }
+    val total = fmt(ok.map(_._2).sum)
+    // pass_sec: a pass far above the others localizes a transient to it
+    val passJson = passSec.map(fmt(_, 2)).mkString("[", ",", "]")
+    val line =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(ok.map { case (k, v) => k -> fmt(v) })},"failed":${obj(failed)},"sf":"$sfDir","pass_sec":$passJson}"""
+    val top20 = obj(ok.sortBy(-_._2).take(20).map { case (k, v) => k -> fmt(v) })
+    val famJson = obj(families.toSeq.sortBy(_._1).map { case (fam, members) =>
+      fam -> fmt(ok.collect { case (k, v) if members(k) => v }.sum)
+    })
+    val summary =
+      s"""{"metric":"total_summary","value":$total,"unit":"sec","queries":$top20,"families":$famJson,"sf":"$sfDir","pass_sec":$passJson,"n_queries":${results.size},"n_failed":${failed.size},"failed":${obj(failed.take(summaryFailures))},"queries_file":"$queriesFile"}"""
+    (line, summary)
   }
 }

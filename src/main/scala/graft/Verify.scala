@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,25 +12,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // byte-based AQE coalescing (see Bench.scala) — same session
-      // shape as the bench so verified plans match timed plans
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) which Spark 4 refuses by
-      // default; read as epoch-nanos long (Tables.events re-derives a
-      // TimestampType column)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session, so verified plans are the timed plans
+    val spark = GraftSession.getOrCreate("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

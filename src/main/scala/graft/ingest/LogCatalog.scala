@@ -3,7 +3,6 @@ package graft.ingest
 import graft.analyze.ClusterAnalyzer
 import graft.model.{NodeStats, Schemas}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
@@ -39,14 +38,11 @@ final class LogCatalog(val spark: SparkSession) {
 
   private val storage = mutable.LinkedHashMap.empty[String, Node]
 
-  private def put(key: String, raw: DataFrame): Unit = {
-    storage.get(key).foreach(_.classified.foreach(_.unpersist()))
-    storage(key) = new Node(raw)
-  }
-
   private def putLines(key: String, lines: Seq[String]): (Long, Int) = {
     val rows = lines.zipWithIndex.map { case (l, i) => Row(key, (i + 1).toLong, l) }
-    put(key, spark.createDataFrame(spark.sparkContext.parallelize(rows), Schemas.rawLine))
+    storage.get(key).foreach(_.classified.foreach(_.unpersist()))
+    storage(key) = new Node(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), Schemas.rawLine))
     (lines.size.toLong, storage.size)
   }
 
@@ -75,8 +71,7 @@ final class LogCatalog(val spark: SparkSession) {
     * pushdown (`:136-137`) — only the last N lines enter the engine.
     *
     * Reads via `wholetext` + split so the trailing-newline empty line is
-    * preserved exactly like `cat file | split('\n')`. Parity path — for
-    * the 100 TB tier use [[loadDistributed]].
+    * preserved exactly like `cat file | split('\n')`.
     */
   def loadFile(nodeName: String, logType: String, path: String,
                tailLines: Option[Int] = None): (Long, Int) = synchronized {
@@ -94,18 +89,6 @@ final class LogCatalog(val spark: SparkSession) {
       body.takeRight(n) ++ trailer
     }
     putLines(s"${nodeName}_$logType", lines)
-  }
-
-  /** Scale-path file load: `spark.read.text` over a path/glob (no
-    * driver-side materialization, splittable, distributed). Line numbers
-    * are NOT assigned (no stable global order at scale) — queries that
-    * need them use the parity loaders; everything else (summary,
-    * histogram, search content) is order-free.
-    */
-  def loadDistributed(nodeName: String, logType: String, pathOrGlob: String): Unit = synchronized {
-    val key = s"${nodeName}_$logType"
-    put(key, spark.read.text(pathOrGlob)
-      .select(lit(key).as("node"), lit(-1L).as("line_number"), col("value")))
   }
 
   /** Node keys in insertion order (= reference dict order). */

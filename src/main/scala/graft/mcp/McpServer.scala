@@ -448,14 +448,7 @@ object McpServer {
     * node's configured credentials ([[RemoteFetch.defaultRunner]]).
     */
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .appName("cassandra-log-analyzer")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("cassandra-log-analyzer")
     spark.sparkContext.setLogLevel("ERROR")
     val fetcher = new RemoteFetcher(RemoteFetch.defaultRunner)
     serve(System.in, System.out,

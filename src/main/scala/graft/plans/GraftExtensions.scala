@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Session extension wiring (`spark.sql.extensions=graft.plans.GraftExtensions`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`):
+/** Session extension wiring (`spark.sql.extensions=graft.plans.GraftExtensions`,
+  * or `withExtensions(new GraftExtensions)` as [[graft.GraftSession]] does):
   * registers the engine's custom expressions with the SQL function
   * registry so plain `spark.sql` queries can use them.
   *

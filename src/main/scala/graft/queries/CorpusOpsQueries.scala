@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * floor division on BIGINT), so results are bit-identical at any
   * parallelism.
   */
-object CorpusOpsQueries {
+object CorpusOpsQueries extends graft.QueryFamily {
 
   /** q96 DSIR: hashed-feature bucket count and the fixed-point scale of
     * the per-bucket importance weight. 64 buckets keeps the weight table

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Cross-engine rules: all string ops are in the Java-regex ∩ RE2
   * intersection; all ratios are exact integer permille.
   */
-object CrawlOpsQueries {
+object CrawlOpsQueries extends graft.QueryFamily {
 
   // ---------------------------------------------------------------- q205
 

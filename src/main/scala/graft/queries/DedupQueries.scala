@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * All built-in expressions; DuckDB twins generated from the same
   * constants in [[graft.functions.TextFunctions]].
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryFamily {
 
   private val jaccardThreshold = 0.40
   private val minhashEstThreshold = 0.375 // 6 of 16 signature positions

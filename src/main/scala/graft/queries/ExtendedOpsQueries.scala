@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   *    (integer-valued quantities, quartile fractions) so `percentile`
   *    (Spark) == `quantile_cont` (DuckDB) bit-for-bit.
   */
-object ExtendedOpsQueries {
+object ExtendedOpsQueries extends graft.QueryFamily {
   // one-generation cache handles (see CacheSlot)
   private val lastV = new graft.util.CacheSlot
   private val lastC = new graft.util.CacheSlot

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * q77/q29 formula trees already proven bit-identical in DuckDB; rank
   * ties are pinned by id so rankings agree wherever scores do.
   */
-object InsightOpsQueries {
+object InsightOpsQueries extends graft.QueryFamily {
   // one-generation cache handles (see CacheSlot): repeated builder
   // invocations in a long-lived session must not accumulate entries
   private val lastBg = new graft.util.CacheSlot

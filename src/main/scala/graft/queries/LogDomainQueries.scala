@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * (dual counting), q14=F2+W1 search with line numbers, q15=A7
   * recommendations, q16=compare_nodes, q17=get_errors (SURVEY.md §2).
   */
-object LogDomainQueries {
+object LogDomainQueries extends graft.QueryFamily {
 
   /** Deterministic event→log-line corpus, shared between the Spark plan
     * and the DuckDB CTE. Message planted by `event_id % 40` bucket so

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * formula tree over exact BIGINT sums (q133/q137) or as 16ths of a
   * MinHash signature (q138) — both engines produce identical bits.
   */
-object ModelOpsQueries {
+object ModelOpsQueries extends graft.QueryFamily {
   // one-generation cache handle (see CacheSlot)
   private val lastSt = new graft.util.CacheSlot
 

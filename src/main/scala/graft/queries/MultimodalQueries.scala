@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * and is exercised by its spec — this query keeps the oracle-checkable
   * expression surface.
   */
-object MultimodalQueries {
+object MultimodalQueries extends graft.QueryFamily {
   // one-generation cache handle (see CacheSlot)
   private val lastFrames = new graft.util.CacheSlot
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * vary, fixed-shape double trees shared with the generated oracle SQL,
   * floor-quantization where float sums would be order-sensitive.
   */
-object PipelineOpsQueries {
+object PipelineOpsQueries extends graft.QueryFamily {
 
   // ---------------------------------------------------------------- q73
   /** Test-set membership: a fixed id slice stands in for the held-out

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * cross-engine arithmetic is integer or fixed-tree/positional double
   * (no order-sensitive float reductions).
   */
-object QualityOpsQueries {
+object QualityOpsQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.DecimalType
   * (pushdown + pruning); small dimensions are broadcast explicitly; the
   * only wide shuffles are the groupBy/window keys themselves.
   */
-object RelationalQueries {
+object RelationalQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
   private val dec4 = DecimalType(18, 4)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * that crosses the engine boundary is integer or fixed-tree double
   * (no order-sensitive float reductions).
   */
-object ScaleOpsQueries {
+object ScaleOpsQueries extends graft.QueryFamily {
 
   /** q89 per-source cap. */
   private val sourceCap = 10

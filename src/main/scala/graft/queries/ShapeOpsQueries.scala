@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * counters, frontier coordinates, interpolated counts, and collision
   * ppm are all BIGINT arithmetic both engines reproduce bit-for-bit.
   */
-object ShapeOpsQueries {
+object ShapeOpsQueries extends graft.QueryFamily {
 
   import TextFunctions.P
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Norms are precomputed once per vector; cosine is a left-fold double
   * dot product (bit-identical in DuckDB — see VectorFunctions).
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.QueryFamily {
 
   private val topK = 5
   private val annK = 3

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * groupBys. DuckDB twins generated from the same constants in
   * [[graft.functions.TextFunctions]].
   */
-object TextAnalysisQueries {
+object TextAnalysisQueries extends graft.QueryFamily {
 
   private val bpeRegex = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * `ln` is not guaranteed to be, and the driver hash-compares doubles
   * exactly. Ranking order is identical to log-idf (log is monotone).
   */
-object TextRankQueries {
+object TextRankQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
 

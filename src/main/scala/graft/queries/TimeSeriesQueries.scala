@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * not `window()` — same semantics, exact cross-engine twin, and the
   * bucket expression computes in the scan stage under codegen.
   */
-object TimeSeriesQueries {
+object TimeSeriesQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
   private val bucketUs = 300000000L // 5 minutes in µs

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.DecimalType
   * pivot, and a banded range join — the remaining classic operator
   * shapes a warehouse surface needs.
   */
-object WindowOpsQueries {
+object WindowOpsQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
   private val sessionGapUs = 3600L * 1000000L // 1 hour in µs

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.DecimalType
   * backlog; a real deployment swaps `Trigger.AvailableNow` for a
   * processing-time trigger with zero plan changes.
   */
-object StreamingQueries {
+object StreamingQueries extends graft.QueryFamily {
 
   private val dec2 = DecimalType(18, 2)
 

@@ -107,16 +107,7 @@ object CrawlPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-crawl"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-crawl")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-crawl")
     val p = run(spark, sfDir, outDir)
     println(s"raw=${p.rawUrls} canonical=${p.canonical} " +
       s"blocked=${p.blocked} denied=${p.denied} scheduled=${p.scheduled} " +

@@ -143,16 +143,7 @@ object CurationPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-curated"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-curation")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-curation")
     val f = run(spark, sfDir, outDir)
     println(s"total=${f.total} lang=${f.langKept} quality=${f.qualityKept} " +
       s"exact=${f.exactKept} nearDup=${f.nearDupKept} " +

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** SCALE.md evidence tool for the q315/q319 incremental faces: prints
   * the change-set sizes the touched-node theorem produces on a given
   * fixture — |old-corpus top-M sources|, |merged top-M sources|,
@@ -21,17 +19,7 @@ object DeltaTouch {
       args.filterNot(a => a == "--structured" || a == "--delete")
     require(positional.nonEmpty && args.length <= 3,
       "usage: DeltaTouch <sfDir> [--structured] [--delete]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-delta-touch")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-delta-touch")
     import graft.queries.SimilarityQueries._
     val dir =
       if (structured) structFixtureDir(spark, positional.head)

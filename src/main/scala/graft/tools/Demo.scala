@@ -3,7 +3,6 @@ package graft.tools
 import graft.ingest.LogCatalog
 import graft.query.LogQueries
 import graft.report.Reports
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the analytics surface — the engine-side
   * equivalents of the reference's MCP tools over an inline corpus.
@@ -11,15 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("graft-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     val catalog = new LogCatalog(spark)

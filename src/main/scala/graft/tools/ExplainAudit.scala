@@ -1,14 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("graft-explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     // `--summary` prints one line of load-bearing operator counts per

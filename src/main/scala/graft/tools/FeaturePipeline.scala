@@ -81,16 +81,7 @@ object FeaturePipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir =
       if (args.length > 1) args(1) else "/tmp/graft-feature-pipeline"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-feature-pipeline")
     val s = run(spark, sfDir, outDir)
     println(s"history rows:        ${s.historyRows} (current: ${s.currentRows})")
     println(s"PIT training rows:   ${s.enrichedRows} -> $outDir/training_rows")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall-chain measurement for the graph-ANN tier: runs the q295
   * multi-entry walk over BOTH graphs — the banded q294 build and the
   * q300 NN-descent-refined build — on a given fixture directory and
@@ -25,17 +23,7 @@ object GraphChain {
     require(positional.nonEmpty && args.length <= 2,
       "usage: GraphChain <sfDir> [--structured]")
     val baseDir = positional.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-graph-chain")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-graph-chain")
     import graft.queries.SimilarityQueries._
     val dir =
       if (structured) structFixtureDir(spark, baseDir) else baseDir

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the physical plan of the structured serve gates' GRAPH
   * relation (not part of the driver contract; run manually). The gates
   * return a pinned LocalRelation (the walk folds on the driver), so
@@ -18,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object GraphPlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("graft-graph-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     val sd = graft.queries.SimilarityQueries.structFixtureDir(spark, dir)
     println("===== graph relation BEFORE (per-invocation build plan) =====")

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler for the graph-ANN tier (not part of the driver
   * contract; run manually while optimizing). Times the build's
   * sub-pieces through the noop sink and reports, per piece, wall
@@ -14,47 +11,21 @@ object GraphProfile {
   def main(args: Array[String]): Unit = {
     val (confs, rest) = args.partition(_.contains("="))
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    confs.foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    }
-    val spark = b.getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("graft-graph-profile")
     spark.sparkContext.setLogLevel("ERROR")
-
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var taskMs = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = ()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        taskMs += s.stageInfo.taskMetrics.executorRunTime
-      }
-    })
+    // `k=v` arguments override runtime SQL confs of the session
+    confs.foreach { kv =>
+      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
+    }
+    val tally = new JobTally(spark)
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
     def time(name: String)(f: => Unit): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      jobs = 0; stages = 0; taskMs = 0L
-      val t0 = System.nanoTime()
-      f
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener events are async; give the bus a beat
-      Thread.sleep(300)
-      println(f"[gprof] $name%-28s wall=$dt%7.3f taskSec=${taskMs / 1e3}%7.3f jobs=$jobs%3d stages=$stages%3d")
+      val dt = tally.time(name)(f)
+      println(f"[gprof] $name%-28s wall=$dt%7.3f taskSec=${tally.taskMs / 1e3}%7.3f jobs=${tally.jobs}%3d stages=${tally.stages}%3d")
       spark.catalog.clearCache()
-      spark.sparkContext.setJobDescription(null)
     }
 
     val q = graft.SparkEntry.queries
@@ -80,7 +51,7 @@ object GraphProfile {
       val pool = knnMergedPool(spark, sfDir,
         knnBaseTopM(spark, sfDir).cache()).cache()
       noop(pool)
-      jobs = 0; stages = 0; taskMs = 0L // isolate the select itself
+      tally.reset() // isolate the select itself
       noop(diversifySelect(spark, sfDir, pool))
       pool.unpersist()
     }

@@ -110,16 +110,7 @@ object IndexPipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val kmeansIters = if (args.length > 1) args(1).toInt else 2
     val refreshRounds = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-index-pipeline")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-index-pipeline")
     val r = run(spark, sfDir, kmeansIters, refreshRounds, Seq(1, 4, 8))
     println(s"ivf inertia: ${r.kmeansInertia.map(v => f"$v%.2f").mkString(" -> ")}")
     println(s"pq qerr: ${r.qerrInit} -> ${r.qerrByRound.mkString(" -> ")}")

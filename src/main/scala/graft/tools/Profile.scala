@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.functions.TextFunctions._
 import graft.queries.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch stage-level profiler for the slow bench queries (not part of
@@ -11,15 +10,7 @@ import org.apache.spark.sql.functions._
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-profile")
 
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n1 = f

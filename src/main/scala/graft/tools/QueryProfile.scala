@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Scratch per-query profiler (not part of the driver contract; run
   * manually while optimizing): executes named SparkEntry queries with
   * the bench's session shape and reports wall seconds, Spark JOB and
@@ -18,52 +15,21 @@ object QueryProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(',').toSeq)
       .getOrElse(Seq("q316_hnsw_ladder_structured"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate("graft-query-profile")
     spark.sparkContext.setLogLevel("ERROR")
-
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var taskMs = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        taskMs += st.stageInfo.taskMetrics.executorRunTime
-      }
-    })
+    val tally = new JobTally(spark)
 
     def run(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      jobs = 0; stages = 0; taskMs = 0L
-      val t0 = System.nanoTime()
-      SparkEntryRun.exec(spark, sfDir, name)
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; settle before reading
-      Thread.sleep(300)
-      println(f"[qprof] $name%-32s wall=$wall%7.2fs jobs=$jobs%4d " +
-        f"stages=$stages%4d taskSec=${taskMs / 1e3}%8.2f")
+      val wall = tally.time(name) {
+        graft.SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.toRdd.foreach(_ => ())
+      }
+      println(f"[qprof] $name%-32s wall=$wall%7.2fs jobs=${tally.jobs}%4d " +
+        f"stages=${tally.stages}%4d taskSec=${tally.taskMs / 1e3}%8.2f")
       spark.catalog.clearCache()
     }
     // one warm pass (codegen compile) then the measured pass, per query
     names.foreach { n => run(n); run(n) }
     spark.stop()
-  }
-
-  private object SparkEntryRun {
-    def exec(s: SparkSession, dir: String, name: String): Unit =
-      graft.SparkEntry.queries(name)(s, dir)
-        .queryExecution.toRdd.foreach(_ => ())
   }
 }

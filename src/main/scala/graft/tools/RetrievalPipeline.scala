@@ -159,16 +159,7 @@ object RetrievalPipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val terms = if (args.length > 1) args(1).split(",").toSeq
       else Seq("dup", "spark")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-retrieval-pipeline")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-retrieval-pipeline")
     val answers = run(spark, sfDir, terms)
     println(s"query: ${terms.mkString(" AND ")} -> ${answers.size} answers")
     answers.foreach { a =>

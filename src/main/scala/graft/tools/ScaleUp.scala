@@ -59,26 +59,11 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 1 && factor <= alphabet.length,
       s"factor must be in [1, ${alphabet.length}]")
-    // getOrCreate may return a caller's session (e.g. the shared test
-    // session) — only stop what this tool itself created
+    // the factory returns a caller's running session (e.g. the shared
+    // test session) untouched — only stop what this tool created
     val preexisting = SparkSession.getDefaultSession
       .orElse(SparkSession.getActiveSession).isDefined
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    if (preexisting) {
-      // builder configs were silently ignored on a reused session — the
-      // one that changes read semantics is nanosAsLong, and it only
-      // matters for legacy TIMESTAMP(NANOS) fixtures (current fixtures
-      // are TIMESTAMP µs, which every session reads identically). If the
-      // fixture IS nanos and the flag is absent, the read below throws
-      // Spark's own clear error; no pre-check needed.
-    } else spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-scaleup")
     Files.createDirectories(Paths.get(dest))
 
     for (t <- dimTables)

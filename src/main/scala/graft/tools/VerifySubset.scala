@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop gate runner: [[graft.Verify]] restricted to a comma-list of
   * query names (all, when the list is omitted). Same session confs and
   * per-query outputs as Verify, so a local DuckDB compare previews the
@@ -14,16 +12,7 @@ object VerifySubset {
     val outDir = args(1)
     val wanted: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("graft-verify-subset")
     new java.io.File(outDir).mkdirs()
     val sel = graft.SparkEntry.queries
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }

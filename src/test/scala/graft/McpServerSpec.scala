@@ -7,7 +7,8 @@ import java.nio.file.Files
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.mcp.{McpDispatcher, McpServer}
 import org.json4s._
-import org.json4s.jackson.JsonMethods.parse
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
+import org.scalacheck.{Gen, rng}
 
 /** End-to-end MCP transport: newline-delimited JSON-RPC frames in,
   * responses out, tool bodies dispatching into the real engine
@@ -283,6 +284,62 @@ class McpServerSpec extends SparkSuite {
     assert(resultText(responses(6)).contains(
       "| node1 | 1 | 0 | 1 |\n| node1 | 1 | 0 | 1 |\n"))
     assert(resultText(responses(7)).contains("Erreurs: 1"))
+  }
+
+  test("random tool calls with random arguments: the loop survives and " +
+      "every request with an id gets exactly one response") {
+    // the log-path tools plus unknown names; the ssh and lake tools
+    // touch the filesystem or a shell, so they stay out
+    val tools = Seq("load_logs", "analyze_cluster", "search_logs",
+      "get_errors", "compare_nodes", "detect_issues", "mine_templates",
+      "detect_slot_anomalies", "deduplicate_lines", "group_stack_traces",
+      "nope", "", "ANALYZE_CLUSTER")
+    val keys = Seq("limit", "pattern", "node_filter", "case_sensitive",
+      "node_name", "nodes", "severity", "log_content", "log_type", "extra")
+    val value: Gen[JValue] = Gen.oneOf(
+      Gen.choose(-1000000, 1000000).map(JInt(_)),
+      Gen.oneOf(JInt(-1), JInt(0), JInt(Int.MaxValue), JInt(BigInt("99999999999999999999"))),
+      Gen.oneOf("", "node1", "ghost", "([unclosed", "*", "[z-a]", "\\", "(?i)timeout",
+        "critical", "ERROR [2024-01-01 10:00:01,000] [r] C:5 - Read timed out\n")
+        .map(JString(_)),
+      Gen.oneOf(JBool(true), JNull, JDouble(-2.5), JArray(List(JString("node1"), JInt(3))),
+        JObject("x" -> JInt(1))))
+    val arguments: Gen[JValue] = Gen.frequency(
+      8 -> Gen.someOf(keys).flatMap(ks =>
+        Gen.sequence[List[JField], JField](ks.map(k => value.map(k -> _))).map(JObject(_))),
+      1 -> Gen.const(JNothing), // no arguments at all
+      1 -> value) // arguments that are not an object
+    def request(id: Option[Int]): Gen[JValue] = for {
+      name <- Gen.oneOf(tools)
+      args <- arguments
+    } yield JObject(List("jsonrpc" -> JString("2.0")) ++
+      id.map(i => "id" -> (JInt(i): JValue)) ++ List(
+      "method" -> JString("tools/call"),
+      "params" -> JObject(("name" -> (JString(name): JValue)) :: (
+        if (args == JNothing) Nil else List("arguments" -> args)))))
+    val requests = Gen.sequence[List[JValue], JValue]((1 to 30).map(i =>
+        Gen.frequency(9 -> request(Some(i)), 1 -> request(None))))
+      .apply(Gen.Parameters.default, rng.Seed(20261017L))
+      .getOrElse(sys.error("generator failed"))
+
+    val d = newDispatcher
+    val node = "INFO  [2024-01-01 10:00:00,000] [main] o.a.c.Service:100 - Startup complete" +
+      "\nERROR [2024-01-01 10:00:01,000] [ReadStage-2] o.a.c.db.ReadCommand:512 - Read timed out"
+    Seq("node1", "node2").foreach(d.catalog.loadInline(_, node))
+    requests.foreach { req =>
+      val frame = compact(render(req))
+      val resp = McpServer.handleLine(frame, d)
+      req \ "id" match {
+        case JNothing => assert(resp.isEmpty, frame)
+        case id =>
+          assert(resp.map(_ \ "id") === Some(id), frame)
+          assert(resp.exists(r => (r \ "result") != JNothing ^ (r \ "error") != JNothing), frame)
+      }
+    }
+    // the catalog outlived the run: a plain analysis still answers
+    val last = McpServer.handleLine(
+      """{"jsonrpc":"2.0","id":99,"method":"tools/call","params":{"name":"analyze_cluster","arguments":{}}}""", d)
+    assert(resultText(last.get).contains("# Analyse du Cluster Cassandra"))
   }
 
   test("ssh runner rejects option-shaped destinations (argv injection)") {

@@ -18,6 +18,12 @@ class ScaleUpSpec extends SparkSuite {
   private def n(dir: String, t: String): Long =
     spark.read.parquet(s"$dir/$t.parquet").count()
 
+  test("running the tool inside the suite leaves the suite session's config alone") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    dest
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+  }
+
   test("facts replicate xfactor, dims copy verbatim") {
     for (t <- Seq("orders", "lineitem", "events", "documents", "embeddings"))
       assert(n(dest, t) === 3 * n("/root/testdata/sf0.001", t), t)
