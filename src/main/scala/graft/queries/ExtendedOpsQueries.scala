@@ -328,8 +328,7 @@ object ExtendedOpsQueries extends graft.QueryFamily {
             sum(col("qty")).cast("double").as("sum_qty"))
           .orderBy("l_returnflag")
         lastBloomJoinPlan.set(joined.queryExecution.executedPlan.toString)
-        val rows = joined.collect() // execute UNDER the confs
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
+        graft.util.Staged.local(s, joined) // execute UNDER the confs
       } finally {
         oldScan match {
           case Some(v) => conf.set(

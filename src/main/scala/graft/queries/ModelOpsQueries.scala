@@ -163,12 +163,9 @@ object ModelOpsQueries extends graft.QueryFamily {
         // change (the corpus-scale Gramian agg above is unaffected)
         .coalesce(1)
         .cache())
-    def local(df: DataFrame): DataFrame = {
-      val rows = df.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    }
-    var v = local(scaled.select(col("i").as("dim")).distinct()
-      .withColumn("x", lit(1000000L)))
+    var v = graft.util.Staged.local(s,
+      scaled.select(col("i").as("dim")).distinct()
+        .withColumn("x", lit(1000000L)))
     var prev = v
     for (_ <- 1 to pcaIters) {
       prev = v
@@ -176,7 +173,7 @@ object ModelOpsQueries extends graft.QueryFamily {
         .join(broadcast(v.select(col("dim").as("j"), col("x"))),  // hint audit: value-domain-bounded (<= d-row iterate vector)
           Seq("j"))
         .groupBy("i").agg(sum(expr("g * x")).as("w"))
-      v = local(w
+      v = graft.util.Staged.local(s, w
         .join(broadcast(w.agg(max(abs(col("w"))).as("wmax"))))  // hint audit: scalar (one-row max-|component|)
         .select(col("i").as("dim"), expr("w * 1000000 div wmax").as("x")))
     }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions
+import graft.util.{FileUtils, Staged}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -386,41 +387,35 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // with identical semantics" — at 100 TB the text formats are the
     // landing zone and parquet the canonical store, and this gate is
     // the conversion's acceptance test.
-    "q246_format_ingest" -> ((s, dir) => {
+    "q246_format_ingest" -> ((s, dir) => Staged.scratch(s, "q246") { stage =>
       val base = Tables.events(s, dir)
         .select(col("event_id"), expr("ts_ns div 1000").as("us"),
           col("user_id"), col("event_type"), col("value"), col("props"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q246-stage")
-      try {
-        base.write.mode("overwrite").json(s"$stage/jsonl")
-        base.write.mode("overwrite").option("header", "true")
-          .csv(s"$stage/csv")
-        val schema = base.schema
-        def parity(fmt: String): DataFrame = {
-          val rb = fmt match {
-            case "jsonl" => s.read.schema(schema).json(s"$stage/jsonl")
-            case _ => s.read.schema(schema).option("header", "true")
-              .csv(s"$stage/csv")
-          }
-          val r = rb.select(col("event_id"),
-            struct(col("us"), col("user_id"), col("event_type"),
-              col("value"), col("props")).as("rbrow"))
-          base.select(col("event_id"),
-              struct(col("us"), col("user_id"), col("event_type"),
-                col("value"), col("props")).as("pqrow"))
-            .join(r, Seq("event_id"), "full_outer")
-            .agg(count(lit(1)).as("n_rows"),
-              sum(when(!(col("pqrow") <=> col("rbrow")), 1L)
-                .otherwise(0L)).as("n_mismatch"))
-            .select(lit(fmt).as("format"), col("n_rows"),
-              col("n_mismatch"))
+      base.write.mode("overwrite").json(s"$stage/jsonl")
+      base.write.mode("overwrite").option("header", "true")
+        .csv(s"$stage/csv")
+      val schema = base.schema
+      def parity(fmt: String): DataFrame = {
+        val rb = fmt match {
+          case "jsonl" => s.read.schema(schema).json(s"$stage/jsonl")
+          case _ => s.read.schema(schema).option("header", "true")
+            .csv(s"$stage/csv")
         }
-        val out = parity("csv").unionByName(parity("jsonl"))
-          .orderBy("format")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+        val r = rb.select(col("event_id"),
+          struct(col("us"), col("user_id"), col("event_type"),
+            col("value"), col("props")).as("rbrow"))
+        base.select(col("event_id"),
+            struct(col("us"), col("user_id"), col("event_type"),
+              col("value"), col("props")).as("pqrow"))
+          .join(r, Seq("event_id"), "full_outer")
+          .agg(count(lit(1)).as("n_rows"),
+            sum(when(!(col("pqrow") <=> col("rbrow")), 1L)
+              .otherwise(0L)).as("n_mismatch"))
+          .select(lit(fmt).as("format"), col("n_rows"),
+            col("n_mismatch"))
+      }
+      parity("csv").unionByName(parity("jsonl"))
+        .orderBy("format")
     }),
 
     // Corpus snapshot diff — the "what changed between crawls" report
@@ -471,30 +466,24 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .orderBy("source")
     }),
 
-    "q165_schema_evolution" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q165-vintages")
-      try {
-        val d = docs(s, dir)
-        d.where(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text"), col("lang"))
-          .write.mode("overwrite").parquet(s"$stage/v2019")
-        d.where(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-          .write.mode("overwrite").parquet(s"$stage/v2024")
-        val merged = s.read.option("mergeSchema", "true")
-          .parquet(s"$stage/v2019", s"$stage/v2024")
-        val out = merged
-          .groupBy(coalesce(col("lang"), lit("?")).as("lang"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(coalesce(col("n_chars").cast("long"), lit(0L)))
-              .as("sum_chars_new"),
-            sum(when(col("source").isNotNull, 1L).otherwise(0L))
-              .as("n_new_vintage"))
-          .orderBy("lang")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q165_schema_evolution" -> ((s, dir) => Staged.scratch(s, "q165") { stage =>
+      val d = docs(s, dir)
+      d.where(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("text"), col("lang"))
+        .write.mode("overwrite").parquet(s"$stage/v2019")
+      d.where(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
+        .write.mode("overwrite").parquet(s"$stage/v2024")
+      val merged = s.read.option("mergeSchema", "true")
+        .parquet(s"$stage/v2019", s"$stage/v2024")
+      merged
+        .groupBy(coalesce(col("lang"), lit("?")).as("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(coalesce(col("n_chars").cast("long"), lit(0L)))
+            .as("sum_chars_new"),
+          sum(when(col("source").isNotNull, 1L).otherwise(0L))
+            .as("n_new_vintage"))
+        .orderBy("lang")
     }),
 
     // Idempotent partition backfill — the WRITER-side lake semantics
@@ -511,9 +500,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // overwrite (a static overwrite would have truncated them — the
     // gate would read back one source). At 100 TB the backfill cost
     // is ∝ the repaired partition, never the table.
-    "q166_partition_backfill" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q166-table")
+    "q166_partition_backfill" -> ((s, dir) => Staged.scratch(s, "q166") { stage =>
       val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       try {
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -531,15 +518,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
         d.where(col("source") === badSource)
           .write.partitionBy("source").mode("overwrite")
           .parquet(stage.toString)
-        val out = s.read.parquet(stage.toString)
+        s.read.parquet(stage.toString)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
             min(col("doc_id")).as("min_doc"),
             max(col("doc_id")).as("max_doc"))
           .orderBy("source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally {
         saved match {
           case Some(v) =>
@@ -547,7 +532,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
           case None =>
             s.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
-        rmTree(stage)
       }
     }),
 
@@ -564,40 +548,34 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // plan. At 100 TB the rewrite cost is the data volume (one
     // shuffle on the bin key, write bandwidth); the planning join is
     // the metadata-scale (source, file_id) relation, stats-chosen.
-    "q176_compaction_rewrite" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q176-compact")
-      try {
-        val gran = CorpusOpsQueries.fileGranule
-        val tgt = CorpusOpsQueries.targetBytes
-        val d = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val files = d
-          .groupBy(col("source"), expr(s"doc_id div $gran").as("file_id"))
-          .agg(sum(col("n_chars")).as("bytes"))
-        val w = Window.partitionBy("source").orderBy("file_id")
-        val plan = files.withColumn("cum", sum(col("bytes")).over(w))
-          .select(col("source"), col("file_id"),
-            expr(s"(cum - bytes) div $tgt").as("bin"))
-        d.withColumn("file_id", expr(s"doc_id div $gran"))
-          .join(plan, Seq("source", "file_id"))
-          .repartition(col("source"), col("bin"))
-          .write.partitionBy("source", "bin").mode("overwrite")
-          .parquet(stage.toString)
-        val out = s.read.parquet(stage.toString)
-          // input_file_name is per-row nondeterministic to the
-          // optimizer: materialize it in a projection before the agg
-          .withColumn("fname", input_file_name())
-          .groupBy(col("source"), col("bin").cast("long").as("bin"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            min(col("doc_id")).as("min_doc"),
-            max(col("doc_id")).as("max_doc"),
-            countDistinct(col("fname")).as("n_files"))
-          .orderBy("source", "bin")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q176_compaction_rewrite" -> ((s, dir) => Staged.scratch(s, "q176") { stage =>
+      val gran = CorpusOpsQueries.fileGranule
+      val tgt = CorpusOpsQueries.targetBytes
+      val d = Tables(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      val files = d
+        .groupBy(col("source"), expr(s"doc_id div $gran").as("file_id"))
+        .agg(sum(col("n_chars")).as("bytes"))
+      val w = Window.partitionBy("source").orderBy("file_id")
+      val plan = files.withColumn("cum", sum(col("bytes")).over(w))
+        .select(col("source"), col("file_id"),
+          expr(s"(cum - bytes) div $tgt").as("bin"))
+      d.withColumn("file_id", expr(s"doc_id div $gran"))
+        .join(plan, Seq("source", "file_id"))
+        .repartition(col("source"), col("bin"))
+        .write.partitionBy("source", "bin").mode("overwrite")
+        .parquet(stage.toString)
+      s.read.parquet(stage.toString)
+        // input_file_name is per-row nondeterministic to the
+        // optimizer: materialize it in a projection before the agg
+        .withColumn("fname", input_file_name())
+        .groupBy(col("source"), col("bin").cast("long").as("bin"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          min(col("doc_id")).as("min_doc"),
+          max(col("doc_id")).as("max_doc"),
+          countDistinct(col("fname")).as("n_files"))
+        .orderBy("source", "bin")
     }),
 
     // Lake TIME TRAVEL — the commit-log / snapshot face the lake trio
@@ -619,16 +597,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // checksum, or file count loudly. At 100 TB: the log is KBs
     // however large the table; as-of cost = manifest fold + reading
     // the active files — never a table scan to reconstruct history.
-    "q274_lake_time_travel" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q274-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val out = (0 to 2).map(v => lakeRollup(s, stage.toString, v))
-          .reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q274_lake_time_travel" -> ((s, dir) => Staged.scratch(s, "q274") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      (0 to 2).map(v => lakeRollup(s, stage.toString, v))
+        .reduce(_ unionByName _).orderBy("version")
     }),
 
     // Compaction as a METADATA SWAP — the second half of the
@@ -641,16 +613,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // what lets a 100 TB deployment compact continuously under live
     // readers: a reader pinned to v2 and one at v3 see the same
     // table, and the swap itself touched only the manifest.
-    "q275_lake_compaction_swap" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q275-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true)
-        val out = Seq(2, 3).map(v => lakeRollup(s, stage.toString, v))
-          .reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q275_lake_compaction_swap" -> ((s, dir) => Staged.scratch(s, "q275") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true)
+      Seq(2, 3).map(v => lakeRollup(s, stage.toString, v))
+        .reduce(_ unionByName _).orderBy("version")
     }),
 
     // Lake VACUUM — the retention planner that closes the commit-log
@@ -670,28 +636,22 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // same place a lake's snapshot resolution runs); only the
     // reclaim PRICING touches file contents, and a deployment would
     // take those numbers from manifest stats instead.
-    "q278_lake_vacuum" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q278-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true)
-        val allAdds = (0 to 3).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-        val out = Seq(2, 3).map { boundary =>
-          val retained = (boundary to 3)
-            .flatMap(v => asOfFiles(s, stage.toString, v)).toSet
-          val deletable = allAdds.filterNot(retained)
-          s.read.parquet(deletable: _*)
-            .agg(count(lit(1)).as("reclaim_rows"),
-              sum(col("n_chars").cast("long")).as("reclaim_chars"))
-            .select(lit(boundary.toLong).as("boundary"),
-              lit(deletable.size.toLong).as("n_deletable"),
-              col("reclaim_rows"), col("reclaim_chars"))
-        }.reduce(_ unionByName _).orderBy("boundary")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q278_lake_vacuum" -> ((s, dir) => Staged.scratch(s, "q278") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true)
+      val allAdds = (0 to 3).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      Seq(2, 3).map { boundary =>
+        val retained = (boundary to 3)
+          .flatMap(v => asOfFiles(s, stage.toString, v)).toSet
+        val deletable = allAdds.filterNot(retained)
+        s.read.parquet(deletable: _*)
+          .agg(count(lit(1)).as("reclaim_rows"),
+            sum(col("n_chars").cast("long")).as("reclaim_chars"))
+          .select(lit(boundary.toLong).as("boundary"),
+            lit(deletable.size.toLong).as("n_deletable"),
+            col("reclaim_rows"), col("reclaim_chars"))
+      }.reduce(_ unionByName _).orderBy("boundary")
     }),
 
     // Stats-PRUNED time-travel read — manifests carry per-file
@@ -708,32 +668,26 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // gate. The q153 zonemap device lifted into the snapshot layer:
     // at 100 TB this is the difference between touching 4 files and
     // touching 10⁶ for a key-range restore.
-    "q279_lake_pruned_read" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q279-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val entries = (0 to 2).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .map(r => (r.getString(0), r.getString(1),
-              r.getLong(2), r.getLong(3))))
-        val removed = entries.collect { case ("remove", p, _, _) => p }.toSet
-        val active = entries.collect {
-          case ("add", p, mn, mx) if !removed(p) => (p, mn, mx) }
-        val pruned = active.filter { case (_, mn, mx) =>
-          mn <= lakePruneHi && mx >= lakePruneLo }
-        val out = s.read.parquet(pruned.map(_._1): _*)
-          .where(col("doc_id").between(lakePruneLo, lakePruneHi))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(2L).as("version"),
-            lit(active.size.toLong).as("n_active"),
-            lit(pruned.size.toLong).as("n_files_read"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q279_lake_pruned_read" -> ((s, dir) => Staged.scratch(s, "q279") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val entries = (0 to 2).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .map(r => (r.getString(0), r.getString(1),
+            r.getLong(2), r.getLong(3))))
+      val removed = entries.collect { case ("remove", p, _, _) => p }.toSet
+      val active = entries.collect {
+        case ("add", p, mn, mx) if !removed(p) => (p, mn, mx) }
+      val pruned = active.filter { case (_, mn, mx) =>
+        mn <= lakePruneHi && mx >= lakePruneLo }
+      s.read.parquet(pruned.map(_._1): _*)
+        .where(col("doc_id").between(lakePruneLo, lakePruneHi))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit(2L).as("version"),
+          lit(active.size.toLong).as("n_active"),
+          lit(pruned.size.toLong).as("n_files_read"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"))
     }),
 
     // CHANGE DATA FEED between two lake versions — the incremental-
@@ -752,37 +706,31 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // the two commits touched, never the table; the anti-joins are
     // UNHINTED (both sides are touched-file row sets — corpus
     // fractions).
-    "q284_lake_change_feed" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q284-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true)
-        def cdf(w: Int, v: Int): DataFrame = {
-          val a = asOfFiles(s, stage.toString, w).toSet
-          val b = asOfFiles(s, stage.toString, v).toSet
-          // both diffs are non-empty for the staged commit kinds (a
-          // CoW delete and a compaction each add AND remove files)
-          val added = s.read.parquet((b -- a).toSeq: _*)
-          val removed = s.read.parquet((a -- b).toSeq: _*)
-          def roll(df: DataFrame, ct: String) = df
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(w.toLong).as("from_version"),
-              lit(v.toLong).as("to_version"), lit(ct).as("change_type"),
-              col("n_rows"),
-              coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-              coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
-          roll(added.join(removed.select("doc_id"), Seq("doc_id"),
-            "left_anti"), "insert")
-            .unionByName(roll(removed.join(added.select("doc_id"),
-              Seq("doc_id"), "left_anti"), "delete"))
-        }
-        val out = cdf(0, 2).unionByName(cdf(2, 3))
-          .orderBy("from_version", "change_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q284_lake_change_feed" -> ((s, dir) => Staged.scratch(s, "q284") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true)
+      def cdf(w: Int, v: Int): DataFrame = {
+        val a = asOfFiles(s, stage.toString, w).toSet
+        val b = asOfFiles(s, stage.toString, v).toSet
+        // both diffs are non-empty for the staged commit kinds (a
+        // CoW delete and a compaction each add AND remove files)
+        val added = s.read.parquet((b -- a).toSeq: _*)
+        val removed = s.read.parquet((a -- b).toSeq: _*)
+        def roll(df: DataFrame, ct: String) = df
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(w.toLong).as("from_version"),
+            lit(v.toLong).as("to_version"), lit(ct).as("change_type"),
+            col("n_rows"),
+            coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
+            coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+        roll(added.join(removed.select("doc_id"), Seq("doc_id"),
+          "left_anti"), "insert")
+          .unionByName(roll(removed.join(added.select("doc_id"),
+            Seq("doc_id"), "left_anti"), "delete"))
+      }
+      cdf(0, 2).unionByName(cdf(2, 3))
+        .orderBy("from_version", "change_type")
     }),
 
     // DELETION VECTORS — the merge-on-read delete strategy proven
@@ -799,39 +747,33 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // readers seeing strategy. At 100 TB: the DV sidecar is ∝ deleted
     // keys; the read-side anti-join is unhinted (a real vector can be
     // a corpus fraction).
-    "q285_lake_deletion_vectors" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q285-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        // the MoR commit: no file rewrite — a sidecar of deleted keys
-        docs(s, dir)
-          .where(expr(s"doc_id div $gran") === 0 &&
-            col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 1)
-          .select("doc_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stage/_dv/v2")
-        def roll(df: DataFrame, strategy: String, nFiles: Long) = df
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(strategy).as("strategy"),
-            lit(nFiles).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
-        val cowFiles = asOfFiles(s, stage.toString, 2)
-        val cow = s.read.parquet(cowFiles: _*)
-        // MoR reads v1's file set (nothing removed) minus the vector
-        val morFiles = asOfFiles(s, stage.toString, 1)
-        val mor = s.read.parquet(morFiles: _*)
-          .join(s.read.parquet(s"$stage/_dv/v2"), Seq("doc_id"),
-            "left_anti")
-        val out = roll(cow, "cow", cowFiles.length.toLong)
-          .unionByName(roll(mor, "mor", morFiles.length.toLong))
-          .orderBy("strategy")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q285_lake_deletion_vectors" -> ((s, dir) => Staged.scratch(s, "q285") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      // the MoR commit: no file rewrite — a sidecar of deleted keys
+      docs(s, dir)
+        .where(expr(s"doc_id div $gran") === 0 &&
+          col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 1)
+        .select("doc_id")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$stage/_dv/v2")
+      def roll(df: DataFrame, strategy: String, nFiles: Long) = df
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit(strategy).as("strategy"),
+          lit(nFiles).as("n_files"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      val cowFiles = asOfFiles(s, stage.toString, 2)
+      val cow = s.read.parquet(cowFiles: _*)
+      // MoR reads v1's file set (nothing removed) minus the vector
+      val morFiles = asOfFiles(s, stage.toString, 1)
+      val mor = s.read.parquet(morFiles: _*)
+        .join(s.read.parquet(s"$stage/_dv/v2"), Seq("doc_id"),
+          "left_anti")
+      roll(cow, "cow", cowFiles.length.toLong)
+        .unionByName(roll(mor, "mor", morFiles.length.toLong))
+        .orderBy("strategy")
     }),
 
     // CONCURRENT-WRITER COMMIT CONFLICTS — the optimistic-concurrency
@@ -862,54 +804,48 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // snapshot — O(files touched), never table data. E's orphaned
     // staged file is precisely what the unreferenced-file sweep
     // (q278 plans it, q291 executes it) exists to collect.
-    "q290_lake_concurrent_commit" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q290-lake")
-      try {
-        val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val d = docs(s, dir)
-        // each writer stages its data file BEFORE the dance — data
-        // writes are invisible until a committed manifest references
-        // them, so staging order cannot race
-        def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
-          val p = s"$stage/$name"
-          df.coalesce(1).write.mode("overwrite").parquet(p)
-          val mm = s.read.parquet(p)
-            .agg(min(col("doc_id")), max(col("doc_id"))).head()
-          (p, mm.getLong(0), mm.getLong(1))
-        }
-        val wA = stageFile("wA", d.where(col("doc_id") % 7 === 0))
-        val wB = stageFile("wB", d.where(col("doc_id") % 7 === 3))
-        val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
-          col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
-        val f0rD = stageFile("f0rD", f0r.where(col("doc_id") % 5 =!= 0))
-        val f0rE = stageFile("f0rE", f0r.where(col("doc_id") % 11 =!= 0))
-        def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
-        val writers = Seq(
-          ("A", Seq(add(wA))),
-          ("B", Seq(add(wB))),
-          ("D", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rD))),
-          ("E", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rE))))
-        val out = writers.map { case (w, entries) =>
-          val (outcome, v, attempts) =
-            commitLoop(s, stage.toString, 2, entries)
-          if (v >= 0)
-            lakeRollup(s, stage.toString, v.toInt)
-              .select(lit(w).as("writer"), lit(outcome).as("outcome"),
-                col("version"), lit(attempts).as("n_attempts"),
-                col("n_files"), col("n_rows"), col("sum_chars"),
-                col("key_checksum"))
-          else
-            s.range(1).select(lit(w).as("writer"),
-              lit(outcome).as("outcome"), lit(-1L).as("version"),
-              lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("writer")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q290_lake_concurrent_commit" -> ((s, dir) => Staged.scratch(s, "q290") { stage =>
+      val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val d = docs(s, dir)
+      // each writer stages its data file BEFORE the dance — data
+      // writes are invisible until a committed manifest references
+      // them, so staging order cannot race
+      def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
+        val p = s"$stage/$name"
+        df.coalesce(1).write.mode("overwrite").parquet(p)
+        val mm = s.read.parquet(p)
+          .agg(min(col("doc_id")), max(col("doc_id"))).head()
+        (p, mm.getLong(0), mm.getLong(1))
+      }
+      val wA = stageFile("wA", d.where(col("doc_id") % 7 === 0))
+      val wB = stageFile("wB", d.where(col("doc_id") % 7 === 3))
+      val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
+        col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
+      val f0rD = stageFile("f0rD", f0r.where(col("doc_id") % 5 =!= 0))
+      val f0rE = stageFile("f0rE", f0r.where(col("doc_id") % 11 =!= 0))
+      def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
+      val writers = Seq(
+        ("A", Seq(add(wA))),
+        ("B", Seq(add(wB))),
+        ("D", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rD))),
+        ("E", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rE))))
+      writers.map { case (w, entries) =>
+        val (outcome, v, attempts) =
+          commitLoop(s, stage.toString, 2, entries)
+        if (v >= 0)
+          lakeRollup(s, stage.toString, v.toInt)
+            .select(lit(w).as("writer"), lit(outcome).as("outcome"),
+              col("version"), lit(attempts).as("n_attempts"),
+              col("n_files"), col("n_rows"), col("sum_chars"),
+              col("key_checksum"))
+        else
+          s.range(1).select(lit(w).as("writer"),
+            lit(outcome).as("outcome"), lit(-1L).as("version"),
+            lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
+            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+            lit(0L).as("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("writer")
     }),
 
     // VACUUM EXECUTION — the act face of q278's plan (the suite's
@@ -926,40 +862,34 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // missing counts, and the rollup. At 100 TB the deletes are one
     // metadata-scale sweep (the doomed list is a manifest fold);
     // nothing rescans surviving data.
-    "q291_lake_vacuum_exec" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q291-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
-        val allAdds = (0 to 3).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-        val retained = asOfFiles(s, stage.toString, 3).toSet
-        allAdds.filterNot(retained)
-          .foreach(p => rmTree(java.nio.file.Paths.get(p)))
-        val v3 = asOfFiles(s, stage.toString, 3)
-        val ok = s.read.parquet(v3: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit("as_of_3").as("probe"), lit(true).as("readable"),
-            lit(v3.length.toLong).as("n_files"), lit(0L).as("n_missing"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
-        val v2 = asOfFiles(s, stage.toString, 2)
-        val missing = v2.count(p =>
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-        // the read itself must throw (PATH_NOT_FOUND), not silently
-        // skip — `readable` is MEASURED from the attempt
-        val failed = scala.util.Try(
-          s.read.parquet(v2: _*).agg(count(lit(1))).head()).isFailure
-        val gone = s.range(1).select(lit("as_of_2").as("probe"),
-          lit(!failed).as("readable"), lit(v2.length.toLong).as("n_files"),
-          lit(missing.toLong).as("n_missing"), lit(0L).as("n_rows"),
-          lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
-        val out = gone.unionByName(ok).orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q291_lake_vacuum_exec" -> ((s, dir) => Staged.scratch(s, "q291") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
+      val allAdds = (0 to 3).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val retained = asOfFiles(s, stage.toString, 3).toSet
+      allAdds.filterNot(retained)
+        .foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
+      val v3 = asOfFiles(s, stage.toString, 3)
+      val ok = s.read.parquet(v3: _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit("as_of_3").as("probe"), lit(true).as("readable"),
+          lit(v3.length.toLong).as("n_files"), lit(0L).as("n_missing"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      val v2 = asOfFiles(s, stage.toString, 2)
+      val missing = v2.count(p =>
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+      // the read itself must throw (PATH_NOT_FOUND), not silently
+      // skip — `readable` is MEASURED from the attempt
+      val failed = scala.util.Try(
+        s.read.parquet(v2: _*).agg(count(lit(1))).head()).isFailure
+      val gone = s.range(1).select(lit("as_of_2").as("probe"),
+        lit(!failed).as("readable"), lit(v2.length.toLong).as("n_files"),
+        lit(missing.toLong).as("n_missing"), lit(0L).as("n_rows"),
+        lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
+      gone.unionByName(ok).orderBy("probe")
     }),
 
     // ISOLATION LEVELS — the read-conflict half of optimistic
@@ -981,52 +911,46 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // shifts a row. At 100 TB this is the knob every multi-job lake
     // sets per table; the check costs one manifest read per
     // contended version.
-    "q297_lake_isolation_levels" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q297-lake")
-      try {
-        val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val d = docs(s, dir)
-        def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
-          val p = s"$stage/$name"
-          df.coalesce(1).write.mode("overwrite").parquet(p)
-          val mm = s.read.parquet(p)
-            .agg(min(col("doc_id")), max(col("doc_id"))).head()
-          (p, mm.getLong(0), mm.getLong(1))
-        }
-        val wApp = stageFile("wApp", d.where(col("doc_id") % 7 === 0))
-        val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
-          col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
-        val f0rW = stageFile("f0rW", f0r.where(col("doc_id") % 5 =!= 0))
-        val f0rS = stageFile("f0rS", f0r.where(col("doc_id") % 11 =!= 0))
-        def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
-        val rmF0r = ("remove", s"$dataRoot/f0r", -1L, -1L)
-        // the rewrite's read-set: the g=0 key range it was computed from
-        val readRange = (0L, gran - 1L)
-        val runs = Seq(
-          ("append_winner", Seq(add(wApp)), None),
-          ("rewrite_write_serializable", Seq(rmF0r, add(f0rW)), None),
-          ("rewrite_serializable", Seq(rmF0r, add(f0rS)), Some(readRange)))
-        val out = runs.map { case (mode, entries, rr) =>
-          val (outcome, v, attempts) =
-            commitLoop(s, stage.toString, 2, entries, rr)
-          if (v >= 0)
-            lakeRollup(s, stage.toString, v.toInt)
-              .select(lit(mode).as("mode"), lit(outcome).as("outcome"),
-                col("version"), lit(attempts).as("n_attempts"),
-                col("n_files"), col("n_rows"), col("sum_chars"),
-                col("key_checksum"))
-          else
-            s.range(1).select(lit(mode).as("mode"),
-              lit(outcome).as("outcome"), lit(-1L).as("version"),
-              lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("mode")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q297_lake_isolation_levels" -> ((s, dir) => Staged.scratch(s, "q297") { stage =>
+      val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val d = docs(s, dir)
+      def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
+        val p = s"$stage/$name"
+        df.coalesce(1).write.mode("overwrite").parquet(p)
+        val mm = s.read.parquet(p)
+          .agg(min(col("doc_id")), max(col("doc_id"))).head()
+        (p, mm.getLong(0), mm.getLong(1))
+      }
+      val wApp = stageFile("wApp", d.where(col("doc_id") % 7 === 0))
+      val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
+        col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
+      val f0rW = stageFile("f0rW", f0r.where(col("doc_id") % 5 =!= 0))
+      val f0rS = stageFile("f0rS", f0r.where(col("doc_id") % 11 =!= 0))
+      def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
+      val rmF0r = ("remove", s"$dataRoot/f0r", -1L, -1L)
+      // the rewrite's read-set: the g=0 key range it was computed from
+      val readRange = (0L, gran - 1L)
+      val runs = Seq(
+        ("append_winner", Seq(add(wApp)), None),
+        ("rewrite_write_serializable", Seq(rmF0r, add(f0rW)), None),
+        ("rewrite_serializable", Seq(rmF0r, add(f0rS)), Some(readRange)))
+      runs.map { case (mode, entries, rr) =>
+        val (outcome, v, attempts) =
+          commitLoop(s, stage.toString, 2, entries, rr)
+        if (v >= 0)
+          lakeRollup(s, stage.toString, v.toInt)
+            .select(lit(mode).as("mode"), lit(outcome).as("outcome"),
+              col("version"), lit(attempts).as("n_attempts"),
+              col("n_files"), col("n_rows"), col("sum_chars"),
+              col("key_checksum"))
+        else
+          s.range(1).select(lit(mode).as("mode"),
+            lit(outcome).as("outcome"), lit(-1L).as("version"),
+            lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
+            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+            lit(0L).as("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("mode")
     }),
 
     // RIGHT-TO-BE-FORGOTTEN — the governance composition every lake
@@ -1047,111 +971,103 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // stats-located files (the q279 prune), vacuum is a manifest
     // fold; only THIS gate's final audit reads everything, which is
     // what a compliance audit does.
-    "q298_lake_forget" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q298-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false, privateData = true)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val d = docs(s, dir)
-        val inForget = (expr(s"doc_id div $gran") === 1 ||
-          expr(s"doc_id div $gran") === 3) && col("doc_id") % 13 === 3
-        // v3: the DV commit — the key sidecar plus a manifest entry
-        // referencing it (action "dv": invisible to the add/remove
-        // fold, so the active FILE set is v2's; readers apply the
-        // vector at scan time)
-        d.where(inForget).select("doc_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stage/_dv/v3")
-        require(tryCommit(s, stage.toString, 3,
-          Seq(("dv", s"$stage/_dv/v3", -1L, -1L))))
-        val v2Files = asOfFiles(s, stage.toString, 2)
-        def rollOver(df: DataFrame, phase: String, nFiles: Long) = df
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
-            col("n_rows"),
-            coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-            coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
-        // each phase row is materialized WHEN it happens — the later
-        // vacuum deletes the very files the earlier reads scanned
-        def snap(df: DataFrame): DataFrame = {
-          val rows = df.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    "q298_lake_forget" -> ((s, dir) => Staged.scratch(s, "q298") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false, privateData = true)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val d = docs(s, dir)
+      val inForget = (expr(s"doc_id div $gran") === 1 ||
+        expr(s"doc_id div $gran") === 3) && col("doc_id") % 13 === 3
+      // v3: the DV commit — the key sidecar plus a manifest entry
+      // referencing it (action "dv": invisible to the add/remove
+      // fold, so the active FILE set is v2's; readers apply the
+      // vector at scan time)
+      d.where(inForget).select("doc_id")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$stage/_dv/v3")
+      require(tryCommit(s, stage.toString, 3,
+        Seq(("dv", s"$stage/_dv/v3", -1L, -1L))))
+      val v2Files = asOfFiles(s, stage.toString, 2)
+      def rollOver(df: DataFrame, phase: String, nFiles: Long) = df
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
+          col("n_rows"),
+          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
+          coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+      val dv = s.read.parquet(s"$stage/_dv/v3")
+      val v3Read = s.read.parquet(v2Files: _*)
+        .join(dv, Seq("doc_id"), "left_anti")
+      // v4: hard deletion — rewrite ONLY the files whose key-range
+      // stats overlap a forgotten-key range (the q279 prune, run
+      // against the v2-active manifest entries; at the gate SFs this
+      // resolves to the 4 base/delta g=1 and g=3 files, and it stays
+      // correct under any fixture size or forget predicate), then
+      // retire the DV
+      val forgetRanges = Seq((gran, 2 * gran - 1), (3 * gran, 4 * gran - 1))
+      val v2Entries = (0 to 2).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .map(r => (r.getString(0), r.getString(1),
+            r.getLong(2), r.getLong(3))))
+      val v2Removed =
+        v2Entries.collect { case ("remove", p, _, _) => p }.toSet
+      val touched = v2Entries.collect {
+        case ("add", p, mn, mx) if !v2Removed(p) &&
+          forgetRanges.exists { case (lo, hi) => mn <= hi && mx >= lo } => p
+      }
+      val rewrites = touched.zipWithIndex.map { case (p, i) =>
+        val rp = s"$stage/fw$i"
+        s.read.parquet(p).where(!inForget)
+          .coalesce(1).write.mode("overwrite").parquet(rp)
+        rp
+      }
+      val v4Entries = touched.map(p => ("remove", p, -1L, -1L)) ++
+        rewrites.map { p =>
+          val mm = s.read.parquet(p)
+            .agg(min(col("doc_id")), max(col("doc_id"))).head()
+          ("add", p, mm.getLong(0), mm.getLong(1))
         }
-        val dv = s.read.parquet(s"$stage/_dv/v3")
-        val v3Read = s.read.parquet(v2Files: _*)
-          .join(dv, Seq("doc_id"), "left_anti")
-        // v4: hard deletion — rewrite ONLY the files whose key-range
-        // stats overlap a forgotten-key range (the q279 prune, run
-        // against the v2-active manifest entries; at the gate SFs this
-        // resolves to the 4 base/delta g=1 and g=3 files, and it stays
-        // correct under any fixture size or forget predicate), then
-        // retire the DV
-        val forgetRanges = Seq((gran, 2 * gran - 1), (3 * gran, 4 * gran - 1))
-        val v2Entries = (0 to 2).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .map(r => (r.getString(0), r.getString(1),
-              r.getLong(2), r.getLong(3))))
-        val v2Removed =
-          v2Entries.collect { case ("remove", p, _, _) => p }.toSet
-        val touched = v2Entries.collect {
-          case ("add", p, mn, mx) if !v2Removed(p) &&
-            forgetRanges.exists { case (lo, hi) => mn <= hi && mx >= lo } => p
+      // each phase row is materialized WHEN it happens — the later
+      // vacuum deletes the very files the earlier reads scanned
+      val aRow = Staged.local(s, rollOver(v3Read, "a_v3_masked_read",
+        v2Files.length.toLong))
+      require(tryCommit(s, stage.toString, 4, v4Entries))
+      val v4Files = asOfFiles(s, stage.toString, 4)
+      val v4Read = s.read.parquet(v4Files: _*)
+      val bRow = Staged.local(s, rollOver(v4Read, "b_v4_hard_delete_read",
+        v4Files.length.toLong))
+      // vacuum at boundary 4: the originals (and the retired DV) go
+      val retained = v4Files.toSet
+      val allAdds = (0 to 4).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      allAdds.filterNot(retained)
+        .foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
+      FileUtils.deleteRecursively(java.nio.file.Paths.get(s"$stage/_dv"))
+      val postVacuum = s.read.parquet(asOfFiles(s, stage.toString, 4): _*)
+      // the compliance audit: EVERY parquet file still under the
+      // table root (the log excluded), read back
+      val remaining = {
+        val root = java.nio.file.Paths.get(stage.toString)
+        val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+        def walk(p: java.nio.file.Path): Unit = {
+          if (java.nio.file.Files.isDirectory(p)) {
+            if (p.getFileName.toString != "_log")
+              FileUtils.listDir(p).foreach(walk)
+          } else if (p.toString.endsWith(".parquet")) acc += p.toString
         }
-        val rewrites = touched.zipWithIndex.map { case (p, i) =>
-          val rp = s"$stage/fw$i"
-          s.read.parquet(p).where(!inForget)
-            .coalesce(1).write.mode("overwrite").parquet(rp)
-          rp
-        }
-        val v4Entries = touched.map(p => ("remove", p, -1L, -1L)) ++
-          rewrites.map { p =>
-            val mm = s.read.parquet(p)
-              .agg(min(col("doc_id")), max(col("doc_id"))).head()
-            ("add", p, mm.getLong(0), mm.getLong(1))
-          }
-        val aRow = snap(rollOver(v3Read, "a_v3_masked_read",
-          v2Files.length.toLong))
-        require(tryCommit(s, stage.toString, 4, v4Entries))
-        val v4Files = asOfFiles(s, stage.toString, 4)
-        val v4Read = s.read.parquet(v4Files: _*)
-        val bRow = snap(rollOver(v4Read, "b_v4_hard_delete_read",
-          v4Files.length.toLong))
-        // vacuum at boundary 4: the originals (and the retired DV) go
-        val retained = v4Files.toSet
-        val allAdds = (0 to 4).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-        allAdds.filterNot(retained)
-          .foreach(p => rmTree(java.nio.file.Paths.get(p)))
-        rmTree(java.nio.file.Paths.get(s"$stage/_dv"))
-        val postVacuum = s.read.parquet(asOfFiles(s, stage.toString, 4): _*)
-        // the compliance audit: EVERY parquet file still under the
-        // table root (the log excluded), read back
-        val remaining = {
-          val root = java.nio.file.Paths.get(stage.toString)
-          val acc = scala.collection.mutable.ArrayBuffer.empty[String]
-          def walk(p: java.nio.file.Path): Unit = {
-            if (java.nio.file.Files.isDirectory(p)) {
-              if (p.getFileName.toString != "_log")
-                graft.util.FileUtils.listDir(p).foreach(walk)
-            } else if (p.toString.endsWith(".parquet")) acc += p.toString
-          }
-          walk(root)
-          acc.toSeq
-        }
-        val disk = s.read.parquet(remaining: _*)
-        aRow.unionByName(bRow)
-          .unionByName(snap(rollOver(postVacuum, "c_post_vacuum_read",
-            v4Files.length.toLong)))
-          .unionByName(snap(rollOver(disk, "d_disk_total",
-            remaining.length.toLong)))
-          .unionByName(snap(rollOver(disk.where(inForget),
-            "e_forgotten_residual", 0L)))
-          .orderBy("phase")
-      } finally rmTree(stage)
+        walk(root)
+        acc.toSeq
+      }
+      val disk = s.read.parquet(remaining: _*)
+      aRow.unionByName(bRow)
+        .unionByName(Staged.local(s, rollOver(postVacuum, "c_post_vacuum_read",
+          v4Files.length.toLong)))
+        .unionByName(Staged.local(s, rollOver(disk, "d_disk_total",
+          remaining.length.toLong)))
+        .unionByName(Staged.local(s, rollOver(disk.where(inForget),
+          "e_forgotten_residual", 0L)))
+        .orderBy("phase")
     }),
 
     // CDF APPLY — the CONSUMER side of q284 (that gate derives the
@@ -1166,39 +1082,33 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // every downstream index/rollup keeps up: cost ∝ the files the
     // commits touched plus the aggregate's own size — the table is
     // never rescanned.
-    "q299_lake_cdf_apply" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q299-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        def roll(df: DataFrame, sign: Int) = df
-          .groupBy("source")
-          .agg((count(lit(1)) * sign).as("n_docs"),
-            (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-            (sum(expr(manifestTerm("doc_id"))) * sign).as("key_checksum"))
-        // the replica's stored aggregate, materialized at v0
-        val v0Agg = roll(
-          s.read.parquet(asOfFiles(s, stage.toString, 0): _*), 1)
-        // CDF(v0→v2) from the file-set diff (q284's construction)
-        val a = asOfFiles(s, stage.toString, 0).toSet
-        val b = asOfFiles(s, stage.toString, 2).toSet
-        val added = s.read.parquet((b -- a).toSeq: _*)
-        val removed = s.read.parquet((a -- b).toSeq: _*)
-        val inserts = added.join(removed.select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        val deletes = removed.join(added.select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        // apply: fold the signed change rollups into the aggregate
-        val out = v0Agg
-          .unionByName(roll(inserts, 1)).unionByName(roll(deletes, -1))
-          .groupBy("source")
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("sum_chars")).as("sum_chars"),
-            sum(col("key_checksum")).as("key_checksum"))
-          .orderBy("source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q299_lake_cdf_apply" -> ((s, dir) => Staged.scratch(s, "q299") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      def roll(df: DataFrame, sign: Int) = df
+        .groupBy("source")
+        .agg((count(lit(1)) * sign).as("n_docs"),
+          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
+          (sum(expr(manifestTerm("doc_id"))) * sign).as("key_checksum"))
+      // the replica's stored aggregate, materialized at v0
+      val v0Agg = roll(
+        s.read.parquet(asOfFiles(s, stage.toString, 0): _*), 1)
+      // CDF(v0→v2) from the file-set diff (q284's construction)
+      val a = asOfFiles(s, stage.toString, 0).toSet
+      val b = asOfFiles(s, stage.toString, 2).toSet
+      val added = s.read.parquet((b -- a).toSeq: _*)
+      val removed = s.read.parquet((a -- b).toSeq: _*)
+      val inserts = added.join(removed.select("doc_id"),
+        Seq("doc_id"), "left_anti")
+      val deletes = removed.join(added.select("doc_id"),
+        Seq("doc_id"), "left_anti")
+      // apply: fold the signed change rollups into the aggregate
+      v0Agg
+        .unionByName(roll(inserts, 1)).unionByName(roll(deletes, -1))
+        .groupBy("source")
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("sum_chars")).as("sum_chars"),
+          sum(col("key_checksum")).as("key_checksum"))
+        .orderBy("source")
     }),
 
     // COMMIT-LOG CHECKPOINTING — the device that keeps snapshot
@@ -1224,61 +1134,55 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // FILES (metadata), written incrementally off the previous
     // checkpoint — never a table scan; resolution cost is 1 + (v mod
     // cadence) manifest reads, independent of table age.
-    "q301_lake_checkpoint" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q301-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val d = docs(s, dir)
-        // v3-v8: residue-slice appends (physical-row multiset
-        // semantics, the q290 convention — duplicates of rows already
-        // present double-count exactly as the files do). All six
-        // files land in ONE partitioned write and their stats in ONE
-        // metadata-sized agg (six coalesce(1) write+read-back jobs
-        // made this the suite's slowest staging: 9.6 → ~5 s); the
-        // six COMMITS stay sequential — that ordering is the log.
-        val app = d.where(col("doc_id") % 7 <= 5)
-          .withColumn("r", col("doc_id") % 7)
-        app.repartition(col("r"))
-          .write.partitionBy("r").mode("overwrite")
-          .parquet(s"$stage/app")
-        val appStats = app.groupBy("r")
-          .agg(min(col("doc_id")), max(col("doc_id"))).collect()
-          .map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2))))
-          .toMap
-        for (r <- 0 to 5) {
-          val v = r + 3
-          val p = s"$stage/app/r=$r"
-          require(tryCommit(s, stage.toString, v,
-            Seq(("add", p, appStats(r.toLong)._1, appStats(r.toLong)._2))))
-          // the committer's checkpoint cadence: every 3rd version
-          // snapshots the resolved active set (stats carried forward)
-          // — itself resolved THROUGH the previous checkpoint, so
-          // checkpointing cost never re-folds the whole log either —
-          // and advances the `_last_checkpoint` pointer (Delta's O(1)
-          // discovery device: readers jump straight to the newest
-          // checkpoint instead of probing versions backwards)
-          if (v % 3 == 0) writeCheckpoint(s, stage.toString, v)
-        }
-        val out = Seq(2, 5, 8).map { v =>
-          val (active, nCkptReads) = ckptResolve(s, stage.toString, v)
-          val matches =
-            active.map(_._1).toSet ==
-              fullFoldFiles(s, stage.toString, v).toSet
-          s.read.parquet(active.map(_._1): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(v.toLong).as("version"),
-              lit((v + 1).toLong).as("n_manifests_full"),
-              lit(nCkptReads).as("n_manifests_ckpt"),
-              lit(matches).as("ckpt_matches_fold"),
-              lit(active.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q301_lake_checkpoint" -> ((s, dir) => Staged.scratch(s, "q301") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val d = docs(s, dir)
+      // v3-v8: residue-slice appends (physical-row multiset
+      // semantics, the q290 convention — duplicates of rows already
+      // present double-count exactly as the files do). All six
+      // files land in ONE partitioned write and their stats in ONE
+      // metadata-sized agg (six coalesce(1) write+read-back jobs
+      // made this the suite's slowest staging: 9.6 → ~5 s); the
+      // six COMMITS stay sequential — that ordering is the log.
+      val app = d.where(col("doc_id") % 7 <= 5)
+        .withColumn("r", col("doc_id") % 7)
+      app.repartition(col("r"))
+        .write.partitionBy("r").mode("overwrite")
+        .parquet(s"$stage/app")
+      val appStats = app.groupBy("r")
+        .agg(min(col("doc_id")), max(col("doc_id"))).collect()
+        .map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2))))
+        .toMap
+      for (r <- 0 to 5) {
+        val v = r + 3
+        val p = s"$stage/app/r=$r"
+        require(tryCommit(s, stage.toString, v,
+          Seq(("add", p, appStats(r.toLong)._1, appStats(r.toLong)._2))))
+        // the committer's checkpoint cadence: every 3rd version
+        // snapshots the resolved active set (stats carried forward)
+        // — itself resolved THROUGH the previous checkpoint, so
+        // checkpointing cost never re-folds the whole log either —
+        // and advances the `_last_checkpoint` pointer (Delta's O(1)
+        // discovery device: readers jump straight to the newest
+        // checkpoint instead of probing versions backwards)
+        if (v % 3 == 0) writeCheckpoint(s, stage.toString, v)
+      }
+      Seq(2, 5, 8).map { v =>
+        val (active, nCkptReads) = ckptResolve(s, stage.toString, v)
+        val matches =
+          active.map(_._1).toSet ==
+            fullFoldFiles(s, stage.toString, v).toSet
+        s.read.parquet(active.map(_._1): _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(v.toLong).as("version"),
+            lit((v + 1).toLong).as("n_manifests_full"),
+            lit(nCkptReads).as("n_manifests_ckpt"),
+            lit(matches).as("ckpt_matches_fold"),
+            lit(active.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("version")
     }),
 
     // MULTI-COLUMN FILE STATS + NON-KEY DATA SKIPPING — the round-14
@@ -1307,85 +1211,79 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // this is the difference between touching 2 cells and scanning
     // the table for every dashboard filter; the stats cost one
     // metadata-sized agg per commit, exactly like the key stats.
-    "q302_lake_column_skip" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q302-lake")
-      try {
-        val n = docs(s, dir).count()
-        val kGran = 2L * lakeGranFor(n)
-        val d = docs(s, dir)
-          .select(col("doc_id"), col("source"), col("n_chars"),
-            ((col("doc_id") % 20) / lit(5)).cast("long").as("sg"),
-            (col("doc_id") / lit(kGran)).cast("long").as("kb"))
-        d.repartition(col("sg"), col("kb"))
-          .write.partitionBy("sg", "kb").mode("overwrite")
-          .parquet(s"$stage/data")
-        // the commit's per-file stats: one metadata-sized agg
-        val cells = d.groupBy("sg", "kb")
-          .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
-            min(col("source")).as("msrc"), max(col("source")).as("xsrc"),
-            min(col("n_chars")).as("mch"), max(col("n_chars")).as("xch"))
-          .collect()
-          .map(r => (s"$stage/data/sg=${r.getLong(0)}/kb=${r.getLong(1)}",
-            r.getLong(2), r.getLong(3), r.getString(4), r.getString(5),
-            r.getLong(6), r.getLong(7)))
-        import s.implicits._
-        cells.toSeq.map { case (p, mn, mx, ms, xs, mc, xc) =>
-          ("add", p, mn, mx, ms, xs, mc, xc) }
-          .toDF("action", "path", "min_id", "max_id", "min_src",
-            "max_src", "min_chars", "max_chars").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_log/v0")
-        // the read's three conjuncts (bounds derived from the corpus
-        // so the key prune is non-trivial at every SF)
-        val maxId = docs(s, dir).agg(max(col("doc_id"))).head().getLong(0)
-        val (lo, hi) = (maxId / 4, maxId / 2)
-        val srcP = "src12"
-        val chP = 100L
-        // dimension-by-dimension pruning over the manifest (driver,
-        // metadata scale — the manifest is O(files))
-        val manifest = graft.util.ManifestIO.rows(s, s"$stage/_log/v0")
-          .map(r => (r.getString(1), r.getLong(2), r.getLong(3),
-            r.getString(4), r.getString(5), r.getLong(6), r.getLong(7)))
-        val keyKept = manifest.filter { case (_, mn, mx, _, _, _, _) =>
-          mn <= hi && mx >= lo }
-        val srcKept = keyKept.filter { case (_, _, _, ms, xs, _, _) =>
-          ms <= srcP && xs >= srcP }
-        val chKept = srcKept.filter { case (_, _, _, _, _, _, xc) =>
-          xc >= chP }
-        val matched = s.read.parquet(chKept.map(_._1): _*)
-          .where(col("source") === srcP &&
-            col("doc_id").between(lo, hi) && col("n_chars") >= chP)
-        // contributing cells recomputed from the keys (each cell is a
-        // (sg, kb) function of doc_id): false positives = survivors
-        // that contribute nothing — the honest price of conservative
-        // stats
-        val contributing = matched
-          .select(((col("doc_id") % 20) / lit(5)).cast("long"),
-            (col("doc_id") / lit(kGran)).cast("long"))
-          .distinct().count()
-        def statRow(name: String, nFiles: Long) =
-          s.range(1).select(lit(name).as("stage"),
-            lit(nFiles).as("n_files"), lit(0L).as("n_rows"),
-            lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
-        val readRow = matched
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit("e_read").as("stage"),
-            lit(chKept.length.toLong).as("n_files"), col("n_rows"),
-            coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-            coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
-        val out = statRow("a_all_files", manifest.length.toLong)
-          .unionByName(statRow("b_key_pruned", keyKept.length.toLong))
-          .unionByName(statRow("c_source_pruned", srcKept.length.toLong))
-          .unionByName(statRow("d_chars_pruned", chKept.length.toLong))
-          .unionByName(readRow)
-          .unionByName(statRow("f_false_positive_files",
-            chKept.length.toLong - contributing))
-          .orderBy("stage")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q302_lake_column_skip" -> ((s, dir) => Staged.scratch(s, "q302") { stage =>
+      val n = docs(s, dir).count()
+      val kGran = 2L * lakeGranFor(n)
+      val d = docs(s, dir)
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          ((col("doc_id") % 20) / lit(5)).cast("long").as("sg"),
+          (col("doc_id") / lit(kGran)).cast("long").as("kb"))
+      d.repartition(col("sg"), col("kb"))
+        .write.partitionBy("sg", "kb").mode("overwrite")
+        .parquet(s"$stage/data")
+      // the commit's per-file stats: one metadata-sized agg
+      val cells = d.groupBy("sg", "kb")
+        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
+          min(col("source")).as("msrc"), max(col("source")).as("xsrc"),
+          min(col("n_chars")).as("mch"), max(col("n_chars")).as("xch"))
+        .collect()
+        .map(r => (s"$stage/data/sg=${r.getLong(0)}/kb=${r.getLong(1)}",
+          r.getLong(2), r.getLong(3), r.getString(4), r.getString(5),
+          r.getLong(6), r.getLong(7)))
+      import s.implicits._
+      cells.toSeq.map { case (p, mn, mx, ms, xs, mc, xc) =>
+        ("add", p, mn, mx, ms, xs, mc, xc) }
+        .toDF("action", "path", "min_id", "max_id", "min_src",
+          "max_src", "min_chars", "max_chars").coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/_log/v0")
+      // the read's three conjuncts (bounds derived from the corpus
+      // so the key prune is non-trivial at every SF)
+      val maxId = docs(s, dir).agg(max(col("doc_id"))).head().getLong(0)
+      val (lo, hi) = (maxId / 4, maxId / 2)
+      val srcP = "src12"
+      val chP = 100L
+      // dimension-by-dimension pruning over the manifest (driver,
+      // metadata scale — the manifest is O(files))
+      val manifest = graft.util.ManifestIO.rows(s, s"$stage/_log/v0")
+        .map(r => (r.getString(1), r.getLong(2), r.getLong(3),
+          r.getString(4), r.getString(5), r.getLong(6), r.getLong(7)))
+      val keyKept = manifest.filter { case (_, mn, mx, _, _, _, _) =>
+        mn <= hi && mx >= lo }
+      val srcKept = keyKept.filter { case (_, _, _, ms, xs, _, _) =>
+        ms <= srcP && xs >= srcP }
+      val chKept = srcKept.filter { case (_, _, _, _, _, _, xc) =>
+        xc >= chP }
+      val matched = s.read.parquet(chKept.map(_._1): _*)
+        .where(col("source") === srcP &&
+          col("doc_id").between(lo, hi) && col("n_chars") >= chP)
+      // contributing cells recomputed from the keys (each cell is a
+      // (sg, kb) function of doc_id): false positives = survivors
+      // that contribute nothing — the honest price of conservative
+      // stats
+      val contributing = matched
+        .select(((col("doc_id") % 20) / lit(5)).cast("long"),
+          (col("doc_id") / lit(kGran)).cast("long"))
+        .distinct().count()
+      def statRow(name: String, nFiles: Long) =
+        s.range(1).select(lit(name).as("stage"),
+          lit(nFiles).as("n_files"), lit(0L).as("n_rows"),
+          lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
+      val readRow = matched
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit("e_read").as("stage"),
+          lit(chKept.length.toLong).as("n_files"), col("n_rows"),
+          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
+          coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+      statRow("a_all_files", manifest.length.toLong)
+        .unionByName(statRow("b_key_pruned", keyKept.length.toLong))
+        .unionByName(statRow("c_source_pruned", srcKept.length.toLong))
+        .unionByName(statRow("d_chars_pruned", chKept.length.toLong))
+        .unionByName(readRow)
+        .unionByName(statRow("f_false_positive_files",
+          chKept.length.toLong - contributing))
+        .orderBy("stage")
     }),
 
     // VACUUM RETENTION SAFETY — the concurrency contract that makes
@@ -1407,47 +1305,39 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // one set intersection per active reader over manifest-resolved
     // paths — the cheap insurance against the most expensive failure
     // a lake has (a long query's files freed mid-read).
-    "q303_lake_vacuum_retention" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q303-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
-        val retained = asOfFiles(s, stage.toString, 3).toSet
-        val doomed = (0 to 3).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-          .filterNot(retained)
-        def scenario(name: String, readerV: Int): DataFrame = {
-          val readerFiles = asOfFiles(s, stage.toString, readerV)
-          val doomedSet = doomed.toSet
-          val conflicts = readerFiles.count(doomedSet)
-          val outcome = if (conflicts > 0) "refused" else "executed"
-          if (conflicts == 0)
-            doomed.foreach(p => rmTree(java.nio.file.Paths.get(p)))
-          // the reader's read AFTER the decision — intact on refusal,
-          // intact on execution (its snapshot was conflict-free)
-          s.read.parquet(readerFiles: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("scenario"), lit(3L).as("boundary"),
-              lit(readerV.toLong).as("reader_version"),
-              lit(doomed.size.toLong).as("n_doomed"),
-              lit(conflicts.toLong).as("n_conflicts"),
-              lit(outcome).as("outcome"),
-              lit(readerFiles.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        def snap(df: DataFrame): DataFrame = {
-          val rows = df.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-        }
-        // scenario a materializes BEFORE scenario b's sweep deletes
-        // the very files it read
-        val a = snap(scenario("a_reader_v2", 2))
-        val b = snap(scenario("b_reader_v3", 3))
-        a.unionByName(b).orderBy("scenario")
-      } finally rmTree(stage)
+    "q303_lake_vacuum_retention" -> ((s, dir) => Staged.scratch(s, "q303") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
+      val retained = asOfFiles(s, stage.toString, 3).toSet
+      val doomed = (0 to 3).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        .filterNot(retained)
+      def scenario(name: String, readerV: Int): DataFrame = {
+        val readerFiles = asOfFiles(s, stage.toString, readerV)
+        val doomedSet = doomed.toSet
+        val conflicts = readerFiles.count(doomedSet)
+        val outcome = if (conflicts > 0) "refused" else "executed"
+        if (conflicts == 0)
+          doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
+        // the reader's read AFTER the decision — intact on refusal,
+        // intact on execution (its snapshot was conflict-free)
+        s.read.parquet(readerFiles: _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("scenario"), lit(3L).as("boundary"),
+            lit(readerV.toLong).as("reader_version"),
+            lit(doomed.size.toLong).as("n_doomed"),
+            lit(conflicts.toLong).as("n_conflicts"),
+            lit(outcome).as("outcome"),
+            lit(readerFiles.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      // scenario a materializes BEFORE scenario b's sweep deletes
+      // the very files it read
+      val a = Staged.local(s, scenario("a_reader_v2", 2))
+      val b = Staged.local(s, scenario("b_reader_v3", 3))
+      a.unionByName(b).orderBy("scenario")
     }),
 
     // TIMESTAMP-BASED TIME TRAVEL — the first thing a human asks a
@@ -1465,55 +1355,49 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // after the last. At 100 TB the ts index is one column over the
     // manifest listing — metadata the driver already folds; the data
     // read is the same pruned snapshot read every other gate prices.
-    "q308_lake_time_travel_ts" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q308-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true)
-        // checkpoint the latest version + pointer (q301's convention)
-        writeCheckpoint(s, stage.toString, 3)
-        // the ts index: version -> commit_ts read off the manifests
-        // themselves (Delta reads commit-file timestamps the same
-        // way) — one metadata-sized read per version
-        val versions = Iterator.from(0).takeWhile(v =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(
-            stage.toString, "_log", s"v$v"))).toSeq
-        val tsIdx = versions.map(v => v ->
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .head.getAs[Long]("commit_ts"))
-        def resolveTs(t: Long): Int =
-          tsIdx.filter(_._2 <= t).map(_._1).maxOption.getOrElse(-1)
-        val probes = Seq(
-          ("a_before_first", commitTsOf(0) - 1L),
-          ("b_exact_v1", commitTsOf(1)),
-          ("c_between_v2_v3", commitTsOf(3) - 1L),
-          ("d_after_last", commitTsOf(3) + 86400000L))
-        val out = probes.map { case (name, t) =>
-          val v = resolveTs(t)
-          if (v < 0)
-            s.range(1).select(lit(name).as("probe"),
-              lit(t).as("probe_ts"), lit(-1L).as("version"),
-              lit("no_snapshot_at_ts").as("outcome"),
-              lit(0L).as("n_manifests_ckpt"), lit(0L).as("n_files"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
-          else {
-            val (files, nReads) = ckptResolve(s, stage.toString, v)
-            s.read.parquet(files.map(_._1): _*)
-              .agg(count(lit(1)).as("n_rows"),
-                sum(col("n_chars").cast("long")).as("sum_chars"),
-                sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-              .select(lit(name).as("probe"), lit(t).as("probe_ts"),
-                lit(v.toLong).as("version"),
-                lit("resolved").as("outcome"),
-                lit(nReads).as("n_manifests_ckpt"),
-                lit(files.size.toLong).as("n_files"),
-                col("n_rows"), col("sum_chars"), col("key_checksum"))
-          }
-        }.reduce(_ unionByName _).orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q308_lake_time_travel_ts" -> ((s, dir) => Staged.scratch(s, "q308") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true)
+      // checkpoint the latest version + pointer (q301's convention)
+      writeCheckpoint(s, stage.toString, 3)
+      // the ts index: version -> commit_ts read off the manifests
+      // themselves (Delta reads commit-file timestamps the same
+      // way) — one metadata-sized read per version
+      val versions = Iterator.from(0).takeWhile(v =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(
+          stage.toString, "_log", s"v$v"))).toSeq
+      val tsIdx = versions.map(v => v ->
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .head.getAs[Long]("commit_ts"))
+      def resolveTs(t: Long): Int =
+        tsIdx.filter(_._2 <= t).map(_._1).maxOption.getOrElse(-1)
+      val probes = Seq(
+        ("a_before_first", commitTsOf(0) - 1L),
+        ("b_exact_v1", commitTsOf(1)),
+        ("c_between_v2_v3", commitTsOf(3) - 1L),
+        ("d_after_last", commitTsOf(3) + 86400000L))
+      probes.map { case (name, t) =>
+        val v = resolveTs(t)
+        if (v < 0)
+          s.range(1).select(lit(name).as("probe"),
+            lit(t).as("probe_ts"), lit(-1L).as("version"),
+            lit("no_snapshot_at_ts").as("outcome"),
+            lit(0L).as("n_manifests_ckpt"), lit(0L).as("n_files"),
+            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+            lit(0L).as("key_checksum"))
+        else {
+          val (files, nReads) = ckptResolve(s, stage.toString, v)
+          s.read.parquet(files.map(_._1): _*)
+            .agg(count(lit(1)).as("n_rows"),
+              sum(col("n_chars").cast("long")).as("sum_chars"),
+              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+            .select(lit(name).as("probe"), lit(t).as("probe_ts"),
+              lit(v.toLong).as("version"),
+              lit("resolved").as("outcome"),
+              lit(nReads).as("n_manifests_ckpt"),
+              lit(files.size.toLong).as("n_files"),
+              col("n_rows"), col("sum_chars"), col("key_checksum"))
+        }
+      }.reduce(_ unionByName _).orderBy("probe")
     }),
 
     // METADATA RETENTION (log cleanup below the checkpoint) — the
@@ -1533,73 +1417,67 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // At 100 TB: cleanup is a directory listing + unlink of v <
     // checkpoint — metadata-scale, and the reason a table's log stays
     // KBs after a million commits.
-    "q312_lake_log_retention" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q312-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true)
-        writeCheckpoint(s, stage.toString, 3)
-        def manifestsOnDisk(): Long =
-          (0 to 3).count(v => java.nio.file.Files.exists(
-            java.nio.file.Paths.get(stage.toString, "_log", s"v$v")))
-            .toLong
-        val before = manifestsOnDisk()
-        // the cleanup: unlink every manifest below the checkpoint
-        val ckptV = java.nio.file.Files.readString(java.nio.file.Paths
-          .get(stage.toString, "_log", "_last_checkpoint")).trim.toInt
-        (0 until ckptV).foreach(v => rmTree(java.nio.file.Paths
-          .get(stage.toString, "_log", s"v$v")))
-        val after = manifestsOnDisk()
-        def available(v: Int): Boolean = v >= ckptV ||
-          (0 to v).forall(i => java.nio.file.Files.exists(
-            java.nio.file.Paths.get(stage.toString, "_log", s"v$i")))
-        def row(name: String, outcome: String, v: Long,
-            content: Option[(Seq[String], Long)]): DataFrame =
-          content match {
-            case Some((files, nReads)) =>
-              s.read.parquet(files: _*)
-                .agg(count(lit(1)).as("n_rows"),
-                  sum(col("n_chars").cast("long")).as("sum_chars"),
-                  sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-                .select(lit(name).as("probe"), lit(outcome).as("outcome"),
-                  lit(v).as("version"),
-                  lit(before).as("n_manifests_before"),
-                  lit(after).as("n_manifests_after"),
-                  lit(nReads).as("n_manifests_read"),
-                  lit(files.size.toLong).as("n_files"), col("n_rows"),
-                  col("sum_chars"), col("key_checksum"))
-            case None =>
-              s.range(1).select(lit(name).as("probe"),
-                lit(outcome).as("outcome"), lit(v).as("version"),
+    "q312_lake_log_retention" -> ((s, dir) => Staged.scratch(s, "q312") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true)
+      writeCheckpoint(s, stage.toString, 3)
+      def manifestsOnDisk(): Long =
+        (0 to 3).count(v => java.nio.file.Files.exists(
+          java.nio.file.Paths.get(stage.toString, "_log", s"v$v")))
+          .toLong
+      val before = manifestsOnDisk()
+      // the cleanup: unlink every manifest below the checkpoint
+      val ckptV = java.nio.file.Files.readString(java.nio.file.Paths
+        .get(stage.toString, "_log", "_last_checkpoint")).trim.toInt
+      (0 until ckptV).foreach(v => FileUtils.deleteRecursively(java.nio.file.Paths
+        .get(stage.toString, "_log", s"v$v")))
+      val after = manifestsOnDisk()
+      def available(v: Int): Boolean = v >= ckptV ||
+        (0 to v).forall(i => java.nio.file.Files.exists(
+          java.nio.file.Paths.get(stage.toString, "_log", s"v$i")))
+      def row(name: String, outcome: String, v: Long,
+          content: Option[(Seq[String], Long)]): DataFrame =
+        content match {
+          case Some((files, nReads)) =>
+            s.read.parquet(files: _*)
+              .agg(count(lit(1)).as("n_rows"),
+                sum(col("n_chars").cast("long")).as("sum_chars"),
+                sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+              .select(lit(name).as("probe"), lit(outcome).as("outcome"),
+                lit(v).as("version"),
                 lit(before).as("n_manifests_before"),
                 lit(after).as("n_manifests_after"),
-                lit(0L).as("n_manifests_read"), lit(0L).as("n_files"),
-                lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-                lit(0L).as("key_checksum"))
-          }
-        val latest = {
-          val (files, nReads) = ckptResolve(s, stage.toString, 3)
-          row("a_latest_via_ckpt", "resolved", 3L,
-            Some((files.map(_._1), nReads)))
+                lit(nReads).as("n_manifests_read"),
+                lit(files.size.toLong).as("n_files"), col("n_rows"),
+                col("sum_chars"), col("key_checksum"))
+          case None =>
+            s.range(1).select(lit(name).as("probe"),
+              lit(outcome).as("outcome"), lit(v).as("version"),
+              lit(before).as("n_manifests_before"),
+              lit(after).as("n_manifests_after"),
+              lit(0L).as("n_manifests_read"), lit(0L).as("n_files"),
+              lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+              lit(0L).as("key_checksum"))
         }
-        val below = row("b_below_floor",
-          if (available(1)) "resolved" else "version_unavailable", 1L,
-          None)
-        // ts probe below the floor: the ts index needs the deleted
-        // manifests, so resolution must answer unavailable — checked
-        // against the manifests that REMAIN (commitTsOf(3) is still
-        // readable; anything below its floor is not)
-        val tsFloor = graft.util.ManifestIO.rows(s, s"$stage/_log/v3")
-          .head.getAs[Long]("commit_ts")
-        val tsProbe = commitTsOf(1)
-        val tsOut =
-          if (tsProbe >= tsFloor) "resolved" else "ts_unavailable"
-        val c = row("c_ts_below_floor", tsOut, -1L, None)
-        val out = latest.unionByName(below).unionByName(c)
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+      val latest = {
+        val (files, nReads) = ckptResolve(s, stage.toString, 3)
+        row("a_latest_via_ckpt", "resolved", 3L,
+          Some((files.map(_._1), nReads)))
+      }
+      val below = row("b_below_floor",
+        if (available(1)) "resolved" else "version_unavailable", 1L,
+        None)
+      // ts probe below the floor: the ts index needs the deleted
+      // manifests, so resolution must answer unavailable — checked
+      // against the manifests that REMAIN (commitTsOf(3) is still
+      // readable; anything below its floor is not)
+      val tsFloor = graft.util.ManifestIO.rows(s, s"$stage/_log/v3")
+        .head.getAs[Long]("commit_ts")
+      val tsProbe = commitTsOf(1)
+      val tsOut =
+        if (tsProbe >= tsFloor) "resolved" else "ts_unavailable"
+      val c = row("c_ts_below_floor", tsOut, -1L, None)
+      latest.unionByName(below).unionByName(c)
+        .orderBy("probe")
     }),
 
     // PER-FILE BLOOM FILTERS in the manifest — point-lookup skipping
@@ -1621,85 +1499,79 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // result off ONLY the passing files. At 100 TB the bloom adds
     // ~bits-per-row metadata per file and turns a needle lookup from
     // a full scan into ~(1 + fpp·files) file reads.
-    "q309_lake_bloom_skip" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q309-lake")
-      try {
-        val d = docs(s, dir)
-        val gran = lakeGranFor(d.count())
-        // words-per-file ∝ rows-per-file (granule/8 longs ≈ 8 bits/row),
-        // CAPPED at 64Ki words (512 KB/file — the Parquet/Delta bloom
-        // ballpark) so per-file metadata stays bounded however large a
-        // file's granule grows; the cap binds only above ~26M docs
-        // (every gate SF and sf1 sit far below), so hashes are
-        // unaffected where gated
-        val mWords = math.min(65536L, math.max(4L, gran / 8L))
-        val mBits = mWords * 64L
-        val url = concat(lit("doc://"), col("source"), lit("/"),
-          col("doc_id").cast("string"))
-        val withG = d.withColumn("g", expr(s"doc_id div $gran"))
-          .withColumn("url", url)
-        withG.repartition(col("g"))
-          .write.partitionBy("g").mode("overwrite")
-          .parquet(s"$stage/data")
-        // write-time bloom: h1 = polyHash(url), h2 derived (squared
-        // mix), two probe bits per key; one metadata-sized aggregate
-        val h1c = graft.functions.TextFunctions.polyHash(col("url"))
-        val hashed = withG.select(col("g"), h1c.as("h1"))
-          .withColumn("h2",
-            expr(s"(h1 * h1 + $manifestA) % ${graft.functions.PolyHash.P}"))
-        val bloomRows = (1 to 2).map(i =>
-            hashed.select(col("g"),
-              expr(s"(h1 + $i * h2) % $mBits").as("pos")))
-          .reduce(_ unionByName _)
-          .select(col("g"), expr("pos div 63").as("w"),
-            // 63 bits per word: the sign bit is never set, so both
-            // engines' checked shifts stay in range
-            expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))")
-              .as("m"))
-          .groupBy("g", "w").agg(expr("bit_or(m)").as("mask"))
-          .collect()  // hint audit: gate-scale collect — files × words/file is ROW-proportional (≈ rows/8 longs total, ~512 KB at sf1); a production reader tests blooms inside the distributed manifest scan (one file's ≤64Ki words per task), never a driver Map
-        val bloom = bloomRows.map(r =>
-          (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-        val nFiles = withG.select("g").distinct().count()
-        val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
-        // probes: two real urls from different granules + one absent
-        def urlOf(id: Long): String = d.where(col("doc_id") === id)
-          .select(url).head().getString(0)
-        val probes = Seq(
-          ("a_hit_mid", urlOf(maxId / 2)),
-          ("b_hit_low", urlOf(maxId / 5)),
-          ("c_miss", "doc://void/424242"))
-        val out = probes.map { case (name, pu) =>
-          val h1 = s.range(1)
-            .select(graft.functions.TextFunctions.polyHash(lit(pu)))
-            .head().getLong(0)
-          val h2 = (h1 * h1 + manifestA) % graft.functions.PolyHash.P
-          val bits = (1 to 2).map(i => (h1 + i * h2) % mBits)
-          val passing = (0L until nFiles).filter(g => bits.forall(b =>
-            (bloom.getOrElse((g, b / 63), 0L) & (1L << (b % 63).toInt))
-              != 0L)).sorted
-          val found =
-            if (passing.isEmpty) s.range(1)
-              .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-                lit(0L).as("n_containing"))
-            else s.read
-              .parquet(passing.map(g => s"$stage/data/g=$g"): _*)
-              .where(col("url") === pu)
-              .agg(count(lit(1)).as("n_rows"),
-                coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
-                countDistinct(expr(s"doc_id div $gran"))
-                  .as("n_containing"))
-          found.select(lit(name).as("probe"),
-            lit(nFiles).as("n_files_total"),
-            lit(passing.size.toLong).as("n_files_bloom_pass"),
-            (lit(passing.size.toLong) - col("n_containing"))
-              .as("n_false_positive_files"),
-            col("n_rows"), col("sum_chars"))
-        }.reduce(_ unionByName _).orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q309_lake_bloom_skip" -> ((s, dir) => Staged.scratch(s, "q309") { stage =>
+      val d = docs(s, dir)
+      val gran = lakeGranFor(d.count())
+      // words-per-file ∝ rows-per-file (granule/8 longs ≈ 8 bits/row),
+      // CAPPED at 64Ki words (512 KB/file — the Parquet/Delta bloom
+      // ballpark) so per-file metadata stays bounded however large a
+      // file's granule grows; the cap binds only above ~26M docs
+      // (every gate SF and sf1 sit far below), so hashes are
+      // unaffected where gated
+      val mWords = math.min(65536L, math.max(4L, gran / 8L))
+      val mBits = mWords * 64L
+      val url = concat(lit("doc://"), col("source"), lit("/"),
+        col("doc_id").cast("string"))
+      val withG = d.withColumn("g", expr(s"doc_id div $gran"))
+        .withColumn("url", url)
+      withG.repartition(col("g"))
+        .write.partitionBy("g").mode("overwrite")
+        .parquet(s"$stage/data")
+      // write-time bloom: h1 = polyHash(url), h2 derived (squared
+      // mix), two probe bits per key; one metadata-sized aggregate
+      val h1c = graft.functions.TextFunctions.polyHash(col("url"))
+      val hashed = withG.select(col("g"), h1c.as("h1"))
+        .withColumn("h2",
+          expr(s"(h1 * h1 + $manifestA) % ${graft.functions.PolyHash.P}"))
+      val bloomRows = (1 to 2).map(i =>
+          hashed.select(col("g"),
+            expr(s"(h1 + $i * h2) % $mBits").as("pos")))
+        .reduce(_ unionByName _)
+        .select(col("g"), expr("pos div 63").as("w"),
+          // 63 bits per word: the sign bit is never set, so both
+          // engines' checked shifts stay in range
+          expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))")
+            .as("m"))
+        .groupBy("g", "w").agg(expr("bit_or(m)").as("mask"))
+        .collect()  // hint audit: gate-scale collect — files × words/file is ROW-proportional (≈ rows/8 longs total, ~512 KB at sf1); a production reader tests blooms inside the distributed manifest scan (one file's ≤64Ki words per task), never a driver Map
+      val bloom = bloomRows.map(r =>
+        (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val nFiles = withG.select("g").distinct().count()
+      val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
+      // probes: two real urls from different granules + one absent
+      def urlOf(id: Long): String = d.where(col("doc_id") === id)
+        .select(url).head().getString(0)
+      val probes = Seq(
+        ("a_hit_mid", urlOf(maxId / 2)),
+        ("b_hit_low", urlOf(maxId / 5)),
+        ("c_miss", "doc://void/424242"))
+      probes.map { case (name, pu) =>
+        val h1 = s.range(1)
+          .select(graft.functions.TextFunctions.polyHash(lit(pu)))
+          .head().getLong(0)
+        val h2 = (h1 * h1 + manifestA) % graft.functions.PolyHash.P
+        val bits = (1 to 2).map(i => (h1 + i * h2) % mBits)
+        val passing = (0L until nFiles).filter(g => bits.forall(b =>
+          (bloom.getOrElse((g, b / 63), 0L) & (1L << (b % 63).toInt))
+            != 0L)).sorted
+        val found =
+          if (passing.isEmpty) s.range(1)
+            .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+              lit(0L).as("n_containing"))
+          else s.read
+            .parquet(passing.map(g => s"$stage/data/g=$g"): _*)
+            .where(col("url") === pu)
+            .agg(count(lit(1)).as("n_rows"),
+              coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
+              countDistinct(expr(s"doc_id div $gran"))
+                .as("n_containing"))
+        found.select(lit(name).as("probe"),
+          lit(nFiles).as("n_files_total"),
+          lit(passing.size.toLong).as("n_files_bloom_pass"),
+          (lit(passing.size.toLong) - col("n_containing"))
+            .as("n_false_positive_files"),
+          col("n_rows"), col("sum_chars"))
+      }.reduce(_ unionByName _).orderBy("probe")
     }),
 
     // Z-ORDER CLUSTERING (Delta OPTIMIZE ZORDER BY / Iceberg
@@ -1722,84 +1594,78 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // data-scale rewrite (like any compaction), metadata unchanged
     // in size, every multi-dimension scan after it reads ~the
     // query's rectangle instead of the full table.
-    "q320_lake_zorder" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q320-lake")
-      try {
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("source"))
-        val gran = lakeGranFor(d.count())
-        val mm = d.agg(max(col("doc_id")), max(col("n_chars"))).head()
-        val (maxId, maxCh) = (mm.getLong(0), mm.getLong(1))
-        val gx = maxId / 64 + 1
-        val gy = maxCh / 64 + 1
-        val nf = maxId / gran + 1
-        val xb = expr(s"doc_id div $gx")
-        val yb = expr(s"n_chars div $gy")
-        val zv = (0 until 6).map(k =>
-          shiftright(xb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k)) +
-            shiftright(yb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k + 1)))
-          .reduce(_ + _)
-        val laid = d
-          .withColumn("lin_f", expr(s"doc_id div $gran"))
-          // 4096 = 2^12, so the rank→file map is a pure integer shift
-          .withColumn("zf", shiftright(zv * nf, 12))
-        def layout(name: String, fcol: String): Unit =
-          laid.select(col("doc_id"), col("n_chars"), col(fcol).as("f"))
-            .repartition(col("f"))
-            .write.partitionBy("f").mode("overwrite")
-            .parquet(s"$stage/$name")
-        layout("linear", "lin_f")
-        layout("zorder", "zf")
-        // write-time per-file stats over BOTH dimensions — the q302
-        // manifest convention, one metadata-sized agg per layout
-        def statsOf(fcol: String): Array[(Long, Long, Long, Long, Long)] =
-          laid.groupBy(col(fcol).as("f"))
-            .agg(min(col("doc_id")), max(col("doc_id")),
-              min(col("n_chars")), max(col("n_chars")))
-            .collect()  // hint audit: manifest-sized (one row per file)
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4)))
-        val stats = Map("linear" -> statsOf("lin_f"),
-          "zorder" -> statsOf("zf"))
-        // probes: the 2-D rectangle and the non-leading single column
-        val (lo1, hi1) = (maxId / 4, maxId / 2)
-        val (lo2, hi2) = (maxCh / 4, maxCh / 2)
-        val probes = Seq(
-          ("a_two_dim", Some((lo1, hi1)), (lo2, hi2)),
-          ("b_chars_only", None, (lo2, hi2)))
-        val out = (for {
-          (pname, idR, chR) <- probes
-          lname <- Seq("linear", "zorder")
-        } yield {
-          val st = stats(lname)
-          val pass = st.filter { case (_, mnI, mxI, mnC, mxC) =>
-            idR.forall { case (l, h) => mxI >= l && mnI <= h } &&
-              mxC >= chR._1 && mnC <= chR._2
-          }.map(_._1).sorted
-          val pred = idR.map { case (l, h) =>
-            col("doc_id") >= l && col("doc_id") <= h }
-            .getOrElse(lit(true)) &&
-            col("n_chars") >= chR._1 && col("n_chars") <= chR._2
-          val read =
-            if (pass.isEmpty) s.range(1)
-              .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-                lit(0L).as("key_checksum"))
-            else s.read
-              .parquet(pass.map(f => s"$stage/$lname/f=$f"): _*)
-              .where(pred)
-              .agg(count(lit(1)).as("n_rows"),
-                coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
-                coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-                  .as("key_checksum"))
-          read.select(lit(pname).as("probe"), lit(lname).as("layout"),
-            lit(st.length.toLong).as("n_files_total"),
-            lit(pass.length.toLong).as("n_files_pass"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }).reduce(_ unionByName _).orderBy("probe", "layout")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q320_lake_zorder" -> ((s, dir) => Staged.scratch(s, "q320") { stage =>
+      val d = docs(s, dir).select(col("doc_id"),
+        col("n_chars").cast("long").as("n_chars"), col("source"))
+      val gran = lakeGranFor(d.count())
+      val mm = d.agg(max(col("doc_id")), max(col("n_chars"))).head()
+      val (maxId, maxCh) = (mm.getLong(0), mm.getLong(1))
+      val gx = maxId / 64 + 1
+      val gy = maxCh / 64 + 1
+      val nf = maxId / gran + 1
+      val xb = expr(s"doc_id div $gx")
+      val yb = expr(s"n_chars div $gy")
+      val zv = (0 until 6).map(k =>
+        shiftright(xb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k)) +
+          shiftright(yb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k + 1)))
+        .reduce(_ + _)
+      val laid = d
+        .withColumn("lin_f", expr(s"doc_id div $gran"))
+        // 4096 = 2^12, so the rank→file map is a pure integer shift
+        .withColumn("zf", shiftright(zv * nf, 12))
+      def layout(name: String, fcol: String): Unit =
+        laid.select(col("doc_id"), col("n_chars"), col(fcol).as("f"))
+          .repartition(col("f"))
+          .write.partitionBy("f").mode("overwrite")
+          .parquet(s"$stage/$name")
+      layout("linear", "lin_f")
+      layout("zorder", "zf")
+      // write-time per-file stats over BOTH dimensions — the q302
+      // manifest convention, one metadata-sized agg per layout
+      def statsOf(fcol: String): Array[(Long, Long, Long, Long, Long)] =
+        laid.groupBy(col(fcol).as("f"))
+          .agg(min(col("doc_id")), max(col("doc_id")),
+            min(col("n_chars")), max(col("n_chars")))
+          .collect()  // hint audit: manifest-sized (one row per file)
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4)))
+      val stats = Map("linear" -> statsOf("lin_f"),
+        "zorder" -> statsOf("zf"))
+      // probes: the 2-D rectangle and the non-leading single column
+      val (lo1, hi1) = (maxId / 4, maxId / 2)
+      val (lo2, hi2) = (maxCh / 4, maxCh / 2)
+      val probes = Seq(
+        ("a_two_dim", Some((lo1, hi1)), (lo2, hi2)),
+        ("b_chars_only", None, (lo2, hi2)))
+      (for {
+        (pname, idR, chR) <- probes
+        lname <- Seq("linear", "zorder")
+      } yield {
+        val st = stats(lname)
+        val pass = st.filter { case (_, mnI, mxI, mnC, mxC) =>
+          idR.forall { case (l, h) => mxI >= l && mnI <= h } &&
+            mxC >= chR._1 && mnC <= chR._2
+        }.map(_._1).sorted
+        val pred = idR.map { case (l, h) =>
+          col("doc_id") >= l && col("doc_id") <= h }
+          .getOrElse(lit(true)) &&
+          col("n_chars") >= chR._1 && col("n_chars") <= chR._2
+        val read =
+          if (pass.isEmpty) s.range(1)
+            .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+              lit(0L).as("key_checksum"))
+          else s.read
+            .parquet(pass.map(f => s"$stage/$lname/f=$f"): _*)
+            .where(pred)
+            .agg(count(lit(1)).as("n_rows"),
+              coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
+              coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
+                .as("key_checksum"))
+        read.select(lit(pname).as("probe"), lit(lname).as("layout"),
+          lit(st.length.toLong).as("n_files_total"),
+          lit(pass.length.toLong).as("n_files_pass"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }).reduce(_ unionByName _).orderBy("probe", "layout")
     }),
 
     // MERGE INTO (stats-targeted copy-on-write upsert) — the marquee
@@ -1825,83 +1691,77 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // MERGE is affordable: write amplification ∝ files CONTAINING
     // matches (stats-bounded), not table size, and readers see one
     // atomic version flip.
-    "q321_lake_merge" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q321-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val matchedPred = expr(s"doc_id div $gran").isin(1L, 3L) &&
-          col("doc_id") % 13 === 3
-        val (active, _) = ckptResolve(s, stage.toString, 2)
-        val snapshot = s.read.parquet(active.map(_._1): _*)
-        val kmm = snapshot.where(matchedPred)
-          .agg(min(col("doc_id")), max(col("doc_id")),
-            count(lit(1))).head()
-        val nUpd = kmm.getLong(2)
-        // zero-match guard (round-17 ADVICE): a table whose rows never
-        // satisfy matchedPred has null key min/max and an empty
-        // candidate list — skip the rewrite phase entirely and commit
-        // only the inserts, keeping the funnel columns at 0 (the
-        // logical-upsert oracle's zero-update row)
-        val cands =
-          if (nUpd == 0L) Seq.empty[(String, Long, Long)]
-          else {
-            val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
-            // phase 1: manifest-stats candidates
-            active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
-          }
-        // phase 2: candidates that actually contain a match
-        val matchedParts =
-          if (cands.isEmpty) Array.empty[String]
-          else s.read.parquet(cands.map(_._1): _*)
-            .where(matchedPred)
-            .select(input_file_name().as("f")).distinct()
-            .collect().map(_.getString(0))  // hint audit: manifest-sized (one row per matched part file)
-        val hits = cands.filter { case (p, _, _) =>
-          matchedParts.exists(_.contains(p + "/")) }
-        // CoW rewrites: all rows of each hit file, updates applied;
-        // doc_id stats carry over (keys are untouched by the update)
-        val chType = snapshot.schema("n_chars").dataType
-        val rewriteAdds = hits.zipWithIndex.map { case ((p, mn, mx), i) =>
-          val rp = s"$stage/mw$i"
-          s.read.parquet(p)
-            .withColumn("n_chars",
-              when(matchedPred, col("n_chars") + lit(1000).cast(chType))
-                .otherwise(col("n_chars")))
-            .coalesce(1).write.mode("overwrite").parquet(rp)
-          ("add", rp, mn, mx)
+    "q321_lake_merge" -> ((s, dir) => Staged.scratch(s, "q321") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val matchedPred = expr(s"doc_id div $gran").isin(1L, 3L) &&
+        col("doc_id") % 13 === 3
+      val (active, _) = ckptResolve(s, stage.toString, 2)
+      val snapshot = s.read.parquet(active.map(_._1): _*)
+      val kmm = snapshot.where(matchedPred)
+        .agg(min(col("doc_id")), max(col("doc_id")),
+          count(lit(1))).head()
+      val nUpd = kmm.getLong(2)
+      // zero-match guard (round-17 ADVICE): a table whose rows never
+      // satisfy matchedPred has null key min/max and an empty
+      // candidate list — skip the rewrite phase entirely and commit
+      // only the inserts, keeping the funnel columns at 0 (the
+      // logical-upsert oracle's zero-update row)
+      val cands =
+        if (nUpd == 0L) Seq.empty[(String, Long, Long)]
+        else {
+          val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
+          // phase 1: manifest-stats candidates
+          active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
         }
-        // the inserts file: 50 new ids past the snapshot maximum
-        val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
-        val ip = s"$stage/mins"
-        s.range(1, 51)
-          .select((lit(maxId) + col("id")).as("doc_id"),
-            lit("merged").as("source"),
-            (lit(100L) + (lit(maxId) + col("id")) % 97)
-              .cast(chType).as("n_chars"))
-          .coalesce(1).write.mode("overwrite").parquet(ip)
-        require(tryCommit(s, stage.toString, 3,
-          hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-            rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
-        // the post-merge snapshot, resolved from the log
-        val out = s.read
-          .parquet(asOfFiles(s, stage.toString, 3): _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
-            sum(col("doc_id") * col("n_chars").cast("long"))
-              .as("mix_checksum"))
-          .select(lit(active.size.toLong).as("n_files_active"),
-            lit(cands.size.toLong).as("n_files_cand_stats"),
-            lit(hits.size.toLong).as("n_files_rewritten"),
-            lit(nUpd).as("n_rows_updated"),
-            lit(50L).as("n_rows_inserted"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"),
-            col("mix_checksum"))
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+      // phase 2: candidates that actually contain a match
+      val matchedParts =
+        if (cands.isEmpty) Array.empty[String]
+        else s.read.parquet(cands.map(_._1): _*)
+          .where(matchedPred)
+          .select(input_file_name().as("f")).distinct()
+          .collect().map(_.getString(0))  // hint audit: manifest-sized (one row per matched part file)
+      val hits = cands.filter { case (p, _, _) =>
+        matchedParts.exists(_.contains(p + "/")) }
+      // CoW rewrites: all rows of each hit file, updates applied;
+      // doc_id stats carry over (keys are untouched by the update)
+      val chType = snapshot.schema("n_chars").dataType
+      val rewriteAdds = hits.zipWithIndex.map { case ((p, mn, mx), i) =>
+        val rp = s"$stage/mw$i"
+        s.read.parquet(p)
+          .withColumn("n_chars",
+            when(matchedPred, col("n_chars") + lit(1000).cast(chType))
+              .otherwise(col("n_chars")))
+          .coalesce(1).write.mode("overwrite").parquet(rp)
+        ("add", rp, mn, mx)
+      }
+      // the inserts file: 50 new ids past the snapshot maximum
+      val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
+      val ip = s"$stage/mins"
+      s.range(1, 51)
+        .select((lit(maxId) + col("id")).as("doc_id"),
+          lit("merged").as("source"),
+          (lit(100L) + (lit(maxId) + col("id")) % 97)
+            .cast(chType).as("n_chars"))
+        .coalesce(1).write.mode("overwrite").parquet(ip)
+      require(tryCommit(s, stage.toString, 3,
+        hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
+          rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
+      // the post-merge snapshot, resolved from the log
+      s.read
+        .parquet(asOfFiles(s, stage.toString, 3): _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
+          sum(col("doc_id") * col("n_chars").cast("long"))
+            .as("mix_checksum"))
+        .select(lit(active.size.toLong).as("n_files_active"),
+          lit(cands.size.toLong).as("n_files_cand_stats"),
+          lit(hits.size.toLong).as("n_files_rewritten"),
+          lit(nUpd).as("n_rows_updated"),
+          lit(50L).as("n_rows_inserted"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"),
+          col("mix_checksum"))
     }),
 
     // PARTITION EVOLUTION — Iceberg's signature capability (spec v2
@@ -1926,76 +1786,70 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // 100 TB this is why evolution beats rewrite: the old petabytes
     // keep their layout and their pruning, the new scheme applies
     // going forward, and the planner cost is one manifest fold.
-    "q332_lake_partition_evolution" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q332-lake")
-      try {
-        import s.implicits._
-        val d = docs(s, dir)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val gran = lakeGranFor(d.count())
-        // spec A: the original ingest (doc_id % 3 <> 2), granule files
-        val a = d.where(col("doc_id") % 3 =!= 2)
-          .withColumn("g", expr(s"doc_id div $gran"))
-        a.repartition(col("g"))
-          .write.partitionBy("g").mode("overwrite")
-          .parquet(s"$stage/specA")
-        // spec B: post-evolution ingest (% 3 = 2), source files (the
-        // partition column is duplicated so data files keep `source` —
-        // readers of a leaf directory must still see the full row)
-        val b = d.where(col("doc_id") % 3 === 2)
-        b.withColumn("sp", col("source"))
-          .repartition(col("sp"))
-          .write.partitionBy("sp").mode("overwrite")
-          .parquet(s"$stage/specB")
-        // the manifest: partition tuple + key stats per file
-        val aManifest = a.groupBy("g")
-          .agg(min(col("doc_id")), max(col("doc_id")))
-          .collect()  // hint audit: manifest-sized
-          .map(r => (s"$stage/specA/g=${r.getLong(0)}", "range",
-            r.getLong(0).toString, r.getLong(1), r.getLong(2)))
-        val bManifest = b.groupBy("source")
-          .agg(min(col("doc_id")), max(col("doc_id")))
-          .collect()  // hint audit: manifest-sized
-          .map(r => (s"$stage/specB/sp=${r.getString(0)}", "source",
-            r.getString(0), r.getLong(1), r.getLong(2)))
-        val manifest = aManifest ++ bManifest
-        val (lo, hi) = (2L * gran, 2L * gran + gran / 2)
-        val srcPick = d.agg(min(col("source"))).head().getString(0)
-        // per-file pruning under the file's OWN spec
-        def scan(idR: Option[(Long, Long)], srcEq: Option[String])
-            : Seq[String] =
-          manifest.filter { case (_, ptype, pval, mn, mx) =>
-            val idOk = idR.forall { case (l, h) => mx >= l && mn <= h }
-            val srcOk = srcEq.forall(sv =>
-              ptype != "source" || pval == sv)
-            idOk && srcOk
-          }.map(_._1).toSeq.sorted
-        def probe(name: String, idR: Option[(Long, Long)],
-            srcEq: Option[String]): DataFrame = {
-          val files = scan(idR, srcEq)
-          val pred = idR.map { case (l, h) =>
-            col("doc_id") >= l && col("doc_id") <= h }
-            .getOrElse(lit(true)) &&
-            srcEq.map(col("source") === _).getOrElse(lit(true))
-          s.read.parquet(files: _*).where(pred)
-            .agg(count(lit(1)).as("n_rows"),
-              coalesce(sum(col("n_chars").cast("long")), lit(0L))
-                .as("sum_chars"),
-              coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-                .as("key_checksum"))
-            .select(lit(name).as("probe"),
-              lit(manifest.length.toLong).as("n_files_total"),
-              lit(files.size.toLong).as("n_files_scanned"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        val out = probe("a_id_range", Some((lo, hi)), None)
-          .unionByName(probe("b_source_eq", None, Some(srcPick)))
-          .unionByName(probe("c_combined", Some((lo, hi)), Some(srcPick)))
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q332_lake_partition_evolution" -> ((s, dir) => Staged.scratch(s, "q332") { stage =>
+      import s.implicits._
+      val d = docs(s, dir)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      val gran = lakeGranFor(d.count())
+      // spec A: the original ingest (doc_id % 3 <> 2), granule files
+      val a = d.where(col("doc_id") % 3 =!= 2)
+        .withColumn("g", expr(s"doc_id div $gran"))
+      a.repartition(col("g"))
+        .write.partitionBy("g").mode("overwrite")
+        .parquet(s"$stage/specA")
+      // spec B: post-evolution ingest (% 3 = 2), source files (the
+      // partition column is duplicated so data files keep `source` —
+      // readers of a leaf directory must still see the full row)
+      val b = d.where(col("doc_id") % 3 === 2)
+      b.withColumn("sp", col("source"))
+        .repartition(col("sp"))
+        .write.partitionBy("sp").mode("overwrite")
+        .parquet(s"$stage/specB")
+      // the manifest: partition tuple + key stats per file
+      val aManifest = a.groupBy("g")
+        .agg(min(col("doc_id")), max(col("doc_id")))
+        .collect()  // hint audit: manifest-sized
+        .map(r => (s"$stage/specA/g=${r.getLong(0)}", "range",
+          r.getLong(0).toString, r.getLong(1), r.getLong(2)))
+      val bManifest = b.groupBy("source")
+        .agg(min(col("doc_id")), max(col("doc_id")))
+        .collect()  // hint audit: manifest-sized
+        .map(r => (s"$stage/specB/sp=${r.getString(0)}", "source",
+          r.getString(0), r.getLong(1), r.getLong(2)))
+      val manifest = aManifest ++ bManifest
+      val (lo, hi) = (2L * gran, 2L * gran + gran / 2)
+      val srcPick = d.agg(min(col("source"))).head().getString(0)
+      // per-file pruning under the file's OWN spec
+      def scan(idR: Option[(Long, Long)], srcEq: Option[String])
+          : Seq[String] =
+        manifest.filter { case (_, ptype, pval, mn, mx) =>
+          val idOk = idR.forall { case (l, h) => mx >= l && mn <= h }
+          val srcOk = srcEq.forall(sv =>
+            ptype != "source" || pval == sv)
+          idOk && srcOk
+        }.map(_._1).toSeq.sorted
+      def probe(name: String, idR: Option[(Long, Long)],
+          srcEq: Option[String]): DataFrame = {
+        val files = scan(idR, srcEq)
+        val pred = idR.map { case (l, h) =>
+          col("doc_id") >= l && col("doc_id") <= h }
+          .getOrElse(lit(true)) &&
+          srcEq.map(col("source") === _).getOrElse(lit(true))
+        s.read.parquet(files: _*).where(pred)
+          .agg(count(lit(1)).as("n_rows"),
+            coalesce(sum(col("n_chars").cast("long")), lit(0L))
+              .as("sum_chars"),
+            coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
+              .as("key_checksum"))
+          .select(lit(name).as("probe"),
+            lit(manifest.length.toLong).as("n_files_total"),
+            lit(files.size.toLong).as("n_files_scanned"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      probe("a_id_range", Some((lo, hi)), None)
+        .unionByName(probe("b_source_eq", None, Some(srcPick)))
+        .unionByName(probe("c_combined", Some((lo, hi)), Some(srcPick)))
+        .orderBy("probe")
     }),
 
     // CATALOG-LEVEL MULTI-TABLE SNAPSHOTS — the consistency layer
@@ -2019,87 +1873,81 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // catalog adds one KB-scale manifest per coordinated commit and
     // one extra pointer read per query — cross-table consistency at
     // metadata cost.
-    "q330_lake_catalog_snapshot" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q330-lake")
-      try {
-        import s.implicits._
-        val d = docs(s, dir)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val gran = lakeGranFor(d.count())
-        val updPred = expr(s"doc_id div $gran") === 2L
-        val chType = d.schema("n_chars").dataType
-        def upd(df: DataFrame): DataFrame = df.withColumn("n_chars",
-          when(updPred, col("n_chars") + lit(1000).cast(chType))
-            .otherwise(col("n_chars")))
-        def rollup(df: DataFrame): DataFrame = df.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars").cast("long")).as("sum_chars"))
-        // table data files + per-table logs (the q274 convention)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$stage/A/_log"))
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$stage/B/_log"))
-        d.coalesce(1).write.mode("overwrite").parquet(s"$stage/a0")
-        upd(d).coalesce(1).write.mode("overwrite").parquet(s"$stage/a1")
-        rollup(d).coalesce(1).write.mode("overwrite")
-          .parquet(s"$stage/b0")
-        rollup(upd(d)).coalesce(1).write.mode("overwrite")
-          .parquet(s"$stage/b1")
-        val amm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (a0, a1) = (amm.getLong(0), amm.getLong(1))
-        require(tryCommit(s, s"$stage/A", 0,
-          Seq(("add", s"$stage/a0", a0, a1))))
-        require(tryCommit(s, s"$stage/A", 1,
-          Seq(("remove", s"$stage/a0", -1L, -1L),
-            ("add", s"$stage/a1", a0, a1))))
-        require(tryCommit(s, s"$stage/B", 0,
-          Seq(("add", s"$stage/b0", -1L, -1L))))
-        require(tryCommit(s, s"$stage/B", 1,
-          Seq(("remove", s"$stage/b0", -1L, -1L),
-            ("add", s"$stage/b1", -1L, -1L))))
-        // the catalog: one manifest per catalog version mapping table
-        // -> pinned version; the pointer swing IS the coordinated
-        // commit's visibility point
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$stage/_catalog"))
-        Seq(("A", 0L), ("B", 0L)).toDF("tbl", "version").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_catalog/c0")
-        Seq(("A", 1L), ("B", 1L)).toDF("tbl", "version").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_catalog/c1")
-        def catAt(c: Int): Map[String, Int] =
-          s.read.parquet(s"$stage/_catalog/c$c").collect()
-            .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-        def consistency(name: String, av: Int, bv: Int): DataFrame = {
-          val a = s.read.parquet(asOfFiles(s, s"$stage/A", av): _*)
-          val b = s.read.parquet(asOfFiles(s, s"$stage/B", bv): _*)
-          rollup(a).select(col("source"), col("n_docs").as("a_docs"),
-              col("sum_chars").as("a_chars"))
-            .join(b.select(col("source"), col("n_docs").as("b_docs"),
-              col("sum_chars").as("b_chars")), Seq("source"))
-            .agg(count(lit(1)).as("n_sources"),
-              sum(when(col("a_docs") === col("b_docs") &&
-                col("a_chars") === col("b_chars"), 1L).otherwise(0L))
-                .as("n_consistent"),
-              sum(when(col("a_docs") === col("b_docs") &&
-                col("a_chars") === col("b_chars"), 0L).otherwise(1L))
-                .as("n_inconsistent"),
-              sum(col("a_chars")).as("sum_chars_a"),
-              sum(col("b_chars")).as("sum_chars_b"))
-            .select(lit(name).as("probe"), col("n_sources"),
-              col("n_consistent"), col("n_inconsistent"),
-              col("sum_chars_a"), col("sum_chars_b"))
-        }
-        val c0 = catAt(0)
-        val c1 = catAt(1)
-        val out = consistency("a_catalog_v0", c0("A"), c0("B"))
-          .unionByName(consistency("b_catalog_v1", c1("A"), c1("B")))
-          // the read the catalog prevents: per-table latest, mid-update
-          .unionByName(consistency("c_torn_latest_reads", 1, 0))
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q330_lake_catalog_snapshot" -> ((s, dir) => Staged.scratch(s, "q330") { stage =>
+      import s.implicits._
+      val d = docs(s, dir)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      val gran = lakeGranFor(d.count())
+      val updPred = expr(s"doc_id div $gran") === 2L
+      val chType = d.schema("n_chars").dataType
+      def upd(df: DataFrame): DataFrame = df.withColumn("n_chars",
+        when(updPred, col("n_chars") + lit(1000).cast(chType))
+          .otherwise(col("n_chars")))
+      def rollup(df: DataFrame): DataFrame = df.groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars").cast("long")).as("sum_chars"))
+      // table data files + per-table logs (the q274 convention)
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$stage/A/_log"))
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$stage/B/_log"))
+      d.coalesce(1).write.mode("overwrite").parquet(s"$stage/a0")
+      upd(d).coalesce(1).write.mode("overwrite").parquet(s"$stage/a1")
+      rollup(d).coalesce(1).write.mode("overwrite")
+        .parquet(s"$stage/b0")
+      rollup(upd(d)).coalesce(1).write.mode("overwrite")
+        .parquet(s"$stage/b1")
+      val amm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (a0, a1) = (amm.getLong(0), amm.getLong(1))
+      require(tryCommit(s, s"$stage/A", 0,
+        Seq(("add", s"$stage/a0", a0, a1))))
+      require(tryCommit(s, s"$stage/A", 1,
+        Seq(("remove", s"$stage/a0", -1L, -1L),
+          ("add", s"$stage/a1", a0, a1))))
+      require(tryCommit(s, s"$stage/B", 0,
+        Seq(("add", s"$stage/b0", -1L, -1L))))
+      require(tryCommit(s, s"$stage/B", 1,
+        Seq(("remove", s"$stage/b0", -1L, -1L),
+          ("add", s"$stage/b1", -1L, -1L))))
+      // the catalog: one manifest per catalog version mapping table
+      // -> pinned version; the pointer swing IS the coordinated
+      // commit's visibility point
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$stage/_catalog"))
+      Seq(("A", 0L), ("B", 0L)).toDF("tbl", "version").coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/_catalog/c0")
+      Seq(("A", 1L), ("B", 1L)).toDF("tbl", "version").coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/_catalog/c1")
+      def catAt(c: Int): Map[String, Int] =
+        s.read.parquet(s"$stage/_catalog/c$c").collect()
+          .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
+      def consistency(name: String, av: Int, bv: Int): DataFrame = {
+        val a = s.read.parquet(asOfFiles(s, s"$stage/A", av): _*)
+        val b = s.read.parquet(asOfFiles(s, s"$stage/B", bv): _*)
+        rollup(a).select(col("source"), col("n_docs").as("a_docs"),
+            col("sum_chars").as("a_chars"))
+          .join(b.select(col("source"), col("n_docs").as("b_docs"),
+            col("sum_chars").as("b_chars")), Seq("source"))
+          .agg(count(lit(1)).as("n_sources"),
+            sum(when(col("a_docs") === col("b_docs") &&
+              col("a_chars") === col("b_chars"), 1L).otherwise(0L))
+              .as("n_consistent"),
+            sum(when(col("a_docs") === col("b_docs") &&
+              col("a_chars") === col("b_chars"), 0L).otherwise(1L))
+              .as("n_inconsistent"),
+            sum(col("a_chars")).as("sum_chars_a"),
+            sum(col("b_chars")).as("sum_chars_b"))
+          .select(lit(name).as("probe"), col("n_sources"),
+            col("n_consistent"), col("n_inconsistent"),
+            col("sum_chars_a"), col("sum_chars_b"))
+      }
+      val c0 = catAt(0)
+      val c1 = catAt(1)
+      consistency("a_catalog_v0", c0("A"), c0("B"))
+        .unionByName(consistency("b_catalog_v1", c1("A"), c1("B")))
+        // the read the catalog prevents: per-table latest, mid-update
+        .unionByName(consistency("c_torn_latest_reads", 1, 0))
+        .orderBy("probe")
     }),
 
     // RESTORE TO VERSION — Delta's RESTORE TABLE ... TO VERSION AS
@@ -2120,40 +1968,34 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // — pure manifest arithmetic, the same reason it is instant on a
     // petabyte table; only a later vacuum pays anything, and q323's
     // rule protects what restore re-referenced.
-    "q326_lake_restore" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q326-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        // the target snapshot's entries WITH their original stats
-        val target = ckptResolve(s, stage.toString, 1)._1
-        val current = asOfFiles(s, stage.toString, 2).toSet
-        val targetSet = target.map(_._1).toSet
-        val adds = target.filterNot(e => current(e._1))
-        val removes = current.toSeq.filterNot(targetSet).sorted
-        require(tryCommit(s, stage.toString, 3,
-          removes.map(p => ("remove", p, -1L, -1L)) ++
-            adds.map { case (p, mn, mx) => ("add", p, mn, mx) }))
-        def read(name: String, v: Int, nAdds: Long,
-            nRemoves: Long): DataFrame = {
-          val files = asOfFiles(s, stage.toString, v)
-          s.read.parquet(files: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"),
-              lit(nAdds).as("n_restore_adds"),
-              lit(nRemoves).as("n_restore_removes"),
-              lit(files.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        val out = read("a_latest_restored", 3,
-            adds.size.toLong, removes.size.toLong)
-          .unionByName(read("b_asof_v2_preserved", 2, 0L, 0L))
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q326_lake_restore" -> ((s, dir) => Staged.scratch(s, "q326") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      // the target snapshot's entries WITH their original stats
+      val target = ckptResolve(s, stage.toString, 1)._1
+      val current = asOfFiles(s, stage.toString, 2).toSet
+      val targetSet = target.map(_._1).toSet
+      val adds = target.filterNot(e => current(e._1))
+      val removes = current.toSeq.filterNot(targetSet).sorted
+      require(tryCommit(s, stage.toString, 3,
+        removes.map(p => ("remove", p, -1L, -1L)) ++
+          adds.map { case (p, mn, mx) => ("add", p, mn, mx) }))
+      def read(name: String, v: Int, nAdds: Long,
+          nRemoves: Long): DataFrame = {
+        val files = asOfFiles(s, stage.toString, v)
+        s.read.parquet(files: _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("probe"),
+            lit(nAdds).as("n_restore_adds"),
+            lit(nRemoves).as("n_restore_removes"),
+            lit(files.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      read("a_latest_restored", 3,
+          adds.size.toLong, removes.size.toLong)
+        .unionByName(read("b_asof_v2_preserved", 2, 0L, 0L))
+        .orderBy("probe")
     }),
 
     // OPTIMIZE ZORDER AS A COMMITTED TABLE OPERATION — q320 stages
@@ -2177,85 +2019,79 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // shuffle the table pays ONCE, the commit is manifest-sized, and
     // every subsequent chars-range query reads ~pass/total of the
     // table instead of all of it.
-    "q325_lake_optimize_zorder_commit" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q325-lake")
-      try {
-        import s.implicits._
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val active = asOfFiles(s, stage.toString, 2)
-        val snap0 = s.read.parquet(active: _*)
-        val mm = snap0.agg(max(col("doc_id")),
-          max(col("n_chars").cast("long"))).head()
-        val (maxId, maxCh) = (mm.getLong(0), mm.getLong(1))
-        val gx = maxId / 64 + 1
-        val gy = maxCh / 64 + 1
-        val nf = maxId / gran + 1
-        val xb = expr(s"doc_id div $gx")
-        val yb = expr(s"cast(n_chars as bigint) div $gy")
-        val zv = (0 until 6).map(k =>
-          shiftright(xb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k)) +
-            shiftright(yb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k + 1)))
-          .reduce(_ + _)
-        // 4096 = 2^12: rank→file is a pure integer shift (q320)
-        val laid = snap0.withColumn("zf", shiftright(zv * nf, 12))
-        laid.repartition(col("zf"))
-          .write.partitionBy("zf").mode("overwrite")
-          .parquet(s"$stage/z")
-        // refreshed per-file stats over BOTH dimensions
-        val zstats = laid.groupBy("zf")
-          .agg(min(col("doc_id")), max(col("doc_id")),
-            min(col("n_chars").cast("long")),
-            max(col("n_chars").cast("long")))
-          .collect()  // hint audit: manifest-sized (one row per Z file)
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4)))
-        // the atomic swap: removes of the whole old layout + adds of
-        // the Z files, one CAS commit
-        require(tryCommit(s, stage.toString, 3,
-          active.map(p => ("remove", p, -1L, -1L)) ++
-            zstats.map { case (f, mnI, mxI, _, _) =>
-              ("add", s"$stage/z/zf=$f", mnI, mxI) }))
-        zstats.toSeq.map { case (f, _, _, mnC, mxC) =>
-          (s"$stage/z/zf=$f", mnC, mxC) }
-          .toDF("path", "min_chars", "max_chars").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_log/stats-v3")
-        val (lo2, hi2) = (maxCh / 4, maxCh / 2)
-        def probe(name: String, files: Seq[String], pred: Column,
-            nTot: Long, nPass: Long): DataFrame =
-          (if (files.isEmpty) s.range(1)
-            .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
-          else s.read.parquet(files: _*).where(pred)
-            .agg(count(lit(1)).as("n_rows"),
-              coalesce(sum(col("n_chars").cast("long")), lit(0L))
-                .as("sum_chars"),
-              coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-                .as("key_checksum")))
-            .select(lit(name).as("probe"),
-              lit(nTot).as("n_files_total"),
-              lit(nPass).as("n_files_pass"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        // a: the pre-optimize version — OLD layout, content intact
-        val a = probe("a_asof_v2", asOfFiles(s, stage.toString, 2),
-          lit(true), active.size.toLong, active.size.toLong)
-        // b: the latest — Z layout, SAME content (the swap proof)
-        val latest = asOfFiles(s, stage.toString, 3)
-        val b = probe("b_latest_zorder", latest, lit(true),
-          latest.size.toLong, latest.size.toLong)
-        // c: the non-leading-column prune through the COMMITTED stats
-        val passFiles = zstats.filter { case (_, _, _, mnC, mxC) =>
-          mxC >= lo2 && mnC <= hi2 }
-        val c = probe("c_prune_chars",
-          passFiles.map { case (f, _, _, _, _) => s"$stage/z/zf=$f" }.toSeq,
-          col("n_chars").cast("long") >= lo2 &&
-            col("n_chars").cast("long") <= hi2,
-          latest.size.toLong, passFiles.length.toLong)
-        val out = a.unionByName(b).unionByName(c).orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q325_lake_optimize_zorder_commit" -> ((s, dir) => Staged.scratch(s, "q325") { stage =>
+      import s.implicits._
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val active = asOfFiles(s, stage.toString, 2)
+      val snap0 = s.read.parquet(active: _*)
+      val mm = snap0.agg(max(col("doc_id")),
+        max(col("n_chars").cast("long"))).head()
+      val (maxId, maxCh) = (mm.getLong(0), mm.getLong(1))
+      val gx = maxId / 64 + 1
+      val gy = maxCh / 64 + 1
+      val nf = maxId / gran + 1
+      val xb = expr(s"doc_id div $gx")
+      val yb = expr(s"cast(n_chars as bigint) div $gy")
+      val zv = (0 until 6).map(k =>
+        shiftright(xb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k)) +
+          shiftright(yb, k).bitwiseAND(lit(1L)) * lit(1L << (2 * k + 1)))
+        .reduce(_ + _)
+      // 4096 = 2^12: rank→file is a pure integer shift (q320)
+      val laid = snap0.withColumn("zf", shiftright(zv * nf, 12))
+      laid.repartition(col("zf"))
+        .write.partitionBy("zf").mode("overwrite")
+        .parquet(s"$stage/z")
+      // refreshed per-file stats over BOTH dimensions
+      val zstats = laid.groupBy("zf")
+        .agg(min(col("doc_id")), max(col("doc_id")),
+          min(col("n_chars").cast("long")),
+          max(col("n_chars").cast("long")))
+        .collect()  // hint audit: manifest-sized (one row per Z file)
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))
+      // the atomic swap: removes of the whole old layout + adds of
+      // the Z files, one CAS commit
+      require(tryCommit(s, stage.toString, 3,
+        active.map(p => ("remove", p, -1L, -1L)) ++
+          zstats.map { case (f, mnI, mxI, _, _) =>
+            ("add", s"$stage/z/zf=$f", mnI, mxI) }))
+      zstats.toSeq.map { case (f, _, _, mnC, mxC) =>
+        (s"$stage/z/zf=$f", mnC, mxC) }
+        .toDF("path", "min_chars", "max_chars").coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/_log/stats-v3")
+      val (lo2, hi2) = (maxCh / 4, maxCh / 2)
+      def probe(name: String, files: Seq[String], pred: Column,
+          nTot: Long, nPass: Long): DataFrame =
+        (if (files.isEmpty) s.range(1)
+          .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
+            lit(0L).as("key_checksum"))
+        else s.read.parquet(files: _*).where(pred)
+          .agg(count(lit(1)).as("n_rows"),
+            coalesce(sum(col("n_chars").cast("long")), lit(0L))
+              .as("sum_chars"),
+            coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
+              .as("key_checksum")))
+          .select(lit(name).as("probe"),
+            lit(nTot).as("n_files_total"),
+            lit(nPass).as("n_files_pass"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      // a: the pre-optimize version — OLD layout, content intact
+      val a = probe("a_asof_v2", asOfFiles(s, stage.toString, 2),
+        lit(true), active.size.toLong, active.size.toLong)
+      // b: the latest — Z layout, SAME content (the swap proof)
+      val latest = asOfFiles(s, stage.toString, 3)
+      val b = probe("b_latest_zorder", latest, lit(true),
+        latest.size.toLong, latest.size.toLong)
+      // c: the non-leading-column prune through the COMMITTED stats
+      val passFiles = zstats.filter { case (_, _, _, mnC, mxC) =>
+        mxC >= lo2 && mnC <= hi2 }
+      val c = probe("c_prune_chars",
+        passFiles.map { case (f, _, _, _, _) => s"$stage/z/zf=$f" }.toSeq,
+        col("n_chars").cast("long") >= lo2 &&
+          col("n_chars").cast("long") <= hi2,
+        latest.size.toLong, passFiles.length.toLong)
+      a.unionByName(b).unionByName(c).orderBy("probe")
     }),
 
     // MERGE INTO WITH THE DELETE ARM — the third clause real MERGE
@@ -2278,85 +2114,79 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // cost story is q321's: write amplification ∝ files containing
     // matches, and the delete needs no tombstones — CoW IS the
     // delete.
-    "q324_lake_merge_delete" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q324-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val gran = lakeGranFor(docs(s, dir).count())
-        val matchedPred = expr(s"doc_id div $gran").isin(1L, 3L) &&
-          col("doc_id") % 13 === 3
-        // the two matched arms: odd keys delete, even keys update
-        val delPred = matchedPred && col("doc_id") % 2 === 1
-        val updPred = matchedPred && col("doc_id") % 2 === 0
-        val (active, _) = ckptResolve(s, stage.toString, 2)
-        val snapshot = s.read.parquet(active.map(_._1): _*)
-        val kmm = snapshot.where(matchedPred)
-          .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1)),
-            count(when(delPred, lit(1))),
-            count(when(updPred, lit(1)))).head()
-        val nMatched = kmm.getLong(2)
-        val (nDel, nUpd) = (kmm.getLong(3), kmm.getLong(4))
-        val cands =
-          if (nMatched == 0L) Seq.empty[(String, Long, Long)]
-          else {
-            val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
-            active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
-          }
-        val matchedParts =
-          if (cands.isEmpty) Array.empty[String]
-          else s.read.parquet(cands.map(_._1): _*)
-            .where(matchedPred)
-            .select(input_file_name().as("f")).distinct()
-            .collect().map(_.getString(0))  // hint audit: manifest-sized
-        val hits = cands.filter { case (p, _, _) =>
-          matchedParts.exists(_.contains(p + "/")) }
-        val chType = snapshot.schema("n_chars").dataType
-        // CoW rewrites: delete rows filtered OUT, update rows updated;
-        // stats recomputed from the rewrite (deletes can shrink them);
-        // an emptied rewrite commits as a bare remove
-        val rewriteAdds = hits.zipWithIndex.flatMap { case ((p, _, _), i) =>
-          val rp = s"$stage/mw$i"
-          s.read.parquet(p).where(!delPred)
-            .withColumn("n_chars",
-              when(updPred, col("n_chars") + lit(1000).cast(chType))
-                .otherwise(col("n_chars")))
-            .coalesce(1).write.mode("overwrite").parquet(rp)
-          val mm = s.read.parquet(rp)
-            .agg(min(col("doc_id")), max(col("doc_id")),
-              count(lit(1))).head()
-          if (mm.getLong(2) == 0L) None
-          else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
+    "q324_lake_merge_delete" -> ((s, dir) => Staged.scratch(s, "q324") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val gran = lakeGranFor(docs(s, dir).count())
+      val matchedPred = expr(s"doc_id div $gran").isin(1L, 3L) &&
+        col("doc_id") % 13 === 3
+      // the two matched arms: odd keys delete, even keys update
+      val delPred = matchedPred && col("doc_id") % 2 === 1
+      val updPred = matchedPred && col("doc_id") % 2 === 0
+      val (active, _) = ckptResolve(s, stage.toString, 2)
+      val snapshot = s.read.parquet(active.map(_._1): _*)
+      val kmm = snapshot.where(matchedPred)
+        .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1)),
+          count(when(delPred, lit(1))),
+          count(when(updPred, lit(1)))).head()
+      val nMatched = kmm.getLong(2)
+      val (nDel, nUpd) = (kmm.getLong(3), kmm.getLong(4))
+      val cands =
+        if (nMatched == 0L) Seq.empty[(String, Long, Long)]
+        else {
+          val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
+          active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
         }
-        val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
-        val ip = s"$stage/mins"
-        s.range(1, 51)
-          .select((lit(maxId) + col("id")).as("doc_id"),
-            lit("merged").as("source"),
-            (lit(100L) + (lit(maxId) + col("id")) % 97)
-              .cast(chType).as("n_chars"))
-          .coalesce(1).write.mode("overwrite").parquet(ip)
-        require(tryCommit(s, stage.toString, 3,
-          hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-            rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
-        val out = s.read
-          .parquet(asOfFiles(s, stage.toString, 3): _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
-            sum(col("doc_id") * col("n_chars").cast("long"))
-              .as("mix_checksum"))
-          .select(lit(active.size.toLong).as("n_files_active"),
-            lit(cands.size.toLong).as("n_files_cand_stats"),
-            lit(hits.size.toLong).as("n_files_rewritten"),
-            lit(nUpd).as("n_rows_updated"),
-            lit(nDel).as("n_rows_deleted"),
-            lit(50L).as("n_rows_inserted"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"),
-            col("mix_checksum"))
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+      val matchedParts =
+        if (cands.isEmpty) Array.empty[String]
+        else s.read.parquet(cands.map(_._1): _*)
+          .where(matchedPred)
+          .select(input_file_name().as("f")).distinct()
+          .collect().map(_.getString(0))  // hint audit: manifest-sized
+      val hits = cands.filter { case (p, _, _) =>
+        matchedParts.exists(_.contains(p + "/")) }
+      val chType = snapshot.schema("n_chars").dataType
+      // CoW rewrites: delete rows filtered OUT, update rows updated;
+      // stats recomputed from the rewrite (deletes can shrink them);
+      // an emptied rewrite commits as a bare remove
+      val rewriteAdds = hits.zipWithIndex.flatMap { case ((p, _, _), i) =>
+        val rp = s"$stage/mw$i"
+        s.read.parquet(p).where(!delPred)
+          .withColumn("n_chars",
+            when(updPred, col("n_chars") + lit(1000).cast(chType))
+              .otherwise(col("n_chars")))
+          .coalesce(1).write.mode("overwrite").parquet(rp)
+        val mm = s.read.parquet(rp)
+          .agg(min(col("doc_id")), max(col("doc_id")),
+            count(lit(1))).head()
+        if (mm.getLong(2) == 0L) None
+        else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
+      }
+      val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
+      val ip = s"$stage/mins"
+      s.range(1, 51)
+        .select((lit(maxId) + col("id")).as("doc_id"),
+          lit("merged").as("source"),
+          (lit(100L) + (lit(maxId) + col("id")) % 97)
+            .cast(chType).as("n_chars"))
+        .coalesce(1).write.mode("overwrite").parquet(ip)
+      require(tryCommit(s, stage.toString, 3,
+        hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
+          rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
+      s.read
+        .parquet(asOfFiles(s, stage.toString, 3): _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
+          sum(col("doc_id") * col("n_chars").cast("long"))
+            .as("mix_checksum"))
+        .select(lit(active.size.toLong).as("n_files_active"),
+          lit(cands.size.toLong).as("n_files_cand_stats"),
+          lit(hits.size.toLong).as("n_files_rewritten"),
+          lit(nUpd).as("n_rows_updated"),
+          lit(nDel).as("n_rows_deleted"),
+          lit(50L).as("n_rows_inserted"),
+          col("n_rows"), col("sum_chars"), col("key_checksum"),
+          col("mix_checksum"))
     }),
 
     // SHALLOW CLONE (zero-copy table clone) — Delta's CLONE ... SHALLOW:
@@ -2377,54 +2207,47 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // architecture this suite's own staging memoization runs on; the
     // price (vacuum on the source must now consult clone references
     // too) is q303's retention contract extended across logs.
-    "q322_lake_shallow_clone" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q322-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        val cloneRoot = java.nio.file.Paths.get(stage.toString, "clone")
-        // the CLONE op: metadata only — copy the source's log as of
-        // v2 into the clone's own root
-        java.nio.file.Files.createDirectories(cloneRoot)
-        graft.util.FileUtils.copyRecursively(
-          java.nio.file.Paths.get(stage.toString, "_log"),
-          cloneRoot.resolve("_log"))
-        val snapshot =
-          s.read.parquet(asOfFiles(s, stage.toString, 2): _*)
-        val chType = snapshot.schema("n_chars").dataType
-        val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
-        // divergent appends: 50 rows each, DIFFERENT id ranges
-        def append(root: String, name: String, lo: Long): Unit = {
-          val p = s"$root/$name"
-          s.range(1, 51)
-            .select((lit(lo) + col("id")).as("doc_id"),
-              lit(name).as("source"),
-              (lit(100L) + (lit(lo) + col("id")) % 97)
-                .cast(chType).as("n_chars"))
-            .coalesce(1).write.mode("overwrite").parquet(p)
-          require(tryCommit(s, root, 3,
-            Seq(("add", p, lo + 1, lo + 50))))
-        }
-        append(cloneRoot.toString, "clone_app", maxId)
-        append(stage.toString, "source_app", maxId + 50)
-        def read(name: String, root: String, v: Int): DataFrame = {
-          val files = asOfFiles(s, root, v)
-          s.read.parquet(files: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"),
-              lit(files.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        val out =
-          read("a_clone_at_clone_time", cloneRoot.toString, 2)
-            .unionByName(read("b_clone_latest", cloneRoot.toString, 3))
-            .unionByName(read("c_source_latest", stage.toString, 3))
-            .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q322_lake_shallow_clone" -> ((s, dir) => Staged.scratch(s, "q322") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      val cloneRoot = java.nio.file.Paths.get(stage.toString, "clone")
+      // the CLONE op: metadata only — copy the source's log as of
+      // v2 into the clone's own root
+      java.nio.file.Files.createDirectories(cloneRoot)
+      FileUtils.copyRecursively(
+        java.nio.file.Paths.get(stage.toString, "_log"),
+        cloneRoot.resolve("_log"))
+      val snapshot =
+        s.read.parquet(asOfFiles(s, stage.toString, 2): _*)
+      val chType = snapshot.schema("n_chars").dataType
+      val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
+      // divergent appends: 50 rows each, DIFFERENT id ranges
+      def append(root: String, name: String, lo: Long): Unit = {
+        val p = s"$root/$name"
+        s.range(1, 51)
+          .select((lit(lo) + col("id")).as("doc_id"),
+            lit(name).as("source"),
+            (lit(100L) + (lit(lo) + col("id")) % 97)
+              .cast(chType).as("n_chars"))
+          .coalesce(1).write.mode("overwrite").parquet(p)
+        require(tryCommit(s, root, 3,
+          Seq(("add", p, lo + 1, lo + 50))))
+      }
+      append(cloneRoot.toString, "clone_app", maxId)
+      append(stage.toString, "source_app", maxId + 50)
+      def read(name: String, root: String, v: Int): DataFrame = {
+        val files = asOfFiles(s, root, v)
+        s.read.parquet(files: _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("probe"),
+            lit(files.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      read("a_clone_at_clone_time", cloneRoot.toString, 2)
+        .unionByName(read("b_clone_latest", cloneRoot.toString, 3))
+        .unionByName(read("c_source_latest", stage.toString, 3))
+        .orderBy("probe")
     }),
 
     // VACUUM × SHALLOW CLONE — the price q322 names but leaves
@@ -2452,81 +2275,73 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // of its latest kills a gated read. At 100 TB: one set
     // intersection per clone over manifest-resolved paths — the same
     // cheap insurance as q303, extended across logs.
-    "q323_lake_vacuum_clone_safety" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q323-lake")
-      try {
-        // private data: this gate DELETES data files on execute
-        stageLakeLog(s, dir, stage.toString, withCompaction = true,
-          privateData = true)
-        // shallow clone AS OF v2: metadata only — the clone's log gets
-        // the source manifests up to the fork version, nothing else
-        val cloneRoot = stage.resolve("clone")
-        java.nio.file.Files.createDirectories(cloneRoot.resolve("_log"))
-        (0 to 2).foreach(v => graft.util.FileUtils.copyRecursively(
-          java.nio.file.Paths.get(stage.toString, "_log", s"v$v"),
-          cloneRoot.resolve("_log").resolve(s"v$v")))
-        // the source vacuum's doomed list at boundary 3 (q303's rule)
-        val retained = asOfFiles(s, stage.toString, 3).toSet
-        val doomed = (0 to 3).flatMap(v =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-          .filterNot(retained)
-        val doomedSet = doomed.toSet
-        def scenario(name: String, cloneV: Int): DataFrame = {
-          // clone-aware check: the clone's LATEST active set
-          val cloneFiles = asOfFiles(s, cloneRoot.toString, cloneV)
-          val conflicts = cloneFiles.count(doomedSet)
-          val outcome = if (conflicts > 0) "refused" else "executed"
-          if (conflicts == 0)
-            doomed.foreach(p => rmTree(java.nio.file.Paths.get(p)))
-          s.read.parquet(cloneFiles: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"),
-              lit(doomed.size.toLong).as("n_doomed"),
-              lit(cloneFiles.size.toLong).as("n_clone_files"),
-              lit(conflicts.toLong).as("n_conflicts"),
-              lit(outcome).as("outcome"),
-              lit(cloneFiles.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        def snap(df: DataFrame): DataFrame = {
-          val rows = df.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-        }
-        // a: clone pinned at its fork snapshot — every file conflicts
-        val a = snap(scenario("a_refused_clone_pinned", 2))
-        // the clone compacts into its OWN root: its v3 drops every
-        // shared reference (the divergence that makes the vacuum safe)
-        val cloneActive = asOfFiles(s, cloneRoot.toString, 2)
-        val cc = cloneRoot.resolve("ccompact").toString
-        s.read.parquet(cloneActive: _*).coalesce(1)
-          .write.mode("overwrite").parquet(cc)
-        val ccMm = s.read.parquet(cc)
-          .agg(min(col("doc_id")), max(col("doc_id"))).head()
-        require(tryCommit(s, cloneRoot.toString, 3,
-          cloneActive.map(p => ("remove", p, -1L, -1L)) :+
-            (("add", cc, ccMm.getLong(0), ccMm.getLong(1)))))
-        // b: zero conflicts — the sweep actually unlinks the doomed
-        // files, then the clone's latest read survives off its private
-        // compact file
-        val b = snap(scenario("b_executed_clone_compacted", 3))
-        // c: the source's latest read survives the sweep too
-        val srcFiles = asOfFiles(s, stage.toString, 3)
-        val c = snap(s.read.parquet(srcFiles: _*)
+    "q323_lake_vacuum_clone_safety" -> ((s, dir) => Staged.scratch(s, "q323") { stage =>
+      // private data: this gate DELETES data files on execute
+      stageLakeLog(s, dir, stage.toString, withCompaction = true,
+        privateData = true)
+      // shallow clone AS OF v2: metadata only — the clone's log gets
+      // the source manifests up to the fork version, nothing else
+      val cloneRoot = stage.resolve("clone")
+      java.nio.file.Files.createDirectories(cloneRoot.resolve("_log"))
+      (0 to 2).foreach(v => FileUtils.copyRecursively(
+        java.nio.file.Paths.get(stage.toString, "_log", s"v$v"),
+        cloneRoot.resolve("_log").resolve(s"v$v")))
+      // the source vacuum's doomed list at boundary 3 (q303's rule)
+      val retained = asOfFiles(s, stage.toString, 3).toSet
+      val doomed = (0 to 3).flatMap(v =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        .filterNot(retained)
+      val doomedSet = doomed.toSet
+      def scenario(name: String, cloneV: Int): DataFrame = {
+        // clone-aware check: the clone's LATEST active set
+        val cloneFiles = asOfFiles(s, cloneRoot.toString, cloneV)
+        val conflicts = cloneFiles.count(doomedSet)
+        val outcome = if (conflicts > 0) "refused" else "executed"
+        if (conflicts == 0)
+          doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
+        s.read.parquet(cloneFiles: _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
             sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit("c_source_latest").as("probe"),
+          .select(lit(name).as("probe"),
             lit(doomed.size.toLong).as("n_doomed"),
-            lit(1L).as("n_clone_files"), lit(0L).as("n_conflicts"),
-            lit("executed").as("outcome"),
-            lit(srcFiles.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum")))
-        a.unionByName(b).unionByName(c).orderBy("probe")
-      } finally rmTree(stage)
+            lit(cloneFiles.size.toLong).as("n_clone_files"),
+            lit(conflicts.toLong).as("n_conflicts"),
+            lit(outcome).as("outcome"),
+            lit(cloneFiles.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      // a: clone pinned at its fork snapshot — every file conflicts
+      val a = Staged.local(s, scenario("a_refused_clone_pinned", 2))
+      // the clone compacts into its OWN root: its v3 drops every
+      // shared reference (the divergence that makes the vacuum safe)
+      val cloneActive = asOfFiles(s, cloneRoot.toString, 2)
+      val cc = cloneRoot.resolve("ccompact").toString
+      s.read.parquet(cloneActive: _*).coalesce(1)
+        .write.mode("overwrite").parquet(cc)
+      val ccMm = s.read.parquet(cc)
+        .agg(min(col("doc_id")), max(col("doc_id"))).head()
+      require(tryCommit(s, cloneRoot.toString, 3,
+        cloneActive.map(p => ("remove", p, -1L, -1L)) :+
+          (("add", cc, ccMm.getLong(0), ccMm.getLong(1)))))
+      // b: zero conflicts — the sweep actually unlinks the doomed
+      // files, then the clone's latest read survives off its private
+      // compact file
+      val b = Staged.local(s, scenario("b_executed_clone_compacted", 3))
+      // c: the source's latest read survives the sweep too
+      val srcFiles = asOfFiles(s, stage.toString, 3)
+      val c = Staged.local(s, s.read.parquet(srcFiles: _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("n_chars").cast("long")).as("sum_chars"),
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+        .select(lit("c_source_latest").as("probe"),
+          lit(doomed.size.toLong).as("n_doomed"),
+          lit(1L).as("n_clone_files"), lit(0L).as("n_conflicts"),
+          lit("executed").as("outcome"),
+          lit(srcFiles.size.toLong).as("n_files"),
+          col("n_rows"), col("sum_chars"), col("key_checksum")))
+      a.unionByName(b).unionByName(c).orderBy("probe")
     }),
 
     // COLUMN MAPPING (rename as metadata) — the schema-evolution face
@@ -2545,61 +2360,55 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // for old files shifts a row. At 100 TB this is the difference
     // between a rename costing one manifest row and costing a full
     // table rewrite.
-    "q313_lake_column_mapping" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q313-lake")
-      try {
-        import s.implicits._
-        val d = docs(s, dir)
-        d.select(col("doc_id").as("col_1"), col("n_chars").as("col_2"),
-            col("source").as("col_3"))
-          .where(col("col_1") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/f0")
-        d.select(col("doc_id").as("col_1"), col("n_chars").as("col_2"),
-            col("source").as("col_3"))
-          .where(col("col_1") % 2 === 1)
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1")
-        def writeMapping(v: Int, m: Seq[(String, String)]): Unit =
-          m.toDF("logical", "physical").coalesce(1)
-            .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
-        writeMapping(0, Seq(("doc_id", "col_1"), ("n_chars", "col_2"),
-          ("source", "col_3")))
-        // v1: the rename — ONE metadata row changes, zero files touched
-        writeMapping(1, Seq(("doc_id", "col_1"),
-          ("char_count", "col_2"), ("source", "col_3")))
-        // v2: same mapping as v1; the snapshot gains the f1 append
-        writeMapping(2, Seq(("doc_id", "col_1"),
-          ("char_count", "col_2"), ("source", "col_3")))
-        def readAt(v: Int, files: Seq[String]): (DataFrame, String) = {
-          val mapping = graft.util.ManifestIO
-            .rows(s, s"$stage/_log/schema-v$v")
-            .map(r => r.getString(0) -> r.getString(1))
-            .sortBy(_._1)
-          val df = s.read.parquet(files: _*)
-            .select(mapping.map { case (l, p) => col(p).as(l) }: _*)
-          (df, mapping.map(_._1).mkString(","))
-        }
-        val measureOf = Map(0 -> "n_chars", 1 -> "char_count",
-          2 -> "char_count")
-        def row(name: String, v: Int, files: Seq[String]): DataFrame = {
-          val (df, schema) = readAt(v, files)
-          df.agg(count(lit(1)).as("n_rows"),
-              sum(col(measureOf(v)).cast("long")).as("sum_measure"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"), lit(v.toLong).as("version"),
-              lit(schema).as("logical_schema"),
-              lit(files.size.toLong).as("n_files"), col("n_rows"),
-              col("sum_measure"), col("key_checksum"))
-        }
-        val out = row("a_v0_original_name", 0, Seq(s"$stage/f0"))
-          .unionByName(row("b_v1_renamed_same_bytes", 1,
-            Seq(s"$stage/f0")))
-          .unionByName(row("c_v2_merged_across_rename", 2,
-            Seq(s"$stage/f0", s"$stage/f1")))
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q313_lake_column_mapping" -> ((s, dir) => Staged.scratch(s, "q313") { stage =>
+      import s.implicits._
+      val d = docs(s, dir)
+      d.select(col("doc_id").as("col_1"), col("n_chars").as("col_2"),
+          col("source").as("col_3"))
+        .where(col("col_1") % 2 === 0)
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/f0")
+      d.select(col("doc_id").as("col_1"), col("n_chars").as("col_2"),
+          col("source").as("col_3"))
+        .where(col("col_1") % 2 === 1)
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1")
+      def writeMapping(v: Int, m: Seq[(String, String)]): Unit =
+        m.toDF("logical", "physical").coalesce(1)
+          .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
+      writeMapping(0, Seq(("doc_id", "col_1"), ("n_chars", "col_2"),
+        ("source", "col_3")))
+      // v1: the rename — ONE metadata row changes, zero files touched
+      writeMapping(1, Seq(("doc_id", "col_1"),
+        ("char_count", "col_2"), ("source", "col_3")))
+      // v2: same mapping as v1; the snapshot gains the f1 append
+      writeMapping(2, Seq(("doc_id", "col_1"),
+        ("char_count", "col_2"), ("source", "col_3")))
+      def readAt(v: Int, files: Seq[String]): (DataFrame, String) = {
+        val mapping = graft.util.ManifestIO
+          .rows(s, s"$stage/_log/schema-v$v")
+          .map(r => r.getString(0) -> r.getString(1))
+          .sortBy(_._1)
+        val df = s.read.parquet(files: _*)
+          .select(mapping.map { case (l, p) => col(p).as(l) }: _*)
+        (df, mapping.map(_._1).mkString(","))
+      }
+      val measureOf = Map(0 -> "n_chars", 1 -> "char_count",
+        2 -> "char_count")
+      def row(name: String, v: Int, files: Seq[String]): DataFrame = {
+        val (df, schema) = readAt(v, files)
+        df.agg(count(lit(1)).as("n_rows"),
+            sum(col(measureOf(v)).cast("long")).as("sum_measure"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("probe"), lit(v.toLong).as("version"),
+            lit(schema).as("logical_schema"),
+            lit(files.size.toLong).as("n_files"), col("n_rows"),
+            col("sum_measure"), col("key_checksum"))
+      }
+      row("a_v0_original_name", 0, Seq(s"$stage/f0"))
+        .unionByName(row("b_v1_renamed_same_bytes", 1,
+          Seq(s"$stage/f0")))
+        .unionByName(row("c_v2_merged_across_rename", 2,
+          Seq(s"$stage/f0", s"$stage/f1")))
+        .orderBy("probe")
     }),
 
     // STATS SURVIVE THE RENAME — the composition q313 × q302 that
@@ -2617,72 +2426,66 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // either rescan the table to rebuild stats or silently stop
     // skipping). The measure conjunct's (non-)pruning is emitted
     // honestly, q302's convention.
-    "q314_lake_stats_survive_rename" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q314-lake")
-      try {
-        import s.implicits._
-        val d = docs(s, dir)
-        val gran = lakeGranFor(d.count())
-        val phys = d.select(col("doc_id").as("col_1"),
-            col("n_chars").as("col_2"), col("source").as("col_3"))
-          .withColumn("g", expr(s"col_1 div $gran"))
-        phys.repartition(col("g"))
-          .write.partitionBy("g").mode("overwrite")
-          .parquet(s"$stage/data")
-        // per-file stats keyed by PHYSICAL column name — the form a
-        // rename cannot touch
-        val stats: Map[Long, Map[String, (Long, Long)]] =
-          phys.groupBy("g")
-            .agg(min(col("col_1")), max(col("col_1")),
-              min(col("col_2")), max(col("col_2")))
-            .collect().map(r => r.getLong(0) -> Map(
-              "col_1" -> ((r.getLong(1), r.getLong(2))),
-              "col_2" -> ((r.getLong(3), r.getLong(4))))).toMap
-        def writeMapping(v: Int, measure: String): Unit =
-          Seq(("doc_id", "col_1"), (measure, "col_2"),
-            ("source", "col_3"))
-            .toDF("logical", "physical").coalesce(1)
-            .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
-        writeMapping(0, "n_chars")
-        writeMapping(1, "char_count") // the rename — stats untouched
-        val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
-        val keyLo = maxId / 4
-        val keyHi = maxId / 2
-        val measureMin = 100L
-        def probe(name: String, v: Int, measure: String): DataFrame = {
-          val mapping = graft.util.ManifestIO
-            .rows(s, s"$stage/_log/schema-v$v")
-            .map(r => r.getString(0) -> r.getString(1)).toMap
-          val keyP = mapping("doc_id")
-          val mP = mapping(measure)
-          val afterKey = stats.filter { case (_, st) =>
-            st(keyP)._1 <= keyHi && st(keyP)._2 >= keyLo }
-          val afterMeasure = afterKey.filter { case (_, st) =>
-            st(mP)._2 >= measureMin }
-          val files = afterMeasure.keys.toSeq.sorted
-            .map(g => s"$stage/data/g=$g")
-          val logical = s.read.parquet(files: _*)
-            .select(mapping.toSeq.sortBy(_._1)
-              .map { case (l, p) => col(p).as(l) }: _*)
-          logical
-            .where(col("doc_id").between(keyLo, keyHi) &&
-              col(measure) >= measureMin)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col(measure).cast("long")).as("sum_measure"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"), lit(v.toLong).as("version"),
-              lit(stats.size.toLong).as("n_files_total"),
-              lit(afterKey.size.toLong).as("n_files_after_key"),
-              lit(afterMeasure.size.toLong).as("n_files_after_measure"),
-              col("n_rows"), col("sum_measure"), col("key_checksum"))
-        }
-        val out = probe("a_pre_rename", 0, "n_chars")
-          .unionByName(probe("b_post_rename", 1, "char_count"))
-          .orderBy("probe")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally rmTree(stage)
+    "q314_lake_stats_survive_rename" -> ((s, dir) => Staged.scratch(s, "q314") { stage =>
+      import s.implicits._
+      val d = docs(s, dir)
+      val gran = lakeGranFor(d.count())
+      val phys = d.select(col("doc_id").as("col_1"),
+          col("n_chars").as("col_2"), col("source").as("col_3"))
+        .withColumn("g", expr(s"col_1 div $gran"))
+      phys.repartition(col("g"))
+        .write.partitionBy("g").mode("overwrite")
+        .parquet(s"$stage/data")
+      // per-file stats keyed by PHYSICAL column name — the form a
+      // rename cannot touch
+      val stats: Map[Long, Map[String, (Long, Long)]] =
+        phys.groupBy("g")
+          .agg(min(col("col_1")), max(col("col_1")),
+            min(col("col_2")), max(col("col_2")))
+          .collect().map(r => r.getLong(0) -> Map(
+            "col_1" -> ((r.getLong(1), r.getLong(2))),
+            "col_2" -> ((r.getLong(3), r.getLong(4))))).toMap
+      def writeMapping(v: Int, measure: String): Unit =
+        Seq(("doc_id", "col_1"), (measure, "col_2"),
+          ("source", "col_3"))
+          .toDF("logical", "physical").coalesce(1)
+          .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
+      writeMapping(0, "n_chars")
+      writeMapping(1, "char_count") // the rename — stats untouched
+      val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
+      val keyLo = maxId / 4
+      val keyHi = maxId / 2
+      val measureMin = 100L
+      def probe(name: String, v: Int, measure: String): DataFrame = {
+        val mapping = graft.util.ManifestIO
+          .rows(s, s"$stage/_log/schema-v$v")
+          .map(r => r.getString(0) -> r.getString(1)).toMap
+        val keyP = mapping("doc_id")
+        val mP = mapping(measure)
+        val afterKey = stats.filter { case (_, st) =>
+          st(keyP)._1 <= keyHi && st(keyP)._2 >= keyLo }
+        val afterMeasure = afterKey.filter { case (_, st) =>
+          st(mP)._2 >= measureMin }
+        val files = afterMeasure.keys.toSeq.sorted
+          .map(g => s"$stage/data/g=$g")
+        val logical = s.read.parquet(files: _*)
+          .select(mapping.toSeq.sortBy(_._1)
+            .map { case (l, p) => col(p).as(l) }: _*)
+        logical
+          .where(col("doc_id").between(keyLo, keyHi) &&
+            col(measure) >= measureMin)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col(measure).cast("long")).as("sum_measure"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("probe"), lit(v.toLong).as("version"),
+            lit(stats.size.toLong).as("n_files_total"),
+            lit(afterKey.size.toLong).as("n_files_after_key"),
+            lit(afterMeasure.size.toLong).as("n_files_after_measure"),
+            col("n_rows"), col("sum_measure"), col("key_checksum"))
+      }
+      probe("a_pre_rename", 0, "n_chars")
+        .unionByName(probe("b_post_rename", 1, "char_count"))
+        .orderBy("probe")
     }),
 
     // VACUUM × CHECKPOINT — the interaction q301 and q303 leave
@@ -2704,75 +2507,67 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // rewritten) checkpoint: one manifest read, content hash-exact,
     // zero doomed references. At 100 TB the check is one set
     // intersection over two manifest-sized lists per sweep.
-    "q310_lake_vacuum_ckpt" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft-q310-lake")
-      try {
-        stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
-        def ckptFiles(): Set[String] = {
-          val ptr = java.nio.file.Files.readString(java.nio.file.Paths
-            .get(stage.toString, "_log", "_last_checkpoint")).trim
-          graft.util.ManifestIO.rows(s, s"$stage/_log/ckpt-v$ptr")
-            .map(_.getString(1)).toSet
-        }
-        def allAdds(v: Int): Seq[String] = (0 to v).flatMap(i =>
-          graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
-        def sweep(name: String, boundary: Int): DataFrame = {
-          val retained = asOfFiles(s, stage.toString, boundary).toSet
-          // a real sweep lists the store: doomed = on disk, below the
-          // boundary's retained set (already-freed paths don't recount)
-          val doomed = allAdds(boundary).filterNot(retained).distinct
-            .filter(p => java.nio.file.Files.exists(
-              java.nio.file.Paths.get(p)))
-          val live = ckptFiles()
-          val conflicted = doomed.count(live)
-          val action =
-            if (conflicted > 0) {
-              // rewrite-then-sweep: checkpoint the latest version
-              // (through the old checkpoint), advance the pointer
-              writeCheckpoint(s, stage.toString, boundary)
-              "rewrote_checkpoint"
-            } else "executed_direct"
-          doomed.foreach(p => rmTree(java.nio.file.Paths.get(p)))
-          val residue = doomed.count(ckptFiles())
-          val (files, nReads) = ckptResolve(s, stage.toString, boundary)
-          s.read.parquet(files.map(_._1): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("scenario"),
-              lit(boundary.toLong).as("boundary"),
-              lit(doomed.size.toLong).as("n_doomed"),
-              lit(conflicted.toLong).as("n_doomed_in_live_ckpt"),
-              lit(action).as("action"),
-              lit(residue.toLong).as("n_doomed_in_ckpt_after"),
-              lit(nReads).as("n_manifests_ckpt"),
-              lit(files.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
-        }
-        def snap(df: DataFrame): DataFrame = {
-          val rows = df.collect()
-          s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-        }
-        // scenario a: the committer checkpointed at v2; the v3
-        // compaction swap then dooms every file ckpt-v2 references
-        writeCheckpoint(s, stage.toString, 2)
-        val a = snap(sweep("a_rewrite_then_sweep", 3))
-        // scenario b: another swap (v4) lands WITH its cadence
-        // checkpoint; the doomed old compact file is absent from it
-        val compact2 = s"$stage/compact2"
-        s.read.parquet(s"$stage/compact").coalesce(1)
-          .write.mode("overwrite").parquet(compact2)
-        val mm = s.read.parquet(compact2)
-          .agg(min(col("doc_id")), max(col("doc_id"))).head()
-        require(tryCommit(s, stage.toString, 4,
-          Seq(("remove", s"$stage/compact", -1L, -1L),
-            ("add", compact2, mm.getLong(0), mm.getLong(1)))))
-        writeCheckpoint(s, stage.toString, 4)
-        val b = snap(sweep("b_direct", 4))
-        a.unionByName(b).orderBy("scenario")
-      } finally rmTree(stage)
+    "q310_lake_vacuum_ckpt" -> ((s, dir) => Staged.scratch(s, "q310") { stage =>
+      stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
+      def ckptFiles(): Set[String] = {
+        val ptr = java.nio.file.Files.readString(java.nio.file.Paths
+          .get(stage.toString, "_log", "_last_checkpoint")).trim
+        graft.util.ManifestIO.rows(s, s"$stage/_log/ckpt-v$ptr")
+          .map(_.getString(1)).toSet
+      }
+      def allAdds(v: Int): Seq[String] = (0 to v).flatMap(i =>
+        graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
+          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      def sweep(name: String, boundary: Int): DataFrame = {
+        val retained = asOfFiles(s, stage.toString, boundary).toSet
+        // a real sweep lists the store: doomed = on disk, below the
+        // boundary's retained set (already-freed paths don't recount)
+        val doomed = allAdds(boundary).filterNot(retained).distinct
+          .filter(p => java.nio.file.Files.exists(
+            java.nio.file.Paths.get(p)))
+        val live = ckptFiles()
+        val conflicted = doomed.count(live)
+        val action =
+          if (conflicted > 0) {
+            // rewrite-then-sweep: checkpoint the latest version
+            // (through the old checkpoint), advance the pointer
+            writeCheckpoint(s, stage.toString, boundary)
+            "rewrote_checkpoint"
+          } else "executed_direct"
+        doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
+        val residue = doomed.count(ckptFiles())
+        val (files, nReads) = ckptResolve(s, stage.toString, boundary)
+        s.read.parquet(files.map(_._1): _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
+          .select(lit(name).as("scenario"),
+            lit(boundary.toLong).as("boundary"),
+            lit(doomed.size.toLong).as("n_doomed"),
+            lit(conflicted.toLong).as("n_doomed_in_live_ckpt"),
+            lit(action).as("action"),
+            lit(residue.toLong).as("n_doomed_in_ckpt_after"),
+            lit(nReads).as("n_manifests_ckpt"),
+            lit(files.size.toLong).as("n_files"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"))
+      }
+      // scenario a: the committer checkpointed at v2; the v3
+      // compaction swap then dooms every file ckpt-v2 references
+      writeCheckpoint(s, stage.toString, 2)
+      val a = Staged.local(s, sweep("a_rewrite_then_sweep", 3))
+      // scenario b: another swap (v4) lands WITH its cadence
+      // checkpoint; the doomed old compact file is absent from it
+      val compact2 = s"$stage/compact2"
+      s.read.parquet(s"$stage/compact").coalesce(1)
+        .write.mode("overwrite").parquet(compact2)
+      val mm = s.read.parquet(compact2)
+        .agg(min(col("doc_id")), max(col("doc_id"))).head()
+      require(tryCommit(s, stage.toString, 4,
+        Seq(("remove", s"$stage/compact", -1L, -1L),
+          ("add", compact2, mm.getLong(0), mm.getLong(1)))))
+      writeCheckpoint(s, stage.toString, 4)
+      val b = Staged.local(s, sweep("b_direct", 4))
+      a.unionByName(b).orderBy("scenario")
     }))
 
   /** q301's checkpointed snapshot resolution: newest checkpoint ≤ v —
@@ -2877,8 +2672,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
   /** Stage the delta-log fixture for one gate. The staged content is
     * deterministic per (corpus, granule, convention), so the DATA
     * FILES are staged ONCE per host into an immutable memoized MASTER
-    * (the q307 structFixtureDir device — deterministic /tmp key,
-    * atomic publish) and each gate receives only a copy of the
+    * ([[lakeMasterDir]]) and each gate receives only a copy of the
     * manifest log `_log/` (KBs) into its own stage dir: gates append
     * commits, write checkpoints, or delete manifests in their private
     * log while reading the shared master's data files. Gates that
@@ -2904,83 +2698,47 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // manifest rewrite (KB-scale, one tiny job per version) touches
       // Spark. Measured ~2-4 s saved per private gate at sf0.1.
       val master = lakeMasterDir(s, dir, withCompaction)
-      graft.util.FileUtils.copyRecursively(
+      FileUtils.copyRecursively(
         master, java.nio.file.Paths.get(stage))
       java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(stage, "_staged_ok"))
+        java.nio.file.Paths.get(stage, Staged.Marker))
       rewriteManifestPaths(s, java.nio.file.Paths.get(stage, "_log"),
         master.toString, stage)
       stage
     } else {
       val master = lakeMasterDir(s, dir, withCompaction)
-      graft.util.FileUtils.copyRecursively(
+      FileUtils.copyRecursively(
         master.resolve("_log"), java.nio.file.Paths.get(stage, "_log"))
       master.toString
     }
 
-  /** The memoized master: staged once under a deterministic /tmp key,
-    * manifests rewritten to the final root, published atomically (a
-    * concurrent stager losing the rename discards its copy).
-    *
-    * Cleanup policy (round-17 ADVICE): masters accumulate per
-    * (corpus, granule, convention) key, content-addressed and
-    * immutable — a host reclaims space by deleting any `graft-lake-*`
-    * /tmp entry (the `_staged_ok` check below restages on next use
-    * and fails loudly if cleaned MID-run). No in-process age-out: a
-    * concurrent Verify/Bench may be mid-read on a sibling master.
+  /** The lake master: [[stageLakeLogInto]]'s output as a
+    * [[graft.util.Staged.memo]] master keyed by corpus, granule and
+    * convention, its manifests rewritten to name the published root.
     */
   private[graft] def lakeMasterDir(s: SparkSession, dir: String,
       withCompaction: Boolean): java.nio.file.Path = {
     val n = docs(s, dir).count()
     val gran = lakeGranFor(n)
     val conv = if (withCompaction) "c" else "p"
-    // key on the SANITIZED FULL corpus path, not its hashCode: two
-    // corpus dirs with equal (n, gran) and colliding hashCodes would
-    // silently share one master's data files (round-17 ADVICE); the
-    // sanitized absolute path collides only with itself
-    val safeDir = java.nio.file.Paths.get(dir).toAbsolutePath.toString
-      .replaceAll("[^A-Za-z0-9._-]", "-")
-    val root = java.nio.file.Paths.get("/tmp",
-      s"graft-lake-$n-$gran-$conv-$safeDir")
-    val ok = root.resolve("_staged_ok")
-    if (!java.nio.file.Files.exists(ok)) {
-      // a root WITHOUT the marker is torn (a tmp cleaner removed the
-      // marker or a stager died mid-publish): rebuild it rather than
-      // serve partial data files
-      if (java.nio.file.Files.exists(root)) rmTree(root)
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/tmp"), "graft-lake-stage")
-      stageLakeLogInto(s, dir, tmp.toString, withCompaction)
-      // the manifests were written naming tmp paths; the published
-      // master must name its own root
-      rewriteManifestPaths(s, tmp.resolve("_log"),
-        tmp.toString, root.toString)
-      java.nio.file.Files.writeString(tmp.resolve("_staged_ok"), "ok")
-      try java.nio.file.Files.move(tmp, root,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException
-            if java.nio.file.Files.exists(root) =>
-          rmTree(tmp)
-      }
+    val key = s"graft-lake-$n-$gran-$conv-${Staged.pathKey(dir)}"
+    Staged.memo(key) { stage =>
+      stageLakeLogInto(s, dir, stage.toString, withCompaction)
+      rewriteManifestPaths(s, stage.resolve("_log"),
+        stage.toString, Staged.masterRoot(key).toString)
     }
-    // fail loudly (not with a downstream read error) if /tmp was
-    // cleaned between staging and this use
-    require(java.nio.file.Files.exists(ok),
-      s"lake master $root invalid: _staged_ok missing (tmp cleaned?)")
-    root
   }
 
   private def rewriteManifestPaths(s: SparkSession,
       logDir: java.nio.file.Path, from: String, to: String): Unit =
-    graft.util.FileUtils.listDir(logDir)
+    FileUtils.listDir(logDir)
       .filter(_.getFileName.toString.startsWith("v"))
       .foreach { mdir =>
         val side = mdir.resolveSibling(mdir.getFileName.toString + ".rw")
         s.read.parquet(mdir.toString)
           .withColumn("path", expr(s"replace(path, '$from', '$to')"))
           .coalesce(1).write.mode("overwrite").parquet(side.toString)
-        rmTree(mdir)
+        FileUtils.deleteRecursively(mdir)
         java.nio.file.Files.move(side, mdir)
       }
 
@@ -3082,7 +2840,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
           case _: java.nio.file.FileSystemException
               if java.nio.file.Files.exists(target) => false
         }
-    } finally rmTree(tmp)
+    } finally FileUtils.deleteRecursively(tmp)
   }
 
   /** One writer's optimistic commit loop, prepared at snapshot `snap`:
@@ -3205,9 +2963,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
         lit(files.length.toLong).as("n_files"),
         col("n_rows"), col("sum_chars"), col("key_checksum"))
   }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    graft.util.FileUtils.deleteRecursively(p)
 
   /** One version row of the q274/q275 oracle: the version's logical
     * content CASE-reconstructed from the staging rules, rolled up

@@ -1,13 +1,14 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.attribute.FileTime
+
+import graft.util.{FileUtils, Staged}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Oracle-gated Structured Streaming: the windowed-count plan from
   * `LogStreams.windowedIssueCounts` run THROUGH the streaming engine
@@ -155,27 +156,78 @@ object StreamingQueries extends graft.QueryFamily {
       window_us: Long, event_type: String, n_events: Long,
       n_prior: Long, sum_prior: Long, is_spike: Boolean)
 
-  // unique sink/checkpoint per invocation — Bench runs the query three
-  // times (warmup + 2 timed) in one session
-  private val runSeq = new AtomicInteger(0)
-
-  private def deleteRecursively(p: Path): Unit =
-    graft.util.FileUtils.deleteRecursively(p)
-
-  /** Staging/checkpoint base for the gated runs: tmpfs when available.
-    * These dirs are gate-harness scaffolding (memory sink +
-    * AvailableNow, deleted after every invocation) — NOT the durable
-    * checkpoint a deployment configures — and local-disk fsync was
-    * ~20% of each streaming query's fixed cost (q59 4.7→3.7 s,
-    * q107 3.8→3.3 s measured at sf0.1).
+  /** One gate invocation: `body` runs in the gate's own
+    * [[Staged.scratch]] root, whose named subdirectories hold its
+    * sources, checkpoint and sinks (gate-harness scaffolding, NOT the
+    * durable checkpoint a deployment configures), and the state stores
+    * are released after it, also on failure.
     */
-  private val tmpBase: Path = {
-    val shm = Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else Paths.get(sys.props("java.io.tmpdir"))
+  private def gateRun(s: SparkSession, name: String)(
+      body: Path => DataFrame): DataFrame =
+    Staged.scratch(s, name)(root =>
+      try body(root) finally releaseStreamingState())
+
+  /** Runs `df` to completion into a memory sink (checkpoint
+    * `root/ckpt`, `AvailableNow`) and returns `read(sink)` detached into
+    * a local relation — before the sink view is dropped, and so before
+    * [[gateRun]] releases the state stores and deletes the root.
+    */
+  private def drainToMemory(s: SparkSession, root: Path, df: DataFrame,
+      mode: OutputMode = OutputMode.Append)(
+      read: DataFrame => DataFrame): DataFrame = {
+    // the root's unique name keeps Bench's repeated runs apart
+    val sink = root.getFileName.toString.replace('-', '_')
+    try {
+      df.writeStream.format("memory").queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      Staged.local(s, read(s.table(sink)))
+    } finally s.catalog.dropTempView(sink)
   }
-  private def tmpDir(prefix: String): Path =
-    Files.createTempDirectory(tmpBase, prefix)
+
+  /** `body` with session conf `key` set to `value`, restored after. */
+  private def withConf[T](s: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
+
+  /** The fixture table `table` copied into `root/src`, with its schema.
+    * FileStreamSource requires a DIRECTORY ("Option basePath must be a
+    * directory") and the driver fixture is one parquet FILE (copied,
+    * not symlinked: Hadoop's RawLocalFileSystem stat of symlinks is
+    * platform-dependent); readStream needs the schema explicitly, so it
+    * comes from a batch read (ts is an epoch-nanos long under
+    * nanosAsLong).
+    */
+  private def stageFixture(s: SparkSession, dir: String, root: Path,
+      table: String): (Path, StructType) = {
+    val src = Paths.get(s"$dir/$table.parquet")
+    val stage = Staged.dir(root, "src")
+    Files.copy(src, stage.resolve(s"$table.parquet"))
+    (stage, s.read.parquet(src.toString).schema)
+  }
+
+  /** `df` landed as the one parquet file `f` (a single-task write, so
+    * row order is kept), with modification time `mtimeMs` if given —
+    * mtimes order FileStreamSource's processing. The write goes through
+    * a sibling of `f`'s directory, which a stream over it never lists.
+    */
+  private def landFile(df: DataFrame, f: Path,
+      mtimeMs: Option[Long] = None): Unit = {
+    val tmp = f.getParent.resolveSibling(s"${f.getParent.getFileName}-w")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    Files.move(FileUtils.firstParquet(tmp), f,
+      StandardCopyOption.REPLACE_EXISTING)
+    mtimeMs.foreach(ms => Files.setLastModifiedTime(f, FileTime.fromMillis(ms)))
+  }
 
   /** Shared multi-batch staging: split the events fixture into three
     * TIME-thirds (t0/t1/t2, rows ts-ordered within each) and land them
@@ -190,7 +242,7 @@ object StreamingQueries extends graft.QueryFamily {
     */
   private def stageTimeThirds(s: SparkSession, dir: String, dest: Path,
       arrivalOrder: Seq[Int] = Seq(0, 1, 2))
-      : org.apache.spark.sql.types.StructType = {
+      : StructType = {
     val src = Paths.get(s"$dir/events.parquet")
     val batch = s.read.parquet(src.toString)
     val schema = batch.schema
@@ -199,32 +251,29 @@ object StreamingQueries extends graft.QueryFamily {
     val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
     val t1 = tmin + (tmax - tmin) / 3
     val t2 = tmin + (tmax - tmin) * 2 / 3
-    val tmp = tmpDir("graft-thirds-w")
+    val tmp = dest.resolveSibling(s"${dest.getFileName}-w")
     val now = System.currentTimeMillis()
-    try {
-      withUs
-        .withColumn("third",
-          when(col("us") < t1, 0).when(col("us") < t2, 1).otherwise(2))
-        .select((schema.fieldNames.map(col) :+ col("third") :+ col("us")).toSeq: _*)
-        .coalesce(1)
-        // explicit (third, us) sort: gates whose oracle derives
-        // per-key first-seen as MIN(us) need each staged third
-        // ts-ordered — a contract, not an accident (the ordering also
-        // satisfies the writer's `third` requirement, so no second
-        // sort is inserted)
-        .sortWithinPartitions(col("third"), col("us"))
-        .drop("us")
-        .write.partitionBy("third").mode("overwrite")
-        .parquet(tmp.toString)
-      arrivalOrder.zipWithIndex.foreach { case (third, pos) =>
-        val part = graft.util.FileUtils.firstParquet(tmp.resolve(s"third=$third"))
-        val f = dest.resolve(s"t$third.parquet")
-        Files.move(part, f, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(f,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - (3 - pos) * 60000L))
-      }
-    } finally deleteRecursively(tmp)
+    withUs
+      .withColumn("third",
+        when(col("us") < t1, 0).when(col("us") < t2, 1).otherwise(2))
+      .select((schema.fieldNames.map(col) :+ col("third") :+ col("us")).toSeq: _*)
+      .coalesce(1)
+      // explicit (third, us) sort: gates whose oracle derives
+      // per-key first-seen as MIN(us) need each staged third
+      // ts-ordered — a contract, not an accident (the ordering also
+      // satisfies the writer's `third` requirement, so no second
+      // sort is inserted)
+      .sortWithinPartitions(col("third"), col("us"))
+      .drop("us")
+      .write.partitionBy("third").mode("overwrite")
+      .parquet(tmp.toString)
+    arrivalOrder.zipWithIndex.foreach { case (third, pos) =>
+      val part = FileUtils.firstParquet(tmp.resolve(s"third=$third"))
+      val f = dest.resolve(s"t$third.parquet")
+      Files.move(part, f, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(f,
+        FileTime.fromMillis(now - (3 - pos) * 60000L))
+    }
     schema
   }
 
@@ -244,56 +293,29 @@ object StreamingQueries extends graft.QueryFamily {
     * over the staged event stream, Append mode, `AvailableNow` — the
     * memory sink receives exactly the watermark-closed sessions. `gate`
     * shapes what the caller materializes from the sink (the oracle gate
-    * rolls up per user; the spec reads the raw session list), and runs
-    * while sink/state are still live; the result is returned as a local
-    * DataFrame so cleanup can tear everything down eagerly.
+    * rolls up per user; the spec reads the raw session list).
     */
   private def sessionWindowRun(s: SparkSession, dir: String)(
-      gate: DataFrame => DataFrame): DataFrame = {
-    val src = Paths.get(s"$dir/events.parquet")
-    val stage = tmpDir("graft-q154-src")
-    val ckpt = tmpDir("graft-q154-ckpt")
-    val sink = s"graft_q154_sink_${runSeq.incrementAndGet()}"
-    try {
-      Files.copy(src, stage.resolve("events.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      val schema = s.read.parquet(src.toString).schema
-      val agg = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", "10 minutes")
-        .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val query =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          agg.writeStream.format("memory").queryName(sink)
-            .outputMode(OutputMode.Append)
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      query.awaitTermination()
-      val out = gate(s.table(sink))
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      s.catalog.dropTempView(sink)
-      releaseStreamingState()
-      deleteRecursively(ckpt)
-      deleteRecursively(stage)
-    }
+      gate: DataFrame => DataFrame): DataFrame = gateRun(s, "q154") { root =>
+    val (stage, schema) = stageFixture(s, dir, root, "events")
+    val agg = s.readStream.schema(schema).parquet(stage.toString)
+      .withColumn("event_time", timestamp_micros(tsUs(schema)))
+      .withWatermark("event_time", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("start_us"),
+        unix_micros(col("session_window.end")).as("end_us"),
+        col("n_events"))
+    drainToMemory(s, root, agg)(gate)
   }
 
   /** Raw emitted session list (user_id, start_us, end_us, n_events) —
     * the StreamingSpec cross-check surface; gates use the rollup.
     */
   def sessionWindowSessions(s: SparkSession, dir: String): DataFrame =
-    sessionWindowRun(s, dir)(_.orderBy("user_id", "start_us"))
+    withConf(s, "spark.sql.shuffle.partitions", streamParts)(
+      sessionWindowRun(s, dir)(_.orderBy("user_id", "start_us")))
 
   /** Gate-harness state-store width. AQE cannot resize stateful
     * streaming stages (it is disabled for them), so every micro-batch
@@ -301,73 +323,40 @@ object StreamingQueries extends graft.QueryFamily {
     * store instances (open + commit + maintenance) per stateful op —
     * at the session's cluster-sized 32 that was measured as ~1-2 s of
     * pure per-query fixed cost over these 3-file KB-scale fixtures.
-    * Seven gates already pinned 8 for exactly this reason (the q154
-    * comment); this applies the same width to every gated run in one
-    * place. Env-parameterised: a deployment sizes state partitions to
-    * key cardinality and load, which the env override expresses — the
-    * committed default stays the historical gate-harness 8.
+    * Every gated run (and [[sessionWindowSessions]]) gets this width
+    * in one place. Env-parameterised: a deployment sizes state
+    * partitions to key cardinality and load, which the env override
+    * expresses — the committed default stays the historical
+    * gate-harness 8.
     */
   private val streamParts =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
-  private def withGateParts(s: SparkSession)(body: => DataFrame)
-      : DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) =>
-        withGateParts(s)(fn(s, dir)))
+        withConf(s, "spark.sql.shuffle.partitions", streamParts)(fn(s, dir)))
     }
 
   private def rawQueries
       : Map[String, (SparkSession, String) => DataFrame] = Map(
     // E20 oracle-gated: per-(5-min window, event_type) counts + decimal
     // value sums, emitted by Append-mode watermark eviction.
-    "q59_stream_window" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      // FileStreamSource requires a DIRECTORY ("Option basePath must be
-      // a directory"); the driver fixture is a single parquet FILE, so
-      // stage it into a temp dir first (copy, not symlink — Hadoop's
-      // RawLocalFileSystem stat of symlinks is platform-dependent).
-      val stage = tmpDir("graft-q59-src")
-      val ckpt = tmpDir("graft-q59-ckpt")
-      val sink = s"graft_q59_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        // schema from a batch read (ts is epoch-nanos long under
-        // nanosAsLong); readStream requires it explicitly
-        val schema = s.read.parquet(src.toString).schema
-        val agg = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", "10 minutes")
-          .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(dec2)).as("sv"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("event_type"), col("n_events"),
-            col("sv").cast("double").as("sum_value"))
-        val query = agg.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // Materialize into a LocalRelation so the returned frame
-        // survives the temp-view drop and dir cleanup below. The
-        // result is tiny by construction: one row per closed
-        // (5-minute window × event_type).
-        val out = s.table(sink).orderBy("window_us", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q59_stream_window" -> ((s, dir) => gateRun(s, "q59") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val agg = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("event_time", timestamp_micros(tsUs(schema)))
+        .withWatermark("event_time", "10 minutes")
+        .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast(dec2)).as("sv"))
+        .select(unix_micros(col("window.start")).as("window_us"),
+          col("event_type"), col("n_events"),
+          col("sv").cast("double").as("sum_value"))
+      drainToMemory(s, root, agg) { sink =>
+        // tiny by construction: one row per closed (5-minute window ×
+        // event_type)
+        sink.orderBy("window_us", "event_type")
       }
     }),
 
@@ -384,46 +373,27 @@ object StreamingQueries extends graft.QueryFamily {
     // state is O(k) per (window × event_type), evicted on watermark
     // advance — the streaming distinct-users dashboard that never
     // stores a user set.
-    "q107_stream_kmv" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q107-src")
-      val ckpt = tmpDir("graft-q107-ckpt")
-      val sink = s"graft_q107_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val k = streamKmvK
-        val h = graft.functions.TextFunctions.spreadHash(
-          col("user_id").cast("string"))
-        val p = graft.functions.TextFunctions.P
-        val agg = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", "10 minutes")
-          .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
-          .agg(graft.functions.KMinValues(h, k).as("sketch"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("event_type"),
-            array_join(transform(col("sketch"), v => v.cast("string")), ",")
-              .as("sketch_str"),
-            when(size(col("sketch")) >= k,
-              (lit((k - 1).toDouble) * lit(p.toDouble)) /
-                element_at(col("sketch"), k).cast("double"))
-              .otherwise(size(col("sketch")).cast("double")).as("kmv_estimate"))
-        val query = agg.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("window_us", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q107_stream_kmv" -> ((s, dir) => gateRun(s, "q107") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val k = streamKmvK
+      val h = graft.functions.TextFunctions.spreadHash(
+        col("user_id").cast("string"))
+      val p = graft.functions.TextFunctions.P
+      val agg = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("event_time", timestamp_micros(tsUs(schema)))
+        .withWatermark("event_time", "10 minutes")
+        .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
+        .agg(graft.functions.KMinValues(h, k).as("sketch"))
+        .select(unix_micros(col("window.start")).as("window_us"),
+          col("event_type"),
+          array_join(transform(col("sketch"), v => v.cast("string")), ",")
+            .as("sketch_str"),
+          when(size(col("sketch")) >= k,
+            (lit((k - 1).toDouble) * lit(p.toDouble)) /
+              element_at(col("sketch"), k).cast("double"))
+            .otherwise(size(col("sketch")).cast("double")).as("kmv_estimate"))
+      drainToMemory(s, root, agg) { sink =>
+        sink.orderBy("window_us", "event_type")
       }
     }),
 
@@ -448,34 +418,15 @@ object StreamingQueries extends graft.QueryFamily {
     // race — the determinism contract a streaming dedup must offer
     // (non-key columns of "the first row" are arrival-order-dependent
     // by definition). Oracle: plain SELECT DISTINCT.
-    "q69_stream_dedup" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q69-src")
-      val ckpt = tmpDir("graft-q69-ckpt")
-      val sink = s"graft_q69_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val dedup = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", "10 minutes")
-          .dropDuplicates("user_id", "event_type")
-          .select(col("user_id"), col("event_type"))
-        val query = dedup.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("user_id", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q69_stream_dedup" -> ((s, dir) => gateRun(s, "q69") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val dedup = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("event_time", timestamp_micros(tsUs(schema)))
+        .withWatermark("event_time", "10 minutes")
+        .dropDuplicates("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))
+      drainToMemory(s, root, dedup) { sink =>
+        sink.orderBy("user_id", "event_type")
       }
     }),
 
@@ -488,68 +439,48 @@ object StreamingQueries extends graft.QueryFamily {
     // grouped iterator has no order contract) and carries µs longs
     // (Timestamp.getTime would floor to ms). Emission mirrored in SQL:
     // open session emitted iff end_ms + gap < watermark_ms.
-    "q70_stream_sessions" -> ((s, dir) => {
+    "q70_stream_sessions" -> ((s, dir) => gateRun(s, "q70") { root =>
       import s.implicits._
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q70-src")
-      val ckpt = tmpDir("graft-q70-ckpt")
-      val sink = s"graft_q70_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val sessions = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("ts_us", tsUs(schema))
-          .withColumn("event_time", timestamp_micros(col("ts_us")))
-          .withWatermark("event_time", "10 minutes")
-          // the watermarked column must survive into the stateful op's
-          // input (UnsupportedOperationChecker requires it), even
-          // though the state function reads the µs long
-          .select(col("user_id").as[Long], col("ts_us").as[Long],
-            col("event_time").as[java.sql.Timestamp])
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[SessionState, SessionOut](
-            OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-            case (user, rows, state: GroupState[SessionState]) =>
-              if (state.hasTimedOut) {
-                val st = state.get
-                state.remove()
-                Iterator(SessionOut(user, st.sid, st.n, st.startUs, st.lastUs))
-              } else {
-                val times = rows.map(_._2).toSeq.sorted
-                val (closed, open) = times.foldLeft(
-                  (List.empty[SessionOut], state.getOption)) {
-                  case ((done, Some(st)), t) if t - st.lastUs > gapUs =>
-                    (SessionOut(user, st.sid, st.n, st.startUs, st.lastUs) :: done,
-                      Some(SessionState(t, t, 1, st.sid + 1)))
-                  case ((done, Some(st)), t) =>
-                    (done, Some(SessionState(st.startUs, math.max(st.lastUs, t),
-                      st.n + 1, st.sid)))
-                  case ((done, None), t) =>
-                    (done, Some(SessionState(t, t, 1, 1)))
-                }
-                open.foreach { st =>
-                  state.update(st)
-                  state.setTimeoutTimestamp(st.lastUs / 1000L + gapMs)
-                }
-                closed.reverseIterator
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val sessions = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("ts_us", tsUs(schema))
+        .withColumn("event_time", timestamp_micros(col("ts_us")))
+        .withWatermark("event_time", "10 minutes")
+        // the watermarked column must survive into the stateful op's
+        // input (UnsupportedOperationChecker requires it), even
+        // though the state function reads the µs long
+        .select(col("user_id").as[Long], col("ts_us").as[Long],
+          col("event_time").as[java.sql.Timestamp])
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[SessionState, SessionOut](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          case (user, rows, state: GroupState[SessionState]) =>
+            if (state.hasTimedOut) {
+              val st = state.get
+              state.remove()
+              Iterator(SessionOut(user, st.sid, st.n, st.startUs, st.lastUs))
+            } else {
+              val times = rows.map(_._2).toSeq.sorted
+              val (closed, open) = times.foldLeft(
+                (List.empty[SessionOut], state.getOption)) {
+                case ((done, Some(st)), t) if t - st.lastUs > gapUs =>
+                  (SessionOut(user, st.sid, st.n, st.startUs, st.lastUs) :: done,
+                    Some(SessionState(t, t, 1, st.sid + 1)))
+                case ((done, Some(st)), t) =>
+                  (done, Some(SessionState(st.startUs, math.max(st.lastUs, t),
+                    st.n + 1, st.sid)))
+                case ((done, None), t) =>
+                  (done, Some(SessionState(t, t, 1, 1)))
               }
-          }
-        val query = sessions.toDF().writeStream.format("memory")
-          .queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("user_id", "session_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+              open.foreach { st =>
+                state.update(st)
+                state.setTimeoutTimestamp(st.lastUs / 1000L + gapMs)
+              }
+              closed.reverseIterator
+            }
+        }
+      drainToMemory(s, root, sessions.toDF()) { sink =>
+        sink.orderBy("user_id", "session_id")
       }
     }),
 
@@ -563,58 +494,30 @@ object StreamingQueries extends graft.QueryFamily {
     // emits iff its timer (end_ms + gap) fires before the final
     // watermark. State per key is one open session + one timer,
     // watermark-bounded exactly like q70's.
-    "q281_tws_sessions" -> ((s, dir) => {
+    "q281_tws_sessions" -> ((s, dir) => gateRun(s, "q281") { root =>
       import s.implicits._
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q281-src")
-      val ckpt = tmpDir("graft-q281-ckpt")
-      val sink = s"graft_q281_sink_${runSeq.incrementAndGet()}"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val sessions = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("ts_us", tsUs(schema))
-          .withColumn("event_time", timestamp_micros(col("ts_us")))
-          .withWatermark("event_time", "10 minutes")
-          .select(col("user_id").as[Long], col("ts_us").as[Long],
-            col("event_time").as[java.sql.Timestamp])
-          .groupByKey(_._1)
-          .transformWithState(new TwsSessionProcessor,
-            TimeMode.EventTime(), OutputMode.Append())
-        // provider conf is read at stream start and pinned in the
-        // checkpoint — set RocksDB for this stream only, restore after
-        val prevProv = s.conf.getOption(provKey)
-        val query =
-          try {
-            s.conf.set(provKey, "org.apache.spark.sql.execution." +
-              "streaming.state.RocksDBStateStoreProvider")
-            sessions.toDF().writeStream.format("memory")
-              .queryName(sink)
-              .outputMode(OutputMode.Append)
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-          } finally {
-            prevProv match {
-              case Some(v) => s.conf.set(provKey, v)
-              case None => s.conf.unset(provKey)
-            }
-          }
-        query.awaitTermination()
-        // gate-construction cost, not data path: the oracle must see
-        // every emitted session, so the memory sink collects them all
-        // (~910k rows / 24 s at sf1 — q70's profile); a deployment
-        // writes a file sink and never materializes this on the driver
-        val out = s.table(sink).orderBy("user_id", "session_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val sessions = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("ts_us", tsUs(schema))
+        .withColumn("event_time", timestamp_micros(col("ts_us")))
+        .withWatermark("event_time", "10 minutes")
+        .select(col("user_id").as[Long], col("ts_us").as[Long],
+          col("event_time").as[java.sql.Timestamp])
+        .groupByKey(_._1)
+        .transformWithState(new TwsSessionProcessor,
+          TimeMode.EventTime(), OutputMode.Append())
+      // provider conf is read at stream start and pinned in the
+      // checkpoint — set RocksDB for this stream only, restore after
+      withConf(s, "spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution." +
+            "streaming.state.RocksDBStateStoreProvider") {
+        drainToMemory(s, root, sessions.toDF()) { sink =>
+          // gate-construction cost, not data path: the oracle must see
+          // every emitted session, so the memory sink collects them all
+          // (~910k rows / 24 s at sf1 — q70's profile); a deployment
+          // writes a file sink and never materializes this on the driver
+          sink.orderBy("user_id", "session_id")
+        }
       }
     }),
 
@@ -639,37 +542,22 @@ object StreamingQueries extends graft.QueryFamily {
     // the hash. At scale this is the correctness contract of every
     // streaming agg fed by an out-of-order transport; state stays
     // (window × type)-bounded exactly as q59.
-    "q282_stream_late_data" -> ((s, dir) => {
-      val stage = tmpDir("graft-q282-src")
-      val ckpt = tmpDir("graft-q282-ckpt")
-      val sink = s"graft_q282_sink_${runSeq.incrementAndGet()}"
-      try {
-        // arrival order = middle third, last third, FIRST third (the
-        // stragglers)
-        val schema = stageTimeThirds(s, dir, stage, Seq(1, 2, 0))
-        val agg = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", "10 minutes")
-          .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("event_type"), col("n_events"))
-        val query = agg.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("window_us", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q282_stream_late_data" -> ((s, dir) => gateRun(s, "q282") { root =>
+      val stage = Staged.dir(root, "src")
+      // arrival order = middle third, last third, FIRST third (the
+      // stragglers)
+      val schema = stageTimeThirds(s, dir, stage, Seq(1, 2, 0))
+      val agg = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .withColumn("event_time", timestamp_micros(tsUs(schema)))
+        .withWatermark("event_time", "10 minutes")
+        .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(unix_micros(col("window.start")).as("window_us"),
+          col("event_type"), col("n_events"))
+      drainToMemory(s, root, agg) { sink =>
+        sink.orderBy("window_us", "event_type")
       }
     }),
 
@@ -688,53 +576,29 @@ object StreamingQueries extends graft.QueryFamily {
     // boundary window distinguishes this from plain wm — 179 vs 180).
     // State: join buffers a 30-min horizon per user; agg holds open
     // windows — both watermark-bounded.
-    "q283_stream_join_agg" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q283-src")
-      val ckpt = tmpDir("graft-q283-ckpt")
-      val sink = s"graft_q283_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        def side(evType: String, prefix: String) =
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("event_type") === evType)
-            .withColumn(s"${prefix}_us", tsUs(schema))
-            .withColumn(s"${prefix}_time",
-              timestamp_micros(col(s"${prefix}_us")))
-            .withWatermark(s"${prefix}_time", "10 minutes")
-            .select(col("user_id").as(s"${prefix}_user"),
-              col("event_id").as(s"${prefix}_event"),
-              col(s"${prefix}_us"), col(s"${prefix}_time"))
-        val joined = side("purchase", "p").join(side("click", "c"),
-          col("p_user") === col("c_user") &&
-            col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-            col("c_time") <= col("p_time"))
-        val agg = joined
-          .groupBy(window(col("p_time"), "5 minutes"))
-          .agg(count(lit(1)).as("n_matches"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("n_matches"))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        val query =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            agg.writeStream.format("memory").queryName(sink)
-              .outputMode(OutputMode.Append)
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("window_us")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q283_stream_join_agg" -> ((s, dir) => gateRun(s, "q283") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      def side(evType: String, prefix: String) =
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("event_type") === evType)
+          .withColumn(s"${prefix}_us", tsUs(schema))
+          .withColumn(s"${prefix}_time",
+            timestamp_micros(col(s"${prefix}_us")))
+          .withWatermark(s"${prefix}_time", "10 minutes")
+          .select(col("user_id").as(s"${prefix}_user"),
+            col("event_id").as(s"${prefix}_event"),
+            col(s"${prefix}_us"), col(s"${prefix}_time"))
+      val joined = side("purchase", "p").join(side("click", "c"),
+        col("p_user") === col("c_user") &&
+          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
+          col("c_time") <= col("p_time"))
+      val agg = joined
+        .groupBy(window(col("p_time"), "5 minutes"))
+        .agg(count(lit(1)).as("n_matches"))
+        .select(unix_micros(col("window.start")).as("window_us"),
+          col("n_matches"))
+      drainToMemory(s, root, agg) { sink =>
+        sink.orderBy("window_us")
       }
     }),
 
@@ -752,52 +616,43 @@ object StreamingQueries extends graft.QueryFamily {
     // version) shifts a checksum. At scale: the sink writes each
     // batch once (data bandwidth) + an O(1) manifest append; as-of
     // reads stay metadata-resolved exactly as q274.
-    "q287_stream_lake_ingest" -> ((s, dir) => {
+    "q287_stream_lake_ingest" -> ((s, dir) => gateRun(s, "q287") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q287-src")
-      val lake = tmpDir("graft-q287-lake")
-      val ckpt = tmpDir("graft-q287-ckpt")
-      try {
-        val schema = stageTimeThirds(s, dir, stage)
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            if (!df.isEmpty) {
-              val dataPath = s"$lake/data/b$batchId"
-              df.coalesce(1).write.mode("overwrite").parquet(dataPath)
-              Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
-                .write.mode("overwrite").parquet(s"$lake/_log/v$batchId")
-            }
-            ()
+      val stage = Staged.dir(root, "src")
+      val lake = Staged.dir(root, "lake")
+      val ckpt = Staged.dir(root, "ckpt")
+      val schema = stageTimeThirds(s, dir, stage)
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          if (!df.isEmpty) {
+            val dataPath = s"$lake/data/b$batchId"
+            df.coalesce(1).write.mode("overwrite").parquet(dataPath)
+            Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
+              .write.mode("overwrite").parquet(s"$lake/_log/v$batchId")
           }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // as-of(v) resolved from the committed manifests, as a lake
-        // reader would
-        val out = (0 to 2).map { v =>
-          val files = (0 to v).flatMap(i =>
-            graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
-              .collect { case r if r.getString(0) == "add" => r.getString(1) })
-          s.read.parquet(files: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(expr(graft.queries.ShapeOpsQueries
-                .manifestTerm("event_id"))).as("key_checksum"))
-            .select(lit(v.toLong).as("version"),
-              lit(files.length.toLong).as("n_files"),
-              col("n_rows"), col("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(lake)
-        deleteRecursively(stage)
-      }
+          ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      // as-of(v) resolved from the committed manifests, as a lake
+      // reader would
+      (0 to 2).map { v =>
+        val files = (0 to v).flatMap(i =>
+          graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
+            .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        s.read.parquet(files: _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(expr(graft.queries.ShapeOpsQueries
+              .manifestTerm("event_id"))).as("key_checksum"))
+          .select(lit(v.toLong).as("version"),
+            lit(files.length.toLong).as("n_files"),
+            col("n_rows"), col("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("version")
     }),
 
     // RESTART-WITH-NEW-DATA recovery — exactly-once across a REAL
@@ -820,62 +675,48 @@ object StreamingQueries extends graft.QueryFamily {
     // shutdown and the watermark, so run 2's emissions complete the
     // set exactly. At 100 TB: recovery cost ∝ checkpointed state
     // (open windows), never a source replay from origin.
-    "q292_stream_restart_recovery" -> ((s, dir) => {
-      val hold = tmpDir("graft-q292-hold")
-      val stage = tmpDir("graft-q292-src")
-      val ckpt = tmpDir("graft-q292-ckpt")
-      val sinkDir = tmpDir("graft-q292-sink")
-      try {
-        val schema = stageTimeThirds(s, dir, hold)
-        // run 1 sees only the first two thirds (mtimes travel with
-        // the rename)
-        for (i <- 0 to 1)
-          Files.move(hold.resolve(s"t$i.parquet"),
-            stage.resolve(s"t$i.parquet"))
-        def run(): Unit = {
-          val agg = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString)
-            .withColumn("event_time", timestamp_micros(tsUs(schema)))
-            .withWatermark("event_time", "10 minutes")
-            .groupBy(window(col("event_time"), "5 minutes"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast(dec2)).as("sv"))
-            .select(unix_micros(col("window.start")).as("window_us"),
-              col("event_type"), col("n_events"),
-              col("sv").cast("double").as("sum_value"))
-          // 8 state partitions (the q59/q154 convention): pinned in the
-          // checkpoint at FIRST start, so both runs agree by contract
-          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-          val query =
-            try {
-              s.conf.set("spark.sql.shuffle.partitions", "8")
-              agg.writeStream.format("parquet")
-                .option("path", sinkDir.toString)
-                .outputMode(OutputMode.Append)
-                .option("checkpointLocation", ckpt.toString)
-                .trigger(Trigger.AvailableNow())
-                .start()
-            } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          query.awaitTermination()
-        }
-        run()
-        // the deploy window: new data arrives while the stream is down
-        Files.move(hold.resolve("t2.parquet"), stage.resolve("t2.parquet"))
-        run()
-        // read back through _spark_metadata — only committed batches
-        val out = s.read.parquet(sinkDir.toString)
-          .orderBy("window_us", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(sinkDir)
-        deleteRecursively(stage)
-        deleteRecursively(hold)
+    "q292_stream_restart_recovery" -> ((s, dir) => gateRun(s, "q292") { root =>
+      val hold = Staged.dir(root, "hold")
+      val stage = Staged.dir(root, "src")
+      val ckpt = Staged.dir(root, "ckpt")
+      val sinkDir = Staged.dir(root, "sink")
+      val schema = stageTimeThirds(s, dir, hold)
+      // run 1 sees only the first two thirds (mtimes travel with
+      // the rename)
+      for (i <- 0 to 1)
+        Files.move(hold.resolve(s"t$i.parquet"),
+          stage.resolve(s"t$i.parquet"))
+      def run(): Unit = {
+        val agg = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(stage.toString)
+          .withColumn("event_time", timestamp_micros(tsUs(schema)))
+          .withWatermark("event_time", "10 minutes")
+          .groupBy(window(col("event_time"), "5 minutes"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(col("value").cast(dec2)).as("sv"))
+          .select(unix_micros(col("window.start")).as("window_us"),
+            col("event_type"), col("n_events"),
+            col("sv").cast("double").as("sum_value"))
+        // the state width is pinned in the checkpoint at FIRST start;
+        // both runs start inside the same gate-width wrapper, so they
+        // agree by contract
+        agg.writeStream.format("parquet")
+          .option("path", sinkDir.toString)
+          .outputMode(OutputMode.Append)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
       }
+      run()
+      // the deploy window: new data arrives while the stream is down
+      Files.move(hold.resolve("t2.parquet"), stage.resolve("t2.parquet"))
+      run()
+      // read back through _spark_metadata — only committed batches
+      s.read.parquet(sinkDir.toString)
+        .orderBy("window_us", "event_type")
     }),
 
     // SINK FENCING — q287's commit-log writer hardened for the
@@ -899,84 +740,75 @@ object StreamingQueries extends graft.QueryFamily {
     // q287's live path. At 100 TB
     // this is exactly Delta's txn-version dedup: one O(1) log probe
     // per batch, no data read.
-    "q293_stream_sink_fencing" -> ((s, dir) => {
+    "q293_stream_sink_fencing" -> ((s, dir) => gateRun(s, "q293") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q293-src")
-      val lake = tmpDir("graft-q293-lake")
-      val ckpt = tmpDir("graft-q293-ckpt")
-      try {
-        val schema = stageTimeThirds(s, dir, stage)
-        // the log directory exists before any committer races to
-        // rename into it (Spark's writer creates parents; NIO's
-        // atomic move must not)
-        Files.createDirectories(Paths.get(s"$lake/_log"))
-        // the FENCED committer — one definition for the live writer
-        // and the zombie replay: log probe first, then data file +
-        // manifest CAS (atomic rename put-if-absent)
-        def fencedCommit(df: DataFrame, batchId: Long): Boolean = {
-          val target = Paths.get(s"$lake/_log/v$batchId")
-          if (Files.exists(target)) false
-          else {
-            val dataPath = s"$lake/data/b$batchId"
-            df.coalesce(1).write.mode("overwrite").parquet(dataPath)
-            val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
+      val stage = Staged.dir(root, "src")
+      val lake = Staged.dir(root, "lake")
+      val ckpt = Staged.dir(root, "ckpt")
+      val schema = stageTimeThirds(s, dir, stage)
+      // the log directory exists before any committer races to
+      // rename into it (Spark's writer creates parents; NIO's
+      // atomic move must not)
+      Files.createDirectories(Paths.get(s"$lake/_log"))
+      // the FENCED committer — one definition for the live writer
+      // and the zombie replay: log probe first, then data file +
+      // manifest CAS (atomic rename put-if-absent)
+      def fencedCommit(df: DataFrame, batchId: Long): Boolean = {
+        val target = Paths.get(s"$lake/_log/v$batchId")
+        if (Files.exists(target)) false
+        else {
+          val dataPath = s"$lake/data/b$batchId"
+          df.coalesce(1).write.mode("overwrite").parquet(dataPath)
+          val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
+          try {
+            val staged = tmp.resolve("m")
+            Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
+              .write.mode("overwrite").parquet(staged.toString)
             try {
-              val staged = tmp.resolve("m")
-              Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
-                .write.mode("overwrite").parquet(staged.toString)
-              try {
-                Files.move(staged, target,
-                  StandardCopyOption.ATOMIC_MOVE)
-                true
-              } catch {
-                // lost the CAS to a concurrent committer: undo the
-                // staged data file — the winner's version stands
-                case _: java.nio.file.FileSystemException
-                    if Files.exists(target) =>
-                  deleteRecursively(Paths.get(dataPath))
-                  false
-              }
-            } finally deleteRecursively(tmp)
-          }
+              Files.move(staged, target,
+                StandardCopyOption.ATOMIC_MOVE)
+              true
+            } catch {
+              // lost the CAS to a concurrent committer: undo the
+              // staged data file — the winner's version stands
+              case _: java.nio.file.FileSystemException
+                  if Files.exists(target) =>
+                FileUtils.deleteRecursively(Paths.get(dataPath))
+                false
+            }
+          } finally FileUtils.deleteRecursively(tmp)
         }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            if (!df.isEmpty) { fencedCommit(df, batchId); () }
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // the zombie: an old writer instance re-emits batch 1 — with
-        // t2's payload, so a broken fence cannot hide behind an
-        // idempotent byte-identical overwrite; the fence must no-op
-        // before any work
-        val replayFenced = !fencedCommit(
-          s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
-        val out = (0 to 2).map { v =>
-          val files = (0 to v).flatMap(i =>
-            graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
-              .collect { case r if r.getString(0) == "add" => r.getString(1) })
-          s.read.parquet(files: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(expr(graft.queries.ShapeOpsQueries
-                .manifestTerm("event_id"))).as("key_checksum"))
-            .select(lit(v.toLong).as("version"),
-              lit(files.length.toLong).as("n_files"),
-              col("n_rows"), col("key_checksum"),
-              lit(v == 1 && replayFenced).as("replay_fenced"))
-        }.reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(lake)
-        deleteRecursively(stage)
       }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          if (!df.isEmpty) { fencedCommit(df, batchId); () }
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      // the zombie: an old writer instance re-emits batch 1 — with
+      // t2's payload, so a broken fence cannot hide behind an
+      // idempotent byte-identical overwrite; the fence must no-op
+      // before any work
+      val replayFenced = !fencedCommit(
+        s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
+      (0 to 2).map { v =>
+        val files = (0 to v).flatMap(i =>
+          graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
+            .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        s.read.parquet(files: _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(expr(graft.queries.ShapeOpsQueries
+              .manifestTerm("event_id"))).as("key_checksum"))
+          .select(lit(v.toLong).as("version"),
+            lit(files.length.toLong).as("n_files"),
+            col("n_rows"), col("key_checksum"),
+            lit(v == 1 && replayFenced).as("replay_fenced"))
+      }.reduce(_ unionByName _).orderBy("version")
     }),
 
     // STREAMING MATERIALIZED VIEW — the composition production
@@ -997,95 +829,86 @@ object StreamingQueries extends graft.QueryFamily {
     // is batch-delta + aggregate-sized fold — the events table is
     // never rescanned; recovery is the checkpoint + the last
     // committed version, exactly Delta's streaming-upsert pattern.
-    "q306_stream_matview" -> ((s, dir) => {
+    "q306_stream_matview" -> ((s, dir) => gateRun(s, "q306") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q306-src")
-      val lake = tmpDir("graft-q306-mv")
-      val ckpt = tmpDir("graft-q306-ckpt")
-      try {
-        val schema = stageTimeThirds(s, dir, stage)
-        Files.createDirectories(Paths.get(s"$lake/_log"))
-        // a version's committed aggregate file, resolved THROUGH its
-        // manifest (never a guessed path): data files are uniquely
-        // named per ATTEMPT, so only the manifest knows the winner's
-        def aggPathOf(v: Long): String =
-          graft.util.ManifestIO.rows(s, s"$lake/_log/v$v")
-            .collectFirst { case r if r.getString(0) == "add" =>
-              r.getString(1) }.get
-        // the MV committer — one definition for the live writer and
-        // the zombie replay (q293's fence shape, with the fold).
-        // Each attempt writes its aggregate under a UNIQUE nonce path
-        // recorded in that attempt's staged manifest — Delta's
-        // uniquely-named-data-files rule — so two attempts racing
-        // past the log probe can never touch each other's files: the
-        // CAS loser deletes only its own nonce file and the winner's
-        // committed data survives intact.
-        def mvCommit(df: DataFrame, batchId: Long): Boolean = {
-          val target = Paths.get(s"$lake/_log/v$batchId")
-          if (Files.exists(target)) false
-          else {
-            val delta = df.groupBy("event_type")
-              .agg(count(lit(1)).as("n_events"),
-                sum(col("value").cast(dec2)).as("sv"))
-            val merged =
-              if (batchId == 0) delta
-              else s.read.parquet(aggPathOf(batchId - 1))
-                .select(col("event_type"), col("n_events"), col("sv"))
-                .unionByName(delta, allowMissingColumns = false)
-                .groupBy("event_type")
-                .agg(sum(col("n_events")).as("n_events"),
-                  sum(col("sv")).as("sv"))
-            val nonce = java.util.UUID.randomUUID().toString
-            val aggPath = s"$lake/agg/v$batchId-$nonce"
-            merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-            val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
+      val stage = Staged.dir(root, "src")
+      val lake = Staged.dir(root, "mv")
+      val ckpt = Staged.dir(root, "ckpt")
+      val schema = stageTimeThirds(s, dir, stage)
+      Files.createDirectories(Paths.get(s"$lake/_log"))
+      // a version's committed aggregate file, resolved THROUGH its
+      // manifest (never a guessed path): data files are uniquely
+      // named per ATTEMPT, so only the manifest knows the winner's
+      def aggPathOf(v: Long): String =
+        graft.util.ManifestIO.rows(s, s"$lake/_log/v$v")
+          .collectFirst { case r if r.getString(0) == "add" =>
+            r.getString(1) }.get
+      // the MV committer — one definition for the live writer and
+      // the zombie replay (q293's fence shape, with the fold).
+      // Each attempt writes its aggregate under a UNIQUE nonce path
+      // recorded in that attempt's staged manifest — Delta's
+      // uniquely-named-data-files rule — so two attempts racing
+      // past the log probe can never touch each other's files: the
+      // CAS loser deletes only its own nonce file and the winner's
+      // committed data survives intact.
+      def mvCommit(df: DataFrame, batchId: Long): Boolean = {
+        val target = Paths.get(s"$lake/_log/v$batchId")
+        if (Files.exists(target)) false
+        else {
+          val delta = df.groupBy("event_type")
+            .agg(count(lit(1)).as("n_events"),
+              sum(col("value").cast(dec2)).as("sv"))
+          val merged =
+            if (batchId == 0) delta
+            else s.read.parquet(aggPathOf(batchId - 1))
+              .select(col("event_type"), col("n_events"), col("sv"))
+              .unionByName(delta, allowMissingColumns = false)
+              .groupBy("event_type")
+              .agg(sum(col("n_events")).as("n_events"),
+                sum(col("sv")).as("sv"))
+          val nonce = java.util.UUID.randomUUID().toString
+          val aggPath = s"$lake/agg/v$batchId-$nonce"
+          merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
+          val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
+          try {
+            val staged = tmp.resolve("m")
+            Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
+              .write.mode("overwrite").parquet(staged.toString)
             try {
-              val staged = tmp.resolve("m")
-              Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-                .write.mode("overwrite").parquet(staged.toString)
-              try {
-                Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-                true
-              } catch {
-                case _: java.nio.file.FileSystemException
-                    if Files.exists(target) =>
-                  deleteRecursively(Paths.get(aggPath))
-                  false
-              }
-            } finally deleteRecursively(tmp)
-          }
+              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+              true
+            } catch {
+              case _: java.nio.file.FileSystemException
+                  if Files.exists(target) =>
+                FileUtils.deleteRecursively(Paths.get(aggPath))
+                false
+            }
+          } finally FileUtils.deleteRecursively(tmp)
         }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            if (!df.isEmpty) { mvCommit(df, batchId); () }
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // the zombie: an old writer re-emits batch 1 with t2's
-        // payload (distinguishable — q293's convention); the fence
-        // must no-op before any fold or file write
-        val replayFenced = !mvCommit(
-          s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
-        val out = (0 to 2).map { v =>
-          s.read.parquet(aggPathOf(v.toLong))
-            .select(lit(v.toLong).as("version"), col("event_type"),
-              col("n_events"),
-              col("sv").cast("double").as("sum_value"),
-              lit(v == 1 && replayFenced).as("replay_fenced"))
-        }.reduce(_ unionByName _).orderBy("version", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(lake)
-        deleteRecursively(stage)
       }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          if (!df.isEmpty) { mvCommit(df, batchId); () }
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      // the zombie: an old writer re-emits batch 1 with t2's
+      // payload (distinguishable — q293's convention); the fence
+      // must no-op before any fold or file write
+      val replayFenced = !mvCommit(
+        s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
+      (0 to 2).map { v =>
+        s.read.parquet(aggPathOf(v.toLong))
+          .select(lit(v.toLong).as("version"), col("event_type"),
+            col("n_events"),
+            col("sv").cast("double").as("sum_value"),
+            lit(v == 1 && replayFenced).as("replay_fenced"))
+      }.reduce(_ unionByName _).orderBy("version", "event_type")
     }),
 
     // STREAMING CHANGE-DATA-FEED CONSUMPTION — the lake↔streaming
@@ -1112,137 +935,119 @@ object StreamingQueries extends graft.QueryFamily {
     // without ever rescanning the table: per commit the work is
     // (files the commit touched) + an aggregate-sized fold, and the
     // feed itself is just the manifests the log already wrote.
-    "q317_stream_cdf_consume" -> ((s, dir) => {
+    "q317_stream_cdf_consume" -> ((s, dir) => gateRun(s, "q317") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q317-lake")
-      val arrivals = tmpDir("graft-q317-src")
-      val mv = tmpDir("graft-q317-mv")
-      val ckpt = tmpDir("graft-q317-ckpt")
-      try {
-        graft.queries.ShapeOpsQueries
-          .stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        // the feed: each commit's manifest (plus its version) staged
-        // as one arrival file, mtimes in commit order — the stream IS
-        // the log
-        val now = System.currentTimeMillis()
-        var schema: org.apache.spark.sql.types.StructType = null
-        for (v <- 0 to 2) {
-          val tmp = tmpDir("graft-q317-w")
-          try {
-            val m = s.read.parquet(s"$stage/_log/v$v")
-              .withColumn("version", lit(v.toLong))
-            schema = m.schema
-            m.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val f = arrivals.resolve(s"c$v.parquet")
-            Files.move(graft.util.FileUtils.firstParquet(tmp), f,
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime.fromMillis(
-                now - (3 - v) * 60000L))
-          } finally deleteRecursively(tmp)
-        }
-        Files.createDirectories(Paths.get(s"$mv/_log"))
-        def aggPathOf(v: Long): String =
-          graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-            .collectFirst { case r if r.getString(0) == "add" =>
-              r.getString(1) }.get
-        def roll(df: DataFrame, sign: Int) = df
-          .groupBy("source")
-          .agg((count(lit(1)) * sign).as("n_docs"),
-            (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-            (sum(expr(graft.queries.ShapeOpsQueries
-              .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-        // the CDF consumer — per commit: change set from the
-        // manifest's own entries, signed fold, fenced nonce commit
-        def cdfCommit(mdf: DataFrame, batchId: Long): Boolean = {
-          val all = mdf.collect() // manifest-sized (O(files) rows)
-          // AvailableNow may deliver MORE than one arrival file in a
-          // batch (equal mtimes); taking max(version) would merge two
-          // commits' change sets into one fold and skip a version's
-          // stored aggregate (round-17 ADVICE). Fold each distinct
-          // version's entries separately, in ascending commit order.
-          all.map(_.getAs[Long]("version")).distinct.sorted.map { v =>
-            foldOneCommit(all.filter(_.getAs[Long]("version") == v), v)
-          }.forall(identity)
-        }
-        def foldOneCommit(
-            entries: Array[org.apache.spark.sql.Row], v0: Long): Boolean = {
-          if (entries.isEmpty) false
-          else {
-            val v = v0
-            val target = Paths.get(s"$mv/_log/v$v")
-            if (Files.exists(target)) false
-            else {
-              val added = entries.filter(_.getString(0) == "add")
-                .map(_.getString(1)).toSeq
-              val removed = entries.filter(_.getString(0) == "remove")
-                .map(_.getString(1)).toSeq
-              val addedDf = s.read.parquet(added: _*)
-              val removedDf =
-                if (removed.nonEmpty) s.read.parquet(removed: _*)
-                else addedDf.where(lit(false))
-              val inserts = addedDf.join(removedDf.select("doc_id"),
-                Seq("doc_id"), "left_anti")
-              val deletes = removedDf.join(addedDf.select("doc_id"),
-                Seq("doc_id"), "left_anti")
-              val delta =
-                roll(inserts, 1).unionByName(roll(deletes, -1))
-              val base =
-                if (v == 0L) delta
-                else s.read.parquet(aggPathOf(v - 1))
-                  .select(col("source"), col("n_docs"), col("sum_chars"),
-                    col("key_checksum"))
-                  .unionByName(delta)
-              val merged = base.groupBy("source")
-                .agg(sum(col("n_docs")).as("n_docs"),
-                  sum(col("sum_chars")).as("sum_chars"),
-                  sum(col("key_checksum")).as("key_checksum"))
-              val nonce = java.util.UUID.randomUUID().toString
-              val aggPath = s"$mv/agg/v$v-$nonce"
-              merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-              val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
-              try {
-                val staged = tmp.resolve("m")
-                Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-                  .write.mode("overwrite").parquet(staged.toString)
-                try {
-                  Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-                  true
-                } catch {
-                  case _: java.nio.file.FileSystemException
-                      if Files.exists(target) =>
-                    deleteRecursively(Paths.get(aggPath))
-                    false
-                }
-              } finally deleteRecursively(tmp)
-            }
-          }
-        }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(arrivals.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            cdfCommit(df, batchId); ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = (0 to 2).map { v =>
-          s.read.parquet(aggPathOf(v.toLong))
-            .select(lit(v.toLong).as("version"), col("source"),
-              col("n_docs"), col("sum_chars"), col("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("version", "source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(mv)
-        deleteRecursively(arrivals)
-        deleteRecursively(stage)
+      val stage = Staged.dir(root, "lake")
+      val arrivals = Staged.dir(root, "src")
+      val mv = Staged.dir(root, "mv")
+      val ckpt = Staged.dir(root, "ckpt")
+      graft.queries.ShapeOpsQueries
+        .stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      // the feed: each commit's manifest (plus its version) staged
+      // as one arrival file, mtimes in commit order — the stream IS
+      // the log
+      val now = System.currentTimeMillis()
+      var schema: StructType = null
+      for (v <- 0 to 2) {
+        val m = s.read.parquet(s"$stage/_log/v$v")
+          .withColumn("version", lit(v.toLong))
+        schema = m.schema
+        landFile(m, arrivals.resolve(s"c$v.parquet"),
+          Some(now - (3 - v) * 60000L))
       }
+      Files.createDirectories(Paths.get(s"$mv/_log"))
+      def aggPathOf(v: Long): String =
+        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
+          .collectFirst { case r if r.getString(0) == "add" =>
+            r.getString(1) }.get
+      def roll(df: DataFrame, sign: Int) = df
+        .groupBy("source")
+        .agg((count(lit(1)) * sign).as("n_docs"),
+          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
+          (sum(expr(graft.queries.ShapeOpsQueries
+            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
+      // the CDF consumer — per commit: change set from the
+      // manifest's own entries, signed fold, fenced nonce commit
+      def cdfCommit(mdf: DataFrame, batchId: Long): Boolean = {
+        val all = mdf.collect() // manifest-sized (O(files) rows)
+        // AvailableNow may deliver MORE than one arrival file in a
+        // batch (equal mtimes); taking max(version) would merge two
+        // commits' change sets into one fold and skip a version's
+        // stored aggregate (round-17 ADVICE). Fold each distinct
+        // version's entries separately, in ascending commit order.
+        all.map(_.getAs[Long]("version")).distinct.sorted.map { v =>
+          foldOneCommit(all.filter(_.getAs[Long]("version") == v), v)
+        }.forall(identity)
+      }
+      def foldOneCommit(
+          entries: Array[org.apache.spark.sql.Row], v0: Long): Boolean = {
+        if (entries.isEmpty) false
+        else {
+          val v = v0
+          val target = Paths.get(s"$mv/_log/v$v")
+          if (Files.exists(target)) false
+          else {
+            val added = entries.filter(_.getString(0) == "add")
+              .map(_.getString(1)).toSeq
+            val removed = entries.filter(_.getString(0) == "remove")
+              .map(_.getString(1)).toSeq
+            val addedDf = s.read.parquet(added: _*)
+            val removedDf =
+              if (removed.nonEmpty) s.read.parquet(removed: _*)
+              else addedDf.where(lit(false))
+            val inserts = addedDf.join(removedDf.select("doc_id"),
+              Seq("doc_id"), "left_anti")
+            val deletes = removedDf.join(addedDf.select("doc_id"),
+              Seq("doc_id"), "left_anti")
+            val delta =
+              roll(inserts, 1).unionByName(roll(deletes, -1))
+            val base =
+              if (v == 0L) delta
+              else s.read.parquet(aggPathOf(v - 1))
+                .select(col("source"), col("n_docs"), col("sum_chars"),
+                  col("key_checksum"))
+                .unionByName(delta)
+            val merged = base.groupBy("source")
+              .agg(sum(col("n_docs")).as("n_docs"),
+                sum(col("sum_chars")).as("sum_chars"),
+                sum(col("key_checksum")).as("key_checksum"))
+            val nonce = java.util.UUID.randomUUID().toString
+            val aggPath = s"$mv/agg/v$v-$nonce"
+            merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
+            val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
+            try {
+              val staged = tmp.resolve("m")
+              Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
+                .write.mode("overwrite").parquet(staged.toString)
+              try {
+                Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+                true
+              } catch {
+                case _: java.nio.file.FileSystemException
+                    if Files.exists(target) =>
+                  FileUtils.deleteRecursively(Paths.get(aggPath))
+                  false
+              }
+            } finally FileUtils.deleteRecursively(tmp)
+          }
+        }
+      }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          cdfCommit(df, batchId); ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      (0 to 2).map { v =>
+        s.read.parquet(aggPathOf(v.toLong))
+          .select(lit(v.toLong).as("version"), col("source"),
+            col("n_docs"), col("sum_chars"), col("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("version", "source")
     }),
 
     // STREAMING CDF CONSUMPTION OF AN UPDATE COMMIT — the netting
@@ -1265,143 +1070,125 @@ object StreamingQueries extends graft.QueryFamily {
     // rollup — a consumer that nets by key fails v1's sum_chars by
     // exactly 500 × |updated|. At 100 TB the full-row anti-join is
     // still bounded by the commit's touched files, never the table.
-    "q328_stream_cdf_update" -> ((s, dir) => {
+    "q328_stream_cdf_update" -> ((s, dir) => gateRun(s, "q328") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q328-lake")
-      val arrivals = tmpDir("graft-q328-src")
-      val mv = tmpDir("graft-q328-mv")
-      val ckpt = tmpDir("graft-q328-ckpt")
-      try {
-        val d = graft.queries.Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val chType = d.schema("n_chars").dataType
-        val f0 = d.where(col("doc_id") % 2 === 0)
-        val f1 = d.where(col("doc_id") % 2 === 1)
-        f0.coalesce(1).write.mode("overwrite").parquet(s"$stage/f0")
-        f1.coalesce(1).write.mode("overwrite").parquet(s"$stage/f1")
-        // v1's CoW update: same rows, n_chars+500 on the key slice
-        f0.withColumn("n_chars",
-            when(col("doc_id") % 7 === 3,
-              col("n_chars") + lit(500).cast(chType))
-              .otherwise(col("n_chars")))
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/f0u")
-        // v2's CoW delete
-        f1.where(!(col("doc_id") % 5 === 0))
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1r")
-        val manifests = Seq(
-          (0L, Seq(("add", s"$stage/f0"), ("add", s"$stage/f1"))),
-          (1L, Seq(("remove", s"$stage/f0"), ("add", s"$stage/f0u"))),
-          (2L, Seq(("remove", s"$stage/f1"), ("add", s"$stage/f1r"))))
-        val now = System.currentTimeMillis()
-        var schema: org.apache.spark.sql.types.StructType = null
-        manifests.foreach { case (v, entries) =>
-          val tmp = tmpDir("graft-q328-w")
-          try {
-            val m = entries.toDF("action", "path")
-              .withColumn("version", lit(v))
-            schema = m.schema
-            m.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val f = arrivals.resolve(s"c$v.parquet")
-            Files.move(graft.util.FileUtils.firstParquet(tmp), f,
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime.fromMillis(
-                now - (3 - v) * 60000L))
-          } finally deleteRecursively(tmp)
-        }
-        Files.createDirectories(Paths.get(s"$mv/_log"))
-        def aggPathOf(v: Long): String =
-          graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-            .collectFirst { case r if r.getString(0) == "add" =>
-              r.getString(1) }.get
-        val rowCols = Seq("doc_id", "source", "n_chars")
-        def roll(df: DataFrame, sign: Int) = df
-          .groupBy("source")
-          .agg((count(lit(1)) * sign).as("n_docs"),
-            (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-            (sum(expr(graft.queries.ShapeOpsQueries
-              .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-        def foldOne(entries: Array[org.apache.spark.sql.Row],
-            v: Long): Boolean = {
-          val target = Paths.get(s"$mv/_log/v$v")
-          if (entries.isEmpty || Files.exists(target)) false
-          else {
-            val added = entries.filter(_.getString(0) == "add")
-              .map(_.getString(1)).toSeq
-            val removed = entries.filter(_.getString(0) == "remove")
-              .map(_.getString(1)).toSeq
-            val addedDf = s.read.parquet(added: _*)
-            val removedDf =
-              if (removed.nonEmpty) s.read.parquet(removed: _*)
-              else addedDf.where(lit(false))
-            // FULL-ROW netting: an update's pre/post images differ in
-            // the measure, so both survive their anti-join — the key
-            // netting q317 uses would cancel them
-            val inserts = addedDf.join(removedDf, rowCols, "left_anti")
-            val deletes = removedDf.join(addedDf, rowCols, "left_anti")
-            val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
-            val base =
-              if (v == 0L) delta
-              else s.read.parquet(aggPathOf(v - 1))
-                .select(col("source"), col("n_docs"), col("sum_chars"),
-                  col("key_checksum"))
-                .unionByName(delta)
-            val merged = base.groupBy("source")
-              .agg(sum(col("n_docs")).as("n_docs"),
-                sum(col("sum_chars")).as("sum_chars"),
-                sum(col("key_checksum")).as("key_checksum"))
-              // a source whose rows all vanished folds to zero — drop
-              // it, as the from-scratch rollup would
-              .where(col("n_docs") =!= 0L)
-            val nonce = java.util.UUID.randomUUID().toString
-            val aggPath = s"$mv/agg/v$v-$nonce"
-            merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-            val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
-            try {
-              val staged = tmp.resolve("m")
-              Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-                .write.mode("overwrite").parquet(staged.toString)
-              try {
-                Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-                true
-              } catch {
-                case _: java.nio.file.FileSystemException
-                    if Files.exists(target) =>
-                  deleteRecursively(Paths.get(aggPath))
-                  false
-              }
-            } finally deleteRecursively(tmp)
-          }
-        }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(arrivals.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val all = df.collect() // manifest-sized
-            all.map(_.getAs[Long]("version")).distinct.sorted
-              .foreach(v =>
-                foldOne(all.filter(_.getAs[Long]("version") == v), v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = (0 to 2).map { v =>
-          s.read.parquet(aggPathOf(v.toLong))
-            .select(lit(v.toLong).as("version"), col("source"),
-              col("n_docs"), col("sum_chars"), col("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("version", "source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(mv)
-        deleteRecursively(arrivals)
-        deleteRecursively(stage)
+      val stage = Staged.dir(root, "lake")
+      val arrivals = Staged.dir(root, "src")
+      val mv = Staged.dir(root, "mv")
+      val ckpt = Staged.dir(root, "ckpt")
+      val d = graft.queries.Tables(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      val chType = d.schema("n_chars").dataType
+      val f0 = d.where(col("doc_id") % 2 === 0)
+      val f1 = d.where(col("doc_id") % 2 === 1)
+      f0.coalesce(1).write.mode("overwrite").parquet(s"$stage/f0")
+      f1.coalesce(1).write.mode("overwrite").parquet(s"$stage/f1")
+      // v1's CoW update: same rows, n_chars+500 on the key slice
+      f0.withColumn("n_chars",
+          when(col("doc_id") % 7 === 3,
+            col("n_chars") + lit(500).cast(chType))
+            .otherwise(col("n_chars")))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/f0u")
+      // v2's CoW delete
+      f1.where(!(col("doc_id") % 5 === 0))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1r")
+      val manifests = Seq(
+        (0L, Seq(("add", s"$stage/f0"), ("add", s"$stage/f1"))),
+        (1L, Seq(("remove", s"$stage/f0"), ("add", s"$stage/f0u"))),
+        (2L, Seq(("remove", s"$stage/f1"), ("add", s"$stage/f1r"))))
+      val now = System.currentTimeMillis()
+      var schema: StructType = null
+      manifests.foreach { case (v, entries) =>
+        val m = entries.toDF("action", "path")
+          .withColumn("version", lit(v))
+        schema = m.schema
+        landFile(m, arrivals.resolve(s"c$v.parquet"),
+          Some(now - (3 - v) * 60000L))
       }
+      Files.createDirectories(Paths.get(s"$mv/_log"))
+      def aggPathOf(v: Long): String =
+        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
+          .collectFirst { case r if r.getString(0) == "add" =>
+            r.getString(1) }.get
+      val rowCols = Seq("doc_id", "source", "n_chars")
+      def roll(df: DataFrame, sign: Int) = df
+        .groupBy("source")
+        .agg((count(lit(1)) * sign).as("n_docs"),
+          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
+          (sum(expr(graft.queries.ShapeOpsQueries
+            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
+      def foldOne(entries: Array[org.apache.spark.sql.Row],
+          v: Long): Boolean = {
+        val target = Paths.get(s"$mv/_log/v$v")
+        if (entries.isEmpty || Files.exists(target)) false
+        else {
+          val added = entries.filter(_.getString(0) == "add")
+            .map(_.getString(1)).toSeq
+          val removed = entries.filter(_.getString(0) == "remove")
+            .map(_.getString(1)).toSeq
+          val addedDf = s.read.parquet(added: _*)
+          val removedDf =
+            if (removed.nonEmpty) s.read.parquet(removed: _*)
+            else addedDf.where(lit(false))
+          // FULL-ROW netting: an update's pre/post images differ in
+          // the measure, so both survive their anti-join — the key
+          // netting q317 uses would cancel them
+          val inserts = addedDf.join(removedDf, rowCols, "left_anti")
+          val deletes = removedDf.join(addedDf, rowCols, "left_anti")
+          val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
+          val base =
+            if (v == 0L) delta
+            else s.read.parquet(aggPathOf(v - 1))
+              .select(col("source"), col("n_docs"), col("sum_chars"),
+                col("key_checksum"))
+              .unionByName(delta)
+          val merged = base.groupBy("source")
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("sum_chars")).as("sum_chars"),
+              sum(col("key_checksum")).as("key_checksum"))
+            // a source whose rows all vanished folds to zero — drop
+            // it, as the from-scratch rollup would
+            .where(col("n_docs") =!= 0L)
+          val nonce = java.util.UUID.randomUUID().toString
+          val aggPath = s"$mv/agg/v$v-$nonce"
+          merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
+          val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
+          try {
+            val staged = tmp.resolve("m")
+            Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
+              .write.mode("overwrite").parquet(staged.toString)
+            try {
+              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+              true
+            } catch {
+              case _: java.nio.file.FileSystemException
+                  if Files.exists(target) =>
+                FileUtils.deleteRecursively(Paths.get(aggPath))
+                false
+            }
+          } finally FileUtils.deleteRecursively(tmp)
+        }
+      }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          val all = df.collect() // manifest-sized
+          all.map(_.getAs[Long]("version")).distinct.sorted
+            .foreach(v =>
+              foldOne(all.filter(_.getAs[Long]("version") == v), v))
+          ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      (0 to 2).map { v =>
+        s.read.parquet(aggPathOf(v.toLong))
+          .select(lit(v.toLong).as("version"), col("source"),
+            col("n_docs"), col("sum_chars"), col("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("version", "source")
     }),
 
     // SNAPSHOT BOOTSTRAP + CHANGE TAIL — Delta's streaming-source
@@ -1423,111 +1210,93 @@ object StreamingQueries extends graft.QueryFamily {
     // the bootstrap is one snapshot scan (what a backfill costs
     // anyway) and the tail is ∝ changes — history length never
     // enters the cost.
-    "q333_stream_bootstrap_tail" -> ((s, dir) => {
+    "q333_stream_bootstrap_tail" -> ((s, dir) => gateRun(s, "q333") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q333-lake")
-      val arrivals = tmpDir("graft-q333-src")
-      val mv = tmpDir("graft-q333-mv")
-      val ckpt = tmpDir("graft-q333-ckpt")
-      try {
-        graft.queries.ShapeOpsQueries
-          .stageLakeLog(s, dir, stage.toString, withCompaction = false)
-        def roll(df: DataFrame, sign: Int) = df
-          .groupBy("source")
-          .agg((count(lit(1)) * sign).as("n_docs"),
-            (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-            (sum(expr(graft.queries.ShapeOpsQueries
-              .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-        Files.createDirectories(Paths.get(s"$mv/_log"))
-        def aggPathOf(v: Long): String =
-          graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-            .collectFirst { case r if r.getString(0) == "add" =>
-              r.getString(1) }.get
-        def commitAgg(v: Long, agg: DataFrame): Unit = {
-          val aggPath = s"$mv/agg/v$v"
-          agg.coalesce(1).write.mode("overwrite").parquet(aggPath)
-          Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-            .write.mode("overwrite").parquet(s"$mv/_log/v$v")
-        }
-        // the BOOTSTRAP: one snapshot read at the boot version — not
-        // a change-feed fold
-        val bootFiles = graft.queries.ShapeOpsQueries
-          .asOfFiles(s, stage.toString, 0)
-        commitAgg(0L, roll(s.read.parquet(bootFiles: _*), 1))
-        // the TAIL: only the commits AFTER the boot version arrive
-        val now = System.currentTimeMillis()
-        var schema: org.apache.spark.sql.types.StructType = null
-        for (v <- 1 to 2) {
-          val tmp = tmpDir("graft-q333-w")
-          try {
-            val m = s.read.parquet(s"$stage/_log/v$v")
-              .withColumn("version", lit(v.toLong))
-            schema = m.schema
-            m.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val f = arrivals.resolve(s"c$v.parquet")
-            Files.move(graft.util.FileUtils.firstParquet(tmp), f,
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime.fromMillis(
-                now - (3 - v) * 60000L))
-          } finally deleteRecursively(tmp)
-        }
-        def foldOne(entries: Array[org.apache.spark.sql.Row],
-            v: Long): Unit = {
-          if (entries.isEmpty ||
-            Files.exists(Paths.get(s"$mv/_log/v$v"))) return
-          val added = entries.filter(_.getString(0) == "add")
-            .map(_.getString(1)).toSeq
-          val removed = entries.filter(_.getString(0) == "remove")
-            .map(_.getString(1)).toSeq
-          val addedDf = s.read.parquet(added: _*)
-          val removedDf =
-            if (removed.nonEmpty) s.read.parquet(removed: _*)
-            else addedDf.where(lit(false))
-          val inserts = addedDf.join(removedDf.select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          val deletes = removedDf.join(addedDf.select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
-          val merged = s.read.parquet(aggPathOf(v - 1))
-            .select(col("source"), col("n_docs"), col("sum_chars"),
-              col("key_checksum"))
-            .unionByName(delta)
-            .groupBy("source")
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("sum_chars")).as("sum_chars"),
-              sum(col("key_checksum")).as("key_checksum"))
-          commitAgg(v, merged)
-        }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(arrivals.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val all = df.collect() // manifest-sized
-            all.map(_.getAs[Long]("version")).distinct.sorted
-              .foreach(v =>
-                foldOne(all.filter(_.getAs[Long]("version") == v), v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = (0 to 2).map { v =>
-          s.read.parquet(aggPathOf(v.toLong))
-            .select(lit(v.toLong).as("version"), col("source"),
-              col("n_docs"), col("sum_chars"), col("key_checksum"))
-        }.reduce(_ unionByName _).orderBy("version", "source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(mv)
-        deleteRecursively(arrivals)
-        deleteRecursively(stage)
+      val stage = Staged.dir(root, "lake")
+      val arrivals = Staged.dir(root, "src")
+      val mv = Staged.dir(root, "mv")
+      val ckpt = Staged.dir(root, "ckpt")
+      graft.queries.ShapeOpsQueries
+        .stageLakeLog(s, dir, stage.toString, withCompaction = false)
+      def roll(df: DataFrame, sign: Int) = df
+        .groupBy("source")
+        .agg((count(lit(1)) * sign).as("n_docs"),
+          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
+          (sum(expr(graft.queries.ShapeOpsQueries
+            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
+      Files.createDirectories(Paths.get(s"$mv/_log"))
+      def aggPathOf(v: Long): String =
+        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
+          .collectFirst { case r if r.getString(0) == "add" =>
+            r.getString(1) }.get
+      def commitAgg(v: Long, agg: DataFrame): Unit = {
+        val aggPath = s"$mv/agg/v$v"
+        agg.coalesce(1).write.mode("overwrite").parquet(aggPath)
+        Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
+          .write.mode("overwrite").parquet(s"$mv/_log/v$v")
       }
+      // the BOOTSTRAP: one snapshot read at the boot version — not
+      // a change-feed fold
+      val bootFiles = graft.queries.ShapeOpsQueries
+        .asOfFiles(s, stage.toString, 0)
+      commitAgg(0L, roll(s.read.parquet(bootFiles: _*), 1))
+      // the TAIL: only the commits AFTER the boot version arrive
+      val now = System.currentTimeMillis()
+      var schema: StructType = null
+      for (v <- 1 to 2) {
+        val m = s.read.parquet(s"$stage/_log/v$v")
+          .withColumn("version", lit(v.toLong))
+        schema = m.schema
+        landFile(m, arrivals.resolve(s"c$v.parquet"),
+          Some(now - (3 - v) * 60000L))
+      }
+      def foldOne(entries: Array[org.apache.spark.sql.Row],
+          v: Long): Unit = {
+        if (entries.isEmpty ||
+          Files.exists(Paths.get(s"$mv/_log/v$v"))) return
+        val added = entries.filter(_.getString(0) == "add")
+          .map(_.getString(1)).toSeq
+        val removed = entries.filter(_.getString(0) == "remove")
+          .map(_.getString(1)).toSeq
+        val addedDf = s.read.parquet(added: _*)
+        val removedDf =
+          if (removed.nonEmpty) s.read.parquet(removed: _*)
+          else addedDf.where(lit(false))
+        val inserts = addedDf.join(removedDf.select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        val deletes = removedDf.join(addedDf.select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
+        val merged = s.read.parquet(aggPathOf(v - 1))
+          .select(col("source"), col("n_docs"), col("sum_chars"),
+            col("key_checksum"))
+          .unionByName(delta)
+          .groupBy("source")
+          .agg(sum(col("n_docs")).as("n_docs"),
+            sum(col("sum_chars")).as("sum_chars"),
+            sum(col("key_checksum")).as("key_checksum"))
+        commitAgg(v, merged)
+      }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          val all = df.collect() // manifest-sized
+          all.map(_.getAs[Long]("version")).distinct.sorted
+            .foreach(v =>
+              foldOne(all.filter(_.getAs[Long]("version") == v), v))
+          ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      (0 to 2).map { v =>
+        s.read.parquet(aggPathOf(v.toLong))
+          .select(lit(v.toLong).as("version"), col("source"),
+            col("n_docs"), col("sum_chars"), col("key_checksum"))
+      }.reduce(_ unionByName _).orderBy("version", "source")
     }),
 
     // STREAMING CDC APPLY — the downstream face q317/q328 stop short
@@ -1553,231 +1322,213 @@ object StreamingQueries extends graft.QueryFamily {
     // one downstream file rewrites per change commit however large
     // the table. At 100 TB this is the replication contract: work per
     // commit ∝ change set + files containing it, never table size.
-    "q329_stream_cdc_apply" -> ((s, dir) => {
+    "q329_stream_cdc_apply" -> ((s, dir) => gateRun(s, "q329") { root =>
       import s.implicits._
-      val stage = tmpDir("graft-q329-lake")
-      val arrivals = tmpDir("graft-q329-src")
-      val down = tmpDir("graft-q329-down")
-      val ckpt = tmpDir("graft-q329-ckpt")
-      try {
-        val d = graft.queries.Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        val chType = d.schema("n_chars").dataType
-        val nDocs = d.count()
-        val gran = math.max(100L, nDocs / 50L)
-        val updPred = expr(s"doc_id div $gran") === 1L &&
-          col("doc_id") % 7 === 3
-        val delPred = expr(s"doc_id div $gran") === 3L &&
-          col("doc_id") % 5 === 0
-        // upstream: a DIFFERENT layout (even/odd halves), CoW commits.
-        // All six version-files land in ONE partitioned write (the
-        // q301 staging device): six coalesce(1) write jobs — each its
-        // own table scan — were ~the whole staging cost; one job with
-        // each (half, variant) group repartitioned to a single task
-        // writes the same six single-file leaves. Reading a leaf dir
-        // directly yields exactly the data columns (partition cols are
-        // directory names, not file content), so the staged bytes per
-        // logical file are unchanged.
-        def upd(df: DataFrame): DataFrame = df.withColumn("n_chars",
-          when(updPred, col("n_chars") + lit(500).cast(chType))
-            .otherwise(col("n_chars")))
-        val dh = d.withColumn("h", col("doc_id") % 2)
-        dh.withColumn("variant", lit("b"))
-          .unionByName(upd(dh).withColumn("variant", lit("u")))
-          .unionByName(upd(dh).where(!delPred)
-            .withColumn("variant", lit("d")))
-          .repartition(col("h"), col("variant"))
-          .write.partitionBy("h", "variant").mode("overwrite")
-          .parquet(s"$stage/sv")
-        def fp(h: Int, variant: String) =
-          s"$stage/sv/h=$h/variant=$variant"
-        val manifests = Seq(
-          (0L, Seq(("add", fp(0, "b")), ("add", fp(1, "b")))),
-          (1L, Seq(("remove", fp(0, "b")), ("remove", fp(1, "b")),
-            ("add", fp(0, "u")), ("add", fp(1, "u")))),
-          (2L, Seq(("remove", fp(0, "u")), ("remove", fp(1, "u")),
-            ("add", fp(0, "d")), ("add", fp(1, "d")))))
-        val now = System.currentTimeMillis()
-        var schema: org.apache.spark.sql.types.StructType = null
-        manifests.foreach { case (v, entries) =>
-          val tmp = tmpDir("graft-q329-w")
-          try {
-            val m = entries.toDF("action", "path")
-              .withColumn("version", lit(v))
-            schema = m.schema
-            m.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            val f = arrivals.resolve(s"c$v.parquet")
-            Files.move(graft.util.FileUtils.firstParquet(tmp), f,
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime.fromMillis(
-                now - (3 - v) * 60000L))
-          } finally deleteRecursively(tmp)
-        }
-        // the downstream table: granule-partitioned layout + manifest
-        // log with per-file key stats; one rewrite counter per commit
-        Files.createDirectories(Paths.get(s"$down/_log"))
-        val rowCols = Seq("doc_id", "source", "n_chars")
-        def readLog(v: Long): Array[(String, String, Long, Long)] =
-          graft.util.ManifestIO.rows(s, s"$down/_log/v$v")
-            .map(r => (r.getString(0), r.getString(1),
-              r.getLong(2), r.getLong(3)))
-        def activeAt(v: Long): Seq[(String, Long, Long)] = {
-          val entries = (0L to v).flatMap(readLog)
-          val active = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Long, Long)]
-          entries.foreach { case (a, p, mn, mx) =>
-            if (a == "remove") active.remove(p)
-            else active(p) = (mn, mx) }
-          active.toSeq.map { case (p, (mn, mx)) => (p, mn, mx) }
-        }
-        def commitDown(v: Long,
-            entries: Seq[(String, String, Long, Long)]): Unit =
-          entries.toDF("action", "path", "min_id", "max_id").coalesce(1)
-            .write.mode("overwrite").parquet(s"$down/_log/v$v")
-        val rewrites = scala.collection.mutable.Map.empty[Long, Long]
-        def applyOne(entries: Array[org.apache.spark.sql.Row],
-            v: Long): Unit = {
-          if (Files.exists(Paths.get(s"$down/_log/v$v"))) return
-          val added = entries.filter(_.getString(0) == "add")
-            .map(_.getString(1)).toSeq
-          val removed = entries.filter(_.getString(0) == "remove")
-            .map(_.getString(1)).toSeq
-          val addedDf = s.read.parquet(added: _*)
-          val removedDf =
-            if (removed.nonEmpty) s.read.parquet(removed: _*)
-            else addedDf.where(lit(false))
-          val ins = addedDf.join(removedDf, rowCols, "left_anti")
-          val del = removedDf.join(addedDf, rowCols, "left_anti")
-          if (v == 0L) {
-            // initial load: granule-partitioned, stats per file
-            ins.withColumn("g", expr(s"doc_id div $gran"))
-              .repartition(col("g"))
-              .write.partitionBy("g").mode("overwrite")
-              .parquet(s"$down/load")
-            val st = ins.groupBy(expr(s"doc_id div $gran").as("g"))
-              .agg(min(col("doc_id")), max(col("doc_id")))
-              .collect()  // manifest-sized
-              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            commitDown(0L, st.toSeq.map { case (g, mn, mx) =>
-              ("add", s"$down/load/g=$g", mn, mx) })
-            rewrites(0L) = 0L
-          } else {
-            // classify per key: both sides = update, delete-only =
-            // delete, insert-only = net-new. The change-set frames are
-            // CACHED for this version's apply: changeKeys feeds the
-            // [min,max] probe, one hit probe per candidate file, and
-            // every rewrite's anti-join — uncached, each reference
-            // re-ran the full netting joins over the commit's files
-            // (guide §5: cache what is reused and expensive to
-            // recompute; all three frames are change-set-sized).
-            val insK = ins.select(col("doc_id")).distinct()
-            val delK = del.select(col("doc_id")).distinct()
-            val updK = insK.join(delK, Seq("doc_id"), "left_semi")
-            val netNew = ins.join(delK, Seq("doc_id"), "left_anti").cache()
-            val gone = delK.join(insK, Seq("doc_id"), "left_anti")
-            val changeKeys = updK.unionByName(gone.select("doc_id")).cache()
-            val kmm = changeKeys.agg(min(col("doc_id")),
-              max(col("doc_id")), count(lit(1))).head()
-            val active = activeAt(v - 1)
-            val (cands, hits) =
-              if (kmm.getLong(2) == 0L)
-                (Seq.empty[(String, Long, Long)],
-                  Seq.empty[(String, Long, Long)])
-              else {
-                val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
-                val c = active.filter { case (_, mn, mx) =>
-                  mx >= k0 && mn <= k1 }
-                // per-candidate hit probe (input_file_name cannot
-                // disambiguate in a multi-source join): one bounded
-                // semi-join per candidate — the candidate list is
-                // already stats-pruned to the key range
-                (c, c.filter { case (p, _, _) =>
-                  s.read.parquet(p)
-                    .join(broadcast(changeKeys), Seq("doc_id"),  // hint audit: change-set-bounded (cached keys of one commit)
-                      "left_semi")
-                    .limit(1).count() > 0 })
-              }
-            val postImg = ins.join(updK, Seq("doc_id"), "left_semi")
-              .cache()
-            val rewriteAdds = hits.zipWithIndex.flatMap {
-              case ((p, _, _), i) =>
-                val rp = s"$down/rw$v-$i"
-                val old = s.read.parquet(p)
-                old.join(broadcast(changeKeys), Seq("doc_id"),  // hint audit: change-set-bounded (cached keys of one commit)
-                    "left_anti")
-                  .unionByName(postImg.join(
-                    old.select("doc_id"), Seq("doc_id"), "left_semi"))
-                  .coalesce(1).write.mode("overwrite").parquet(rp)
-                val mm = s.read.parquet(rp)
-                  .agg(min(col("doc_id")), max(col("doc_id")),
-                    count(lit(1))).head()
-                if (mm.getLong(2) == 0L) None
-                else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
-            }
-            // one agg answers emptiness AND the manifest stats
-            val mmN = netNew.agg(count(lit(1)), min(col("doc_id")),
-              max(col("doc_id"))).head()
-            val newAdds =
-              if (mmN.getLong(0) == 0L) Seq.empty
-              else {
-                val np = s"$down/ins$v"
-                netNew.coalesce(1).write.mode("overwrite").parquet(np)
-                Seq(("add", np, mmN.getLong(1), mmN.getLong(2)))
-              }
-            commitDown(v,
-              hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-                rewriteAdds ++ newAdds)
-            rewrites(v) = hits.size.toLong
-            // one version's apply is done; its cached change set must
-            // not outlive it (the stream applies every version in one
-            // foreachBatch)
-            changeKeys.unpersist(blocking = false)
-            netNew.unpersist(blocking = false)
-            postImg.unpersist(blocking = false)
-          }
-        }
-        val query = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(arrivals.toString)
-          .writeStream
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val all = df.collect() // manifest-sized
-            all.map(_.getAs[Long]("version")).distinct.sorted
-              .foreach(v =>
-                applyOne(all.filter(_.getAs[Long]("version") == v), v))
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // gate every downstream version against the upstream logical
-        // content
-        val out = (0L to 2L).map { v =>
-          val files = activeAt(v)
-          s.read.parquet(files.map(_._1): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(graft.queries.ShapeOpsQueries
-                .manifestTerm("doc_id"))).as("key_checksum"),
-              sum(col("doc_id") * col("n_chars").cast("long"))
-                .as("mix_checksum"))
-            .select(lit(v).as("version"),
-              lit(files.size.toLong).as("n_files"),
-              lit(rewrites(v)).as("n_files_rewritten"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"),
-              col("mix_checksum"))
-        }.reduce(_ unionByName _).orderBy("version")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(down)
-        deleteRecursively(arrivals)
-        deleteRecursively(stage)
+      val stage = Staged.dir(root, "lake")
+      val arrivals = Staged.dir(root, "src")
+      val down = Staged.dir(root, "down")
+      val ckpt = Staged.dir(root, "ckpt")
+      val d = graft.queries.Tables(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      val chType = d.schema("n_chars").dataType
+      val nDocs = d.count()
+      val gran = math.max(100L, nDocs / 50L)
+      val updPred = expr(s"doc_id div $gran") === 1L &&
+        col("doc_id") % 7 === 3
+      val delPred = expr(s"doc_id div $gran") === 3L &&
+        col("doc_id") % 5 === 0
+      // upstream: a DIFFERENT layout (even/odd halves), CoW commits.
+      // All six version-files land in ONE partitioned write (the
+      // q301 staging device): six coalesce(1) write jobs — each its
+      // own table scan — were ~the whole staging cost; one job with
+      // each (half, variant) group repartitioned to a single task
+      // writes the same six single-file leaves. Reading a leaf dir
+      // directly yields exactly the data columns (partition cols are
+      // directory names, not file content), so the staged bytes per
+      // logical file are unchanged.
+      def upd(df: DataFrame): DataFrame = df.withColumn("n_chars",
+        when(updPred, col("n_chars") + lit(500).cast(chType))
+          .otherwise(col("n_chars")))
+      val dh = d.withColumn("h", col("doc_id") % 2)
+      dh.withColumn("variant", lit("b"))
+        .unionByName(upd(dh).withColumn("variant", lit("u")))
+        .unionByName(upd(dh).where(!delPred)
+          .withColumn("variant", lit("d")))
+        .repartition(col("h"), col("variant"))
+        .write.partitionBy("h", "variant").mode("overwrite")
+        .parquet(s"$stage/sv")
+      def fp(h: Int, variant: String) =
+        s"$stage/sv/h=$h/variant=$variant"
+      val manifests = Seq(
+        (0L, Seq(("add", fp(0, "b")), ("add", fp(1, "b")))),
+        (1L, Seq(("remove", fp(0, "b")), ("remove", fp(1, "b")),
+          ("add", fp(0, "u")), ("add", fp(1, "u")))),
+        (2L, Seq(("remove", fp(0, "u")), ("remove", fp(1, "u")),
+          ("add", fp(0, "d")), ("add", fp(1, "d")))))
+      val now = System.currentTimeMillis()
+      var schema: StructType = null
+      manifests.foreach { case (v, entries) =>
+        val m = entries.toDF("action", "path")
+          .withColumn("version", lit(v))
+        schema = m.schema
+        landFile(m, arrivals.resolve(s"c$v.parquet"),
+          Some(now - (3 - v) * 60000L))
       }
+      // the downstream table: granule-partitioned layout + manifest
+      // log with per-file key stats; one rewrite counter per commit
+      Files.createDirectories(Paths.get(s"$down/_log"))
+      val rowCols = Seq("doc_id", "source", "n_chars")
+      def readLog(v: Long): Array[(String, String, Long, Long)] =
+        graft.util.ManifestIO.rows(s, s"$down/_log/v$v")
+          .map(r => (r.getString(0), r.getString(1),
+            r.getLong(2), r.getLong(3)))
+      def activeAt(v: Long): Seq[(String, Long, Long)] = {
+        val entries = (0L to v).flatMap(readLog)
+        val active = scala.collection.mutable.LinkedHashMap
+          .empty[String, (Long, Long)]
+        entries.foreach { case (a, p, mn, mx) =>
+          if (a == "remove") active.remove(p)
+          else active(p) = (mn, mx) }
+        active.toSeq.map { case (p, (mn, mx)) => (p, mn, mx) }
+      }
+      def commitDown(v: Long,
+          entries: Seq[(String, String, Long, Long)]): Unit =
+        entries.toDF("action", "path", "min_id", "max_id").coalesce(1)
+          .write.mode("overwrite").parquet(s"$down/_log/v$v")
+      val rewrites = scala.collection.mutable.Map.empty[Long, Long]
+      def applyOne(entries: Array[org.apache.spark.sql.Row],
+          v: Long): Unit = {
+        if (Files.exists(Paths.get(s"$down/_log/v$v"))) return
+        val added = entries.filter(_.getString(0) == "add")
+          .map(_.getString(1)).toSeq
+        val removed = entries.filter(_.getString(0) == "remove")
+          .map(_.getString(1)).toSeq
+        val addedDf = s.read.parquet(added: _*)
+        val removedDf =
+          if (removed.nonEmpty) s.read.parquet(removed: _*)
+          else addedDf.where(lit(false))
+        val ins = addedDf.join(removedDf, rowCols, "left_anti")
+        val del = removedDf.join(addedDf, rowCols, "left_anti")
+        if (v == 0L) {
+          // initial load: granule-partitioned, stats per file
+          ins.withColumn("g", expr(s"doc_id div $gran"))
+            .repartition(col("g"))
+            .write.partitionBy("g").mode("overwrite")
+            .parquet(s"$down/load")
+          val st = ins.groupBy(expr(s"doc_id div $gran").as("g"))
+            .agg(min(col("doc_id")), max(col("doc_id")))
+            .collect()  // manifest-sized
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          commitDown(0L, st.toSeq.map { case (g, mn, mx) =>
+            ("add", s"$down/load/g=$g", mn, mx) })
+          rewrites(0L) = 0L
+        } else {
+          // classify per key: both sides = update, delete-only =
+          // delete, insert-only = net-new. The change-set frames are
+          // CACHED for this version's apply: changeKeys feeds the
+          // [min,max] probe, one hit probe per candidate file, and
+          // every rewrite's anti-join — uncached, each reference
+          // re-ran the full netting joins over the commit's files
+          // (guide §5: cache what is reused and expensive to
+          // recompute; all three frames are change-set-sized).
+          val insK = ins.select(col("doc_id")).distinct()
+          val delK = del.select(col("doc_id")).distinct()
+          val updK = insK.join(delK, Seq("doc_id"), "left_semi")
+          val netNew = ins.join(delK, Seq("doc_id"), "left_anti").cache()
+          val gone = delK.join(insK, Seq("doc_id"), "left_anti")
+          val changeKeys = updK.unionByName(gone.select("doc_id")).cache()
+          val kmm = changeKeys.agg(min(col("doc_id")),
+            max(col("doc_id")), count(lit(1))).head()
+          val active = activeAt(v - 1)
+          val (cands, hits) =
+            if (kmm.getLong(2) == 0L)
+              (Seq.empty[(String, Long, Long)],
+                Seq.empty[(String, Long, Long)])
+            else {
+              val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
+              val c = active.filter { case (_, mn, mx) =>
+                mx >= k0 && mn <= k1 }
+              // per-candidate hit probe (input_file_name cannot
+              // disambiguate in a multi-source join): one bounded
+              // semi-join per candidate — the candidate list is
+              // already stats-pruned to the key range
+              (c, c.filter { case (p, _, _) =>
+                s.read.parquet(p)
+                  .join(broadcast(changeKeys), Seq("doc_id"),  // hint audit: change-set-bounded (cached keys of one commit)
+                    "left_semi")
+                  .limit(1).count() > 0 })
+            }
+          val postImg = ins.join(updK, Seq("doc_id"), "left_semi")
+            .cache()
+          val rewriteAdds = hits.zipWithIndex.flatMap {
+            case ((p, _, _), i) =>
+              val rp = s"$down/rw$v-$i"
+              val old = s.read.parquet(p)
+              old.join(broadcast(changeKeys), Seq("doc_id"),  // hint audit: change-set-bounded (cached keys of one commit)
+                  "left_anti")
+                .unionByName(postImg.join(
+                  old.select("doc_id"), Seq("doc_id"), "left_semi"))
+                .coalesce(1).write.mode("overwrite").parquet(rp)
+              val mm = s.read.parquet(rp)
+                .agg(min(col("doc_id")), max(col("doc_id")),
+                  count(lit(1))).head()
+              if (mm.getLong(2) == 0L) None
+              else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
+          }
+          // one agg answers emptiness AND the manifest stats
+          val mmN = netNew.agg(count(lit(1)), min(col("doc_id")),
+            max(col("doc_id"))).head()
+          val newAdds =
+            if (mmN.getLong(0) == 0L) Seq.empty
+            else {
+              val np = s"$down/ins$v"
+              netNew.coalesce(1).write.mode("overwrite").parquet(np)
+              Seq(("add", np, mmN.getLong(1), mmN.getLong(2)))
+            }
+          commitDown(v,
+            hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
+              rewriteAdds ++ newAdds)
+          rewrites(v) = hits.size.toLong
+          // one version's apply is done; its cached change set must
+          // not outlive it (the stream applies every version in one
+          // foreachBatch)
+          changeKeys.unpersist(blocking = false)
+          netNew.unpersist(blocking = false)
+          postImg.unpersist(blocking = false)
+        }
+      }
+      val query = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(arrivals.toString)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          val all = df.collect() // manifest-sized
+          all.map(_.getAs[Long]("version")).distinct.sorted
+            .foreach(v =>
+              applyOne(all.filter(_.getAs[Long]("version") == v), v))
+          ()
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      // gate every downstream version against the upstream logical
+      // content
+      (0L to 2L).map { v =>
+        val files = activeAt(v)
+        s.read.parquet(files.map(_._1): _*)
+          .agg(count(lit(1)).as("n_rows"),
+            sum(col("n_chars").cast("long")).as("sum_chars"),
+            sum(expr(graft.queries.ShapeOpsQueries
+              .manifestTerm("doc_id"))).as("key_checksum"),
+            sum(col("doc_id") * col("n_chars").cast("long"))
+              .as("mix_checksum"))
+          .select(lit(v).as("version"),
+            lit(files.size.toLong).as("n_files"),
+            lit(rewrites(v)).as("n_files_rewritten"),
+            col("n_rows"), col("sum_chars"), col("key_checksum"),
+            col("mix_checksum"))
+      }.reduce(_ unionByName _).orderBy("version")
     }),
 
     // Streaming rate-anomaly alerting with CROSS-WINDOW state: per
@@ -1795,78 +1546,58 @@ object StreamingQueries extends graft.QueryFamily {
     // predicate (window end <= watermark) is exactly q59's, mirrored
     // in the oracle; state is O(open windows) per type, evicted on
     // flush.
-    "q130_stream_alerts" -> ((s, dir) => {
+    "q130_stream_alerts" -> ((s, dir) => gateRun(s, "q130") { root =>
       import s.implicits._
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q130-src")
-      val ckpt = tmpDir("graft-q130-ckpt")
-      val sink = s"graft_q130_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val alerts = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("ts_us", tsUs(schema))
-          .withColumn("event_time", timestamp_micros(col("ts_us")))
-          .withWatermark("event_time", "10 minutes")
-          .select(col("event_type").as[String], col("ts_us").as[Long],
-            col("event_time").as[java.sql.Timestamp])
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[AlertState, AlertOut](
-            OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-            case (etype, rows, state: GroupState[AlertState]) =>
-              if (state.hasTimedOut) {
-                val st = state.get
-                val wmUs = state.getCurrentWatermarkMs() * 1000L
-                val (ripe, open) =
-                  st.wins.partition { case (w, _) => w + windowUs <= wmUs }
-                var (n, sum) = (st.priorN, st.priorSum)
-                val outs = ripe.toSeq.sortBy(_._1).map { case (w, c) =>
-                  val o = AlertOut(w, etype, c, n, sum, c * n > 2 * sum)
-                  n += 1; sum += c; o
-                }
-                // remaining windows are beyond the current watermark;
-                // a later data batch re-arms the timeout — under
-                // AvailableNow's final batch they stay unemitted,
-                // exactly like q59's un-closed windows
-                if (open.isEmpty) state.remove()
-                else state.update(AlertState(open, n, sum))
-                outs.iterator
-              } else {
-                val prev = state.getOption
-                  .getOrElse(AlertState(Map.empty, 0L, 0L))
-                val add = rows.foldLeft(Map.empty[Long, Long]) { (m, r) =>
-                  val w = r._2 / windowUs * windowUs
-                  m.updated(w, m.getOrElse(w, 0L) + 1L)
-                }
-                val merged = (prev.wins.keySet ++ add.keySet).iterator.map(w =>
-                  w -> (prev.wins.getOrElse(w, 0L) + add.getOrElse(w, 0L)))
-                  .toMap
-                state.update(AlertState(merged, prev.priorN, prev.priorSum))
-                // fire when the watermark reaches the earliest open
-                // window's end: wm > end-1  <=>  end <= wm (the
-                // inclusive emission predicate)
-                val minEndMs = merged.keys.min / 1000L + windowUs / 1000L
-                state.setTimeoutTimestamp(
-                  math.max(minEndMs - 1, state.getCurrentWatermarkMs + 1))
-                Iterator.empty
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val alerts = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("ts_us", tsUs(schema))
+        .withColumn("event_time", timestamp_micros(col("ts_us")))
+        .withWatermark("event_time", "10 minutes")
+        .select(col("event_type").as[String], col("ts_us").as[Long],
+          col("event_time").as[java.sql.Timestamp])
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[AlertState, AlertOut](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          case (etype, rows, state: GroupState[AlertState]) =>
+            if (state.hasTimedOut) {
+              val st = state.get
+              val wmUs = state.getCurrentWatermarkMs() * 1000L
+              val (ripe, open) =
+                st.wins.partition { case (w, _) => w + windowUs <= wmUs }
+              var (n, sum) = (st.priorN, st.priorSum)
+              val outs = ripe.toSeq.sortBy(_._1).map { case (w, c) =>
+                val o = AlertOut(w, etype, c, n, sum, c * n > 2 * sum)
+                n += 1; sum += c; o
               }
-          }
-        val query = alerts.toDF().writeStream.format("memory")
-          .queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("window_us", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+              // remaining windows are beyond the current watermark;
+              // a later data batch re-arms the timeout — under
+              // AvailableNow's final batch they stay unemitted,
+              // exactly like q59's un-closed windows
+              if (open.isEmpty) state.remove()
+              else state.update(AlertState(open, n, sum))
+              outs.iterator
+            } else {
+              val prev = state.getOption
+                .getOrElse(AlertState(Map.empty, 0L, 0L))
+              val add = rows.foldLeft(Map.empty[Long, Long]) { (m, r) =>
+                val w = r._2 / windowUs * windowUs
+                m.updated(w, m.getOrElse(w, 0L) + 1L)
+              }
+              val merged = (prev.wins.keySet ++ add.keySet).iterator.map(w =>
+                w -> (prev.wins.getOrElse(w, 0L) + add.getOrElse(w, 0L)))
+                .toMap
+              state.update(AlertState(merged, prev.priorN, prev.priorSum))
+              // fire when the watermark reaches the earliest open
+              // window's end: wm > end-1  <=>  end <= wm (the
+              // inclusive emission predicate)
+              val minEndMs = merged.keys.min / 1000L + windowUs / 1000L
+              state.setTimeoutTimestamp(
+                math.max(minEndMs - 1, state.getCurrentWatermarkMs + 1))
+              Iterator.empty
+            }
+        }
+      drainToMemory(s, root, alerts.toDF()) { sink =>
+        sink.orderBy("window_us", "event_type")
       }
     }),
 
@@ -1882,56 +1613,32 @@ object StreamingQueries extends graft.QueryFamily {
     // by user_id on both sides; at scale the range bound keeps each
     // side's buffered window to 30 minutes + watermark delay of rows
     // per user.
-    "q79_stream_join" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q79-src")
-      val ckpt = tmpDir("graft-q79-ckpt")
-      val sink = s"graft_q79_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        def side(evType: String, prefix: String) =
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("event_type") === evType)
-            .withColumn(s"${prefix}_us", tsUs(schema))
-            .withColumn(s"${prefix}_time",
-              timestamp_micros(col(s"${prefix}_us")))
-            .withWatermark(s"${prefix}_time", "10 minutes")
-            .select(col("user_id").as(s"${prefix}_user"),
-              col("event_id").as(s"${prefix}_event"),
-              col(s"${prefix}_us"), col(s"${prefix}_time"))
-        val joined = side("purchase", "p").join(side("click", "c"),
-          col("p_user") === col("c_user") &&
-            col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-            col("c_time") <= col("p_time"))
-          .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
-            (col("p_us") - col("c_us")).as("delta_us"))
-        // a stream-stream join keeps FOUR state stores per shuffle
-        // partition (left/right × keyToNumValues/keyWithIndexToValue),
-        // each with per-batch open/commit I/O — size the state
-        // partitioning to the stream, not the batch default (results
-        // are partition-count-independent; the conf is read at stream
-        // start and pinned in the checkpoint)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        val query =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            joined.writeStream.format("memory").queryName(sink)
-              .outputMode(OutputMode.Append)
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("user_id", "p_event", "c_event")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q79_stream_join" -> ((s, dir) => gateRun(s, "q79") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      def side(evType: String, prefix: String) =
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("event_type") === evType)
+          .withColumn(s"${prefix}_us", tsUs(schema))
+          .withColumn(s"${prefix}_time",
+            timestamp_micros(col(s"${prefix}_us")))
+          .withWatermark(s"${prefix}_time", "10 minutes")
+          .select(col("user_id").as(s"${prefix}_user"),
+            col("event_id").as(s"${prefix}_event"),
+            col(s"${prefix}_us"), col(s"${prefix}_time"))
+      val joined = side("purchase", "p").join(side("click", "c"),
+        col("p_user") === col("c_user") &&
+          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
+          col("c_time") <= col("p_time"))
+        .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
+          (col("p_us") - col("c_us")).as("delta_us"))
+      // a stream-stream join keeps FOUR state stores per shuffle
+      // partition (left/right × keyToNumValues/keyWithIndexToValue),
+      // each with per-batch open/commit I/O — size the state
+      // partitioning to the stream, not the batch default (results
+      // are partition-count-independent; the conf is read at stream
+      // start and pinned in the checkpoint)
+      drainToMemory(s, root, joined) { sink =>
+        sink.orderBy("user_id", "p_event", "c_event")
       }
     }),
 
@@ -1947,51 +1654,27 @@ object StreamingQueries extends graft.QueryFamily {
     // state and are (correctly) NOT emitted — the oracle mirrors the
     // exact threshold: wm = min over both sides of floor-ms(max event
     // time) minus the 10-minute delay.
-    "q146_stream_outer_join" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q146-src")
-      val ckpt = tmpDir("graft-q146-ckpt")
-      val sink = s"graft_q146_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        def side(evType: String, prefix: String) =
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("event_type") === evType)
-            .withColumn(s"${prefix}_us", tsUs(schema))
-            .withColumn(s"${prefix}_time",
-              timestamp_micros(col(s"${prefix}_us")))
-            .withWatermark(s"${prefix}_time", "10 minutes")
-            .select(col("user_id").as(s"${prefix}_user"),
-              col("event_id").as(s"${prefix}_event"),
-              col(s"${prefix}_us"), col(s"${prefix}_time"))
-        val joined = side("purchase", "p").join(side("click", "c"),
-          col("p_user") === col("c_user") &&
-            col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-            col("c_time") <= col("p_time"),
-          "leftOuter")
-          .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
-            (col("p_us") - col("c_us")).as("delta_us"))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        val query =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            joined.writeStream.format("memory").queryName(sink)
-              .outputMode(OutputMode.Append)
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("user_id", "p_event", "c_event")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q146_stream_outer_join" -> ((s, dir) => gateRun(s, "q146") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      def side(evType: String, prefix: String) =
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("event_type") === evType)
+          .withColumn(s"${prefix}_us", tsUs(schema))
+          .withColumn(s"${prefix}_time",
+            timestamp_micros(col(s"${prefix}_us")))
+          .withWatermark(s"${prefix}_time", "10 minutes")
+          .select(col("user_id").as(s"${prefix}_user"),
+            col("event_id").as(s"${prefix}_event"),
+            col(s"${prefix}_us"), col(s"${prefix}_time"))
+      val joined = side("purchase", "p").join(side("click", "c"),
+        col("p_user") === col("c_user") &&
+          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
+          col("c_time") <= col("p_time"),
+        "leftOuter")
+        .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
+          (col("p_us") - col("c_us")).as("delta_us"))
+      drainToMemory(s, root, joined) { sink =>
+        sink.orderBy("user_id", "p_event", "c_event")
       }
     }),
 
@@ -2045,60 +1728,49 @@ object StreamingQueries extends graft.QueryFamily {
     // per-micro-batch work ∝ new docs × bands; the index side is the
     // deployment's persisted artifact (here re-derived from the
     // fixture because the gate must be self-contained).
-    "q158_stream_delta_dedup" -> ((s, dir) => {
+    "q158_stream_delta_dedup" -> ((s, dir) => gateRun(s, "q158") { root =>
       import graft.functions.TextFunctions.{tokens, minhashK, minhashBands, minhashBandRows}
       val src = Paths.get(s"$dir/documents.parquet")
-      val stage = tmpDir("graft-q158-src")
-      val ckpt = tmpDir("graft-q158-ckpt")
-      val sink = s"graft_q158_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("documents.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        def sigOf(df: DataFrame) = df
-          .select(col("doc_id"), array_distinct(
-            graft.functions.ShingleHash(tokens(col("text")), 3)).as("hs"))
-          .select(col("doc_id"),
-            graft.functions.MinHashSig(col("hs")).as("sig"))
-          .where(col("sig").isNotNull)
-        val bandStructs = (0 until minhashBands).map { b =>
-          struct(lit(b).as("band"),
-            element_at(col("sig"), b * minhashBandRows + 1).as("h1"),
-            element_at(col("sig"), b * minhashBandRows + 2).as("h2"))
-        }
-        def bands(df: DataFrame) = df
-          .select(col("doc_id"), col("sig"),
-            explode(array(bandStructs: _*)).as("bk"))
-          .select(col("doc_id"), col("sig"),
-            col("bk.band").as("band"), col("bk.h1").as("h1"),
-            col("bk.h2").as("h2"))
-        val lo = graft.queries.ModelOpsQueries.deltaLo
-        val hi = graft.queries.ModelOpsQueries.deltaHi
-        val index = bands(sigOf(s.read.parquet(src.toString))
-          .where(col("doc_id") < lo || col("doc_id") >= hi))
-          .select(col("doc_id").as("match_id"), col("sig").as("si"),
-            col("band"), col("h1"), col("h2"))
-        // UNHINTED join (the q114/q152 rule): the index side is
-        // corpus-scaled, so a pinned broadcast() would OOM the driver
-        // at 100 TB — size stats broadcast it at gate scale, and a
-        // deployment stores the index bucketed on the band key so the
-        // per-micro-batch join shuffles only the arriving delta
-        val matches = bands(sigOf(
-            s.readStream.schema(schema).parquet(stage.toString)
-              .where(col("doc_id") >= lo && col("doc_id") < hi)))
-          .join(index, Seq("band", "h1", "h2"))
-          .select(col("doc_id"), col("match_id"),
-            col("sig").as("sd"), col("si"))
-        val query = matches.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val (stage, schema) = stageFixture(s, dir, root, "documents")
+      def sigOf(df: DataFrame) = df
+        .select(col("doc_id"), array_distinct(
+          graft.functions.ShingleHash(tokens(col("text")), 3)).as("hs"))
+        .select(col("doc_id"),
+          graft.functions.MinHashSig(col("hs")).as("sig"))
+        .where(col("sig").isNotNull)
+      val bandStructs = (0 until minhashBands).map { b =>
+        struct(lit(b).as("band"),
+          element_at(col("sig"), b * minhashBandRows + 1).as("h1"),
+          element_at(col("sig"), b * minhashBandRows + 2).as("h2"))
+      }
+      def bands(df: DataFrame) = df
+        .select(col("doc_id"), col("sig"),
+          explode(array(bandStructs: _*)).as("bk"))
+        .select(col("doc_id"), col("sig"),
+          col("bk.band").as("band"), col("bk.h1").as("h1"),
+          col("bk.h2").as("h2"))
+      val lo = graft.queries.ModelOpsQueries.deltaLo
+      val hi = graft.queries.ModelOpsQueries.deltaHi
+      val index = bands(sigOf(s.read.parquet(src.toString))
+        .where(col("doc_id") < lo || col("doc_id") >= hi))
+        .select(col("doc_id").as("match_id"), col("sig").as("si"),
+          col("band"), col("h1"), col("h2"))
+      // UNHINTED join (the q114/q152 rule): the index side is
+      // corpus-scaled, so a pinned broadcast() would OOM the driver
+      // at 100 TB — size stats broadcast it at gate scale, and a
+      // deployment stores the index bucketed on the band key so the
+      // per-micro-batch join shuffles only the arriving delta
+      val matches = bands(sigOf(
+          s.readStream.schema(schema).parquet(stage.toString)
+            .where(col("doc_id") >= lo && col("doc_id") < hi)))
+        .join(index, Seq("band", "h1", "h2"))
+        .select(col("doc_id"), col("match_id"),
+          col("sig").as("sd"), col("si"))
+      drainToMemory(s, root, matches) { sink =>
         // post-sink: q138's exact scoring over the emitted candidates
         // (distinct across bands, signature-estimate argmax, novel docs
         // NULL-extended from the delta's signature list)
-        val cand = s.table(sink).distinct()
+        val cand = sink.distinct()
           .select(col("doc_id"), col("match_id"),
             size(filter(zip_with(col("sd"), col("si"), (x, y) => x === y),
               b => b)).cast("long").as("m"))
@@ -2109,7 +1781,7 @@ object StreamingQueries extends graft.QueryFamily {
             (max_by(col("m"), col("score")).cast("double") / minhashK)
               .as("best_est"),
             count(lit(1)).as("n_candidates"))
-        val out = sigOf(s.read.parquet(src.toString))
+        sigOf(s.read.parquet(src.toString))
           .where(col("doc_id") >= lo && col("doc_id") < hi)
           .select(col("doc_id"))
           .join(broadcast(best), Seq("doc_id"), "left")  // hint audit: delta-bounded (per-delta-doc best match)
@@ -2117,13 +1789,6 @@ object StreamingQueries extends graft.QueryFamily {
             coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
             col("best_match"), col("best_est"))
           .orderBy("doc_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2151,89 +1816,52 @@ object StreamingQueries extends graft.QueryFamily {
     // side is the feature store's persisted compact history (∝
     // attribute changes, not events), broadcast or bucket-joined per
     // micro-batch; per-batch work ∝ arriving observations.
-    "q259_stream_pit" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q259-src")
-      val ckpt = tmpDir("graft-q259-ckpt")
-      val sink = s"graft_q259_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        // the static side IS the q74 gate's history — one definition
-        // (scd2Frame), renamed to the serving row's column contract
-        val scd2 = graft.queries.PipelineOpsQueries.scd2Frame(s, dir)
-          .select(col("user_id"), col("event_type").as("pit_type"),
-            col("version").as("pit_version"),
-            col("valid_from_us").as("valid_from"),
-            col("valid_to_us").as("valid_to"))
-        val probes = s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("event_id") %
-            graft.queries.PipelineOpsQueries.pitProbeMod === 0)
-          .select(col("user_id"), col("event_id").as("probe_id"),
-            tsUs(schema).as("asof_us"))
-        val joined = probes.join(scd2,
-            probes("user_id") === scd2("user_id") &&
-              col("valid_from") <= col("asof_us") &&
-              (col("valid_to").isNull || col("asof_us") < col("valid_to")))
-          .select(probes("user_id"), col("probe_id"), col("asof_us"),
-            col("pit_type"), col("pit_version"))
-        val query = joined.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink).orderBy("user_id", "asof_us", "probe_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+    "q259_stream_pit" -> ((s, dir) => gateRun(s, "q259") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      // the static side IS the q74 gate's history — one definition
+      // (scd2Frame), renamed to the serving row's column contract
+      val scd2 = graft.queries.PipelineOpsQueries.scd2Frame(s, dir)
+        .select(col("user_id"), col("event_type").as("pit_type"),
+          col("version").as("pit_version"),
+          col("valid_from_us").as("valid_from"),
+          col("valid_to_us").as("valid_to"))
+      val probes = s.readStream.schema(schema).parquet(stage.toString)
+        .where(col("event_id") %
+          graft.queries.PipelineOpsQueries.pitProbeMod === 0)
+        .select(col("user_id"), col("event_id").as("probe_id"),
+          tsUs(schema).as("asof_us"))
+      val joined = probes.join(scd2,
+          probes("user_id") === scd2("user_id") &&
+            col("valid_from") <= col("asof_us") &&
+            (col("valid_to").isNull || col("asof_us") < col("valid_to")))
+        .select(probes("user_id"), col("probe_id"), col("asof_us"),
+          col("pit_type"), col("pit_version"))
+      drainToMemory(s, root, joined) { sink =>
+        sink.orderBy("user_id", "asof_us", "probe_id")
       }
     }),
 
-    "q164_stream_index" -> ((s, dir) => {
+    "q164_stream_index" -> ((s, dir) => gateRun(s, "q164") { root =>
       val src = Paths.get(s"$dir/documents.parquet")
-      val stage = tmpDir("graft-q164-src")
-      val ckpt = tmpDir("graft-q164-ckpt")
-      val sink = s"graft_q164_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("documents.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val lo = graft.queries.ModelOpsQueries.deltaLo
-        val hi = graft.queries.ModelOpsQueries.deltaHi
-        // the SHARED index aggregation (CorpusOpsQueries.shardedIndex)
-        // applied to the streaming frame — one contract, three build
-        // paths
-        val deltaIdx = graft.queries.CorpusOpsQueries.shardedIndex(
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("doc_id") >= lo && col("doc_id") < hi))
-        val query = deltaIdx.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val (stage, schema) = stageFixture(s, dir, root, "documents")
+      val lo = graft.queries.ModelOpsQueries.deltaLo
+      val hi = graft.queries.ModelOpsQueries.deltaHi
+      // the SHARED index aggregation (CorpusOpsQueries.shardedIndex)
+      // applied to the streaming frame — one contract, three build
+      // paths
+      val deltaIdx = graft.queries.CorpusOpsQueries.shardedIndex(
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("doc_id") >= lo && col("doc_id") < hi))
+      drainToMemory(s, root, deltaIdx, OutputMode.Complete) { sink =>
         val oldIdx = graft.queries.CorpusOpsQueries.shardedIndex(
           s.read.parquet(src.toString)
             .where(col("doc_id") < lo || col("doc_id") >= hi))
-        val out = oldIdx.union(s.table(sink))
+        oldIdx.union(sink)
           .groupBy("term", "shard")
           .agg(sum(col("df_shard")).as("df_shard"),
             array_join(array_sort(flatten(collect_list(col("postings")))), ",")
               .as("postings"))
           .orderBy("term", "shard")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2252,68 +1880,48 @@ object StreamingQueries extends graft.QueryFamily {
     // 100 TB this is the live-dashboard upsert path: per-batch output
     // ∝ keys touched by the batch, state ∝ distinct keys (a
     // deployment bounds it with a watermark or TTL).
-    "q173_stream_update_mode" -> ((s, dir) => {
+    "q173_stream_update_mode" -> ((s, dir) => gateRun(s, "q173") { root =>
       val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q173-src")
-      val ckpt = tmpDir("graft-q173-ckpt")
-      try {
-        val batch = s.read.parquet(src.toString)
-        val schema = batch.schema
-        def stageHalf(rem: Int, name: String, mtimeMs: Long): Unit = {
-          val tmp = tmpDir("graft-q173-w")
-          try {
-            batch.where(col("user_id") % 2 === rem).coalesce(1)
-              .write.mode("overwrite").parquet(tmp.toString)
-            val part = graft.util.FileUtils.firstParquet(tmp)
-            Files.move(part, stage.resolve(name),
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(stage.resolve(name),
-              java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-          } finally deleteRecursively(tmp)
+      val stage = Staged.dir(root, "src")
+      val ckpt = Staged.dir(root, "ckpt")
+      val batch = s.read.parquet(src.toString)
+      val schema = batch.schema
+      def stageHalf(rem: Int, name: String, mtimeMs: Long): Unit =
+        landFile(batch.where(col("user_id") % 2 === rem),
+          stage.resolve(name), Some(mtimeMs))
+      val now = System.currentTimeMillis()
+      stageHalf(0, "half0.parquet", now - 120000)
+      stageHalf(1, "half1.parquet", now - 60000)
+      val agg = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast(dec2)).as("sv"))
+      val emitted =
+        scala.collection.mutable.ArrayBuffer[(Long, String, Long, java.math.BigDecimal)]()
+      agg.writeStream
+        .outputMode(OutputMode.Update)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          val rs = df.collect()
+          emitted.synchronized {
+            emitted ++= rs.map(r =>
+              (id, r.getString(0), r.getLong(1), r.getDecimal(2)))
+          }
+          ()
         }
-        val now = System.currentTimeMillis()
-        stageHalf(0, "half0.parquet", now - 120000)
-        stageHalf(1, "half1.parquet", now - 60000)
-        val agg = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(dec2)).as("sv"))
-        val emitted =
-          scala.collection.mutable.ArrayBuffer[(Long, String, Long, java.math.BigDecimal)]()
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        val query =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            agg.writeStream
-              .outputMode(OutputMode.Update)
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch { (df: DataFrame, id: Long) =>
-                val rs = df.collect()
-                emitted.synchronized {
-                  emitted ++= rs.map(r =>
-                    (id, r.getString(0), r.getLong(1), r.getDecimal(2)))
-                }
-                ()
-              }
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        query.awaitTermination()
-        val fin = emitted.synchronized {
-          emitted.groupBy(_._2).toSeq.map { case (et, rows) =>
-            val last = rows.maxBy(_._1)
-            (et, last._3, last._4.doubleValue(), rows.size.toLong)
-          }.sortBy(_._1)
-        }
-        import s.implicits._
-        fin.toDF("event_type", "n_events", "sum_value", "n_emissions")
-      } finally {
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+        .start()
+        .awaitTermination()
+      val fin = emitted.synchronized {
+        emitted.groupBy(_._2).toSeq.map { case (et, rows) =>
+          val last = rows.maxBy(_._1)
+          (et, last._3, last._4.doubleValue(), rows.size.toLong)
+        }.sortBy(_._1)
       }
+      import s.implicits._
+      fin.toDF("event_type", "n_events", "sum_value", "n_emissions")
     }),
 
     // TTL-bounded streaming dedup: `dropDuplicatesWithinWatermark` —
@@ -2335,36 +1943,20 @@ object StreamingQueries extends graft.QueryFamily {
     // staged third is one file → one scan task at gate scale. Per-key
     // state is one (key, expiry) row ∝ keys live inside the delay
     // horizon — the production memory bound.
-    "q178_stream_dedup_ttl" -> ((s, dir) => {
-      val stage = tmpDir("graft-q178-src")
-      val ckpt = tmpDir("graft-q178-ckpt")
-      val sink = s"graft_q178_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = stageTimeThirds(s, dir, stage)
-        val dedup = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", s"${ttlDelayUs / 1000000L} seconds")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .select(col("user_id"), col("event_type"))
-        val query = dedup.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink)
-          .groupBy("user_id", "event_type")
+    "q178_stream_dedup_ttl" -> ((s, dir) => gateRun(s, "q178") { root =>
+      val stage = Staged.dir(root, "src")
+      val schema = stageTimeThirds(s, dir, stage)
+      val dedup = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+        .withColumn("event_time", timestamp_micros(tsUs(schema)))
+        .withWatermark("event_time", s"${ttlDelayUs / 1000000L} seconds")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))
+      drainToMemory(s, root, dedup) { sink =>
+        sink.groupBy("user_id", "event_type")
           .agg(count(lit(1)).as("n_emissions"))
           .orderBy("user_id", "event_type")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2386,66 +1978,44 @@ object StreamingQueries extends graft.QueryFamily {
     // is the deployment's persisted artifact, here re-derived from the
     // fixture because the gate must be self-contained (q158's
     // premise).
-    "q188_stream_template_emergence" -> ((s, dir) => {
+    "q188_stream_template_emergence" -> ((s, dir) => gateRun(s, "q188") { root =>
       import graft.queries.{LogDomainQueries, Tables}
       val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q188-src")
-      val ckpt = tmpDir("graft-q188-ckpt")
-      val sink = s"graft_q188_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
-          .withColumn("us", expr("ts_ns div 1000"))
-        val mm = lines.agg(min(col("us")), max(col("us"))).head()
-        val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
-        val cut = tmin + (tmax - tmin) * 2 / 3
-        // the catalog: history-window templates with >= 1% support
-        val histT = lines.where(col("us") < cut)
-          .select(LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
-          .groupBy("template").agg(count(lit(1)).as("n_lines"))
-        val totalHist = histT.agg(sum(col("n_lines"))).head().getLong(0)
-        val catalog = histT.where(col("n_lines") * 100L >= totalHist)
-          .select("template")
-        // stage the screened slice (the most recent third) as ONE file
-        val tmp = tmpDir("graft-q188-w")
-        try {
-          s.read.parquet(src.toString)
-            .withColumn("us", tsUs(schema)).where(col("us") >= cut)
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("t2.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
-        val streamNorm = schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            streamRaw.withColumn("ts_ns", col("ts"))
-          case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
-        }
-        val emergent = LogDomainQueries.Corpus.logsOf(streamNorm)
-          .select(col("node"), col("event_id"),
-            LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
-          .join(broadcast(catalog), Seq("template"), "left_anti")  // hint audit: template-catalog-bounded (log formats are finite)
-        val query = emergent.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink)
-          .groupBy("template")
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
+        .withColumn("us", expr("ts_ns div 1000"))
+      val mm = lines.agg(min(col("us")), max(col("us"))).head()
+      val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
+      val cut = tmin + (tmax - tmin) * 2 / 3
+      // the catalog: history-window templates with >= 1% support
+      val histT = lines.where(col("us") < cut)
+        .select(LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
+        .groupBy("template").agg(count(lit(1)).as("n_lines"))
+      val totalHist = histT.agg(sum(col("n_lines"))).head().getLong(0)
+      val catalog = histT.where(col("n_lines") * 100L >= totalHist)
+        .select("template")
+      // stage the screened slice (the most recent third) as ONE file
+      landFile(s.read.parquet(src.toString)
+          .withColumn("us", tsUs(schema)).where(col("us") >= cut)
+          .select(schema.fieldNames.map(col).toSeq: _*),
+        stage.resolve("t2.parquet"))
+      val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
+      val streamNorm = schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          streamRaw.withColumn("ts_ns", col("ts"))
+        case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
+      }
+      val emergent = LogDomainQueries.Corpus.logsOf(streamNorm)
+        .select(col("node"), col("event_id"),
+          LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
+        .join(broadcast(catalog), Seq("template"), "left_anti")  // hint audit: template-catalog-bounded (log formats are finite)
+      drainToMemory(s, root, emergent) { sink =>
+        sink.groupBy("template")
           .agg(count(lit(1)).as("n_lines"),
             countDistinct(col("node")).as("n_nodes"),
             min(col("event_id")).as("first_event"))
           .orderBy("template")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2464,40 +2034,26 @@ object StreamingQueries extends graft.QueryFamily {
     // verbatim, proving the STREAMING build path bit-identical to both
     // batch paths. At 100 TB: per-micro-batch work ∝ arriving vectors;
     // the old index is never re-derived from raw embeddings.
-    "q204_stream_vec_ingest" -> ((s, dir) => {
+    "q204_stream_vec_ingest" -> ((s, dir) => gateRun(s, "q204") { root =>
       import graft.queries.{ModelOpsQueries, SimilarityQueries}
       val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = tmpDir("graft-q204-src")
-      val ckpt = tmpDir("graft-q204-ckpt")
-      val sink = s"graft_q204_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lo = ModelOpsQueries.deltaLo
-        val hi = ModelOpsQueries.deltaHi
-        val tmp = tmpDir("graft-q204-w")
-        try {
-          s.read.parquet(src.toString)
-            .where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("delta.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val deltaCodes = SimilarityQueries.pqCodeRowsFor(s, dir,
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("vec_id") >= lo && col("vec_id") < hi))
-        val query = deltaCodes.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lo = ModelOpsQueries.deltaLo
+      val hi = ModelOpsQueries.deltaHi
+      landFile(s.read.parquet(src.toString)
+          .where(col("vec_id") >= lo && col("vec_id") < hi),
+        stage.resolve("delta.parquet"))
+      val deltaCodes = SimilarityQueries.pqCodeRowsFor(s, dir,
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("vec_id") >= lo && col("vec_id") < hi))
+      drainToMemory(s, root, deltaCodes) { sink =>
         val oldIdx = SimilarityQueries.pqCellIndexOf(
           SimilarityQueries.pqCodeRowsFor(s, dir,
             s.read.parquet(src.toString)
               .where(col("vec_id") < lo || col("vec_id") >= hi)))
-        val deltaIdx = SimilarityQueries.pqCellIndexOf(s.table(sink))
-        val out = oldIdx.union(deltaIdx)
+        val deltaIdx = SimilarityQueries.pqCellIndexOf(sink)
+        oldIdx.union(deltaIdx)
           .groupBy("cell")
           .agg(sum(col("n_members")).as("n_members"),
             sum(col("sum_qerr")).as("sum_qerr"),
@@ -2505,13 +2061,6 @@ object StreamingQueries extends graft.QueryFamily {
             array_join(array_sort(flatten(collect_list(col("postings")))), ",")
               .as("postings"))
           .orderBy("cell")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2527,46 +2076,25 @@ object StreamingQueries extends graft.QueryFamily {
     // old frontier via the SAME frontierMerge and schedules via the
     // SAME frontierSchedule, and the oracle is q217's from-scratch
     // twin VERBATIM — streaming build ≡ incremental ≡ from-scratch.
-    "q221_stream_frontier" -> ((s, dir) => {
+    "q221_stream_frontier" -> ((s, dir) => gateRun(s, "q221") { root =>
       import graft.queries.{CrawlOpsQueries, ModelOpsQueries}
       val src = Paths.get(s"$dir/documents.parquet")
-      val stage = tmpDir("graft-q221-src")
-      val ckpt = tmpDir("graft-q221-ckpt")
-      val sink = s"graft_q221_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lo = ModelOpsQueries.deltaLo
-        val hi = ModelOpsQueries.deltaHi
-        def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
-        val tmp = tmpDir("graft-q221-w")
-        try {
-          s.read.parquet(src.toString)
-            .where(inDelta(col("doc_id")))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("delta.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val deltaKept = CrawlOpsQueries.frontierKeptOf(
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(inDelta(col("doc_id"))))
-        val query = deltaKept.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lo = ModelOpsQueries.deltaLo
+      val hi = ModelOpsQueries.deltaHi
+      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
+      landFile(s.read.parquet(src.toString)
+          .where(inDelta(col("doc_id"))),
+        stage.resolve("delta.parquet"))
+      val deltaKept = CrawlOpsQueries.frontierKeptOf(
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(inDelta(col("doc_id"))))
+      drainToMemory(s, root, deltaKept, OutputMode.Complete) { sink =>
         val old = CrawlOpsQueries.frontierKept(s, dir, !inDelta(col("doc_id")))
-        val out = CrawlOpsQueries.frontierSchedule(
-            CrawlOpsQueries.frontierMerge(old, s.table(sink)))
+        CrawlOpsQueries.frontierSchedule(
+            CrawlOpsQueries.frontierMerge(old, sink))
           .orderBy("round", "host", "canonical_url")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2585,47 +2113,26 @@ object StreamingQueries extends graft.QueryFamily {
     // streaming build ≡ incremental ≡ batch, hash-proven. At 100 TB:
     // per-batch cost ∝ arriving docs; the rank refresh was never
     // corpus-scale.
-    "q237_stream_edges" -> ((s, dir) => {
+    "q237_stream_edges" -> ((s, dir) => gateRun(s, "q237") { root =>
       import graft.queries.{CrawlOpsQueries, ModelOpsQueries}
       val src = Paths.get(s"$dir/documents.parquet")
-      val stage = tmpDir("graft-q237-src")
-      val ckpt = tmpDir("graft-q237-ckpt")
-      val sink = s"graft_q237_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lo = ModelOpsQueries.deltaLo
-        val hi = ModelOpsQueries.deltaHi
-        def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
-        val tmp = tmpDir("graft-q237-w")
-        try {
-          s.read.parquet(src.toString)
-            .where(inDelta(col("doc_id")))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("delta.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val deltaEdges = CrawlOpsQueries.hostEdges(
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(inDelta(col("doc_id"))))
-        val query = deltaEdges.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lo = ModelOpsQueries.deltaLo
+      val hi = ModelOpsQueries.deltaHi
+      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
+      landFile(s.read.parquet(src.toString)
+          .where(inDelta(col("doc_id"))),
+        stage.resolve("delta.parquet"))
+      val deltaEdges = CrawlOpsQueries.hostEdges(
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(inDelta(col("doc_id"))))
+      drainToMemory(s, root, deltaEdges, OutputMode.Complete) { sink =>
         val oldEdges = CrawlOpsQueries.hostEdges(
           s.read.parquet(src.toString).where(!inDelta(col("doc_id"))))
-        val merged = oldEdges.unionByName(s.table(sink))
+        val merged = oldEdges.unionByName(sink)
           .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-        val out = CrawlOpsQueries.pagerankFrom(merged)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
+        CrawlOpsQueries.pagerankFrom(merged)
       }
     }),
 
@@ -2642,47 +2149,26 @@ object StreamingQueries extends graft.QueryFamily {
     // matrix (q240's device); oracle = q148's twin VERBATIM —
     // streaming ≡ incremental ≡ batch, hash-proven. At 100 TB: state
     // is ONE ~17 KB buffer regardless of arrival volume.
-    "q241_stream_gramian" -> ((s, dir) => {
+    "q241_stream_gramian" -> ((s, dir) => gateRun(s, "q241") { root =>
       import graft.queries.ModelOpsQueries
       val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = tmpDir("graft-q241-src")
-      val ckpt = tmpDir("graft-q241-ckpt")
-      val sink = s"graft_q241_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lo = ModelOpsQueries.deltaLo
-        val hi = ModelOpsQueries.deltaHi
-        def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
-        val tmp = tmpDir("graft-q241-w")
-        try {
-          s.read.parquet(src.toString)
-            .where(inDelta(col("vec_id")))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("delta.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val deltaCells = ModelOpsQueries.momentCells(
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(inDelta(col("vec_id"))))
-        val query = deltaCells.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lo = ModelOpsQueries.deltaLo
+      val hi = ModelOpsQueries.deltaHi
+      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
+      landFile(s.read.parquet(src.toString)
+          .where(inDelta(col("vec_id"))),
+        stage.resolve("delta.parquet"))
+      val deltaCells = ModelOpsQueries.momentCells(
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(inDelta(col("vec_id"))))
+      drainToMemory(s, root, deltaCells, OutputMode.Complete) { sink =>
         val oldCells = ModelOpsQueries.momentCells(
           s.read.parquet(src.toString).where(!inDelta(col("vec_id"))))
-        val out = ModelOpsQueries.momentReport(
-          oldCells.unionByName(s.table(sink))
+        ModelOpsQueries.momentReport(
+          oldCells.unionByName(sink)
             .groupBy("i", "j").agg(sum(col("v")).as("v")))
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2699,43 +2185,22 @@ object StreamingQueries extends graft.QueryFamily {
     // the delta ids — the streaming screen proven identical to the
     // batch one. At 100 TB: per-batch cost ∝ arriving vectors × the
     // O(1) eval slice.
-    "q218_stream_decontam" -> ((s, dir) => {
+    "q218_stream_decontam" -> ((s, dir) => gateRun(s, "q218") { root =>
       import graft.queries.{ModelOpsQueries, SimilarityQueries}
       val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = tmpDir("graft-q218-src")
-      val ckpt = tmpDir("graft-q218-ckpt")
-      val sink = s"graft_q218_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lo = ModelOpsQueries.deltaLo
-        val hi = ModelOpsQueries.deltaHi
-        val tmp = tmpDir("graft-q218-w")
-        try {
-          s.read.parquet(src.toString)
-            .where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("delta.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val hits = SimilarityQueries.decontamHits(s, dir,
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("vec_id") >= lo && col("vec_id") < hi))
-        val query = hits.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = SimilarityQueries.decontamRollup(s.table(sink))
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lo = ModelOpsQueries.deltaLo
+      val hi = ModelOpsQueries.deltaHi
+      landFile(s.read.parquet(src.toString)
+          .where(col("vec_id") >= lo && col("vec_id") < hi),
+        stage.resolve("delta.parquet"))
+      val hits = SimilarityQueries.decontamHits(s, dir,
+        s.readStream.schema(schema).parquet(stage.toString)
+          .where(col("vec_id") >= lo && col("vec_id") < hi))
+      drainToMemory(s, root, hits) { sink =>
+        SimilarityQueries.decontamRollup(sink)
           .orderBy("vec_id")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2759,72 +2224,61 @@ object StreamingQueries extends graft.QueryFamily {
     // work is one scan + a (window × source)-keyed partial agg; state
     // ∝ open windows × sources, evicted on watermark advance; the
     // baseline probe is a bounded broadcast.
-    "q209_stream_quality_drift" -> ((s, dir) => {
+    "q209_stream_quality_drift" -> ((s, dir) => gateRun(s, "q209") { root =>
       import graft.functions.TextFunctions
       val src = Paths.get(s"$dir/documents.parquet")
-      val stage = tmpDir("graft-q209-src")
-      val ckpt = tmpDir("graft-q209-ckpt")
-      val sink = s"graft_q209_sink_${runSeq.incrementAndGet()}"
-      try {
-        val batch = s.read.parquet(src.toString)
-        val schema = batch.schema
-        val mm = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (dmin, dmax) = (mm.getLong(0), mm.getLong(1))
-        val d1 = dmin + (dmax - dmin) / 3
-        val d2 = dmin + (dmax - dmin) * 2 / 3
-        // quality permille, identical on the batch (baseline) and
-        // streaming (per-window) sides — the q174 construction
-        def withQp(df: DataFrame): DataFrame = df
-          .select(col("doc_id"), col("source"), col("text"),
-            TextFunctions.tokens(col("text")).as("toks"))
-          .select(col("doc_id"), col("source"),
-            floor(TextFunctions.qualityScoreFromTokens(col("toks"),
-              col("text")) * 1000).cast("long").as("qp"))
-        val baseline = withQp(batch).groupBy("source")
-          .agg(count(lit(1)).as("bn"), sum(col("qp")).as("bsum"))
-          .select(col("source"), expr("bsum div bn").as("base_mean"))
-        // stage three doc_id-ordered thirds, mtime-ordered (q178's
-        // one-pass partitioned write; the explicit sort is the
-        // ts-order contract, not an accident of fixture order)
-        val tmp = tmpDir("graft-q209-w")
-        val now = System.currentTimeMillis()
-        try {
-          batch
-            .withColumn("third",
-              when(col("doc_id") < d1, 0).when(col("doc_id") < d2, 1)
-                .otherwise(2))
-            .coalesce(1)
-            .sortWithinPartitions(col("third"), col("doc_id"))
-            .write.partitionBy("third").mode("overwrite")
-            .parquet(tmp.toString)
-          for (i <- 0 to 2) {
-            val part = graft.util.FileUtils.firstParquet(tmp.resolve(s"third=$i"))
-            Files.move(part, stage.resolve(s"t$i.parquet"),
-              StandardCopyOption.REPLACE_EXISTING)
-            Files.setLastModifiedTime(stage.resolve(s"t$i.parquet"),
-              java.nio.file.attribute.FileTime.fromMillis(
-                now - (3 - i) * 60000L))
-          }
-        } finally deleteRecursively(tmp)
-        val agg = withQp(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-            .parquet(stage.toString))
-          .withColumn("event_time",
-            timestamp_micros(col("doc_id") * lit(1000000L)))
-          .withWatermark("event_time", s"${qualityDriftDelayUs / 1000000L} seconds")
-          .groupBy(window(col("event_time"),
-            s"${qualityDriftWindowUs / 1000000L} seconds"), col("source"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("qp")).as("sum_qp"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("source"), col("n_docs"), col("sum_qp"))
-        val query = agg.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink)
-          .join(broadcast(baseline), Seq("source"))  // hint audit: dimension-bounded (per-source baseline; sources are a bounded set)
+      val stage = Staged.dir(root, "src")
+      val batch = s.read.parquet(src.toString)
+      val schema = batch.schema
+      val mm = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (dmin, dmax) = (mm.getLong(0), mm.getLong(1))
+      val d1 = dmin + (dmax - dmin) / 3
+      val d2 = dmin + (dmax - dmin) * 2 / 3
+      // quality permille, identical on the batch (baseline) and
+      // streaming (per-window) sides — the q174 construction
+      def withQp(df: DataFrame): DataFrame = df
+        .select(col("doc_id"), col("source"), col("text"),
+          TextFunctions.tokens(col("text")).as("toks"))
+        .select(col("doc_id"), col("source"),
+          floor(TextFunctions.qualityScoreFromTokens(col("toks"),
+            col("text")) * 1000).cast("long").as("qp"))
+      val baseline = withQp(batch).groupBy("source")
+        .agg(count(lit(1)).as("bn"), sum(col("qp")).as("bsum"))
+        .select(col("source"), expr("bsum div bn").as("base_mean"))
+      // stage three doc_id-ordered thirds, mtime-ordered (q178's
+      // one-pass partitioned write; the explicit sort is the
+      // ts-order contract, not an accident of fixture order)
+      val tmp = root.resolve("w")
+      val now = System.currentTimeMillis()
+      batch
+        .withColumn("third",
+          when(col("doc_id") < d1, 0).when(col("doc_id") < d2, 1)
+            .otherwise(2))
+        .coalesce(1)
+        .sortWithinPartitions(col("third"), col("doc_id"))
+        .write.partitionBy("third").mode("overwrite")
+        .parquet(tmp.toString)
+      for (i <- 0 to 2) {
+        val part = FileUtils.firstParquet(tmp.resolve(s"third=$i"))
+        Files.move(part, stage.resolve(s"t$i.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(stage.resolve(s"t$i.parquet"),
+          FileTime.fromMillis(
+            now - (3 - i) * 60000L))
+      }
+      val agg = withQp(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(stage.toString))
+        .withColumn("event_time",
+          timestamp_micros(col("doc_id") * lit(1000000L)))
+        .withWatermark("event_time", s"${qualityDriftDelayUs / 1000000L} seconds")
+        .groupBy(window(col("event_time"),
+          s"${qualityDriftWindowUs / 1000000L} seconds"), col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("qp")).as("sum_qp"))
+        .select(unix_micros(col("window.start")).as("window_us"),
+          col("source"), col("n_docs"), col("sum_qp"))
+      drainToMemory(s, root, agg) { sink =>
+        sink.join(broadcast(baseline), Seq("source"))  // hint audit: dimension-bounded (per-source baseline; sources are a bounded set)
           .withColumn("batch_mean", expr("sum_qp div n_docs"))
           .withColumn("drift", col("batch_mean") - col("base_mean"))
           .withColumn("drift_flag",
@@ -2833,13 +2287,6 @@ object StreamingQueries extends graft.QueryFamily {
             col("batch_mean"), col("base_mean"), col("drift"),
             col("drift_flag"))
           .orderBy("window_us", "source")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2855,65 +2302,43 @@ object StreamingQueries extends graft.QueryFamily {
     // envelope + screen relationally. At 100 TB: scan-stage regex +
     // posexplode bounded by params/line + one broadcast probe per
     // micro-batch — the cheapest possible alerting path.
-    "q199_stream_slot_anomaly" -> ((s, dir) => {
+    "q199_stream_slot_anomaly" -> ((s, dir) => gateRun(s, "q199") { root =>
       import graft.queries.{LogDomainQueries, Tables}
       val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q199-src")
-      val ckpt = tmpDir("graft-q199-ckpt")
-      val sink = s"graft_q199_sink_${runSeq.incrementAndGet()}"
-      try {
-        val schema = s.read.parquet(src.toString).schema
-        val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
-          .withColumn("us", expr("ts_ns div 1000"))
-        val mm = lines.agg(min(col("us")), max(col("us"))).head()
-        val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 2 / 3
-        def slots(df: DataFrame) = df.select(
-            LogDomainQueries.Corpus.templateOf(col("line")).as("template"),
-            posexplode(LogDomainQueries.Corpus.numRuns(col("line")))
-              .as(Seq("slot", "v")))
-          .select(col("template"), col("slot").cast("long").as("slot"),
-            col("v").cast("long").as("v"))
-        val envelopes = slots(lines.where(col("us") < cut))
-          .groupBy("template", "slot")
-          .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-        val tmp = tmpDir("graft-q199-w")
-        try {
-          s.read.parquet(src.toString)
-            .withColumn("us", tsUs(schema)).where(col("us") >= cut)
-            .select(schema.fieldNames.map(col).toSeq: _*)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = graft.util.FileUtils.firstParquet(tmp)
-          Files.move(part, stage.resolve("t2.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally deleteRecursively(tmp)
-        val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
-        val streamNorm = schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            streamRaw.withColumn("ts_ns", col("ts"))
-          case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
-        }
-        val alerts = slots(LogDomainQueries.Corpus.logsOf(streamNorm))
-          .join(broadcast(envelopes), Seq("template", "slot"))  // hint audit: (template x slot)-bounded (log formats are finite)
-          .where(col("v") < col("lo") || col("v") > col("hi"))
-          .select(col("template"), col("slot"), col("v"))
-        val query = alerts.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink)
-          .groupBy("template", "slot")
+      val stage = Staged.dir(root, "src")
+      val schema = s.read.parquet(src.toString).schema
+      val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
+        .withColumn("us", expr("ts_ns div 1000"))
+      val mm = lines.agg(min(col("us")), max(col("us"))).head()
+      val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 2 / 3
+      def slots(df: DataFrame) = df.select(
+          LogDomainQueries.Corpus.templateOf(col("line")).as("template"),
+          posexplode(LogDomainQueries.Corpus.numRuns(col("line")))
+            .as(Seq("slot", "v")))
+        .select(col("template"), col("slot").cast("long").as("slot"),
+          col("v").cast("long").as("v"))
+      val envelopes = slots(lines.where(col("us") < cut))
+        .groupBy("template", "slot")
+        .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
+      landFile(s.read.parquet(src.toString)
+          .withColumn("us", tsUs(schema)).where(col("us") >= cut)
+          .select(schema.fieldNames.map(col).toSeq: _*),
+        stage.resolve("t2.parquet"))
+      val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
+      val streamNorm = schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          streamRaw.withColumn("ts_ns", col("ts"))
+        case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
+      }
+      val alerts = slots(LogDomainQueries.Corpus.logsOf(streamNorm))
+        .join(broadcast(envelopes), Seq("template", "slot"))  // hint audit: (template x slot)-bounded (log formats are finite)
+        .where(col("v") < col("lo") || col("v") > col("hi"))
+        .select(col("template"), col("slot"), col("v"))
+      drainToMemory(s, root, alerts) { sink =>
+        sink.groupBy("template", "slot")
           .agg(count(lit(1)).as("n_alerts"),
             min(col("v")).as("min_v"), max(col("v")).as("max_v"))
           .orderBy("template", "slot")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }),
 
@@ -2922,40 +2347,20 @@ object StreamingQueries extends graft.QueryFamily {
     // inside the micro-batch; the static side broadcasts per batch, no
     // stream state, no stream shuffle. Aggregation happens post-sink
     // (the gated contract is the enriched row set).
-    "q71_stream_enrich" -> ((s, dir) => {
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = tmpDir("graft-q71-src")
-      val ckpt = tmpDir("graft-q71-ckpt")
-      val sink = s"graft_q71_sink_${runSeq.incrementAndGet()}"
-      try {
-        Files.copy(src, stage.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        val schema = s.read.parquet(src.toString).schema
-        val dim = s.read.parquet(s"$dir/nation.parquet")
-          .select(col("n_nationkey"), col("n_name"))
-        val enriched = s.readStream.schema(schema).parquet(stage.toString)
-          .withColumn("n_nationkey", col("user_id") % 25)
-          .join(broadcast(dim), "n_nationkey")  // hint audit: dimension table (25-row nation)
-          .select(col("event_id"), col("n_name"),
-            col("value").cast(dec2).as("v"))
-        val query = enriched.writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val out = s.table(sink)
-          .groupBy("n_name")
+    "q71_stream_enrich" -> ((s, dir) => gateRun(s, "q71") { root =>
+      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val dim = s.read.parquet(s"$dir/nation.parquet")
+        .select(col("n_nationkey"), col("n_name"))
+      val enriched = s.readStream.schema(schema).parquet(stage.toString)
+        .withColumn("n_nationkey", col("user_id") % 25)
+        .join(broadcast(dim), "n_nationkey")  // hint audit: dimension table (25-row nation)
+        .select(col("event_id"), col("n_name"),
+          col("value").cast(dec2).as("v"))
+      drainToMemory(s, root, enriched) { sink =>
+        sink.groupBy("n_name")
           .agg(count(lit(1)).as("n_events"),
             sum(col("v")).cast("double").as("sum_value"))
           .orderBy("n_name")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.catalog.dropTempView(sink)
-        releaseStreamingState()
-        deleteRecursively(ckpt)
-        deleteRecursively(stage)
       }
     }))
 

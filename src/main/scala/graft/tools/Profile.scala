@@ -12,11 +12,16 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.getOrCreate("graft-profile")
 
+    val tally = new JobTally(spark)
+    /** Runs `f` cold, then warm, reporting each pass through the tally. */
     def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n1 = f
-      val t1 = System.nanoTime(); val n2 = f
-      val t2 = System.nanoTime()
-      println(f"[prof] $name%-28s cold=${(t1 - t0) / 1e9}%6.3f warm=${(t2 - t1) / 1e9}%6.3f rows=$n1%d/$n2%d")
+      for (pass <- Seq("cold", "warm")) {
+        var rows = 0L
+        val wall = tally.time(s"$name/$pass") { rows = f }
+        println(f"[prof] $name%-28s $pass wall=$wall%6.3f " +
+          f"taskSec=${tally.taskMs / 1e3}%7.3f jobs=${tally.jobs}%3d " +
+          f"stages=${tally.stages}%3d rows=$rows%d")
+      }
       spark.catalog.clearCache()
     }
 

@@ -11,12 +11,16 @@ import org.apache.spark.sql.functions._
   * helpers, so a helper bug cannot vouch for itself), and the schedule
   * politeness invariant.
   */
-class CrawlPipelineSpec extends SparkSuite {
+class CrawlPipelineSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
+  private val outRoot = Files.createTempDirectory("graft-crawl")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(outRoot) finally super.afterAll()
 
   test("stage counts match the gated queries and the schedule is polite") {
-    val out = Files.createTempDirectory("graft-crawl").toString
+    val out = outRoot.toString
     val p = CrawlPipeline.run(spark, dir, out)
 
     // canonical stage ≡ the q205 gate (same count, same key set)

@@ -12,12 +12,17 @@ import graft.tools.FeaturePipeline
   * pinned is the shipped artifact, not an in-memory frame that might
   * diverge from it.
   */
-class FeaturePipelineSpec extends SparkSuite {
+class FeaturePipelineSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private val outRoot = Files.createTempDirectory("graft-feature-pipe")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(outRoot) finally super.afterAll()
+
   private lazy val out = {
-    val d = Files.createTempDirectory("graft-feature-pipe").toString
+    val d = outRoot.toString
     (FeaturePipeline.run(spark, dir, d), d)
   }
 

@@ -326,4 +326,20 @@ class GraphAnnSpec extends SparkSuite {
     assert(serve.getAs[Long]("graph_recall_permille") > bestRouter,
       "the walk no longer beats the router ladder")
   }
+
+  test("a torn structured-fixture master is rebuilt, not served") {
+    import graft.queries.SimilarityQueries.structFixtureDir
+    import java.nio.file.{Files, Paths}
+    val emb = Paths.get(structFixtureDir(spark, dir), "embeddings.parquet")
+    // tear it as a tmp cleaner or a writer dying mid-publish would:
+    // the completion markers and one data file go
+    Files.deleteIfExists(emb.resolve("_SUCCESS"))
+    Files.deleteIfExists(emb.getParent.resolve(graft.util.Staged.Marker))
+    Files.delete(graft.util.FileUtils.listDir(emb)
+      .find(_.getFileName.toString.startsWith("part-")).get)
+    val restaged = spark.read.parquet(
+      s"${structFixtureDir(spark, dir)}/embeddings.parquet")
+    assert(restaged.count() ===
+      spark.read.parquet(s"$dir/embeddings.parquet").count())
+  }
 }

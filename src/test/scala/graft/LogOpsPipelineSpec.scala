@@ -12,12 +12,17 @@ import graft.tools.LogOpsPipeline
   * and the assertions read THOSE files back — what is pinned is the
   * shipped artifact, not an in-memory frame that might diverge.
   */
-class LogOpsPipelineSpec extends SparkSuite {
+class LogOpsPipelineSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private val outRoot = Files.createTempDirectory("graft-logops-pipe")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(outRoot) finally super.afterAll()
+
   private lazy val out = {
-    val d = Files.createTempDirectory("graft-logops-pipe").toString
+    val d = outRoot.toString
     (LogOpsPipeline.run(spark, dir, d), d)
   }
 

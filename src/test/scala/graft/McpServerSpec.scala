@@ -16,10 +16,15 @@ import org.scalacheck.{Gen, rng}
   * server surface (`cassandra_log_analyzer.py:331,863-881`) and the
   * argv-injection guard on the ssh runner.
   */
-class McpServerSpec extends SparkSuite {
+class McpServerSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
+
+  private val logRoot = Files.createTempDirectory("graft-mcp")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(logRoot) finally super.afterAll()
 
   private lazy val logDir = {
-    val d = Files.createTempDirectory("graft-mcp")
+    val d = logRoot
     Files.writeString(d.resolve("system.log"),
       "INFO  [main] 2024-01-01 10:00:00,000 Startup complete\n" +
         "ERROR [rpc] 2024-01-01 10:00:01,000 Connection timeout detected\n")

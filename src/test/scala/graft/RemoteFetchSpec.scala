@@ -8,10 +8,15 @@ import java.nio.file.Files
   * split('\n') line counting parity, file-not-found detection, empty-on-
   * error listing, and per-endpoint connection pooling.
   */
-class RemoteFetchSpec extends SparkSuite {
+class RemoteFetchSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
+
+  private val root = Files.createTempDirectory("graft-fetch")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(root) finally super.afterAll()
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-fetch")
+    val d = Files.createDirectories(root.resolve("logs"))
     Files.writeString(d.resolve("system.log"),
       (1 to 100).map(i => s"line$i").mkString("", "\n", "\n"))
     Files.writeString(d.resolve("debug.log"), "d1\nd2\n")
@@ -35,7 +40,7 @@ class RemoteFetchSpec extends SparkSuite {
   }
 
   test("byte fidelity: no invented trailing newline, CR preserved") {
-    val d = Files.createTempDirectory("graft-fetch-raw")
+    val d = Files.createDirectories(root.resolve("raw"))
     Files.writeString(d.resolve("system.log"), "a\nb") // NO trailing \n
     Files.write(d.resolve("crlf.log"), "x\r\ny\r\n".getBytes("UTF-8"))
     val f = fetcher

@@ -7,10 +7,15 @@ import java.nio.file.Files
   * document text diverges (so LSH pair counts can't blow up
   * quadratically in the scaled fixture).
   */
-class ScaleUpSpec extends SparkSuite {
+class ScaleUpSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
+
+  private val destRoot = Files.createTempDirectory("graft-scaleup-spec")
+
+  override def afterAll(): Unit =
+    try graft.util.FileUtils.deleteRecursively(destRoot) finally super.afterAll()
 
   private lazy val dest = {
-    val d = Files.createTempDirectory("graft-scaleup-spec").toString
+    val d = destRoot.toString
     graft.tools.ScaleUp.main(Array("/root/testdata/sf0.001", d, "3"))
     d
   }
