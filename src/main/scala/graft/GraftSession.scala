@@ -62,6 +62,21 @@ object GraftSession {
         s
       }
 
+  /** `body` with the session confs `kvs` set, each key restored (or
+    * unset) afterwards. Every set runs inside the scope, so a failing
+    * set still restores the keys set before it.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally saved.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
     .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import ModelOpsQueries.inDelta
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -451,8 +452,6 @@ object CorpusOpsQueries extends graft.QueryFamily {
     // hash-proven (the q163/q186 device applied to the serving
     // dictionary).
     "q286_delta_symspell" -> ((s, dir) => {
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val old = symspellVocab(docs(s, dir).where(!inDelta(col("doc_id"))))
       val delta = symspellVocab(docs(s, dir).where(inDelta(col("doc_id"))))
       val merged = old.unionByName(delta)
@@ -508,8 +507,6 @@ object CorpusOpsQueries extends graft.QueryFamily {
     // q157 incremental-equals-from-scratch proof applied to the
     // retrieval tier.
     "q163_delta_index" -> ((s, dir) => {
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val d = docs(s, dir)
       val oldIdx = shardedIndex(d.where(!inDelta(col("doc_id"))))
       val deltaIdx = shardedIndex(d.where(inDelta(col("doc_id"))))
@@ -618,8 +615,6 @@ object CorpusOpsQueries extends graft.QueryFamily {
     // ≤V-row frame — the monitor a pipeline checks before retraining
     // its tokenizer or reweighting its mix.
     "q202_vocab_drift" -> ((s, dir) => {
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val tok = docs(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
         .select(col("token"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import ModelOpsQueries.inDelta
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -404,8 +405,6 @@ object CrawlOpsQueries extends graft.QueryFamily {
     * all three delta gates use their batch twins' oracles verbatim.
     */
   private def mergedDeltaEdges(s: SparkSession, dir: String): DataFrame = {
-    def inDelta(c: Column) =
-      c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
     val docs = Tables(s, dir, "documents")
     val oldEdges = hostEdges(docs.where(!inDelta(col("doc_id"))))
     val deltaEdges = hostEdges(docs.where(inDelta(col("doc_id"))))
@@ -894,8 +893,6 @@ object CrawlOpsQueries extends graft.QueryFamily {
     // proven. At 100 TB: re-scheduling cost ∝ the touched hosts' URL
     // volume, not the frontier.
     "q219_delta_frontier" -> ((s, dir) => {
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val old = frontierKept(s, dir, !inDelta(col("doc_id")))
       val delta = frontierKept(s, dir, inDelta(col("doc_id")))
       val touched = delta.select("host").distinct()

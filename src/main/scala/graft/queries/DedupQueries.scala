@@ -1,5 +1,6 @@
 package graft.queries
 
+import ModelOpsQueries.inDelta
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,11 +40,6 @@ object DedupQueries extends graft.QueryFamily {
     * overlap still dedups chunk-aligned regions.
     */
   private val chunkDedupW = 8
-
-  /** doc_id → distinct word-3-shingle hash set (shared by q27/q28). */
-  private def docHashes(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), shingleHashes(col("text")).as("hs"))
 
   /** doc_id → distinct shingle-hash array in ONE narrow projection:
     * [[graft.functions.ShingleHash]] hashes shingles straight off the
@@ -450,8 +446,6 @@ object DedupQueries extends graft.QueryFamily {
       // without it each side re-runs the banded candidate join
       val pairs = lshCandidates(s, dir).select(col("doc_a"), col("doc_b"))
         .localCheckpoint()
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val oldPairs = pairs
         .where(!inDelta(col("doc_a")) && !inDelta(col("doc_b")))
       val deltaPairs = pairs

@@ -306,16 +306,11 @@ object ExtendedOpsQueries extends graft.QueryFamily {
     // injected filter is semantics-preserving; PlanShapeSpec asserts
     // might_contain/bloom_filter_agg are in the plan. The result is
     // 3 rows — safe to collect.
-    "q80_bloom_join" -> ((s, dir) => {
-      val conf = s.conf
-      val oldScan = conf.getOption(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      val oldBcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      val oldEnabled = conf.getOption("spark.sql.optimizer.runtime.bloomFilter.enabled")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+    "q80_bloom_join" -> ((s, dir) =>
+      graft.GraftSession.withConf(s,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val orders = Tables(s, dir, "orders")
           .where(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"), col("o_orderpriority"))
@@ -329,23 +324,7 @@ object ExtendedOpsQueries extends graft.QueryFamily {
           .orderBy("l_returnflag")
         lastBloomJoinPlan.set(joined.queryExecution.executedPlan.toString)
         graft.util.Staged.local(s, joined) // execute UNDER the confs
-      } finally {
-        oldScan match {
-          case Some(v) => conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", v)
-          case None => conf.unset(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-        }
-        oldBcast match {
-          case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        }
-        oldEnabled match {
-          case Some(v) => conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", v)
-          case None => conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-        }
-      }
-    }),
+      }),
 
     // HLL++ approximate distinct users per event type — mergeable
     // fixed-memory sketch, the 100 TB replacement for exact distinct.

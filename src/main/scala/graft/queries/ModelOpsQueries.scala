@@ -57,6 +57,8 @@ object ModelOpsQueries extends graft.QueryFamily {
   // incremental engine)
   private[graft] val deltaLo = 400L
   private[graft] val deltaHi = 500L
+  private[graft] def inDelta(c: org.apache.spark.sql.Column) =
+    c >= deltaLo && c < deltaHi
 
   /** q139: sorted-neighborhood window and the Fellegi-Sunter-style
     * integer agreement/disagreement weights (log-likelihood-ratio
@@ -376,8 +378,6 @@ object ModelOpsQueries extends graft.QueryFamily {
     // Oracle = q148's twin VERBATIM over the full corpus, hash-proven.
     "q240_delta_gramian" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
-      def inDelta(c: org.apache.spark.sql.Column) =
-        c >= deltaLo && c < deltaHi
       momentReport(
         momentCells(e.where(!inDelta(col("vec_id"))))
           .unionByName(momentCells(e.where(inDelta(col("vec_id")))))
@@ -571,7 +571,7 @@ object ModelOpsQueries extends graft.QueryFamily {
         .select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("bk"))
         .select(col("doc_id"), col("sig"),
           col("bk.band"), col("bk.h1"), col("bk.h2"))
-      val isDelta = col("doc_id") >= deltaLo && col("doc_id") < deltaHi
+      val isDelta = inDelta(col("doc_id"))
       val delta = bands(sig.where(isDelta))
       val index = bands(sig.where(!isDelta))
       val cand = index.as("i")

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.TextFunctions
-import graft.util.{FileUtils, Staged}
+import graft.util.{FileUtils, LakeLog, Staged}
+import graft.util.LakeLog.commitTsOf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -105,18 +106,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
     * partitioning- and layout-independent (what a replication check
     * needs). ONE term renderer feeds both engines' plans.
     */
-  /** Deterministic per-version commit timestamps (epoch millis) —
-    * every manifest carries its version's `commit_ts` column so
-    * timestamp-based time travel (q308) has real metadata to resolve
-    * against. Staged, not wall-clock (the fixture-determinism rule):
-    * strictly increasing by construction (hourly spacing dominates
-    * the sub-spacing jitter), unevenly spaced so an off-by-one
-    * resolution (`<` vs `<=`, wrong boundary version) shifts a gated
-    * row instead of hiding in a uniform grid.
-    */
-  private[graft] def commitTsOf(v: Int): Long =
-    1700000000000L + v.toLong * 3600000L + (v.toLong * 7919L) % 600000L
-
   private val manifestP = 1000000007L
   private val manifestP2 = 998244353L
   private val manifestA = 2654435761L
@@ -501,9 +490,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // gate would read back one source). At 100 TB the backfill cost
     // is ∝ the repaired partition, never the table.
     "q166_partition_backfill" -> ((s, dir) => Staged.scratch(s, "q166") { stage =>
-      val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      try {
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      graft.GraftSession.withConf(s,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         val d = docs(s, dir)
           .select(col("doc_id"), col("n_chars"), col("source"))
         val badSource = "src3"
@@ -525,13 +513,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
             min(col("doc_id")).as("min_doc"),
             max(col("doc_id")).as("max_doc"))
           .orderBy("source")
-      } finally {
-        saved match {
-          case Some(v) =>
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
       }
     }),
 
@@ -638,9 +619,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // take those numbers from manifest stats instead.
     "q278_lake_vacuum" -> ((s, dir) => Staged.scratch(s, "q278") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true)
-      val allAdds = (0 to 3).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val allAdds = LakeLog.adds(s, stage.toString, 3)
       Seq(2, 3).map { boundary =>
         val retained = (boundary to 3)
           .flatMap(v => asOfFiles(s, stage.toString, v)).toSet
@@ -670,13 +649,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // touching 10⁶ for a key-range restore.
     "q279_lake_pruned_read" -> ((s, dir) => Staged.scratch(s, "q279") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      val entries = (0 to 2).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .map(r => (r.getString(0), r.getString(1),
-            r.getLong(2), r.getLong(3))))
-      val removed = entries.collect { case ("remove", p, _, _) => p }.toSet
-      val active = entries.collect {
-        case ("add", p, mn, mx) if !removed(p) => (p, mn, mx) }
+      val (active, _) = LakeLog.asOf(s, stage.toString, 2)
       val pruned = active.filter { case (_, mn, mx) =>
         mn <= lakePruneHi && mx >= lakePruneLo }
       s.read.parquet(pruned.map(_._1): _*)
@@ -711,10 +684,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
       def cdf(w: Int, v: Int): DataFrame = {
         val a = asOfFiles(s, stage.toString, w).toSet
         val b = asOfFiles(s, stage.toString, v).toSet
-        // both diffs are non-empty for the staged commit kinds (a
-        // CoW delete and a compaction each add AND remove files)
-        val added = s.read.parquet((b -- a).toSeq: _*)
-        val removed = s.read.parquet((a -- b).toSeq: _*)
+        val (inserts, deletes) = LakeLog.changes(s, (b -- a).toSeq,
+          (a -- b).toSeq, Seq("doc_id"))
         def roll(df: DataFrame, ct: String) = df
           .agg(count(lit(1)).as("n_rows"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
@@ -724,10 +695,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
             col("n_rows"),
             coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
             coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
-        roll(added.join(removed.select("doc_id"), Seq("doc_id"),
-          "left_anti"), "insert")
-          .unionByName(roll(removed.join(added.select("doc_id"),
-            Seq("doc_id"), "left_anti"), "delete"))
+        roll(inserts, "insert").unionByName(roll(deletes, "delete"))
       }
       cdf(0, 2).unionByName(cdf(2, 3))
         .orderBy("from_version", "change_type")
@@ -779,8 +747,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // CONCURRENT-WRITER COMMIT CONFLICTS — the optimistic-concurrency
     // contract every multi-job lake hits in week one (the Delta/
     // Iceberg core guarantee the single-writer lifecycle q274-q287
-    // left open): a commit is a PUT-IF-ABSENT of the next version
-    // manifest (an atomic rename — the manifest CAS), so two writers
+    // left open): a commit is [[LakeLog.commit]]'s put-if-absent of
+    // the next version manifest (the manifest CAS), so two writers
     // prepared against the same snapshot cannot both win a version.
     // The loser reads ONLY the commit that beat it and decides:
     // DISJOINT footprint (pure appends, or removes the winner never
@@ -864,9 +832,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // nothing rescans surviving data.
     "q291_lake_vacuum_exec" -> ((s, dir) => Staged.scratch(s, "q291") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
-      val allAdds = (0 to 3).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val allAdds = LakeLog.adds(s, stage.toString, 3)
       val retained = asOfFiles(s, stage.toString, 3).toSet
       allAdds.filterNot(retained)
         .foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
@@ -984,8 +950,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
       d.where(inForget).select("doc_id")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$stage/_dv/v3")
-      require(tryCommit(s, stage.toString, 3,
-        Seq(("dv", s"$stage/_dv/v3", -1L, -1L))))
+      require(LakeLog.commit(s, stage.toString, 3,
+        Seq(("dv", s"$stage/_dv/v3", LakeLog.NoStats, LakeLog.NoStats))))
       val v2Files = asOfFiles(s, stage.toString, 2)
       def rollOver(df: DataFrame, phase: String, nFiles: Long) = df
         .agg(count(lit(1)).as("n_rows"),
@@ -1005,15 +971,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // correct under any fixture size or forget predicate), then
       // retire the DV
       val forgetRanges = Seq((gran, 2 * gran - 1), (3 * gran, 4 * gran - 1))
-      val v2Entries = (0 to 2).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .map(r => (r.getString(0), r.getString(1),
-            r.getLong(2), r.getLong(3))))
-      val v2Removed =
-        v2Entries.collect { case ("remove", p, _, _) => p }.toSet
-      val touched = v2Entries.collect {
-        case ("add", p, mn, mx) if !v2Removed(p) &&
-          forgetRanges.exists { case (lo, hi) => mn <= hi && mx >= lo } => p
+      val touched = LakeLog.asOf(s, stage.toString, 2)._1.collect {
+        case (p, mn, mx)
+            if forgetRanges.exists { case (lo, hi) => mn <= hi && mx >= lo } => p
       }
       val rewrites = touched.zipWithIndex.map { case (p, i) =>
         val rp = s"$stage/fw$i"
@@ -1021,26 +981,24 @@ object ShapeOpsQueries extends graft.QueryFamily {
           .coalesce(1).write.mode("overwrite").parquet(rp)
         rp
       }
-      val v4Entries = touched.map(p => ("remove", p, -1L, -1L)) ++
+      val v4Entries = touched.map(LakeLog.remove) ++
         rewrites.map { p =>
           val mm = s.read.parquet(p)
             .agg(min(col("doc_id")), max(col("doc_id"))).head()
-          ("add", p, mm.getLong(0), mm.getLong(1))
+          LakeLog.add(p, mm.getLong(0), mm.getLong(1))
         }
       // each phase row is materialized WHEN it happens — the later
       // vacuum deletes the very files the earlier reads scanned
       val aRow = Staged.local(s, rollOver(v3Read, "a_v3_masked_read",
         v2Files.length.toLong))
-      require(tryCommit(s, stage.toString, 4, v4Entries))
+      require(LakeLog.commit(s, stage.toString, 4, v4Entries))
       val v4Files = asOfFiles(s, stage.toString, 4)
       val v4Read = s.read.parquet(v4Files: _*)
       val bRow = Staged.local(s, rollOver(v4Read, "b_v4_hard_delete_read",
         v4Files.length.toLong))
       // vacuum at boundary 4: the originals (and the retired DV) go
       val retained = v4Files.toSet
-      val allAdds = (0 to 4).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val allAdds = LakeLog.adds(s, stage.toString, 4)
       allAdds.filterNot(retained)
         .foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
       FileUtils.deleteRecursively(java.nio.file.Paths.get(s"$stage/_dv"))
@@ -1052,7 +1010,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
         val acc = scala.collection.mutable.ArrayBuffer.empty[String]
         def walk(p: java.nio.file.Path): Unit = {
           if (java.nio.file.Files.isDirectory(p)) {
-            if (p.getFileName.toString != "_log")
+            if (!LakeLog.isLogDir(p))
               FileUtils.listDir(p).foreach(walk)
           } else if (p.toString.endsWith(".parquet")) acc += p.toString
         }
@@ -1084,31 +1042,15 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // never rescanned.
     "q299_lake_cdf_apply" -> ((s, dir) => Staged.scratch(s, "q299") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      def roll(df: DataFrame, sign: Int) = df
-        .groupBy("source")
-        .agg((count(lit(1)) * sign).as("n_docs"),
-          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-          (sum(expr(manifestTerm("doc_id"))) * sign).as("key_checksum"))
+      import graft.streaming.StreamingQueries.{foldChanges, roll}
       // the replica's stored aggregate, materialized at v0
-      val v0Agg = roll(
-        s.read.parquet(asOfFiles(s, stage.toString, 0): _*), 1)
+      val a = asOfFiles(s, stage.toString, 0)
+      val v0Agg = roll(s.read.parquet(a: _*), 1)
       // CDF(v0→v2) from the file-set diff (q284's construction)
-      val a = asOfFiles(s, stage.toString, 0).toSet
-      val b = asOfFiles(s, stage.toString, 2).toSet
-      val added = s.read.parquet((b -- a).toSeq: _*)
-      val removed = s.read.parquet((a -- b).toSeq: _*)
-      val inserts = added.join(removed.select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      val deletes = removed.join(added.select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      // apply: fold the signed change rollups into the aggregate
-      v0Agg
-        .unionByName(roll(inserts, 1)).unionByName(roll(deletes, -1))
-        .groupBy("source")
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("sum_chars")).as("sum_chars"),
-          sum(col("key_checksum")).as("key_checksum"))
-        .orderBy("source")
+      val b = asOfFiles(s, stage.toString, 2)
+      val (inserts, deletes) = LakeLog.changes(s, b.diff(a), a.diff(b),
+        Seq("doc_id"))
+      foldChanges(Some(v0Agg), inserts, deletes).orderBy("source")
     }),
 
     // COMMIT-LOG CHECKPOINTING — the device that keeps snapshot
@@ -1156,8 +1098,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
       for (r <- 0 to 5) {
         val v = r + 3
         val p = s"$stage/app/r=$r"
-        require(tryCommit(s, stage.toString, v,
-          Seq(("add", p, appStats(r.toLong)._1, appStats(r.toLong)._2))))
+        require(LakeLog.commit(s, stage.toString, v,
+          Seq(LakeLog.add(p, appStats(r.toLong)._1, appStats(r.toLong)._2))))
         // the committer's checkpoint cadence: every 3rd version
         // snapshots the resolved active set (stats carried forward)
         // — itself resolved THROUGH the previous checkpoint, so
@@ -1165,13 +1107,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
         // and advances the `_last_checkpoint` pointer (Delta's O(1)
         // discovery device: readers jump straight to the newest
         // checkpoint instead of probing versions backwards)
-        if (v % 3 == 0) writeCheckpoint(s, stage.toString, v)
+        if (v % 3 == 0) LakeLog.checkpoint(s, stage.toString, v)
       }
       Seq(2, 5, 8).map { v =>
-        val (active, nCkptReads) = ckptResolve(s, stage.toString, v)
+        val (active, nCkptReads) = LakeLog.asOf(s, stage.toString, v)
         val matches =
           active.map(_._1).toSet ==
-            fullFoldFiles(s, stage.toString, v).toSet
+            LakeLog.fullFold(s, stage.toString, v).toSet
         s.read.parquet(active.map(_._1): _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
@@ -1231,11 +1173,11 @@ object ShapeOpsQueries extends graft.QueryFamily {
           r.getLong(2), r.getLong(3), r.getString(4), r.getString(5),
           r.getLong(6), r.getLong(7)))
       import s.implicits._
-      cells.toSeq.map { case (p, mn, mx, ms, xs, mc, xc) =>
-        ("add", p, mn, mx, ms, xs, mc, xc) }
-        .toDF("action", "path", "min_id", "max_id", "min_src",
-          "max_src", "min_chars", "max_chars").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/_log/v0")
+      require(LakeLog.commitFrame(stage.toString, 0,
+        cells.toSeq.map { case (p, mn, mx, ms, xs, mc, xc) =>
+          ("add", p, mn, mx, ms, xs, mc, xc) }
+          .toDF("action", "path", "min_id", "max_id", "min_src",
+            "max_src", "min_chars", "max_chars")))
       // the read's three conjuncts (bounds derived from the corpus
       // so the key prune is non-trivial at every SF)
       val maxId = docs(s, dir).agg(max(col("doc_id"))).head().getLong(0)
@@ -1244,7 +1186,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       val chP = 100L
       // dimension-by-dimension pruning over the manifest (driver,
       // metadata scale — the manifest is O(files))
-      val manifest = graft.util.ManifestIO.rows(s, s"$stage/_log/v0")
+      val manifest = LakeLog.manifest(s, stage.toString, 0)
         .map(r => (r.getString(1), r.getLong(2), r.getLong(3),
           r.getString(4), r.getString(5), r.getLong(6), r.getLong(7)))
       val keyKept = manifest.filter { case (_, mn, mx, _, _, _, _) =>
@@ -1308,9 +1250,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
     "q303_lake_vacuum_retention" -> ((s, dir) => Staged.scratch(s, "q303") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
       val retained = asOfFiles(s, stage.toString, 3).toSet
-      val doomed = (0 to 3).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val doomed = LakeLog.adds(s, stage.toString, 3)
         .filterNot(retained)
       def scenario(name: String, readerV: Int): DataFrame = {
         val readerFiles = asOfFiles(s, stage.toString, readerV)
@@ -1358,18 +1298,14 @@ object ShapeOpsQueries extends graft.QueryFamily {
     "q308_lake_time_travel_ts" -> ((s, dir) => Staged.scratch(s, "q308") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true)
       // checkpoint the latest version + pointer (q301's convention)
-      writeCheckpoint(s, stage.toString, 3)
+      LakeLog.checkpoint(s, stage.toString, 3)
       // the ts index: version -> commit_ts read off the manifests
       // themselves (Delta reads commit-file timestamps the same
       // way) — one metadata-sized read per version
-      val versions = Iterator.from(0).takeWhile(v =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(
-          stage.toString, "_log", s"v$v"))).toSeq
-      val tsIdx = versions.map(v => v ->
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .head.getAs[Long]("commit_ts"))
-      def resolveTs(t: Long): Int =
-        tsIdx.filter(_._2 <= t).map(_._1).maxOption.getOrElse(-1)
+      val tsIdx = LakeLog.versions(stage.toString)
+        .map(v => v -> LakeLog.commitTs(s, stage.toString, v))
+      def resolveTs(t: Long): Long =
+        tsIdx.filter(_._2 <= t).map(_._1).maxOption.getOrElse(-1L)
       val probes = Seq(
         ("a_before_first", commitTsOf(0) - 1L),
         ("b_exact_v1", commitTsOf(1)),
@@ -1385,13 +1321,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
             lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
             lit(0L).as("key_checksum"))
         else {
-          val (files, nReads) = ckptResolve(s, stage.toString, v)
+          val (files, nReads) = LakeLog.asOf(s, stage.toString, v)
           s.read.parquet(files.map(_._1): _*)
             .agg(count(lit(1)).as("n_rows"),
               sum(col("n_chars").cast("long")).as("sum_chars"),
               sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
             .select(lit(name).as("probe"), lit(t).as("probe_ts"),
-              lit(v.toLong).as("version"),
+              lit(v).as("version"),
               lit("resolved").as("outcome"),
               lit(nReads).as("n_manifests_ckpt"),
               lit(files.size.toLong).as("n_files"),
@@ -1419,21 +1355,16 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // KBs after a million commits.
     "q312_lake_log_retention" -> ((s, dir) => Staged.scratch(s, "q312") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true)
-      writeCheckpoint(s, stage.toString, 3)
+      LakeLog.checkpoint(s, stage.toString, 3)
       def manifestsOnDisk(): Long =
-        (0 to 3).count(v => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stage.toString, "_log", s"v$v")))
-          .toLong
+        (0 to 3).count(LakeLog.exists(stage.toString, _)).toLong
       val before = manifestsOnDisk()
       // the cleanup: unlink every manifest below the checkpoint
-      val ckptV = java.nio.file.Files.readString(java.nio.file.Paths
-        .get(stage.toString, "_log", "_last_checkpoint")).trim.toInt
-      (0 until ckptV).foreach(v => FileUtils.deleteRecursively(java.nio.file.Paths
-        .get(stage.toString, "_log", s"v$v")))
+      val ckptV = LakeLog.lastCheckpoint(stage.toString).get
+      (0L until ckptV).foreach(LakeLog.dropVersion(stage.toString, _))
       val after = manifestsOnDisk()
       def available(v: Int): Boolean = v >= ckptV ||
-        (0 to v).forall(i => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(stage.toString, "_log", s"v$i")))
+        (0 to v).forall(LakeLog.exists(stage.toString, _))
       def row(name: String, outcome: String, v: Long,
           content: Option[(Seq[String], Long)]): DataFrame =
         content match {
@@ -1459,7 +1390,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
               lit(0L).as("key_checksum"))
         }
       val latest = {
-        val (files, nReads) = ckptResolve(s, stage.toString, 3)
+        val (files, nReads) = LakeLog.asOf(s, stage.toString, 3)
         row("a_latest_via_ckpt", "resolved", 3L,
           Some((files.map(_._1), nReads)))
       }
@@ -1470,8 +1401,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // manifests, so resolution must answer unavailable — checked
       // against the manifests that REMAIN (commitTsOf(3) is still
       // readable; anything below its floor is not)
-      val tsFloor = graft.util.ManifestIO.rows(s, s"$stage/_log/v3")
-        .head.getAs[Long]("commit_ts")
+      val tsFloor = LakeLog.commitTs(s, stage.toString, 3)
       val tsProbe = commitTsOf(1)
       val tsOut =
         if (tsProbe >= tsFloor) "resolved" else "ts_unavailable"
@@ -1696,7 +1626,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       val gran = lakeGranFor(docs(s, dir).count())
       val matchedPred = expr(s"doc_id div $gran").isin(1L, 3L) &&
         col("doc_id") % 13 === 3
-      val (active, _) = ckptResolve(s, stage.toString, 2)
+      val (active, _) = LakeLog.asOf(s, stage.toString, 2)
       val snapshot = s.read.parquet(active.map(_._1): _*)
       val kmm = snapshot.where(matchedPred)
         .agg(min(col("doc_id")), max(col("doc_id")),
@@ -1744,9 +1674,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
           (lit(100L) + (lit(maxId) + col("id")) % 97)
             .cast(chType).as("n_chars"))
         .coalesce(1).write.mode("overwrite").parquet(ip)
-      require(tryCommit(s, stage.toString, 3,
-        hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-          rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
+      require(LakeLog.commit(s, stage.toString, 3,
+        hits.map { case (p, _, _) => LakeLog.remove(p) } ++
+          rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
       // the post-merge snapshot, resolved from the log
       s.read
         .parquet(asOfFiles(s, stage.toString, 3): _*)
@@ -1887,10 +1817,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("sum_chars"))
       // table data files + per-table logs (the q274 convention)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$stage/A/_log"))
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$stage/B/_log"))
       d.coalesce(1).write.mode("overwrite").parquet(s"$stage/a0")
       upd(d).coalesce(1).write.mode("overwrite").parquet(s"$stage/a1")
       rollup(d).coalesce(1).write.mode("overwrite")
@@ -1899,16 +1825,14 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .parquet(s"$stage/b1")
       val amm = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (a0, a1) = (amm.getLong(0), amm.getLong(1))
-      require(tryCommit(s, s"$stage/A", 0,
-        Seq(("add", s"$stage/a0", a0, a1))))
-      require(tryCommit(s, s"$stage/A", 1,
-        Seq(("remove", s"$stage/a0", -1L, -1L),
-          ("add", s"$stage/a1", a0, a1))))
-      require(tryCommit(s, s"$stage/B", 0,
-        Seq(("add", s"$stage/b0", -1L, -1L))))
-      require(tryCommit(s, s"$stage/B", 1,
-        Seq(("remove", s"$stage/b0", -1L, -1L),
-          ("add", s"$stage/b1", -1L, -1L))))
+      require(LakeLog.commit(s, s"$stage/A", 0,
+        Seq(LakeLog.add(s"$stage/a0", a0, a1))))
+      require(LakeLog.commit(s, s"$stage/A", 1,
+        Seq(LakeLog.remove(s"$stage/a0"), LakeLog.add(s"$stage/a1", a0, a1))))
+      require(LakeLog.commit(s, s"$stage/B", 0,
+        Seq(LakeLog.add(s"$stage/b0"))))
+      require(LakeLog.commit(s, s"$stage/B", 1,
+        Seq(LakeLog.remove(s"$stage/b0"), LakeLog.add(s"$stage/b1"))))
       // the catalog: one manifest per catalog version mapping table
       // -> pinned version; the pointer swing IS the coordinated
       // commit's visibility point
@@ -1971,14 +1895,14 @@ object ShapeOpsQueries extends graft.QueryFamily {
     "q326_lake_restore" -> ((s, dir) => Staged.scratch(s, "q326") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = false)
       // the target snapshot's entries WITH their original stats
-      val target = ckptResolve(s, stage.toString, 1)._1
+      val target = LakeLog.asOf(s, stage.toString, 1)._1
       val current = asOfFiles(s, stage.toString, 2).toSet
       val targetSet = target.map(_._1).toSet
       val adds = target.filterNot(e => current(e._1))
       val removes = current.toSeq.filterNot(targetSet).sorted
-      require(tryCommit(s, stage.toString, 3,
-        removes.map(p => ("remove", p, -1L, -1L)) ++
-          adds.map { case (p, mn, mx) => ("add", p, mn, mx) }))
+      require(LakeLog.commit(s, stage.toString, 3,
+        removes.map(LakeLog.remove) ++
+          adds.map { case (p, mn, mx) => LakeLog.add(p, mn, mx) }))
       def read(name: String, v: Int, nAdds: Long,
           nRemoves: Long): DataFrame = {
         val files = asOfFiles(s, stage.toString, v)
@@ -2052,14 +1976,14 @@ object ShapeOpsQueries extends graft.QueryFamily {
           r.getLong(3), r.getLong(4)))
       // the atomic swap: removes of the whole old layout + adds of
       // the Z files, one CAS commit
-      require(tryCommit(s, stage.toString, 3,
-        active.map(p => ("remove", p, -1L, -1L)) ++
+      require(LakeLog.commit(s, stage.toString, 3,
+        active.map(LakeLog.remove) ++
           zstats.map { case (f, mnI, mxI, _, _) =>
-            ("add", s"$stage/z/zf=$f", mnI, mxI) }))
+            LakeLog.add(s"$stage/z/zf=$f", mnI, mxI) }))
       zstats.toSeq.map { case (f, _, _, mnC, mxC) =>
         (s"$stage/z/zf=$f", mnC, mxC) }
         .toDF("path", "min_chars", "max_chars").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/_log/stats-v3")
+        .write.mode("overwrite").parquet(LakeLog.statsPath(stage.toString, 3))
       val (lo2, hi2) = (maxCh / 4, maxCh / 2)
       def probe(name: String, files: Seq[String], pred: Column,
           nTot: Long, nPass: Long): DataFrame =
@@ -2122,7 +2046,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // the two matched arms: odd keys delete, even keys update
       val delPred = matchedPred && col("doc_id") % 2 === 1
       val updPred = matchedPred && col("doc_id") % 2 === 0
-      val (active, _) = ckptResolve(s, stage.toString, 2)
+      val (active, _) = LakeLog.asOf(s, stage.toString, 2)
       val snapshot = s.read.parquet(active.map(_._1): _*)
       val kmm = snapshot.where(matchedPred)
         .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1)),
@@ -2169,9 +2093,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
           (lit(100L) + (lit(maxId) + col("id")) % 97)
             .cast(chType).as("n_chars"))
         .coalesce(1).write.mode("overwrite").parquet(ip)
-      require(tryCommit(s, stage.toString, 3,
-        hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-          rewriteAdds :+ (("add", ip, maxId + 1, maxId + 50))))
+      require(LakeLog.commit(s, stage.toString, 3,
+        hits.map { case (p, _, _) => LakeLog.remove(p) } ++
+          rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
       s.read
         .parquet(asOfFiles(s, stage.toString, 3): _*)
         .agg(count(lit(1)).as("n_rows"),
@@ -2209,13 +2133,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // too) is q303's retention contract extended across logs.
     "q322_lake_shallow_clone" -> ((s, dir) => Staged.scratch(s, "q322") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      val cloneRoot = java.nio.file.Paths.get(stage.toString, "clone")
+      val cloneRoot = stage.resolve("clone")
       // the CLONE op: metadata only — copy the source's log as of
       // v2 into the clone's own root
-      java.nio.file.Files.createDirectories(cloneRoot)
-      FileUtils.copyRecursively(
-        java.nio.file.Paths.get(stage.toString, "_log"),
-        cloneRoot.resolve("_log"))
+      LakeLog.copyLog(stage.toString, cloneRoot.toString)
       val snapshot =
         s.read.parquet(asOfFiles(s, stage.toString, 2): _*)
       val chType = snapshot.schema("n_chars").dataType
@@ -2229,8 +2150,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
             (lit(100L) + (lit(lo) + col("id")) % 97)
               .cast(chType).as("n_chars"))
           .coalesce(1).write.mode("overwrite").parquet(p)
-        require(tryCommit(s, root, 3,
-          Seq(("add", p, lo + 1, lo + 50))))
+        require(LakeLog.commit(s, root, 3, Seq(LakeLog.add(p, lo + 1, lo + 50))))
       }
       append(cloneRoot.toString, "clone_app", maxId)
       append(stage.toString, "source_app", maxId + 50)
@@ -2282,15 +2202,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // shallow clone AS OF v2: metadata only — the clone's log gets
       // the source manifests up to the fork version, nothing else
       val cloneRoot = stage.resolve("clone")
-      java.nio.file.Files.createDirectories(cloneRoot.resolve("_log"))
-      (0 to 2).foreach(v => FileUtils.copyRecursively(
-        java.nio.file.Paths.get(stage.toString, "_log", s"v$v"),
-        cloneRoot.resolve("_log").resolve(s"v$v")))
+      LakeLog.copyLog(stage.toString, cloneRoot.toString, upTo = Some(2))
       // the source vacuum's doomed list at boundary 3 (q303's rule)
       val retained = asOfFiles(s, stage.toString, 3).toSet
-      val doomed = (0 to 3).flatMap(v =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      val doomed = LakeLog.adds(s, stage.toString, 3)
         .filterNot(retained)
       val doomedSet = doomed.toSet
       def scenario(name: String, cloneV: Int): DataFrame = {
@@ -2322,9 +2237,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .write.mode("overwrite").parquet(cc)
       val ccMm = s.read.parquet(cc)
         .agg(min(col("doc_id")), max(col("doc_id"))).head()
-      require(tryCommit(s, cloneRoot.toString, 3,
-        cloneActive.map(p => ("remove", p, -1L, -1L)) :+
-          (("add", cc, ccMm.getLong(0), ccMm.getLong(1)))))
+      require(LakeLog.commit(s, cloneRoot.toString, 3,
+        cloneActive.map(LakeLog.remove) :+
+          LakeLog.add(cc, ccMm.getLong(0), ccMm.getLong(1))))
       // b: zero conflicts — the sweep actually unlinks the doomed
       // files, then the clone's latest read survives off its private
       // compact file
@@ -2361,7 +2276,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // between a rename costing one manifest row and costing a full
     // table rewrite.
     "q313_lake_column_mapping" -> ((s, dir) => Staged.scratch(s, "q313") { stage =>
-      import s.implicits._
       val d = docs(s, dir)
       d.select(col("doc_id").as("col_1"), col("n_chars").as("col_2"),
           col("source").as("col_3"))
@@ -2372,8 +2286,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .where(col("col_1") % 2 === 1)
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1")
       def writeMapping(v: Int, m: Seq[(String, String)]): Unit =
-        m.toDF("logical", "physical").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
+        LakeLog.writeSchema(s, stage.toString, v, m)
       writeMapping(0, Seq(("doc_id", "col_1"), ("n_chars", "col_2"),
         ("source", "col_3")))
       // v1: the rename — ONE metadata row changes, zero files touched
@@ -2383,10 +2296,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       writeMapping(2, Seq(("doc_id", "col_1"),
         ("char_count", "col_2"), ("source", "col_3")))
       def readAt(v: Int, files: Seq[String]): (DataFrame, String) = {
-        val mapping = graft.util.ManifestIO
-          .rows(s, s"$stage/_log/schema-v$v")
-          .map(r => r.getString(0) -> r.getString(1))
-          .sortBy(_._1)
+        val mapping = LakeLog.schemaMap(s, stage.toString, v).sortBy(_._1)
         val df = s.read.parquet(files: _*)
           .select(mapping.map { case (l, p) => col(p).as(l) }: _*)
         (df, mapping.map(_._1).mkString(","))
@@ -2427,7 +2337,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // skipping). The measure conjunct's (non-)pruning is emitted
     // honestly, q302's convention.
     "q314_lake_stats_survive_rename" -> ((s, dir) => Staged.scratch(s, "q314") { stage =>
-      import s.implicits._
       val d = docs(s, dir)
       val gran = lakeGranFor(d.count())
       val phys = d.select(col("doc_id").as("col_1"),
@@ -2446,10 +2355,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
             "col_1" -> ((r.getLong(1), r.getLong(2))),
             "col_2" -> ((r.getLong(3), r.getLong(4))))).toMap
       def writeMapping(v: Int, measure: String): Unit =
-        Seq(("doc_id", "col_1"), (measure, "col_2"),
-          ("source", "col_3"))
-          .toDF("logical", "physical").coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/_log/schema-v$v")
+        LakeLog.writeSchema(s, stage.toString, v,
+          Seq(("doc_id", "col_1"), (measure, "col_2"), ("source", "col_3")))
       writeMapping(0, "n_chars")
       writeMapping(1, "char_count") // the rename — stats untouched
       val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
@@ -2457,9 +2364,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       val keyHi = maxId / 2
       val measureMin = 100L
       def probe(name: String, v: Int, measure: String): DataFrame = {
-        val mapping = graft.util.ManifestIO
-          .rows(s, s"$stage/_log/schema-v$v")
-          .map(r => r.getString(0) -> r.getString(1)).toMap
+        val mapping = LakeLog.schemaMap(s, stage.toString, v).toMap
         val keyP = mapping("doc_id")
         val mP = mapping(measure)
         val afterKey = stats.filter { case (_, st) =>
@@ -2509,20 +2414,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // intersection over two manifest-sized lists per sweep.
     "q310_lake_vacuum_ckpt" -> ((s, dir) => Staged.scratch(s, "q310") { stage =>
       stageLakeLog(s, dir, stage.toString, withCompaction = true, privateData = true)
-      def ckptFiles(): Set[String] = {
-        val ptr = java.nio.file.Files.readString(java.nio.file.Paths
-          .get(stage.toString, "_log", "_last_checkpoint")).trim
-        graft.util.ManifestIO.rows(s, s"$stage/_log/ckpt-v$ptr")
-          .map(_.getString(1)).toSet
-      }
-      def allAdds(v: Int): Seq[String] = (0 to v).flatMap(i =>
-        graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
-          .collect { case r if r.getString(0) == "add" => r.getString(1) })
+      def ckptFiles(): Set[String] = LakeLog.checkpointFiles(s, stage.toString)
       def sweep(name: String, boundary: Int): DataFrame = {
         val retained = asOfFiles(s, stage.toString, boundary).toSet
         // a real sweep lists the store: doomed = on disk, below the
         // boundary's retained set (already-freed paths don't recount)
-        val doomed = allAdds(boundary).filterNot(retained).distinct
+        val doomed = LakeLog.adds(s, stage.toString, boundary)
+          .filterNot(retained).distinct
           .filter(p => java.nio.file.Files.exists(
             java.nio.file.Paths.get(p)))
         val live = ckptFiles()
@@ -2531,12 +2429,12 @@ object ShapeOpsQueries extends graft.QueryFamily {
           if (conflicted > 0) {
             // rewrite-then-sweep: checkpoint the latest version
             // (through the old checkpoint), advance the pointer
-            writeCheckpoint(s, stage.toString, boundary)
+            LakeLog.checkpoint(s, stage.toString, boundary)
             "rewrote_checkpoint"
           } else "executed_direct"
         doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
         val residue = doomed.count(ckptFiles())
-        val (files, nReads) = ckptResolve(s, stage.toString, boundary)
+        val (files, nReads) = LakeLog.asOf(s, stage.toString, boundary)
         s.read.parquet(files.map(_._1): _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
@@ -2553,7 +2451,7 @@ object ShapeOpsQueries extends graft.QueryFamily {
       }
       // scenario a: the committer checkpointed at v2; the v3
       // compaction swap then dooms every file ckpt-v2 references
-      writeCheckpoint(s, stage.toString, 2)
+      LakeLog.checkpoint(s, stage.toString, 2)
       val a = Staged.local(s, sweep("a_rewrite_then_sweep", 3))
       // scenario b: another swap (v4) lands WITH its cadence
       // checkpoint; the doomed old compact file is absent from it
@@ -2562,76 +2460,19 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .write.mode("overwrite").parquet(compact2)
       val mm = s.read.parquet(compact2)
         .agg(min(col("doc_id")), max(col("doc_id"))).head()
-      require(tryCommit(s, stage.toString, 4,
-        Seq(("remove", s"$stage/compact", -1L, -1L),
-          ("add", compact2, mm.getLong(0), mm.getLong(1)))))
-      writeCheckpoint(s, stage.toString, 4)
+      require(LakeLog.commit(s, stage.toString, 4,
+        Seq(LakeLog.remove(s"$stage/compact"),
+          LakeLog.add(compact2, mm.getLong(0), mm.getLong(1)))))
+      LakeLog.checkpoint(s, stage.toString, 4)
       val b = Staged.local(s, sweep("b_direct", 4))
       a.unionByName(b).orderBy("scenario")
     }))
 
-  /** q301's checkpointed snapshot resolution: newest checkpoint ≤ v —
-    * discovered O(1) through the `_last_checkpoint` pointer when it
-    * helps (Delta's device), walking back version probes only when
-    * the pointer is ahead of the requested as-of (time travel BEFORE
-    * the newest checkpoint) — then the manifest TAIL only. Returns
-    * the active (path, min, max) entries and the number of manifest
-    * files actually read (the gate's growth-vs-constant evidence).
-    * Falls back to the full fold when no checkpoint exists yet.
+  /** [[LakeLog.asOf]], the snapshot resolution (kept under the name
+    * LakeLifecycleSpec pins).
     */
-  /** Write the checkpoint of version `v` (the RESOLVED active set
-    * with stats, itself resolved through the previous checkpoint so
-    * checkpointing never re-folds the whole log) and advance the
-    * `_last_checkpoint` pointer — the committer-cadence step q301
-    * gates, shared by q308's staging and q310's rewrite-then-sweep.
-    */
-  private def writeCheckpoint(s: SparkSession, stage: String, v: Int): Unit = {
-    import s.implicits._
-    val (active, _) = ckptResolve(s, stage, v)
-    active.map { case (p, mn, mx) => ("add", p, mn, mx) }
-      .toDF("action", "path", "min_id", "max_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$stage/_log/ckpt-v$v")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(stage, "_log", "_last_checkpoint"),
-      v.toString)
-  }
-
   private[graft] def ckptResolve(s: SparkSession, stage: String, v: Int)
-      : (Seq[(String, Long, Long)], Long) = {
-    val lastPtr = java.nio.file.Paths.get(stage, "_log", "_last_checkpoint")
-    val pointed =
-      if (java.nio.file.Files.exists(lastPtr))
-        Some(java.nio.file.Files.readString(lastPtr).trim.toInt)
-          .filter(_ <= v)
-      else None
-    val ckpt = pointed.orElse(
-      (v to 0 by -1).find(c => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stage, "_log", s"ckpt-v$c"))))
-    val base: Seq[(String, Long, Long)] = ckpt.toSeq.flatMap(c =>
-      graft.util.ManifestIO.rows(s, s"$stage/_log/ckpt-v$c")
-        .map(r => (r.getString(1), r.getLong(2), r.getLong(3))))
-    val lo = ckpt.map(_ + 1).getOrElse(0)
-    // ORDER-AWARE log replay (Delta's semantic): each version's
-    // removes apply before its adds, and a LATER add revives a path
-    // an earlier version removed — the fold RESTORE (q326) depends
-    // on. For logs that never re-add a removed path (every other
-    // gate's staging convention) this resolves identically to the
-    // old order-blind set fold.
-    val active = scala.collection.mutable.LinkedHashMap.empty[
-      String, (Long, Long)]
-    base.foreach { case (p, mn, mx) => active(p) = (mn, mx) }
-    (lo to v).foreach { i =>
-      val entries = graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
-        .map(r => (r.getString(0), r.getString(1),
-          r.getLong(2), r.getLong(3)))
-      entries.foreach { case (a, p, _, _) =>
-        if (a == "remove") active.remove(p) }
-      entries.foreach { case (a, p, mn, mx) =>
-        if (a == "add") active(p) = (mn, mx) }
-    }
-    (active.toSeq.map { case (p, (mn, mx)) => (p, mn, mx) },
-      (v - lo + 1).toLong + ckpt.size.toLong)
-  }
+      : (Seq[(String, Long, Long)], Long) = LakeLog.asOf(s, stage, v)
 
   /** q274/q275 file granule floor: docs per staged lake file at the
     * gate SFs. Above ~5000 docs the granule grows with the corpus
@@ -2702,13 +2543,11 @@ object ShapeOpsQueries extends graft.QueryFamily {
         master, java.nio.file.Paths.get(stage))
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(stage, Staged.Marker))
-      rewriteManifestPaths(s, java.nio.file.Paths.get(stage, "_log"),
-        master.toString, stage)
+      LakeLog.rewritePaths(s, stage, master.toString, stage)
       stage
     } else {
       val master = lakeMasterDir(s, dir, withCompaction)
-      FileUtils.copyRecursively(
-        master.resolve("_log"), java.nio.file.Paths.get(stage, "_log"))
+      LakeLog.copyLog(master.toString, stage)
       master.toString
     }
 
@@ -2724,27 +2563,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
     val key = s"graft-lake-$n-$gran-$conv-${Staged.pathKey(dir)}"
     Staged.memo(key) { stage =>
       stageLakeLogInto(s, dir, stage.toString, withCompaction)
-      rewriteManifestPaths(s, stage.resolve("_log"),
-        stage.toString, Staged.masterRoot(key).toString)
+      LakeLog.rewritePaths(s, stage.toString, stage.toString,
+        Staged.masterRoot(key).toString)
     }
   }
 
-  private def rewriteManifestPaths(s: SparkSession,
-      logDir: java.nio.file.Path, from: String, to: String): Unit =
-    FileUtils.listDir(logDir)
-      .filter(_.getFileName.toString.startsWith("v"))
-      .foreach { mdir =>
-        val side = mdir.resolveSibling(mdir.getFileName.toString + ".rw")
-        s.read.parquet(mdir.toString)
-          .withColumn("path", expr(s"replace(path, '$from', '$to')"))
-          .coalesce(1).write.mode("overwrite").parquet(side.toString)
-        FileUtils.deleteRecursively(mdir)
-        java.nio.file.Files.move(side, mdir)
-      }
-
   /** The actual staging: granule-sized parquet files derived from
-    * `documents` plus one manifest per version under `_log/` (rows:
-    * action ∈ add|remove, path). v0: initial load = docs with
+    * `documents` plus one [[LakeLog]] commit per version. v0: initial load = docs with
     * doc_id % 3 ≠ 2, one file per granule. v1: the % 3 = 2 delta,
     * new files only. v2: copy-on-write delete — remove base g=0, add
     * its even-id rewrite. v3 (optional): compaction — remove all
@@ -2772,7 +2597,6 @@ object ShapeOpsQueries extends graft.QueryFamily {
     val f0r = v0.where(col("g") === 0 && col("doc_id") % 2 === 0)
     f0r.drop("g")
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/f0r")
-    import s.implicits._
     // per-file (min, max) doc_id — the stats a delta-log manifest
     // records at write time so readers can prune files by predicate
     // without opening them (q279); one metadata-sized agg per commit
@@ -2784,63 +2608,24 @@ object ShapeOpsQueries extends graft.QueryFamily {
     val dst = keyStats(delta)
     val v0gs = v0st.keys.toSeq.sorted
     val dgs = dst.keys.toSeq.sorted
-    // remove entries carry no stats (only adds are ever pruned) — the
-    // -1 sentinel keeps the manifest schema flat
-    def writeLog(v: Int, rows: Seq[(String, String, Long, Long)]): Unit =
-      rows.toDF("action", "path", "min_id", "max_id")
-        .withColumn("commit_ts", lit(commitTsOf(v)))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/_log/v$v")
-    def rm(p: String) = (("remove", p, -1L, -1L))
+    def writeLog(v: Int, entries: Seq[LakeLog.Entry]): Unit =
+      require(LakeLog.commit(s, stage, v, entries))
     writeLog(0, v0gs.map(g =>
-      ("add", s"$stage/base/g=$g", v0st(g)._1, v0st(g)._2)))
+      LakeLog.add(s"$stage/base/g=$g", v0st(g)._1, v0st(g)._2)))
     writeLog(1, dgs.map(g =>
-      ("add", s"$stage/delta/g=$g", dst(g)._1, dst(g)._2)))
+      LakeLog.add(s"$stage/delta/g=$g", dst(g)._1, dst(g)._2)))
     val f0rMm = f0r.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    writeLog(2, Seq(rm(s"$stage/base/g=0"),
-      ("add", s"$stage/f0r", f0rMm.getLong(0), f0rMm.getLong(1))))
+    writeLog(2, Seq(LakeLog.remove(s"$stage/base/g=0"),
+      LakeLog.add(s"$stage/f0r", f0rMm.getLong(0), f0rMm.getLong(1))))
     if (withCompaction) {
       val active = asOfFiles(s, stage, 2)
       s.read.parquet(active: _*).coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/compact")
       val cMm = s.read.parquet(s"$stage/compact")
         .agg(min(col("doc_id")), max(col("doc_id"))).head()
-      writeLog(3, active.map(rm) :+
-        (("add", s"$stage/compact", cMm.getLong(0), cMm.getLong(1))))
+      writeLog(3, active.map(LakeLog.remove) :+
+        LakeLog.add(s"$stage/compact", cMm.getLong(0), cMm.getLong(1)))
     }
-  }
-
-  /** q290's manifest CAS: put-if-absent of the version manifest via an
-    * ATOMIC RENAME of a staged directory onto `_log/v<v>` — what
-    * Delta's LogStore does with put-if-absent on `<v>.json`. The
-    * rename either installs the whole manifest or fails because the
-    * version exists; readers never see a partial manifest. The staged
-    * write re-runs per attempt (a rebase re-writes its manifest).
-    */
-  private def tryCommit(s: SparkSession, stage: String, v: Int,
-      entries: Seq[(String, String, Long, Long)]): Boolean = {
-    import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(stage), s"commit-v$v-")
-    try {
-      val staged = tmp.resolve("m")
-      entries.toDF("action", "path", "min_id", "max_id")
-        .withColumn("commit_ts", lit(commitTsOf(v)))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(staged.toString)
-      val target = java.nio.file.Paths.get(stage, "_log", s"v$v")
-      if (java.nio.file.Files.exists(target)) false
-      else
-        try {
-          java.nio.file.Files.move(staged, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch {
-          // lost the race to a concurrent rename — the CAS failure
-          case _: java.nio.file.FileSystemException
-              if java.nio.file.Files.exists(target) => false
-        }
-    } finally FileUtils.deleteRecursively(tmp)
   }
 
   /** One writer's optimistic commit loop, prepared at snapshot `snap`:
@@ -2863,12 +2648,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
     var res: Option[(String, Long, Long)] = None
     while (res.isEmpty) {
       attempts += 1
-      if (tryCommit(s, stage, v, entries))
+      if (LakeLog.commit(s, stage, v, entries))
         res = Some(("committed", v.toLong, attempts))
       else {
-        val winner = graft.util.ManifestIO.rows(s, s"$stage/_log/v$v")
-          .map(r => (r.getString(0), r.getString(1),
-            r.getLong(2), r.getLong(3)))
+        val winner = LakeLog.entries(s, stage, v)
         val winnerRemoves =
           winner.collect { case ("remove", p, _, _) => p }.toSet
         // write-write conflict (both isolation levels): a file this
@@ -2889,10 +2672,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
         // Resolution cost ∝ manifests ≤ v — metadata, never data —
         // and is paid only when a sentinel remove appears.
         lazy val addStatsByPath: Map[String, (Long, Long)] =
-          (0 until v).flatMap(i =>
-            graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
-              .collect { case r if r.getString(0) == "add" =>
-                r.getString(1) -> ((r.getLong(2), r.getLong(3))) })
+          (0 until v).flatMap(i => LakeLog.entries(s, stage, i)
+              .collect { case ("add", p, mn, mx) => p -> ((mn, mx)) })
             .toMap ++
             winner.collect { case ("add", p, mn, mx) => p -> ((mn, mx)) }
         val readConflict = readRange.exists { case (lo, hi) =>
@@ -2914,39 +2695,12 @@ object ShapeOpsQueries extends graft.QueryFamily {
     res.get
   }
 
-  /** The as-of(v) resolution — the SHARED snapshot path every lake
-    * gate goes through: delegate to [[ckptResolve]], which jumps to
-    * the newest checkpoint ≤ v via `_last_checkpoint` when one exists
-    * (O(1 + v mod cadence) manifest reads however old the table) and
-    * falls back to the full v0..v delta-log fold otherwise. Pure
-    * metadata work (the manifests are O(files)); the driver-side fold
-    * is exactly where a lake's snapshot resolution runs. Both paths
-    * replay the log ORDER-AWARE (a later add revives an earlier
-    * remove — RESTORE's semantic, q326); staged rewrites and
-    * compactions still mint fresh paths, so for them replay order is
-    * immaterial.
+  /** The as-of(v) active files — [[LakeLog.asOf]]'s paths, the shared
+    * snapshot path every lake gate reads through.
     */
   private[graft] def asOfFiles(
       s: SparkSession, stage: String, v: Int): Seq[String] =
-    ckptResolve(s, stage, v)._1.map(_._1)
-
-  /** The reference full fold — v0..v, no checkpoint shortcut. Kept as
-    * an explicitly separate implementation so q301's
-    * `ckpt_matches_fold` proof compares the checkpoint path against
-    * an INDEPENDENT resolution (after [[asOfFiles]] adopted
-    * [[ckptResolve]], comparing them would be a self-comparison).
-    */
-  private def fullFoldFiles(
-      s: SparkSession, stage: String, v: Int): Seq[String] = {
-    val active = scala.collection.mutable.LinkedHashSet.empty[String]
-    (0 to v).foreach { i =>
-      val entries = graft.util.ManifestIO.rows(s, s"$stage/_log/v$i")
-        .map(r => (r.getString(0), r.getString(1)))
-      entries.foreach { case (a, p) => if (a == "remove") active -= p }
-      entries.foreach { case (a, p) => if (a == "add") active += p }
-    }
-    active.toSeq
-  }
+    LakeLog.files(s, stage, v)
 
   /** One version's gated rollup over its RESOLVED file set: row
     * count, char sum, and the q267 key checksum (the per-version

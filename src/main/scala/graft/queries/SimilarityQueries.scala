@@ -1,5 +1,6 @@
 package graft.queries
 
+import ModelOpsQueries.inDelta
 import graft.functions.VectorFunctions._
 import graft.util.Staged
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1231,8 +1232,6 @@ object SimilarityQueries extends graft.QueryFamily {
     def staged(k: String)(build: => DataFrame): DataFrame =
       s.read.parquet(memoParquet(key(k))(build))
     def oldSliceTopM: DataFrame = {
-      def inDelta(c: Column) =
-        c >= ModelOpsQueries.deltaLo && c < ModelOpsQueries.deltaHi
       val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
       knnTopM(knnScored(s, dir, knnCandidates(bandsOld, bandsOld)))
         .select("src", "dst", "cos")
@@ -1561,9 +1560,6 @@ object SimilarityQueries extends graft.QueryFamily {
     */
   private[graft] def deltaDiversifyChange(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val lo = ModelOpsQueries.deltaLo
-    val hi = ModelOpsQueries.deltaHi
-    def inDelta(c: Column) = c >= lo && c < hi
     val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
     val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
     val bandsAll = knnBands(s, dir)
@@ -3024,9 +3020,6 @@ object SimilarityQueries extends graft.QueryFamily {
     // re-scored; old edges reuse their STORED cosines. Both faces
     // band at the full corpus's width (see knnBands).
     "q296_delta_knn_graph" -> ((s, dir) => {
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: Column) = c >= lo && c < hi
       val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
       val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
       val bandsAll = knnBands(s, dir)
@@ -3500,9 +3493,6 @@ object SimilarityQueries extends graft.QueryFamily {
       val centsD = cents.toSeq.map { case (id, ce, n2) =>
         (id, ce.map(_.toDouble), n2)
       }
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: Column) = c >= lo && c < hi
       val oldIdx = pqCellIndex(pqCellCodeRows(
         corpus.where(!inDelta(col("vec_id"))), cb, centsD))
       val deltaIdx = pqCellIndex(pqCellCodeRows(
@@ -3541,15 +3531,12 @@ object SimilarityQueries extends graft.QueryFamily {
       val centsD = cents.toSeq.map { case (id, ce, n2) =>
         (id, ce.map(_.toDouble), n2)
       }
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: Column) = c >= lo && c < hi
       // tombstones arrive as DATA (a takedown list), not a predicate —
       // here a deterministic established-corpus id slice spread across
       // cells; delta inserts never collide with it
       val tombstones = corpus
         .where(col("vec_id") % pqDeleteMod === pqDeleteRem &&
-          col("vec_id") < lo)
+          col("vec_id") < ModelOpsQueries.deltaLo)
         .select("vec_id")
       val oldCodes = pqCellCodeRows(
         corpus.where(!inDelta(col("vec_id"))), cb, centsD)

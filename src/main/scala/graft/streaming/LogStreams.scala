@@ -29,18 +29,6 @@ object LogStreams {
   /** Cassandra log timestamp format (`2026-05-14 10:23:45,123`). */
   val tsFormat = "yyyy-MM-dd HH:mm:ss,SSS"
 
-  /** Directory stream of log files: one row per appended line, tagged
-    * with the source file as node key — the streaming twin of the
-    * batch file loader.
-    */
-  def readLogDirectory(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", 16) // bounded micro-batches under backlog
-      .text(dir)
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)\\.log$", 1).as("node"),
-        col("value"))
-
   /** Parse raw lines and attach an event-time column. Unparseable lines
     * (stack traces, blanks) are dropped here — the streaming analog of
     * the parser's drop semantics; raw-line counting stays a batch

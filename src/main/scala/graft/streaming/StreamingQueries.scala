@@ -3,7 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
-import graft.util.{FileUtils, Staged}
+import graft.queries.ModelOpsQueries.inDelta
+import graft.util.{FileUtils, LakeLog, Staged}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -188,17 +189,6 @@ object StreamingQueries extends graft.QueryFamily {
     } finally s.catalog.dropTempView(sink)
   }
 
-  /** `body` with session conf `key` set to `value`, restored after. */
-  private def withConf[T](s: SparkSession, key: String, value: String)(
-      body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** The fixture table `table` copied into `root/src`, with its schema.
     * FileStreamSource requires a DIRECTORY ("Option basePath must be a
     * directory") and the driver fixture is one parquet FILE (copied,
@@ -220,7 +210,7 @@ object StreamingQueries extends graft.QueryFamily {
     * mtimes order FileStreamSource's processing. The write goes through
     * a sibling of `f`'s directory, which a stream over it never lists.
     */
-  private def landFile(df: DataFrame, f: Path,
+  private[graft] def landFile(df: DataFrame, f: Path,
       mtimeMs: Option[Long] = None): Unit = {
     val tmp = f.getParent.resolveSibling(s"${f.getParent.getFileName}-w")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -228,6 +218,97 @@ object StreamingQueries extends graft.QueryFamily {
       StandardCopyOption.REPLACE_EXISTING)
     mtimeMs.foreach(ms => Files.setLastModifiedTime(f, FileTime.fromMillis(ms)))
   }
+
+  /** `df` written to a fresh data path `<root>/<prefix><v>-<nonce>`
+    * and committed as version `v`'s one add ([[LakeLog.commit]]).
+    */
+  private def commitFile(s: SparkSession, root: Path, v: Long,
+      prefix: String, df: DataFrame): Boolean = {
+    val p = LakeLog.dataPath(root.toString, s"$prefix$v")
+    df.coalesce(1).write.mode("overwrite").parquet(p)
+    LakeLog.commit(s, root.toString, v, Seq(LakeLog.add(p)), Seq(p))
+  }
+
+  /** The full-row netting columns of the update-carrying feeds. */
+  private val rowCols = Seq("doc_id", "source", "n_chars")
+
+  /** The signed per-source rollup a change-feed consumer folds:
+    * inserts count +1, deletes −1 (COUNT, SUM and the q267 checksum
+    * are abelian, which makes the aggregate CDF-maintainable).
+    */
+  private[graft] def roll(df: DataFrame, sign: Int): DataFrame = df
+    .groupBy("source")
+    .agg((count(lit(1)) * sign).as("n_docs"),
+      (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
+      (sum(expr(graft.queries.ShapeOpsQueries
+        .manifestTerm("doc_id"))) * sign).as("key_checksum"))
+
+  /** The stored per-source aggregate `prev` (None before the first
+    * version) advanced by one change set.
+    */
+  private[graft] def foldChanges(prev: Option[DataFrame],
+      inserts: DataFrame, deletes: DataFrame): DataFrame =
+    (prev.toSeq :+ roll(inserts, 1) :+ roll(deletes, -1))
+      .reduce(_ unionByName _)
+      .groupBy("source")
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("sum_chars")).as("sum_chars"),
+        sum(col("key_checksum")).as("key_checksum"))
+
+  /** The change-feed consumer: each (version, entries) manifest lands
+    * as one arrival file in `root/src`, mtimes in commit order, and
+    * streams in one file per micro-batch; `fold` gets each version's
+    * change set ([[LakeLog.changes]] netted on `keyCols`). AvailableNow
+    * may deliver more than one arrival in a batch (equal mtimes), so
+    * every distinct version in it is folded on its own, ascending —
+    * merging two commits would skip a version.
+    */
+  private def consumeFeed(s: SparkSession, root: Path,
+      feed: Seq[(Long, Seq[LakeLog.Entry])], keyCols: Seq[String])(
+      fold: (Long, DataFrame, DataFrame) => Unit): Unit = {
+    val arrivals = Staged.dir(root, "src")
+    val now = System.currentTimeMillis()
+    val landed = feed.map { case (v, entries) =>
+      val m = LakeLog.frame(s, v, entries).withColumn("version", lit(v))
+      landFile(m, arrivals.resolve(s"c$v.parquet"),
+        Some(now - (3 - v) * 60000L))
+      m.schema
+    }
+    eachBatch(s, arrivals, landed.head, root) { (df, _) =>
+      val all = df.collect() // manifest-sized
+      all.map(_.getAs[Long]("version")).distinct.sorted.foreach { v =>
+        val es = all.filter(_.getAs[Long]("version") == v)
+        def paths(action: String) =
+          es.filter(_.getString(0) == action).map(_.getString(1)).toSeq
+        val (ins, del) =
+          LakeLog.changes(s, paths("add"), paths("remove"), keyCols)
+        fold(v, ins, del)
+      }
+    }
+  }
+
+  /** Streams the parquet files under `src` one per micro-batch into
+    * `fn`, to completion (checkpoint `root/ckpt`, `AvailableNow`).
+    */
+  private def eachBatch(s: SparkSession, src: Path, schema: StructType,
+      root: Path)(fn: (DataFrame, Long) => Unit): Unit =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(src.toString)
+      .writeStream
+      .foreachBatch { (df: DataFrame, batchId: Long) => fn(df, batchId) }
+      .option("checkpointLocation", Staged.dir(root, "ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** Versions 0..2 of the per-source aggregate table at `mv`. */
+  private def readAggVersions(s: SparkSession, mv: Path): DataFrame =
+    (0 to 2).map { v =>
+      s.read.parquet(LakeLog.firstAdd(s, mv.toString, v))
+        .select(lit(v.toLong).as("version"), col("source"),
+          col("n_docs"), col("sum_chars"), col("key_checksum"))
+    }.reduce(_ unionByName _).orderBy("version", "source")
 
   /** Shared multi-batch staging: split the events fixture into three
     * TIME-thirds (t0/t1/t2, rows ts-ordered within each) and land them
@@ -314,7 +395,7 @@ object StreamingQueries extends graft.QueryFamily {
     * the StreamingSpec cross-check surface; gates use the rollup.
     */
   def sessionWindowSessions(s: SparkSession, dir: String): DataFrame =
-    withConf(s, "spark.sql.shuffle.partitions", streamParts)(
+    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> streamParts)(
       sessionWindowRun(s, dir)(_.orderBy("user_id", "start_us")))
 
   /** Gate-harness state-store width. AQE cannot resize stateful
@@ -335,7 +416,7 @@ object StreamingQueries extends graft.QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) =>
-        withConf(s, "spark.sql.shuffle.partitions", streamParts)(fn(s, dir)))
+        graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> streamParts)(fn(s, dir)))
     }
 
   private def rawQueries
@@ -508,9 +589,10 @@ object StreamingQueries extends graft.QueryFamily {
           TimeMode.EventTime(), OutputMode.Append())
       // provider conf is read at stream start and pinned in the
       // checkpoint — set RocksDB for this stream only, restore after
-      withConf(s, "spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution." +
-            "streaming.state.RocksDBStateStoreProvider") {
+      graft.GraftSession.withConf(s,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution." +
+              "streaming.state.RocksDBStateStoreProvider")) {
         drainToMemory(s, root, sessions.toDF()) { sink =>
           // gate-construction cost, not data path: the oracle must see
           // every emitted session, so the memory sink collects them all
@@ -617,34 +699,16 @@ object StreamingQueries extends graft.QueryFamily {
     // batch once (data bandwidth) + an O(1) manifest append; as-of
     // reads stay metadata-resolved exactly as q274.
     "q287_stream_lake_ingest" -> ((s, dir) => gateRun(s, "q287") { root =>
-      import s.implicits._
       val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "lake")
-      val ckpt = Staged.dir(root, "ckpt")
       val schema = stageTimeThirds(s, dir, stage)
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          if (!df.isEmpty) {
-            val dataPath = s"$lake/data/b$batchId"
-            df.coalesce(1).write.mode("overwrite").parquet(dataPath)
-            Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
-              .write.mode("overwrite").parquet(s"$lake/_log/v$batchId")
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      eachBatch(s, stage, schema, root) { (df, batchId) =>
+        if (!df.isEmpty) commitFile(s, lake, batchId, "data/b", df)
+      }
       // as-of(v) resolved from the committed manifests, as a lake
       // reader would
       (0 to 2).map { v =>
-        val files = (0 to v).flatMap(i =>
-          graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        val files = LakeLog.adds(s, lake.toString, v)
         s.read.parquet(files: _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(expr(graft.queries.ShapeOpsQueries
@@ -724,72 +788,31 @@ object StreamingQueries extends graft.QueryFamily {
     // old writer a failover left running, or a retried task) replays
     // an already-committed batch. The committer now consults the log
     // BEFORE doing any work (idempotent no-op on a committed version)
-    // and lands the manifest with q290's put-if-absent CAS, so a
-    // replay can neither double-append nor tear a manifest. The gate
-    // runs the 3-batch ingest through the fenced committer, then
+    // and lands the batch through [[LakeLog.commit]], so a replay can
+    // neither double-append nor tear a manifest, and — its data file
+    // named per attempt — never touch the committed batch's file. The
+    // gate runs the 3-batch ingest through the fenced committer, then
     // REPLAYS batch 1 as a zombie would — with a DISTINGUISHABLE
     // payload (t2's rows claiming batch 1: a real zombie is an OLD
     // writer, so what it re-emits need not byte-match the committed
-    // batch) — and gates three ways: replay_fenced is the direct
-    // signal (the probe no-oped before any work); if the probe were
-    // skipped, the zombie's overwrite of the committed data file
-    // either survives (v1/v2's rollups shift to t2's checksums) or
-    // is deleted by the CAS-loss cleanup (the rollup read fails
-    // LOUDLY on the missing file) — wrong in either direction is
-    // visible. A fence that falsely no-ops a NEW version would fail
-    // q287's live path. At 100 TB
+    // batch) — and gates replay_fenced (the probe no-oped before any
+    // work) next to every version's rollup. A fence that falsely
+    // no-ops a NEW version would fail q287's live path. At 100 TB
     // this is exactly Delta's txn-version dedup: one O(1) log probe
     // per batch, no data read.
     "q293_stream_sink_fencing" -> ((s, dir) => gateRun(s, "q293") { root =>
-      import s.implicits._
       val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "lake")
-      val ckpt = Staged.dir(root, "ckpt")
       val schema = stageTimeThirds(s, dir, stage)
-      // the log directory exists before any committer races to
-      // rename into it (Spark's writer creates parents; NIO's
-      // atomic move must not)
-      Files.createDirectories(Paths.get(s"$lake/_log"))
       // the FENCED committer — one definition for the live writer
-      // and the zombie replay: log probe first, then data file +
-      // manifest CAS (atomic rename put-if-absent)
-      def fencedCommit(df: DataFrame, batchId: Long): Boolean = {
-        val target = Paths.get(s"$lake/_log/v$batchId")
-        if (Files.exists(target)) false
-        else {
-          val dataPath = s"$lake/data/b$batchId"
-          df.coalesce(1).write.mode("overwrite").parquet(dataPath)
-          val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
-          try {
-            val staged = tmp.resolve("m")
-            Seq(("add", dataPath)).toDF("action", "path").coalesce(1)
-              .write.mode("overwrite").parquet(staged.toString)
-            try {
-              Files.move(staged, target,
-                StandardCopyOption.ATOMIC_MOVE)
-              true
-            } catch {
-              // lost the CAS to a concurrent committer: undo the
-              // staged data file — the winner's version stands
-              case _: java.nio.file.FileSystemException
-                  if Files.exists(target) =>
-                FileUtils.deleteRecursively(Paths.get(dataPath))
-                false
-            }
-          } finally FileUtils.deleteRecursively(tmp)
-        }
+      // and the zombie replay: log probe before any work, then
+      // LakeLog's put-if-absent commit
+      def fencedCommit(df: DataFrame, batchId: Long): Boolean =
+        !LakeLog.exists(lake.toString, batchId) &&
+          commitFile(s, lake, batchId, "data/b", df)
+      eachBatch(s, stage, schema, root) { (df, batchId) =>
+        if (!df.isEmpty) fencedCommit(df, batchId)
       }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          if (!df.isEmpty) { fencedCommit(df, batchId); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
       // the zombie: an old writer instance re-emits batch 1 — with
       // t2's payload, so a broken fence cannot hide behind an
       // idempotent byte-identical overwrite; the fence must no-op
@@ -797,9 +820,7 @@ object StreamingQueries extends graft.QueryFamily {
       val replayFenced = !fencedCommit(
         s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
       (0 to 2).map { v =>
-        val files = (0 to v).flatMap(i =>
-          graft.util.ManifestIO.rows(s, s"$lake/_log/v$i")
-            .collect { case r if r.getString(0) == "add" => r.getString(1) })
+        val files = LakeLog.adds(s, lake.toString, v)
         s.read.parquet(files: _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(expr(graft.queries.ShapeOpsQueries
@@ -818,7 +839,7 @@ object StreamingQueries extends graft.QueryFamily {
     // delta rollup into the previous version's STORED aggregate
     // (decimal value sums — the fold is exact, so incremental ≡
     // from-scratch bit-for-bit) and lands version b via the q293
-    // fenced committer (log probe before any work, manifest CAS);
+    // fenced committer (log probe before any work, then the commit);
     // a zombie replay of batch 1 must no-op. Gated: EVERY version's
     // full aggregate table read back from its stored file — each
     // version must equal the cumulative-thirds rollup (the q287
@@ -830,80 +851,36 @@ object StreamingQueries extends graft.QueryFamily {
     // never rescanned; recovery is the checkpoint + the last
     // committed version, exactly Delta's streaming-upsert pattern.
     "q306_stream_matview" -> ((s, dir) => gateRun(s, "q306") { root =>
-      import s.implicits._
       val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "mv")
-      val ckpt = Staged.dir(root, "ckpt")
       val schema = stageTimeThirds(s, dir, stage)
-      Files.createDirectories(Paths.get(s"$lake/_log"))
-      // a version's committed aggregate file, resolved THROUGH its
-      // manifest (never a guessed path): data files are uniquely
-      // named per ATTEMPT, so only the manifest knows the winner's
-      def aggPathOf(v: Long): String =
-        graft.util.ManifestIO.rows(s, s"$lake/_log/v$v")
-          .collectFirst { case r if r.getString(0) == "add" =>
-            r.getString(1) }.get
       // the MV committer — one definition for the live writer and
-      // the zombie replay (q293's fence shape, with the fold).
-      // Each attempt writes its aggregate under a UNIQUE nonce path
-      // recorded in that attempt's staged manifest — Delta's
-      // uniquely-named-data-files rule — so two attempts racing
-      // past the log probe can never touch each other's files: the
-      // CAS loser deletes only its own nonce file and the winner's
-      // committed data survives intact.
-      def mvCommit(df: DataFrame, batchId: Long): Boolean = {
-        val target = Paths.get(s"$lake/_log/v$batchId")
-        if (Files.exists(target)) false
-        else {
+      // the zombie replay (q293's fence shape, with the fold)
+      def mvCommit(df: DataFrame, batchId: Long): Boolean =
+        !LakeLog.exists(lake.toString, batchId) && {
           val delta = df.groupBy("event_type")
             .agg(count(lit(1)).as("n_events"),
               sum(col("value").cast(dec2)).as("sv"))
           val merged =
             if (batchId == 0) delta
-            else s.read.parquet(aggPathOf(batchId - 1))
+            else s.read.parquet(LakeLog.firstAdd(s, lake.toString, batchId - 1))
               .select(col("event_type"), col("n_events"), col("sv"))
               .unionByName(delta, allowMissingColumns = false)
               .groupBy("event_type")
               .agg(sum(col("n_events")).as("n_events"),
                 sum(col("sv")).as("sv"))
-          val nonce = java.util.UUID.randomUUID().toString
-          val aggPath = s"$lake/agg/v$batchId-$nonce"
-          merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-          val tmp = Files.createTempDirectory(lake, s"commit-b$batchId-")
-          try {
-            val staged = tmp.resolve("m")
-            Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-              .write.mode("overwrite").parquet(staged.toString)
-            try {
-              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-              true
-            } catch {
-              case _: java.nio.file.FileSystemException
-                  if Files.exists(target) =>
-                FileUtils.deleteRecursively(Paths.get(aggPath))
-                false
-            }
-          } finally FileUtils.deleteRecursively(tmp)
+          commitFile(s, lake, batchId, "agg/v", merged)
         }
+      eachBatch(s, stage, schema, root) { (df, batchId) =>
+        if (!df.isEmpty) mvCommit(df, batchId)
       }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          if (!df.isEmpty) { mvCommit(df, batchId); () }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
       // the zombie: an old writer re-emits batch 1 with t2's
       // payload (distinguishable — q293's convention); the fence
       // must no-op before any fold or file write
       val replayFenced = !mvCommit(
         s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
       (0 to 2).map { v =>
-        s.read.parquet(aggPathOf(v.toLong))
+        s.read.parquet(LakeLog.firstAdd(s, lake.toString, v))
           .select(lit(v.toLong).as("version"), col("event_type"),
             col("n_events"),
             col("sv").cast("double").as("sum_value"),
@@ -924,7 +901,7 @@ object StreamingQueries extends graft.QueryFamily {
     // net out, q284's construction), folds the signed per-source
     // rollup into the previous version's STORED aggregate (q299's
     // abelian fold: COUNT / SUM / the q267 checksum), and lands
-    // version v through the fenced nonce committer (q306's shape).
+    // version v through the fenced committer (q306's shape).
     // Gated: EVERY version's maintained aggregate read back from its
     // stored file must equal the from-scratch as-of(v) rollup — the
     // oracle reconstructs v0/v1/v2 logical content from the staging
@@ -936,118 +913,20 @@ object StreamingQueries extends graft.QueryFamily {
     // (files the commit touched) + an aggregate-sized fold, and the
     // feed itself is just the manifests the log already wrote.
     "q317_stream_cdf_consume" -> ((s, dir) => gateRun(s, "q317") { root =>
-      import s.implicits._
-      val stage = Staged.dir(root, "lake")
-      val arrivals = Staged.dir(root, "src")
+      val stage = Staged.dir(root, "lake").toString
       val mv = Staged.dir(root, "mv")
-      val ckpt = Staged.dir(root, "ckpt")
       graft.queries.ShapeOpsQueries
-        .stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      // the feed: each commit's manifest (plus its version) staged
-      // as one arrival file, mtimes in commit order — the stream IS
-      // the log
-      val now = System.currentTimeMillis()
-      var schema: StructType = null
-      for (v <- 0 to 2) {
-        val m = s.read.parquet(s"$stage/_log/v$v")
-          .withColumn("version", lit(v.toLong))
-        schema = m.schema
-        landFile(m, arrivals.resolve(s"c$v.parquet"),
-          Some(now - (3 - v) * 60000L))
-      }
-      Files.createDirectories(Paths.get(s"$mv/_log"))
-      def aggPathOf(v: Long): String =
-        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-          .collectFirst { case r if r.getString(0) == "add" =>
-            r.getString(1) }.get
-      def roll(df: DataFrame, sign: Int) = df
-        .groupBy("source")
-        .agg((count(lit(1)) * sign).as("n_docs"),
-          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-          (sum(expr(graft.queries.ShapeOpsQueries
-            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-      // the CDF consumer — per commit: change set from the
-      // manifest's own entries, signed fold, fenced nonce commit
-      def cdfCommit(mdf: DataFrame, batchId: Long): Boolean = {
-        val all = mdf.collect() // manifest-sized (O(files) rows)
-        // AvailableNow may deliver MORE than one arrival file in a
-        // batch (equal mtimes); taking max(version) would merge two
-        // commits' change sets into one fold and skip a version's
-        // stored aggregate (round-17 ADVICE). Fold each distinct
-        // version's entries separately, in ascending commit order.
-        all.map(_.getAs[Long]("version")).distinct.sorted.map { v =>
-          foldOneCommit(all.filter(_.getAs[Long]("version") == v), v)
-        }.forall(identity)
-      }
-      def foldOneCommit(
-          entries: Array[org.apache.spark.sql.Row], v0: Long): Boolean = {
-        if (entries.isEmpty) false
-        else {
-          val v = v0
-          val target = Paths.get(s"$mv/_log/v$v")
-          if (Files.exists(target)) false
-          else {
-            val added = entries.filter(_.getString(0) == "add")
-              .map(_.getString(1)).toSeq
-            val removed = entries.filter(_.getString(0) == "remove")
-              .map(_.getString(1)).toSeq
-            val addedDf = s.read.parquet(added: _*)
-            val removedDf =
-              if (removed.nonEmpty) s.read.parquet(removed: _*)
-              else addedDf.where(lit(false))
-            val inserts = addedDf.join(removedDf.select("doc_id"),
-              Seq("doc_id"), "left_anti")
-            val deletes = removedDf.join(addedDf.select("doc_id"),
-              Seq("doc_id"), "left_anti")
-            val delta =
-              roll(inserts, 1).unionByName(roll(deletes, -1))
-            val base =
-              if (v == 0L) delta
-              else s.read.parquet(aggPathOf(v - 1))
-                .select(col("source"), col("n_docs"), col("sum_chars"),
-                  col("key_checksum"))
-                .unionByName(delta)
-            val merged = base.groupBy("source")
-              .agg(sum(col("n_docs")).as("n_docs"),
-                sum(col("sum_chars")).as("sum_chars"),
-                sum(col("key_checksum")).as("key_checksum"))
-            val nonce = java.util.UUID.randomUUID().toString
-            val aggPath = s"$mv/agg/v$v-$nonce"
-            merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-            val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
-            try {
-              val staged = tmp.resolve("m")
-              Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-                .write.mode("overwrite").parquet(staged.toString)
-              try {
-                Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-                true
-              } catch {
-                case _: java.nio.file.FileSystemException
-                    if Files.exists(target) =>
-                  FileUtils.deleteRecursively(Paths.get(aggPath))
-                  false
-              }
-            } finally FileUtils.deleteRecursively(tmp)
-          }
+        .stageLakeLog(s, dir, stage, withCompaction = false)
+      // the feed: each commit's manifest — the stream IS the log
+      consumeFeed(s, root, (0 to 2).map(v => v.toLong -> LakeLog.entries(s, stage, v).toSeq),
+          Seq("doc_id")) { (v, inserts, deletes) =>
+        if (!LakeLog.exists(mv.toString, v)) {
+          val prev = Option.when(v > 0)(
+            s.read.parquet(LakeLog.firstAdd(s, mv.toString, v - 1)))
+          commitFile(s, mv, v, "agg/v", foldChanges(prev, inserts, deletes))
         }
       }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          cdfCommit(df, batchId); ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      (0 to 2).map { v =>
-        s.read.parquet(aggPathOf(v.toLong))
-          .select(lit(v.toLong).as("version"), col("source"),
-            col("n_docs"), col("sum_chars"), col("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("version", "source")
+      readAggVersions(s, mv)
     }),
 
     // STREAMING CDF CONSUMPTION OF AN UPDATE COMMIT — the netting
@@ -1071,11 +950,8 @@ object StreamingQueries extends graft.QueryFamily {
     // exactly 500 × |updated|. At 100 TB the full-row anti-join is
     // still bounded by the commit's touched files, never the table.
     "q328_stream_cdf_update" -> ((s, dir) => gateRun(s, "q328") { root =>
-      import s.implicits._
       val stage = Staged.dir(root, "lake")
-      val arrivals = Staged.dir(root, "src")
       val mv = Staged.dir(root, "mv")
-      val ckpt = Staged.dir(root, "ckpt")
       val d = graft.queries.Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val chType = d.schema("n_chars").dataType
@@ -1092,103 +968,25 @@ object StreamingQueries extends graft.QueryFamily {
       // v2's CoW delete
       f1.where(!(col("doc_id") % 5 === 0))
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/f1r")
-      val manifests = Seq(
-        (0L, Seq(("add", s"$stage/f0"), ("add", s"$stage/f1"))),
-        (1L, Seq(("remove", s"$stage/f0"), ("add", s"$stage/f0u"))),
-        (2L, Seq(("remove", s"$stage/f1"), ("add", s"$stage/f1r"))))
-      val now = System.currentTimeMillis()
-      var schema: StructType = null
-      manifests.foreach { case (v, entries) =>
-        val m = entries.toDF("action", "path")
-          .withColumn("version", lit(v))
-        schema = m.schema
-        landFile(m, arrivals.resolve(s"c$v.parquet"),
-          Some(now - (3 - v) * 60000L))
-      }
-      Files.createDirectories(Paths.get(s"$mv/_log"))
-      def aggPathOf(v: Long): String =
-        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-          .collectFirst { case r if r.getString(0) == "add" =>
-            r.getString(1) }.get
-      val rowCols = Seq("doc_id", "source", "n_chars")
-      def roll(df: DataFrame, sign: Int) = df
-        .groupBy("source")
-        .agg((count(lit(1)) * sign).as("n_docs"),
-          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-          (sum(expr(graft.queries.ShapeOpsQueries
-            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-      def foldOne(entries: Array[org.apache.spark.sql.Row],
-          v: Long): Boolean = {
-        val target = Paths.get(s"$mv/_log/v$v")
-        if (entries.isEmpty || Files.exists(target)) false
-        else {
-          val added = entries.filter(_.getString(0) == "add")
-            .map(_.getString(1)).toSeq
-          val removed = entries.filter(_.getString(0) == "remove")
-            .map(_.getString(1)).toSeq
-          val addedDf = s.read.parquet(added: _*)
-          val removedDf =
-            if (removed.nonEmpty) s.read.parquet(removed: _*)
-            else addedDf.where(lit(false))
-          // FULL-ROW netting: an update's pre/post images differ in
-          // the measure, so both survive their anti-join — the key
-          // netting q317 uses would cancel them
-          val inserts = addedDf.join(removedDf, rowCols, "left_anti")
-          val deletes = removedDf.join(addedDf, rowCols, "left_anti")
-          val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
-          val base =
-            if (v == 0L) delta
-            else s.read.parquet(aggPathOf(v - 1))
-              .select(col("source"), col("n_docs"), col("sum_chars"),
-                col("key_checksum"))
-              .unionByName(delta)
-          val merged = base.groupBy("source")
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("sum_chars")).as("sum_chars"),
-              sum(col("key_checksum")).as("key_checksum"))
+      import LakeLog.{add, remove}
+      val feed = Seq(
+        0L -> Seq(add(s"$stage/f0"), add(s"$stage/f1")),
+        1L -> Seq(remove(s"$stage/f0"), add(s"$stage/f0u")),
+        2L -> Seq(remove(s"$stage/f1"), add(s"$stage/f1r")))
+      // FULL-ROW netting: an update's pre/post images differ in the
+      // measure, so both survive their anti-join — the key netting
+      // q317 uses would cancel them
+      consumeFeed(s, root, feed, rowCols) { (v, inserts, deletes) =>
+        if (!LakeLog.exists(mv.toString, v)) {
+          val prev = Option.when(v > 0)(
+            s.read.parquet(LakeLog.firstAdd(s, mv.toString, v - 1)))
+          commitFile(s, mv, v, "agg/v", foldChanges(prev, inserts, deletes)
             // a source whose rows all vanished folds to zero — drop
             // it, as the from-scratch rollup would
-            .where(col("n_docs") =!= 0L)
-          val nonce = java.util.UUID.randomUUID().toString
-          val aggPath = s"$mv/agg/v$v-$nonce"
-          merged.coalesce(1).write.mode("overwrite").parquet(aggPath)
-          val tmp = Files.createTempDirectory(mv, s"commit-v$v-")
-          try {
-            val staged = tmp.resolve("m")
-            Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-              .write.mode("overwrite").parquet(staged.toString)
-            try {
-              Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-              true
-            } catch {
-              case _: java.nio.file.FileSystemException
-                  if Files.exists(target) =>
-                FileUtils.deleteRecursively(Paths.get(aggPath))
-                false
-            }
-          } finally FileUtils.deleteRecursively(tmp)
+            .where(col("n_docs") =!= 0L))
         }
       }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val all = df.collect() // manifest-sized
-          all.map(_.getAs[Long]("version")).distinct.sorted
-            .foreach(v =>
-              foldOne(all.filter(_.getAs[Long]("version") == v), v))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      (0 to 2).map { v =>
-        s.read.parquet(aggPathOf(v.toLong))
-          .select(lit(v.toLong).as("version"), col("source"),
-            col("n_docs"), col("sum_chars"), col("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("version", "source")
+      readAggVersions(s, mv)
     }),
 
     // SNAPSHOT BOOTSTRAP + CHANGE TAIL — Delta's streaming-source
@@ -1211,92 +1009,23 @@ object StreamingQueries extends graft.QueryFamily {
     // anyway) and the tail is ∝ changes — history length never
     // enters the cost.
     "q333_stream_bootstrap_tail" -> ((s, dir) => gateRun(s, "q333") { root =>
-      import s.implicits._
-      val stage = Staged.dir(root, "lake")
-      val arrivals = Staged.dir(root, "src")
+      val stage = Staged.dir(root, "lake").toString
       val mv = Staged.dir(root, "mv")
-      val ckpt = Staged.dir(root, "ckpt")
       graft.queries.ShapeOpsQueries
-        .stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      def roll(df: DataFrame, sign: Int) = df
-        .groupBy("source")
-        .agg((count(lit(1)) * sign).as("n_docs"),
-          (sum(col("n_chars").cast("long")) * sign).as("sum_chars"),
-          (sum(expr(graft.queries.ShapeOpsQueries
-            .manifestTerm("doc_id"))) * sign).as("key_checksum"))
-      Files.createDirectories(Paths.get(s"$mv/_log"))
-      def aggPathOf(v: Long): String =
-        graft.util.ManifestIO.rows(s, s"$mv/_log/v$v")
-          .collectFirst { case r if r.getString(0) == "add" =>
-            r.getString(1) }.get
-      def commitAgg(v: Long, agg: DataFrame): Unit = {
-        val aggPath = s"$mv/agg/v$v"
-        agg.coalesce(1).write.mode("overwrite").parquet(aggPath)
-        Seq(("add", aggPath)).toDF("action", "path").coalesce(1)
-          .write.mode("overwrite").parquet(s"$mv/_log/v$v")
-      }
+        .stageLakeLog(s, dir, stage, withCompaction = false)
       // the BOOTSTRAP: one snapshot read at the boot version — not
       // a change-feed fold
-      val bootFiles = graft.queries.ShapeOpsQueries
-        .asOfFiles(s, stage.toString, 0)
-      commitAgg(0L, roll(s.read.parquet(bootFiles: _*), 1))
+      commitFile(s, mv, 0L, "agg/v",
+        roll(s.read.parquet(LakeLog.files(s, stage, 0): _*), 1))
       // the TAIL: only the commits AFTER the boot version arrive
-      val now = System.currentTimeMillis()
-      var schema: StructType = null
-      for (v <- 1 to 2) {
-        val m = s.read.parquet(s"$stage/_log/v$v")
-          .withColumn("version", lit(v.toLong))
-        schema = m.schema
-        landFile(m, arrivals.resolve(s"c$v.parquet"),
-          Some(now - (3 - v) * 60000L))
+      consumeFeed(s, root, (1 to 2).map(v => v.toLong -> LakeLog.entries(s, stage, v).toSeq),
+          Seq("doc_id")) { (v, inserts, deletes) =>
+        if (!LakeLog.exists(mv.toString, v))
+          commitFile(s, mv, v, "agg/v", foldChanges(
+            Some(s.read.parquet(LakeLog.firstAdd(s, mv.toString, v - 1))),
+            inserts, deletes))
       }
-      def foldOne(entries: Array[org.apache.spark.sql.Row],
-          v: Long): Unit = {
-        if (entries.isEmpty ||
-          Files.exists(Paths.get(s"$mv/_log/v$v"))) return
-        val added = entries.filter(_.getString(0) == "add")
-          .map(_.getString(1)).toSeq
-        val removed = entries.filter(_.getString(0) == "remove")
-          .map(_.getString(1)).toSeq
-        val addedDf = s.read.parquet(added: _*)
-        val removedDf =
-          if (removed.nonEmpty) s.read.parquet(removed: _*)
-          else addedDf.where(lit(false))
-        val inserts = addedDf.join(removedDf.select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        val deletes = removedDf.join(addedDf.select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        val delta = roll(inserts, 1).unionByName(roll(deletes, -1))
-        val merged = s.read.parquet(aggPathOf(v - 1))
-          .select(col("source"), col("n_docs"), col("sum_chars"),
-            col("key_checksum"))
-          .unionByName(delta)
-          .groupBy("source")
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("sum_chars")).as("sum_chars"),
-            sum(col("key_checksum")).as("key_checksum"))
-        commitAgg(v, merged)
-      }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val all = df.collect() // manifest-sized
-          all.map(_.getAs[Long]("version")).distinct.sorted
-            .foreach(v =>
-              foldOne(all.filter(_.getAs[Long]("version") == v), v))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      (0 to 2).map { v =>
-        s.read.parquet(aggPathOf(v.toLong))
-          .select(lit(v.toLong).as("version"), col("source"),
-            col("n_docs"), col("sum_chars"), col("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("version", "source")
+      readAggVersions(s, mv)
     }),
 
     // STREAMING CDC APPLY — the downstream face q317/q328 stop short
@@ -1323,11 +1052,8 @@ object StreamingQueries extends graft.QueryFamily {
     // the table. At 100 TB this is the replication contract: work per
     // commit ∝ change set + files containing it, never table size.
     "q329_stream_cdc_apply" -> ((s, dir) => gateRun(s, "q329") { root =>
-      import s.implicits._
       val stage = Staged.dir(root, "lake")
-      val arrivals = Staged.dir(root, "src")
-      val down = Staged.dir(root, "down")
-      val ckpt = Staged.dir(root, "ckpt")
+      val down = Staged.dir(root, "down").toString
       val d = graft.queries.Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val chType = d.schema("n_chars").dataType
@@ -1359,68 +1085,32 @@ object StreamingQueries extends graft.QueryFamily {
         .parquet(s"$stage/sv")
       def fp(h: Int, variant: String) =
         s"$stage/sv/h=$h/variant=$variant"
-      val manifests = Seq(
-        (0L, Seq(("add", fp(0, "b")), ("add", fp(1, "b")))),
-        (1L, Seq(("remove", fp(0, "b")), ("remove", fp(1, "b")),
-          ("add", fp(0, "u")), ("add", fp(1, "u")))),
-        (2L, Seq(("remove", fp(0, "u")), ("remove", fp(1, "u")),
-          ("add", fp(0, "d")), ("add", fp(1, "d")))))
-      val now = System.currentTimeMillis()
-      var schema: StructType = null
-      manifests.foreach { case (v, entries) =>
-        val m = entries.toDF("action", "path")
-          .withColumn("version", lit(v))
-        schema = m.schema
-        landFile(m, arrivals.resolve(s"c$v.parquet"),
-          Some(now - (3 - v) * 60000L))
-      }
+      import LakeLog.{add, remove}
+      val feed = Seq(
+        0L -> Seq(add(fp(0, "b")), add(fp(1, "b"))),
+        1L -> Seq(remove(fp(0, "b")), remove(fp(1, "b")),
+          add(fp(0, "u")), add(fp(1, "u"))),
+        2L -> Seq(remove(fp(0, "u")), remove(fp(1, "u")),
+          add(fp(0, "d")), add(fp(1, "d"))))
       // the downstream table: granule-partitioned layout + manifest
       // log with per-file key stats; one rewrite counter per commit
-      Files.createDirectories(Paths.get(s"$down/_log"))
-      val rowCols = Seq("doc_id", "source", "n_chars")
-      def readLog(v: Long): Array[(String, String, Long, Long)] =
-        graft.util.ManifestIO.rows(s, s"$down/_log/v$v")
-          .map(r => (r.getString(0), r.getString(1),
-            r.getLong(2), r.getLong(3)))
-      def activeAt(v: Long): Seq[(String, Long, Long)] = {
-        val entries = (0L to v).flatMap(readLog)
-        val active = scala.collection.mutable.LinkedHashMap
-          .empty[String, (Long, Long)]
-        entries.foreach { case (a, p, mn, mx) =>
-          if (a == "remove") active.remove(p)
-          else active(p) = (mn, mx) }
-        active.toSeq.map { case (p, (mn, mx)) => (p, mn, mx) }
-      }
-      def commitDown(v: Long,
-          entries: Seq[(String, String, Long, Long)]): Unit =
-        entries.toDF("action", "path", "min_id", "max_id").coalesce(1)
-          .write.mode("overwrite").parquet(s"$down/_log/v$v")
       val rewrites = scala.collection.mutable.Map.empty[Long, Long]
-      def applyOne(entries: Array[org.apache.spark.sql.Row],
-          v: Long): Unit = {
-        if (Files.exists(Paths.get(s"$down/_log/v$v"))) return
-        val added = entries.filter(_.getString(0) == "add")
-          .map(_.getString(1)).toSeq
-        val removed = entries.filter(_.getString(0) == "remove")
-          .map(_.getString(1)).toSeq
-        val addedDf = s.read.parquet(added: _*)
-        val removedDf =
-          if (removed.nonEmpty) s.read.parquet(removed: _*)
-          else addedDf.where(lit(false))
-        val ins = addedDf.join(removedDf, rowCols, "left_anti")
-        val del = removedDf.join(addedDf, rowCols, "left_anti")
+      // each upstream commit's change set, netted by FULL ROW (q328)
+      def applyOne(v: Long, ins: DataFrame, del: DataFrame): Unit = {
+        if (LakeLog.exists(down, v)) return
         if (v == 0L) {
           // initial load: granule-partitioned, stats per file
+          val load = LakeLog.dataPath(down, "load")
           ins.withColumn("g", expr(s"doc_id div $gran"))
             .repartition(col("g"))
             .write.partitionBy("g").mode("overwrite")
-            .parquet(s"$down/load")
+            .parquet(load)
           val st = ins.groupBy(expr(s"doc_id div $gran").as("g"))
             .agg(min(col("doc_id")), max(col("doc_id")))
             .collect()  // manifest-sized
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          commitDown(0L, st.toSeq.map { case (g, mn, mx) =>
-            ("add", s"$down/load/g=$g", mn, mx) })
+          LakeLog.commit(s, down, 0L, st.toSeq.map { case (g, mn, mx) =>
+            add(s"$load/g=$g", mn, mx) }, Seq(load))
           rewrites(0L) = 0L
         } else {
           // classify per key: both sides = update, delete-only =
@@ -1439,7 +1129,7 @@ object StreamingQueries extends graft.QueryFamily {
           val changeKeys = updK.unionByName(gone.select("doc_id")).cache()
           val kmm = changeKeys.agg(min(col("doc_id")),
             max(col("doc_id")), count(lit(1))).head()
-          val active = activeAt(v - 1)
+          val active = LakeLog.asOf(s, down, v - 1)._1
           val (cands, hits) =
             if (kmm.getLong(2) == 0L)
               (Seq.empty[(String, Long, Long)],
@@ -1462,7 +1152,7 @@ object StreamingQueries extends graft.QueryFamily {
             .cache()
           val rewriteAdds = hits.zipWithIndex.flatMap {
             case ((p, _, _), i) =>
-              val rp = s"$down/rw$v-$i"
+              val rp = LakeLog.dataPath(down, s"rw$v-$i")
               val old = s.read.parquet(p)
               old.join(broadcast(changeKeys), Seq("doc_id"),  // hint audit: change-set-bounded (cached keys of one commit)
                   "left_anti")
@@ -1473,7 +1163,7 @@ object StreamingQueries extends graft.QueryFamily {
                 .agg(min(col("doc_id")), max(col("doc_id")),
                   count(lit(1))).head()
               if (mm.getLong(2) == 0L) None
-              else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
+              else Some(add(rp, mm.getLong(0), mm.getLong(1)))
           }
           // one agg answers emptiness AND the manifest stats
           val mmN = netNew.agg(count(lit(1)), min(col("doc_id")),
@@ -1481,13 +1171,13 @@ object StreamingQueries extends graft.QueryFamily {
           val newAdds =
             if (mmN.getLong(0) == 0L) Seq.empty
             else {
-              val np = s"$down/ins$v"
+              val np = LakeLog.dataPath(down, s"ins$v")
               netNew.coalesce(1).write.mode("overwrite").parquet(np)
-              Seq(("add", np, mmN.getLong(1), mmN.getLong(2)))
+              Seq(add(np, mmN.getLong(1), mmN.getLong(2)))
             }
-          commitDown(v,
-            hits.map { case (p, _, _) => ("remove", p, -1L, -1L) } ++
-              rewriteAdds ++ newAdds)
+          LakeLog.commit(s, down, v,
+            hits.map { case (p, _, _) => remove(p) } ++ rewriteAdds ++ newAdds,
+            (rewriteAdds ++ newAdds).map(_._2))
           rewrites(v) = hits.size.toLong
           // one version's apply is done; its cached change set must
           // not outlive it (the stream applies every version in one
@@ -1497,26 +1187,12 @@ object StreamingQueries extends graft.QueryFamily {
           postImg.unpersist(blocking = false)
         }
       }
-      val query = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val all = df.collect() // manifest-sized
-          all.map(_.getAs[Long]("version")).distinct.sorted
-            .foreach(v =>
-              applyOne(all.filter(_.getAs[Long]("version") == v), v))
-          ()
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      consumeFeed(s, root, feed, rowCols)(applyOne)
       // gate every downstream version against the upstream logical
       // content
       (0L to 2L).map { v =>
-        val files = activeAt(v)
-        s.read.parquet(files.map(_._1): _*)
+        val files = LakeLog.files(s, down, v)
+        s.read.parquet(files: _*)
           .agg(count(lit(1)).as("n_rows"),
             sum(col("n_chars").cast("long")).as("sum_chars"),
             sum(expr(graft.queries.ShapeOpsQueries
@@ -1749,10 +1425,8 @@ object StreamingQueries extends graft.QueryFamily {
         .select(col("doc_id"), col("sig"),
           col("bk.band").as("band"), col("bk.h1").as("h1"),
           col("bk.h2").as("h2"))
-      val lo = graft.queries.ModelOpsQueries.deltaLo
-      val hi = graft.queries.ModelOpsQueries.deltaHi
       val index = bands(sigOf(s.read.parquet(src.toString))
-        .where(col("doc_id") < lo || col("doc_id") >= hi))
+        .where(!inDelta(col("doc_id"))))
         .select(col("doc_id").as("match_id"), col("sig").as("si"),
           col("band"), col("h1"), col("h2"))
       // UNHINTED join (the q114/q152 rule): the index side is
@@ -1762,7 +1436,7 @@ object StreamingQueries extends graft.QueryFamily {
       // per-micro-batch join shuffles only the arriving delta
       val matches = bands(sigOf(
           s.readStream.schema(schema).parquet(stage.toString)
-            .where(col("doc_id") >= lo && col("doc_id") < hi)))
+            .where(inDelta(col("doc_id")))))
         .join(index, Seq("band", "h1", "h2"))
         .select(col("doc_id"), col("match_id"),
           col("sig").as("sd"), col("si"))
@@ -1782,7 +1456,7 @@ object StreamingQueries extends graft.QueryFamily {
               .as("best_est"),
             count(lit(1)).as("n_candidates"))
         sigOf(s.read.parquet(src.toString))
-          .where(col("doc_id") >= lo && col("doc_id") < hi)
+          .where(inDelta(col("doc_id")))
           .select(col("doc_id"))
           .join(broadcast(best), Seq("doc_id"), "left")  // hint audit: delta-bounded (per-delta-doc best match)
           .select(col("doc_id"),
@@ -1844,18 +1518,16 @@ object StreamingQueries extends graft.QueryFamily {
     "q164_stream_index" -> ((s, dir) => gateRun(s, "q164") { root =>
       val src = Paths.get(s"$dir/documents.parquet")
       val (stage, schema) = stageFixture(s, dir, root, "documents")
-      val lo = graft.queries.ModelOpsQueries.deltaLo
-      val hi = graft.queries.ModelOpsQueries.deltaHi
       // the SHARED index aggregation (CorpusOpsQueries.shardedIndex)
       // applied to the streaming frame — one contract, three build
       // paths
       val deltaIdx = graft.queries.CorpusOpsQueries.shardedIndex(
         s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("doc_id") >= lo && col("doc_id") < hi))
+          .where(inDelta(col("doc_id"))))
       drainToMemory(s, root, deltaIdx, OutputMode.Complete) { sink =>
         val oldIdx = graft.queries.CorpusOpsQueries.shardedIndex(
           s.read.parquet(src.toString)
-            .where(col("doc_id") < lo || col("doc_id") >= hi))
+            .where(!inDelta(col("doc_id"))))
         oldIdx.union(sink)
           .groupBy("term", "shard")
           .agg(sum(col("df_shard")).as("df_shard"),
@@ -2035,23 +1707,21 @@ object StreamingQueries extends graft.QueryFamily {
     // batch paths. At 100 TB: per-micro-batch work ∝ arriving vectors;
     // the old index is never re-derived from raw embeddings.
     "q204_stream_vec_ingest" -> ((s, dir) => gateRun(s, "q204") { root =>
-      import graft.queries.{ModelOpsQueries, SimilarityQueries}
+      import graft.queries.SimilarityQueries
       val src = Paths.get(s"$dir/embeddings.parquet")
       val stage = Staged.dir(root, "src")
       val schema = s.read.parquet(src.toString).schema
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
       landFile(s.read.parquet(src.toString)
-          .where(col("vec_id") >= lo && col("vec_id") < hi),
+          .where(inDelta(col("vec_id"))),
         stage.resolve("delta.parquet"))
       val deltaCodes = SimilarityQueries.pqCodeRowsFor(s, dir,
         s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("vec_id") >= lo && col("vec_id") < hi))
+          .where(inDelta(col("vec_id"))))
       drainToMemory(s, root, deltaCodes) { sink =>
         val oldIdx = SimilarityQueries.pqCellIndexOf(
           SimilarityQueries.pqCodeRowsFor(s, dir,
             s.read.parquet(src.toString)
-              .where(col("vec_id") < lo || col("vec_id") >= hi)))
+              .where(!inDelta(col("vec_id")))))
         val deltaIdx = SimilarityQueries.pqCellIndexOf(sink)
         oldIdx.union(deltaIdx)
           .groupBy("cell")
@@ -2077,13 +1747,10 @@ object StreamingQueries extends graft.QueryFamily {
     // SAME frontierSchedule, and the oracle is q217's from-scratch
     // twin VERBATIM — streaming build ≡ incremental ≡ from-scratch.
     "q221_stream_frontier" -> ((s, dir) => gateRun(s, "q221") { root =>
-      import graft.queries.{CrawlOpsQueries, ModelOpsQueries}
+      import graft.queries.CrawlOpsQueries
       val src = Paths.get(s"$dir/documents.parquet")
       val stage = Staged.dir(root, "src")
       val schema = s.read.parquet(src.toString).schema
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
       landFile(s.read.parquet(src.toString)
           .where(inDelta(col("doc_id"))),
         stage.resolve("delta.parquet"))
@@ -2114,13 +1781,10 @@ object StreamingQueries extends graft.QueryFamily {
     // per-batch cost ∝ arriving docs; the rank refresh was never
     // corpus-scale.
     "q237_stream_edges" -> ((s, dir) => gateRun(s, "q237") { root =>
-      import graft.queries.{CrawlOpsQueries, ModelOpsQueries}
+      import graft.queries.CrawlOpsQueries
       val src = Paths.get(s"$dir/documents.parquet")
       val stage = Staged.dir(root, "src")
       val schema = s.read.parquet(src.toString).schema
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
       landFile(s.read.parquet(src.toString)
           .where(inDelta(col("doc_id"))),
         stage.resolve("delta.parquet"))
@@ -2154,9 +1818,6 @@ object StreamingQueries extends graft.QueryFamily {
       val src = Paths.get(s"$dir/embeddings.parquet")
       val stage = Staged.dir(root, "src")
       val schema = s.read.parquet(src.toString).schema
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
-      def inDelta(c: org.apache.spark.sql.Column) = c >= lo && c < hi
       landFile(s.read.parquet(src.toString)
           .where(inDelta(col("vec_id"))),
         stage.resolve("delta.parquet"))
@@ -2186,18 +1847,16 @@ object StreamingQueries extends graft.QueryFamily {
     // batch one. At 100 TB: per-batch cost ∝ arriving vectors × the
     // O(1) eval slice.
     "q218_stream_decontam" -> ((s, dir) => gateRun(s, "q218") { root =>
-      import graft.queries.{ModelOpsQueries, SimilarityQueries}
+      import graft.queries.SimilarityQueries
       val src = Paths.get(s"$dir/embeddings.parquet")
       val stage = Staged.dir(root, "src")
       val schema = s.read.parquet(src.toString).schema
-      val lo = ModelOpsQueries.deltaLo
-      val hi = ModelOpsQueries.deltaHi
       landFile(s.read.parquet(src.toString)
-          .where(col("vec_id") >= lo && col("vec_id") < hi),
+          .where(inDelta(col("vec_id"))),
         stage.resolve("delta.parquet"))
       val hits = SimilarityQueries.decontamHits(s, dir,
         s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("vec_id") >= lo && col("vec_id") < hi))
+          .where(inDelta(col("vec_id"))))
       drainToMemory(s, root, hits) { sink =>
         SimilarityQueries.decontamRollup(sink)
           .orderBy("vec_id")

@@ -1,7 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-
+import graft.streaming.StreamingQueries
+import graft.util.Staged
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -24,66 +24,52 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 class StreamDedupTtlSpec extends SparkSuite {
 
-  private def rmTree(p: Path): Unit = graft.util.FileUtils.deleteRecursively(p)
-
   test("TTL dedup: expiry boundary is first_time + delay <= watermark") {
-    val stage = Files.createTempDirectory("graft-ttlspec-src")
-    val ckpt = Files.createTempDirectory("graft-ttlspec-ckpt")
     val sink = "graft_ttlspec_sink"
-    try {
-      import spark.implicits._
-      def writeHalf(rows: Seq[(String, Long)], name: String,
-          mtimeMs: Long): Unit = {
-        val tmp = Files.createTempDirectory("graft-ttlspec-w")
-        try {
-          rows.toDF("k", "sec")
-            .select(col("k"), timestamp_seconds(col("sec")).as("event_time"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp)
-            .filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          Files.move(part, stage.resolve(name),
-            StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(stage.resolve(name),
-            java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-        } finally rmTree(tmp)
+    val counts = Staged.scratch(spark, "ttlspec") { root =>
+      val stage = Staged.dir(root, "src")
+      try {
+        import spark.implicits._
+        def writeHalf(rows: Seq[(String, Long)], name: String,
+            mtimeMs: Long): Unit =
+          StreamingQueries.landFile(rows.toDF("k", "sec")
+              .select(col("k"), timestamp_seconds(col("sec")).as("event_time")),
+            stage.resolve(name), Some(mtimeMs))
+        // batch 1: watermark after it = 1100 - 30 = 1070.
+        writeHalf(Seq("A" -> 1000L, "B" -> 1090L, "C" -> 1040L,
+          "D" -> 1100L, "G" -> 1000L), "half0.parquet", 1000000L)
+        // batch 2: runs with watermark 1070 -> its END-of-batch cleanup
+        // evicts A (1030) and boundary C (1070); B (1120) survives.
+        // G's duplicate here is suppressed (state present) and must NOT
+        // refresh the stored expiry. Watermark after this batch = 2970.
+        writeHalf(Seq("F" -> 3000L, "G" -> 3000L), "half1.parquet", 2000000L)
+        // batch 3: every batch-1 key again, plus a fresh key E. B's
+        // state is expired vs watermark 2970 but was never cleaned
+        // (cleanup ran with 1070): does the lookup consult expiry?
+        writeHalf(Seq("A" -> 4000L, "B" -> 4000L, "C" -> 4000L,
+          "E" -> 4000L, "G" -> 4000L), "half2.parquet", 3000000L)
+        val schema = spark.read.parquet(stage.toString).schema
+        val q = spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(stage.toString)
+          .withWatermark("event_time", "30 seconds")
+          .dropDuplicatesWithinWatermark("k")
+          .select("k")
+          .writeStream.format("memory").queryName(sink)
+          .outputMode(OutputMode.Append)
+          .option("checkpointLocation", Staged.dir(root, "ckpt").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        Staged.local(spark, spark.table(sink).groupBy("k").count())
+      } finally {
+        spark.catalog.dropTempView(sink)
+        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       }
-      // batch 1: watermark after it = 1100 - 30 = 1070.
-      writeHalf(Seq("A" -> 1000L, "B" -> 1090L, "C" -> 1040L,
-        "D" -> 1100L, "G" -> 1000L), "half0.parquet", 1000000L)
-      // batch 2: runs with watermark 1070 -> its END-of-batch cleanup
-      // evicts A (1030) and boundary C (1070); B (1120) survives.
-      // G's duplicate here is suppressed (state present) and must NOT
-      // refresh the stored expiry. Watermark after this batch = 2970.
-      writeHalf(Seq("F" -> 3000L, "G" -> 3000L), "half1.parquet", 2000000L)
-      // batch 3: every batch-1 key again, plus a fresh key E. B's
-      // state is expired vs watermark 2970 but was never cleaned
-      // (cleanup ran with 1070): does the lookup consult expiry?
-      writeHalf(Seq("A" -> 4000L, "B" -> 4000L, "C" -> 4000L,
-        "E" -> 4000L, "G" -> 4000L), "half2.parquet", 3000000L)
-      val schema = spark.read.parquet(stage.toString).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withWatermark("event_time", "30 seconds")
-        .dropDuplicatesWithinWatermark("k")
-        .select("k")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val got = spark.table(sink).groupBy("k").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got == Map("A" -> 2L, "B" -> 1L, "C" -> 2L,
-        "D" -> 1L, "E" -> 1L, "F" -> 1L, "G" -> 2L),
-        s"emission counts: $got")
-    } finally {
-      spark.catalog.dropTempView(sink)
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      rmTree(ckpt)
-      rmTree(stage)
     }
+    val got = counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("A" -> 2L, "B" -> 1L, "C" -> 2L,
+      "D" -> 1L, "E" -> 1L, "F" -> 1L, "G" -> 2L),
+      s"emission counts: $got")
   }
 }
