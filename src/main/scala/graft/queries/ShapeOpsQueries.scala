@@ -652,15 +652,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
       val (active, _) = LakeLog.asOf(s, stage.toString, 2)
       val pruned = active.filter { case (_, mn, mx) =>
         mn <= lakePruneHi && mx >= lakePruneLo }
-      s.read.parquet(pruned.map(_._1): _*)
-        .where(col("doc_id").between(lakePruneLo, lakePruneHi))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit(2L).as("version"),
-          lit(active.size.toLong).as("n_active"),
-          lit(pruned.size.toLong).as("n_files_read"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      lakeStats(s.read.parquet(pruned.map(_._1): _*)
+        .where(col("doc_id").between(lakePruneLo, lakePruneHi)),
+        Seq(lit(2L).as("version"), lit(active.size.toLong).as("n_active"),
+          lit(pruned.size.toLong).as("n_files_read")))
     }),
 
     // CHANGE DATA FEED between two lake versions — the incremental-
@@ -686,15 +681,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
         val b = asOfFiles(s, stage.toString, v).toSet
         val (inserts, deletes) = LakeLog.changes(s, (b -- a).toSeq,
           (a -- b).toSeq, Seq("doc_id"))
-        def roll(df: DataFrame, ct: String) = df
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(w.toLong).as("from_version"),
-            lit(v.toLong).as("to_version"), lit(ct).as("change_type"),
-            col("n_rows"),
-            coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-            coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+        def roll(df: DataFrame, ct: String) = lakeStats(df,
+          Seq(lit(w.toLong).as("from_version"), lit(v.toLong).as("to_version"),
+            lit(ct).as("change_type")), zeroEmpty = true)
         roll(inserts, "insert").unionByName(roll(deletes, "delete"))
       }
       cdf(0, 2).unionByName(cdf(2, 3))
@@ -725,13 +714,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .select("doc_id")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$stage/_dv/v2")
-      def roll(df: DataFrame, strategy: String, nFiles: Long) = df
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit(strategy).as("strategy"),
-          lit(nFiles).as("n_files"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      def roll(df: DataFrame, strategy: String, nFiles: Long) = lakeStats(df,
+        Seq(lit(strategy).as("strategy"), lit(nFiles).as("n_files")))
       val cowFiles = asOfFiles(s, stage.toString, 2)
       val cow = s.read.parquet(cowFiles: _*)
       // MoR reads v1's file set (nothing removed) minus the vector
@@ -774,46 +758,18 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // (q278 plans it, q291 executes it) exists to collect.
     "q290_lake_concurrent_commit" -> ((s, dir) => Staged.scratch(s, "q290") { stage =>
       val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      val gran = lakeGranFor(docs(s, dir).count())
       val d = docs(s, dir)
-      // each writer stages its data file BEFORE the dance — data
-      // writes are invisible until a committed manifest references
-      // them, so staging order cannot race
-      def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
-        val p = s"$stage/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(p)
-        val mm = s.read.parquet(p)
-          .agg(min(col("doc_id")), max(col("doc_id"))).head()
-        (p, mm.getLong(0), mm.getLong(1))
-      }
-      val wA = stageFile("wA", d.where(col("doc_id") % 7 === 0))
-      val wB = stageFile("wB", d.where(col("doc_id") % 7 === 3))
-      val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
-        col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
-      val f0rD = stageFile("f0rD", f0r.where(col("doc_id") % 5 =!= 0))
-      val f0rE = stageFile("f0rE", f0r.where(col("doc_id") % 11 =!= 0))
-      def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
-      val writers = Seq(
-        ("A", Seq(add(wA))),
-        ("B", Seq(add(wB))),
-        ("D", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rD))),
-        ("E", Seq(("remove", s"$dataRoot/f0r", -1L, -1L), add(f0rE))))
-      writers.map { case (w, entries) =>
-        val (outcome, v, attempts) =
-          commitLoop(s, stage.toString, 2, entries)
-        if (v >= 0)
-          lakeRollup(s, stage.toString, v.toInt)
-            .select(lit(w).as("writer"), lit(outcome).as("outcome"),
-              col("version"), lit(attempts).as("n_attempts"),
-              col("n_files"), col("n_rows"), col("sum_chars"),
-              col("key_checksum"))
-        else
-          s.range(1).select(lit(w).as("writer"),
-            lit(outcome).as("outcome"), lit(-1L).as("version"),
-            lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
-            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-            lit(0L).as("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("writer")
+      val f0r = f0rRows(d, lakeGranFor(d.count()))
+      def file(name: String, df: DataFrame) =
+        stagedAdd(s, stage.toString, name, df)
+      val rmF0r = LakeLog.remove(s"$dataRoot/f0r")
+      commitRows(s, stage.toString, "writer", Seq(
+        ("A", Seq(file("wA", d.where(col("doc_id") % 7 === 0))), None),
+        ("B", Seq(file("wB", d.where(col("doc_id") % 7 === 3))), None),
+        ("D", Seq(rmF0r, file("f0rD", f0r.where(col("doc_id") % 5 =!= 0))),
+          None),
+        ("E", Seq(rmF0r, file("f0rE", f0r.where(col("doc_id") % 11 =!= 0))),
+          None)))
     }),
 
     // VACUUM EXECUTION — the act face of q278's plan (the suite's
@@ -837,13 +793,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
       allAdds.filterNot(retained)
         .foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
       val v3 = asOfFiles(s, stage.toString, 3)
-      val ok = s.read.parquet(v3: _*)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit("as_of_3").as("probe"), lit(true).as("readable"),
-          lit(v3.length.toLong).as("n_files"), lit(0L).as("n_missing"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"))
+      val ok = lakeStats(s.read.parquet(v3: _*),
+        Seq(lit("as_of_3").as("probe"), lit(true).as("readable"),
+          lit(v3.length.toLong).as("n_files"), lit(0L).as("n_missing")))
       val v2 = asOfFiles(s, stage.toString, 2)
       val missing = v2.count(p =>
         !java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
@@ -851,10 +803,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // skip — `readable` is MEASURED from the attempt
       val failed = scala.util.Try(
         s.read.parquet(v2: _*).agg(count(lit(1))).head()).isFailure
-      val gone = s.range(1).select(lit("as_of_2").as("probe"),
+      val gone = lakeZero(s, Seq(lit("as_of_2").as("probe"),
         lit(!failed).as("readable"), lit(v2.length.toLong).as("n_files"),
-        lit(missing.toLong).as("n_missing"), lit(0L).as("n_rows"),
-        lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
+        lit(missing.toLong).as("n_missing")))
       gone.unionByName(ok).orderBy("probe")
     }),
 
@@ -879,44 +830,22 @@ object ShapeOpsQueries extends graft.QueryFamily {
     // contended version.
     "q297_lake_isolation_levels" -> ((s, dir) => Staged.scratch(s, "q297") { stage =>
       val dataRoot = stageLakeLog(s, dir, stage.toString, withCompaction = false)
-      val gran = lakeGranFor(docs(s, dir).count())
       val d = docs(s, dir)
-      def stageFile(name: String, df: DataFrame): (String, Long, Long) = {
-        val p = s"$stage/$name"
-        df.coalesce(1).write.mode("overwrite").parquet(p)
-        val mm = s.read.parquet(p)
-          .agg(min(col("doc_id")), max(col("doc_id"))).head()
-        (p, mm.getLong(0), mm.getLong(1))
-      }
-      val wApp = stageFile("wApp", d.where(col("doc_id") % 7 === 0))
-      val f0r = d.where(expr(s"doc_id div $gran") === 0 &&
-        col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
-      val f0rW = stageFile("f0rW", f0r.where(col("doc_id") % 5 =!= 0))
-      val f0rS = stageFile("f0rS", f0r.where(col("doc_id") % 11 =!= 0))
-      def add(t: (String, Long, Long)) = ("add", t._1, t._2, t._3)
-      val rmF0r = ("remove", s"$dataRoot/f0r", -1L, -1L)
+      val gran = lakeGranFor(d.count())
+      val f0r = f0rRows(d, gran)
+      def file(name: String, df: DataFrame) =
+        stagedAdd(s, stage.toString, name, df)
+      val rmF0r = LakeLog.remove(s"$dataRoot/f0r")
       // the rewrite's read-set: the g=0 key range it was computed from
       val readRange = (0L, gran - 1L)
-      val runs = Seq(
-        ("append_winner", Seq(add(wApp)), None),
-        ("rewrite_write_serializable", Seq(rmF0r, add(f0rW)), None),
-        ("rewrite_serializable", Seq(rmF0r, add(f0rS)), Some(readRange)))
-      runs.map { case (mode, entries, rr) =>
-        val (outcome, v, attempts) =
-          commitLoop(s, stage.toString, 2, entries, rr)
-        if (v >= 0)
-          lakeRollup(s, stage.toString, v.toInt)
-            .select(lit(mode).as("mode"), lit(outcome).as("outcome"),
-              col("version"), lit(attempts).as("n_attempts"),
-              col("n_files"), col("n_rows"), col("sum_chars"),
-              col("key_checksum"))
-        else
-          s.range(1).select(lit(mode).as("mode"),
-            lit(outcome).as("outcome"), lit(-1L).as("version"),
-            lit(attempts).as("n_attempts"), lit(0L).as("n_files"),
-            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-            lit(0L).as("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("mode")
+      commitRows(s, stage.toString, "mode", Seq(
+        ("append_winner",
+          Seq(file("wApp", d.where(col("doc_id") % 7 === 0))), None),
+        ("rewrite_write_serializable",
+          Seq(rmF0r, file("f0rW", f0r.where(col("doc_id") % 5 =!= 0))), None),
+        ("rewrite_serializable",
+          Seq(rmF0r, file("f0rS", f0r.where(col("doc_id") % 11 =!= 0))),
+          Some(readRange))))
     }),
 
     // RIGHT-TO-BE-FORGOTTEN — the governance composition every lake
@@ -953,14 +882,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
       require(LakeLog.commit(s, stage.toString, 3,
         Seq(("dv", s"$stage/_dv/v3", LakeLog.NoStats, LakeLog.NoStats))))
       val v2Files = asOfFiles(s, stage.toString, 2)
-      def rollOver(df: DataFrame, phase: String, nFiles: Long) = df
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit(phase).as("phase"), lit(nFiles).as("n_files"),
-          col("n_rows"),
-          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-          coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+      def rollOver(df: DataFrame, phase: String, nFiles: Long) = lakeStats(df,
+        Seq(lit(phase).as("phase"), lit(nFiles).as("n_files")),
+        zeroEmpty = true)
       val dv = s.read.parquet(s"$stage/_dv/v3")
       val v3Read = s.read.parquet(v2Files: _*)
         .join(dv, Seq("doc_id"), "left_anti")
@@ -1114,16 +1038,12 @@ object ShapeOpsQueries extends graft.QueryFamily {
         val matches =
           active.map(_._1).toSet ==
             LakeLog.fullFold(s, stage.toString, v).toSet
-        s.read.parquet(active.map(_._1): _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(v.toLong).as("version"),
+        lakeStats(s.read.parquet(active.map(_._1): _*),
+          Seq(lit(v.toLong).as("version"),
             lit((v + 1).toLong).as("n_manifests_full"),
             lit(nCkptReads).as("n_manifests_ckpt"),
             lit(matches).as("ckpt_matches_fold"),
-            lit(active.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(active.size.toLong).as("n_files")))
       }.reduce(_ unionByName _).orderBy("version")
     }),
 
@@ -1207,17 +1127,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
           (col("doc_id") / lit(kGran)).cast("long"))
         .distinct().count()
       def statRow(name: String, nFiles: Long) =
-        s.range(1).select(lit(name).as("stage"),
-          lit(nFiles).as("n_files"), lit(0L).as("n_rows"),
-          lit(0L).as("sum_chars"), lit(0L).as("key_checksum"))
-      val readRow = matched
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit("e_read").as("stage"),
-          lit(chKept.length.toLong).as("n_files"), col("n_rows"),
-          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"),
-          coalesce(col("key_checksum"), lit(0L)).as("key_checksum"))
+        lakeZero(s, Seq(lit(name).as("stage"), lit(nFiles).as("n_files")))
+      val readRow = lakeStats(matched, Seq(lit("e_read").as("stage"),
+        lit(chKept.length.toLong).as("n_files")), zeroEmpty = true)
       statRow("a_all_files", manifest.length.toLong)
         .unionByName(statRow("b_key_pruned", keyKept.length.toLong))
         .unionByName(statRow("c_source_pruned", srcKept.length.toLong))
@@ -1261,17 +1173,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
           doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
         // the reader's read AFTER the decision — intact on refusal,
         // intact on execution (its snapshot was conflict-free)
-        s.read.parquet(readerFiles: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("scenario"), lit(3L).as("boundary"),
+        lakeStats(s.read.parquet(readerFiles: _*),
+          Seq(lit(name).as("scenario"), lit(3L).as("boundary"),
             lit(readerV.toLong).as("reader_version"),
             lit(doomed.size.toLong).as("n_doomed"),
             lit(conflicts.toLong).as("n_conflicts"),
             lit(outcome).as("outcome"),
-            lit(readerFiles.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(readerFiles.size.toLong).as("n_files")))
       }
       // scenario a materializes BEFORE scenario b's sweep deletes
       // the very files it read
@@ -1314,24 +1222,18 @@ object ShapeOpsQueries extends graft.QueryFamily {
       probes.map { case (name, t) =>
         val v = resolveTs(t)
         if (v < 0)
-          s.range(1).select(lit(name).as("probe"),
+          lakeZero(s, Seq(lit(name).as("probe"),
             lit(t).as("probe_ts"), lit(-1L).as("version"),
             lit("no_snapshot_at_ts").as("outcome"),
-            lit(0L).as("n_manifests_ckpt"), lit(0L).as("n_files"),
-            lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-            lit(0L).as("key_checksum"))
+            lit(0L).as("n_manifests_ckpt"), lit(0L).as("n_files")))
         else {
           val (files, nReads) = LakeLog.asOf(s, stage.toString, v)
-          s.read.parquet(files.map(_._1): _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("n_chars").cast("long")).as("sum_chars"),
-              sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-            .select(lit(name).as("probe"), lit(t).as("probe_ts"),
+          lakeStats(s.read.parquet(files.map(_._1): _*),
+            Seq(lit(name).as("probe"), lit(t).as("probe_ts"),
               lit(v).as("version"),
               lit("resolved").as("outcome"),
               lit(nReads).as("n_manifests_ckpt"),
-              lit(files.size.toLong).as("n_files"),
-              col("n_rows"), col("sum_chars"), col("key_checksum"))
+              lit(files.size.toLong).as("n_files")))
         }
       }.reduce(_ unionByName _).orderBy("probe")
     }),
@@ -1369,25 +1271,19 @@ object ShapeOpsQueries extends graft.QueryFamily {
           content: Option[(Seq[String], Long)]): DataFrame =
         content match {
           case Some((files, nReads)) =>
-            s.read.parquet(files: _*)
-              .agg(count(lit(1)).as("n_rows"),
-                sum(col("n_chars").cast("long")).as("sum_chars"),
-                sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-              .select(lit(name).as("probe"), lit(outcome).as("outcome"),
+            lakeStats(s.read.parquet(files: _*),
+              Seq(lit(name).as("probe"), lit(outcome).as("outcome"),
                 lit(v).as("version"),
                 lit(before).as("n_manifests_before"),
                 lit(after).as("n_manifests_after"),
                 lit(nReads).as("n_manifests_read"),
-                lit(files.size.toLong).as("n_files"), col("n_rows"),
-                col("sum_chars"), col("key_checksum"))
+                lit(files.size.toLong).as("n_files")))
           case None =>
-            s.range(1).select(lit(name).as("probe"),
+            lakeZero(s, Seq(lit(name).as("probe"),
               lit(outcome).as("outcome"), lit(v).as("version"),
               lit(before).as("n_manifests_before"),
               lit(after).as("n_manifests_after"),
-              lit(0L).as("n_manifests_read"), lit(0L).as("n_files"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
+              lit(0L).as("n_manifests_read"), lit(0L).as("n_files")))
         }
       val latest = {
         val (files, nReads) = LakeLog.asOf(s, stage.toString, 3)
@@ -1580,21 +1476,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
           col("doc_id") >= l && col("doc_id") <= h }
           .getOrElse(lit(true)) &&
           col("n_chars") >= chR._1 && col("n_chars") <= chR._2
-        val read =
-          if (pass.isEmpty) s.range(1)
-            .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-              lit(0L).as("key_checksum"))
-          else s.read
-            .parquet(pass.map(f => s"$stage/$lname/f=$f"): _*)
-            .where(pred)
-            .agg(count(lit(1)).as("n_rows"),
-              coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
-              coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-                .as("key_checksum"))
-        read.select(lit(pname).as("probe"), lit(lname).as("layout"),
+        val labels = Seq(lit(pname).as("probe"), lit(lname).as("layout"),
           lit(st.length.toLong).as("n_files_total"),
-          lit(pass.length.toLong).as("n_files_pass"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"))
+          lit(pass.length.toLong).as("n_files_pass"))
+        if (pass.isEmpty) lakeZero(s, labels)
+        else lakeStats(s.read
+          .parquet(pass.map(f => s"$stage/$lname/f=$f"): _*)
+          .where(pred), labels, zeroEmpty = true)
       }).reduce(_ unionByName _).orderBy("probe", "layout")
     }),
 
@@ -1678,20 +1566,12 @@ object ShapeOpsQueries extends graft.QueryFamily {
         hits.map { case (p, _, _) => LakeLog.remove(p) } ++
           rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
       // the post-merge snapshot, resolved from the log
-      s.read
-        .parquet(asOfFiles(s, stage.toString, 3): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
-          sum(col("doc_id") * col("n_chars").cast("long"))
-            .as("mix_checksum"))
-        .select(lit(active.size.toLong).as("n_files_active"),
+      lakeStats(s.read.parquet(asOfFiles(s, stage.toString, 3): _*),
+        Seq(lit(active.size.toLong).as("n_files_active"),
           lit(cands.size.toLong).as("n_files_cand_stats"),
           lit(hits.size.toLong).as("n_files_rewritten"),
           lit(nUpd).as("n_rows_updated"),
-          lit(50L).as("n_rows_inserted"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"),
-          col("mix_checksum"))
+          lit(50L).as("n_rows_inserted")), extra = mixChecksum)
     }),
 
     // PARTITION EVOLUTION — Iceberg's signature capability (spec v2
@@ -1765,16 +1645,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
           col("doc_id") >= l && col("doc_id") <= h }
           .getOrElse(lit(true)) &&
           srcEq.map(col("source") === _).getOrElse(lit(true))
-        s.read.parquet(files: _*).where(pred)
-          .agg(count(lit(1)).as("n_rows"),
-            coalesce(sum(col("n_chars").cast("long")), lit(0L))
-              .as("sum_chars"),
-            coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-              .as("key_checksum"))
-          .select(lit(name).as("probe"),
+        lakeStats(s.read.parquet(files: _*).where(pred),
+          Seq(lit(name).as("probe"),
             lit(manifest.length.toLong).as("n_files_total"),
-            lit(files.size.toLong).as("n_files_scanned"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(files.size.toLong).as("n_files_scanned")), zeroEmpty = true)
       }
       probe("a_id_range", Some((lo, hi)), None)
         .unionByName(probe("b_source_eq", None, Some(srcPick)))
@@ -1906,15 +1780,11 @@ object ShapeOpsQueries extends graft.QueryFamily {
       def read(name: String, v: Int, nAdds: Long,
           nRemoves: Long): DataFrame = {
         val files = asOfFiles(s, stage.toString, v)
-        s.read.parquet(files: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("probe"),
+        lakeStats(s.read.parquet(files: _*),
+          Seq(lit(name).as("probe"),
             lit(nAdds).as("n_restore_adds"),
             lit(nRemoves).as("n_restore_removes"),
-            lit(files.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(files.size.toLong).as("n_files")))
       }
       read("a_latest_restored", 3,
           adds.size.toLong, removes.size.toLong)
@@ -1986,20 +1856,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
         .write.mode("overwrite").parquet(LakeLog.statsPath(stage.toString, 3))
       val (lo2, hi2) = (maxCh / 4, maxCh / 2)
       def probe(name: String, files: Seq[String], pred: Column,
-          nTot: Long, nPass: Long): DataFrame =
-        (if (files.isEmpty) s.range(1)
-          .select(lit(0L).as("n_rows"), lit(0L).as("sum_chars"),
-            lit(0L).as("key_checksum"))
-        else s.read.parquet(files: _*).where(pred)
-          .agg(count(lit(1)).as("n_rows"),
-            coalesce(sum(col("n_chars").cast("long")), lit(0L))
-              .as("sum_chars"),
-            coalesce(sum(expr(manifestTerm("doc_id"))), lit(0L))
-              .as("key_checksum")))
-          .select(lit(name).as("probe"),
-            lit(nTot).as("n_files_total"),
-            lit(nPass).as("n_files_pass"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+          nTot: Long, nPass: Long): DataFrame = {
+        val labels = Seq(lit(name).as("probe"),
+          lit(nTot).as("n_files_total"), lit(nPass).as("n_files_pass"))
+        if (files.isEmpty) lakeZero(s, labels)
+        else lakeStats(s.read.parquet(files: _*).where(pred), labels,
+          zeroEmpty = true)
+      }
       // a: the pre-optimize version — OLD layout, content intact
       val a = probe("a_asof_v2", asOfFiles(s, stage.toString, 2),
         lit(true), active.size.toLong, active.size.toLong)
@@ -2096,21 +1959,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
       require(LakeLog.commit(s, stage.toString, 3,
         hits.map { case (p, _, _) => LakeLog.remove(p) } ++
           rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
-      s.read
-        .parquet(asOfFiles(s, stage.toString, 3): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"),
-          sum(col("doc_id") * col("n_chars").cast("long"))
-            .as("mix_checksum"))
-        .select(lit(active.size.toLong).as("n_files_active"),
+      lakeStats(s.read.parquet(asOfFiles(s, stage.toString, 3): _*),
+        Seq(lit(active.size.toLong).as("n_files_active"),
           lit(cands.size.toLong).as("n_files_cand_stats"),
           lit(hits.size.toLong).as("n_files_rewritten"),
           lit(nUpd).as("n_rows_updated"),
           lit(nDel).as("n_rows_deleted"),
-          lit(50L).as("n_rows_inserted"),
-          col("n_rows"), col("sum_chars"), col("key_checksum"),
-          col("mix_checksum"))
+          lit(50L).as("n_rows_inserted")), extra = mixChecksum)
     }),
 
     // SHALLOW CLONE (zero-copy table clone) — Delta's CLONE ... SHALLOW:
@@ -2156,13 +2011,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
       append(stage.toString, "source_app", maxId + 50)
       def read(name: String, root: String, v: Int): DataFrame = {
         val files = asOfFiles(s, root, v)
-        s.read.parquet(files: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("probe"),
-            lit(files.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+        lakeStats(s.read.parquet(files: _*),
+          Seq(lit(name).as("probe"), lit(files.size.toLong).as("n_files")))
       }
       read("a_clone_at_clone_time", cloneRoot.toString, 2)
         .unionByName(read("b_clone_latest", cloneRoot.toString, 3))
@@ -2215,17 +2065,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
         val outcome = if (conflicts > 0) "refused" else "executed"
         if (conflicts == 0)
           doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
-        s.read.parquet(cloneFiles: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("probe"),
+        lakeStats(s.read.parquet(cloneFiles: _*),
+          Seq(lit(name).as("probe"),
             lit(doomed.size.toLong).as("n_doomed"),
             lit(cloneFiles.size.toLong).as("n_clone_files"),
             lit(conflicts.toLong).as("n_conflicts"),
             lit(outcome).as("outcome"),
-            lit(cloneFiles.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(cloneFiles.size.toLong).as("n_files")))
       }
       // a: clone pinned at its fork snapshot — every file conflicts
       val a = Staged.local(s, scenario("a_refused_clone_pinned", 2))
@@ -2246,16 +2092,12 @@ object ShapeOpsQueries extends graft.QueryFamily {
       val b = Staged.local(s, scenario("b_executed_clone_compacted", 3))
       // c: the source's latest read survives the sweep too
       val srcFiles = asOfFiles(s, stage.toString, 3)
-      val c = Staged.local(s, s.read.parquet(srcFiles: _*)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars").cast("long")).as("sum_chars"),
-          sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-        .select(lit("c_source_latest").as("probe"),
+      val c = Staged.local(s, lakeStats(s.read.parquet(srcFiles: _*),
+        Seq(lit("c_source_latest").as("probe"),
           lit(doomed.size.toLong).as("n_doomed"),
           lit(1L).as("n_clone_files"), lit(0L).as("n_conflicts"),
           lit("executed").as("outcome"),
-          lit(srcFiles.size.toLong).as("n_files"),
-          col("n_rows"), col("sum_chars"), col("key_checksum")))
+          lit(srcFiles.size.toLong).as("n_files"))))
       a.unionByName(b).unionByName(c).orderBy("probe")
     }),
 
@@ -2305,13 +2147,10 @@ object ShapeOpsQueries extends graft.QueryFamily {
         2 -> "char_count")
       def row(name: String, v: Int, files: Seq[String]): DataFrame = {
         val (df, schema) = readAt(v, files)
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(col(measureOf(v)).cast("long")).as("sum_measure"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("probe"), lit(v.toLong).as("version"),
-            lit(schema).as("logical_schema"),
-            lit(files.size.toLong).as("n_files"), col("n_rows"),
-            col("sum_measure"), col("key_checksum"))
+        lakeStats(df, Seq(lit(name).as("probe"), lit(v.toLong).as("version"),
+          lit(schema).as("logical_schema"),
+          lit(files.size.toLong).as("n_files")),
+          measure = measureOf(v), sumAs = "sum_measure")
       }
       row("a_v0_original_name", 0, Seq(s"$stage/f0"))
         .unionByName(row("b_v1_renamed_same_bytes", 1,
@@ -2376,17 +2215,14 @@ object ShapeOpsQueries extends graft.QueryFamily {
         val logical = s.read.parquet(files: _*)
           .select(mapping.toSeq.sortBy(_._1)
             .map { case (l, p) => col(p).as(l) }: _*)
-        logical
+        lakeStats(logical
           .where(col("doc_id").between(keyLo, keyHi) &&
-            col(measure) >= measureMin)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col(measure).cast("long")).as("sum_measure"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("probe"), lit(v.toLong).as("version"),
+            col(measure) >= measureMin),
+          Seq(lit(name).as("probe"), lit(v.toLong).as("version"),
             lit(stats.size.toLong).as("n_files_total"),
             lit(afterKey.size.toLong).as("n_files_after_key"),
-            lit(afterMeasure.size.toLong).as("n_files_after_measure"),
-            col("n_rows"), col("sum_measure"), col("key_checksum"))
+            lit(afterMeasure.size.toLong).as("n_files_after_measure")),
+          measure = measure, sumAs = "sum_measure")
       }
       probe("a_pre_rename", 0, "n_chars")
         .unionByName(probe("b_post_rename", 1, "char_count"))
@@ -2435,19 +2271,15 @@ object ShapeOpsQueries extends graft.QueryFamily {
         doomed.foreach(p => FileUtils.deleteRecursively(java.nio.file.Paths.get(p)))
         val residue = doomed.count(ckptFiles())
         val (files, nReads) = LakeLog.asOf(s, stage.toString, boundary)
-        s.read.parquet(files.map(_._1): _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars").cast("long")).as("sum_chars"),
-            sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-          .select(lit(name).as("scenario"),
+        lakeStats(s.read.parquet(files.map(_._1): _*),
+          Seq(lit(name).as("scenario"),
             lit(boundary.toLong).as("boundary"),
             lit(doomed.size.toLong).as("n_doomed"),
             lit(conflicted.toLong).as("n_doomed_in_live_ckpt"),
             lit(action).as("action"),
             lit(residue.toLong).as("n_doomed_in_ckpt_after"),
             lit(nReads).as("n_manifests_ckpt"),
-            lit(files.size.toLong).as("n_files"),
-            col("n_rows"), col("sum_chars"), col("key_checksum"))
+            lit(files.size.toLong).as("n_files")))
       }
       // scenario a: the committer checkpointed at v2; the v3
       // compaction swap then dooms every file ckpt-v2 references
@@ -2485,13 +2317,13 @@ object ShapeOpsQueries extends graft.QueryFamily {
     * same granule: max(100, n_docs div 50).
     */
   private val lakeGran = 100L
-  private def lakeGranFor(nDocs: Long): Long =
+  private[graft] def lakeGranFor(nDocs: Long): Long =
     math.max(lakeGran, nDocs / 50L)
 
   /** The granule as a DuckDB scalar subquery — the oracle's twin of
     * [[lakeGranFor]].
     */
-  private val sqlLakeG =
+  private[graft] val sqlLakeG =
     s"(SELECT GREATEST($lakeGran, COUNT(*) // 50) FROM documents)"
 
   /** q279 pruned-read key range: at the gate SFs (granule 100) it
@@ -2695,12 +2527,87 @@ object ShapeOpsQueries extends graft.QueryFamily {
     res.get
   }
 
+  /** The v2 copy-on-write rewrite's rows (g = 0, even ids) — the file
+    * q290/q297's rewriting writers start from.
+    */
+  private def f0rRows(d: DataFrame, gran: Long): DataFrame =
+    d.where(expr(s"doc_id div $gran") === 0 &&
+      col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0)
+
+  /** One q290/q297 writer's data file and its add entry (with the
+    * file's doc_id stats). Each writer stages its file BEFORE the
+    * commit dance: data writes are invisible until a committed
+    * manifest references them, so staging order cannot race.
+    */
+  private def stagedAdd(s: SparkSession, stage: String, name: String,
+      df: DataFrame): LakeLog.Entry = {
+    val p = s"$stage/$name"
+    df.coalesce(1).write.mode("overwrite").parquet(p)
+    val mm = s.read.parquet(p)
+      .agg(min(col("doc_id")), max(col("doc_id"))).head()
+    LakeLog.add(p, mm.getLong(0), mm.getLong(1))
+  }
+
+  /** q290/q297's result: each writer runs [[commitLoop]] from snapshot
+    * v2 (in order), and reports its outcome, committed version,
+    * attempts and the as-of rollup at that version — an aborted writer
+    * reports version -1 and zero content.
+    */
+  private def commitRows(s: SparkSession, stage: String, label: String,
+      writers: Seq[(String, Seq[LakeLog.Entry], Option[(Long, Long)])])
+      : DataFrame =
+    writers.map { case (w, entries, readRange) =>
+      val (outcome, v, attempts) =
+        commitLoop(s, stage, 2, entries, readRange)
+      val labels = Seq(lit(w).as(label), lit(outcome).as("outcome"))
+      if (v >= 0)
+        lakeRollup(s, stage, v.toInt).select(labels ++ Seq(col("version"),
+          lit(attempts).as("n_attempts"), col("n_files"), col("n_rows"),
+          col("sum_chars"), col("key_checksum")): _*)
+      else lakeZero(s, labels ++ Seq(lit(-1L).as("version"),
+        lit(attempts).as("n_attempts"), lit(0L).as("n_files")))
+    }.reduce(_ unionByName _).orderBy(label)
+
   /** The as-of(v) active files — [[LakeLog.asOf]]'s paths, the shared
     * snapshot path every lake gate reads through.
     */
   private[graft] def asOfFiles(
       s: SparkSession, stage: String, v: Int): Seq[String] =
     LakeLog.files(s, stage, v)
+
+  /** The lake tier's content rollup — ONE definition for every lake
+    * gate: after the caller's label columns, the row count, the sum of
+    * `measure` (as `sumAs`) and the q267 order-independent key
+    * checksum. `zeroEmpty` reads an empty input's sums as 0, not null;
+    * `extra` aggregates ride the same pass and follow the triple.
+    */
+  private def lakeStats(df: DataFrame, labels: Seq[Column],
+      zeroEmpty: Boolean = false, measure: String = "n_chars",
+      sumAs: String = "sum_chars",
+      extra: Seq[(String, Column)] = Nil): DataFrame = {
+    def out(c: String) =
+      if (zeroEmpty) coalesce(col(c), lit(0L)).as(c) else col(c)
+    df.agg(count(lit(1)).as("n_rows"),
+        sum(col(measure).cast("long")).as(sumAs) +:
+          sum(expr(manifestTerm("doc_id"))).as("key_checksum") +:
+          extra.map { case (n, c) => c.as(n) }: _*)
+      .select(labels ++ Seq(col("n_rows"), out(sumAs), out("key_checksum")) ++
+        extra.map(e => col(e._1)): _*)
+  }
+
+  /** [[lakeStats]]'s row for a read that does not happen (an aborted
+    * writer, an unresolvable snapshot, an empty pruned file set).
+    */
+  private def lakeZero(s: SparkSession, labels: Seq[Column]): DataFrame =
+    s.range(1).select(labels ++ Seq(lit(0L).as("n_rows"),
+      lit(0L).as("sum_chars"), lit(0L).as("key_checksum")): _*)
+
+  /** The MERGE gates' (q321/q324) row-binding checksum beside
+    * [[lakeStats]]'s key checksum: an update that moved chars between
+    * rows keeps `sum_chars` but shifts this.
+    */
+  private val mixChecksum =
+    Seq("mix_checksum" -> sum(col("doc_id") * col("n_chars").cast("long")))
 
   /** One version's gated rollup over its RESOLVED file set: row
     * count, char sum, and the q267 key checksum (the per-version
@@ -2709,13 +2616,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
   private def lakeRollup(
       s: SparkSession, stage: String, v: Int): DataFrame = {
     val files = asOfFiles(s, stage, v)
-    s.read.parquet(files: _*)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("n_chars").cast("long")).as("sum_chars"),
-        sum(expr(manifestTerm("doc_id"))).as("key_checksum"))
-      .select(lit(v.toLong).as("version"),
-        lit(files.length.toLong).as("n_files"),
-        col("n_rows"), col("sum_chars"), col("key_checksum"))
+    lakeStats(s.read.parquet(files: _*), Seq(lit(v.toLong).as("version"),
+      lit(files.length.toLong).as("n_files")))
   }
 
   /** One version row of the q274/q275 oracle: the version's logical

@@ -197,10 +197,11 @@ object SimilarityQueries extends graft.QueryFamily {
       .map(_.getSeq[Long](0).toArray)
 
   /** The IVF centroid set (id, vector, norm²) fetched once to the
-    * driver — the q37 convention, split out of [[ivfPqTopN]] so the
-    * q260/q271 scoreboards fetch the model artifacts ONCE and thread
-    * them through their three IVF-PQ tiers (`cbOpt`/`centsOpt`)
-    * instead of paying a driver collect job per tier.
+    * driver — the q37 convention and the one centroid fetch of every
+    * IVF gate. The q260/q271 scoreboards fetch the model artifacts
+    * ONCE and thread them through their three IVF-PQ tiers
+    * (`cbOpt`/`centsOpt`) instead of paying a driver collect job per
+    * tier.
     */
   private[graft] def ivfCents(
       s: SparkSession, dir: String): Seq[(Long, Array[Double], Double)] =
@@ -226,6 +227,43 @@ object SimilarityQueries extends graft.QueryFamily {
   private def pqBest(mq: Column, cb: Array[Array[Long]], m: Int): Column =
     array_min(array(cb.indices.map(c =>
       struct(pqSubDist(mq, cb(c), m).as("d"), lit(c).as("c"))): _*))
+
+  /** The nearest-codeword index of every subspace of `mq` — the codes
+    * array an ADC scan reads.
+    */
+  private def pqCodes(mq: Column, cb: Array[Array[Long]]): Column =
+    array((0 until pqM).map(m => pqBest(mq, cb, m).getField("c")): _*)
+
+  /** A probe's ADC table `pd`: each subspace's distance to every
+    * codeword, m-major (pqM × pqK longs), computed once per probe.
+    */
+  private def pqTable(mq: Column, cb: Array[Array[Long]]): Column =
+    array((0 until pqM).flatMap(m =>
+      cb.indices.map(c => pqSubDist(mq, cb(c), m))): _*)
+
+  /** The asymmetric distance of a candidate's `codes` under its
+    * probe's table `pd`: pqM lookups + adds, never a float dot.
+    */
+  private def pqAdc: Column = (0 until pqM).map(m =>
+    element_at(col("pd"), lit(m * pqK + 1) + element_at(col("codes"), m + 1)))
+    .reduce(_ + _)
+
+  /** `frame`'s `keep` columns plus the PQ encode of its milli vector
+    * `mq`: packed_code (2 bits per subspace) and qerr (the summed
+    * nearest-codeword distances) — the one encode of q168, q195 and the
+    * cell-code rows.
+    */
+  private def pqEncoded(frame: DataFrame, mq: String,
+      cb: Array[Array[Long]], keep: Seq[String]): DataFrame = {
+    val bests = (0 until pqM).map(m => pqBest(col(mq), cb, m).as(s"b$m"))
+    frame.select(keep.map(col) ++ bests: _*)
+      .select(keep.map(col) ++ Seq(
+        (0 until pqM).map(m =>
+          col(s"b$m").getField("c").cast("long") * lit(1L << (2 * m)))
+          .reduce(_ + _).as("packed_code"),
+        (0 until pqM).map(m => col(s"b$m").getField("d"))
+          .reduce(_ + _).as("qerr")): _*)
+  }
 
   /** Shared oracle CTEs: milli components, codebook (c = vec_id rank),
     * per-(vec, subspace, codeword) distances, argmin codes. One string,
@@ -524,9 +562,7 @@ object SimilarityQueries extends graft.QueryFamily {
     val assigned = corpus.select(col("vec_id"),
       milliQ(col("embedding")).as("mq"), (-best.getField("nid")).as("cell"))
     val codes = lastIvfPqCodes.swap(assigned
-      .select(col("vec_id"), col("cell"),
-        array((0 until pqM).map(m =>
-          pqBest(col("mq"), cb, m).getField("c")): _*).as("codes"))
+      .select(col("vec_id"), col("cell"), pqCodes(col("mq"), cb).as("codes"))
       .cache())
     // canonical probe base (probe_id, mq milli, pv vector, pn2): the
     // corpus slice by default, or q271's planted frame — the SAME
@@ -545,22 +581,13 @@ object SimilarityQueries extends graft.QueryFamily {
         explode(topCellsArr(col("pv"), col("pn2"), centsD, nprobe))
           .as("pc"))
       .select(col("probe_id"), (-col("pc.nid")).as("pcell"),
-        array((0 until pqM).flatMap(m => cb.indices.map(c =>
-          pqSubDist(col("mq"), cb(c), m))): _*).as("pd"))
-    val adc = (0 until pqM).map(m =>
-      element_at(col("pd"),
-        lit(m * pqK + 1) + element_at(col("codes"), m + 1)))
-      .reduce(_ + _)
+        pqTable(col("mq"), cb).as("pd"))
     val scored = codes
       .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice x nprobe<=8 cells carrying 32-long ADC tables)
         col("cell") === col("pcell") && col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("cell"),
-        adc.as("adc_dist"))
-    val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("adc_dist" -> false, "vec_id" -> false), topN)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(asc("adc_dist"), asc("vec_id"))
-    top.withColumn("rn", row_number().over(w))
+        pqAdc.as("adc_dist"))
+    rankedTop(scored, topN, "adc_dist", high = false)
   }
 
   private def ivfPqTop(s: SparkSession, dir: String): DataFrame =
@@ -590,24 +617,11 @@ object SimilarityQueries extends graft.QueryFamily {
       probesOpt: Option[DataFrame] = None): DataFrame = {
     val shortlist = shortlistRanked.select(col("probe_id"), col("vec_id"))
     val corpus = emb(s, dir)
-    val probes = probesOpt match {
-      case None => corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      case Some(pp) => pp.select(col("probe_id"), col("pvec").as("pe"),
-        col("pn2"))
-    }
     val cands = corpus
       .join(broadcast(shortlist), Seq("vec_id"))  // hint audit: probe-bounded (<= probes x r shortlist rows)
-      .join(broadcast(probes), Seq("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
-    val top = graft.plans.TopK.perGroup(cands, Seq("probe_id"),
-      Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    top.withColumn("rn", row_number().over(w))
+      .join(broadcast(probesFor(corpus, probesOpt)), Seq("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
+      .select(col("probe_id"), col("vec_id"), probeCosine.as("cosine"))
+    rankedTop(cands, pqTopK)
   }
 
   /** q168's encode as a parametric frame (vec_id, packed_code, qerr):
@@ -619,16 +633,9 @@ object SimilarityQueries extends graft.QueryFamily {
     */
   private[graft] def pqEncodeFrame(
       s: SparkSession, dir: String, cb: Array[Array[Long]]): DataFrame = {
-    val base = Tables(s, dir, "embeddings")
-      .select(col("vec_id"), milliQ(col("embedding")).as("mq"))
-    val bests = (0 until pqM).map(m => pqBest(col("mq"), cb, m).as(s"b$m"))
-    base.select(col("vec_id") +: bests: _*)
-      .select(col("vec_id"),
-        (0 until pqM).map(m =>
-          col(s"b$m").getField("c").cast("long") * lit(1L << (2 * m)))
-          .reduce(_ + _).as("packed_code"),
-        (0 until pqM).map(m => col(s"b$m").getField("d"))
-          .reduce(_ + _).as("qerr"))
+    pqEncoded(Tables(s, dir, "embeddings")
+      .select(col("vec_id"), milliQ(col("embedding")).as("mq")), "mq", cb,
+      Seq("vec_id"))
   }
 
   /** q181's Lloyd refresh step as a parametric frame
@@ -639,9 +646,7 @@ object SimilarityQueries extends graft.QueryFamily {
       s: SparkSession, dir: String, cb: Array[Array[Long]]): DataFrame = {
     val withCodes = Tables(s, dir, "embeddings")
       .select(milliQ(col("embedding")).as("mq"))
-      .select(col("mq"),
-        array((0 until pqM).map(m =>
-          pqBest(col("mq"), cb, m).getField("c")): _*).as("codes"))
+      .select(col("mq"), pqCodes(col("mq"), cb).as("codes"))
     withCodes
       .select(col("codes"), posexplode(col("mq")).as(Seq("pos", "v")))
       .select(expr(s"pos div $pqSub").cast("long").as("m"),
@@ -691,13 +696,7 @@ object SimilarityQueries extends graft.QueryFamily {
       : (DataFrame, Array[Array[Long]],
          Seq[(Long, Array[Double], Double)], DataFrame) = {
     val corpus = emb(s, dir)
-    val centsD: Seq[(Long, Array[Double], Double)] = centsOpt.getOrElse(
-      corpus
-        .where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray,
-          r.getDouble(2))).toSeq)
+    val centsD = centsOpt.getOrElse(ivfCents(s, dir))
     import s.implicits._
     val centMilli = centsD.map { case (id, ce, _) =>
       (id, ce.map(v => math.floor(v * 1000).toLong).toSeq)
@@ -724,9 +723,7 @@ object SimilarityQueries extends graft.QueryFamily {
   private[graft] def resPqTotalQerr(s: SparkSession, dir: String,
       centsOpt: Option[Seq[(Long, Array[Double], Double)]] = None): Long = {
     val (assigned, cbRes, _, _) = resAssigned(s, dir, centsOpt)
-    assigned.select(
-      (0 until pqM).map(m => pqBest(col("rq"), cbRes, m).getField("d"))
-        .reduce(_ + _).as("qerr"))
+    pqEncoded(assigned, "rq", cbRes, Nil)
       .agg(sum(col("qerr"))).head().getLong(0)
   }
 
@@ -742,9 +739,7 @@ object SimilarityQueries extends graft.QueryFamily {
       s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val (assigned, cbRes, centsD, centMilli) = resAssigned(s, dir)
     val codes = lastResPqCodes.swap(assigned
-      .select(col("vec_id"), col("cell"),
-        array((0 until pqM).map(m =>
-          pqBest(col("rq"), cbRes, m).getField("c")): _*).as("codes"))
+      .select(col("vec_id"), col("cell"), pqCodes(col("rq"), cbRes).as("codes"))
       .cache())
     val probes = emb(s, dir).where(probeSlice(61))
       .select(col("vec_id").as("probe_id"),
@@ -755,23 +750,13 @@ object SimilarityQueries extends graft.QueryFamily {
       .join(broadcast(centMilli.withColumnRenamed("cell", "pcell")), "pcell")  // hint audit: dimension-bounded (8-row centroid-milli frame)
       .select(col("probe_id"), col("pcell"),
         zip_with(col("mq"), col("cmq"), (a, b) => a - b).as("rq"))
-      .select(col("probe_id"), col("pcell"),
-        array((0 until pqM).flatMap(m => cbRes.indices.map(k =>
-          pqSubDist(col("rq"), cbRes(k), m))): _*).as("pd"))
-    val adc = (0 until pqM).map(m =>
-      element_at(col("pd"),
-        lit(m * pqK + 1) + element_at(col("codes"), m + 1)))
-      .reduce(_ + _)
+      .select(col("probe_id"), col("pcell"), pqTable(col("rq"), cbRes).as("pd"))
     val scored = codes
       .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice x nprobe<=8 cells carrying 32-long ADC tables)
         col("cell") === col("pcell") && col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("cell"),
-        adc.as("adc_dist"))
-    val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("adc_dist" -> false, "vec_id" -> false), pqTopK)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(asc("adc_dist"), asc("vec_id"))
-    top.withColumn("rn", row_number().over(w))
+        pqAdc.as("adc_dist"))
+    rankedTop(scored, pqTopK, "adc_dist", high = false)
   }
 
   /** (vec_id, cell, packed_code, qerr) for any embeddings frame,
@@ -783,17 +768,8 @@ object SimilarityQueries extends graft.QueryFamily {
   private def pqCellCodeRows(frame: DataFrame, cb: Array[Array[Long]],
       centsD: Seq[(Long, Array[Double], Double)]): DataFrame = {
     val best = bestCell(col("embedding"), col("n2"), centsD)
-    val bests = (0 until pqM).map(m => pqBest(col("mq"), cb, m).as(s"b$m"))
-    frame
-      .select(col("vec_id"), milliQ(col("embedding")).as("mq"),
-        (-best.getField("nid")).as("cell"))
-      .select(col("vec_id") +: col("cell") +: bests: _*)
-      .select(col("vec_id"), col("cell"),
-        (0 until pqM).map(m =>
-          col(s"b$m").getField("c").cast("long") * lit(1L << (2 * m)))
-          .reduce(_ + _).as("packed_code"),
-        (0 until pqM).map(m => col(s"b$m").getField("d"))
-          .reduce(_ + _).as("qerr"))
+    pqEncoded(frame.select(col("vec_id"), milliQ(col("embedding")).as("mq"),
+      (-best.getField("nid")).as("cell")), "mq", cb, Seq("vec_id", "cell"))
   }
 
   /** (vec_id, cell, packed_code, qerr) for ANY (vec_id, embedding)
@@ -805,14 +781,8 @@ object SimilarityQueries extends graft.QueryFamily {
   private[graft] def pqCodeRowsFor(
       s: SparkSession, dir: String, frame: DataFrame): DataFrame = {
     val cb = pqCodebook(s, dir)
-    val centsD: Seq[(Long, Array[Double], Double)] = emb(s, dir)
-      .where(col("vec_id").isin(centroidIds: _*))
-      .orderBy("vec_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray,
-        r.getDouble(2))).toSeq
     pqCellCodeRows(frame.select(col("vec_id"), col("embedding"),
-      norm2(col("embedding")).as("n2")), cb, centsD)
+      norm2(col("embedding")).as("n2")), cb, ivfCents(s, dir))
   }
 
   /** [[pqCellIndex]] for callers outside this object (q204's post-sink
@@ -845,34 +815,9 @@ object SimilarityQueries extends graft.QueryFamily {
       s: SparkSession, dir: String, nprobe: Int,
       cbOpt: Option[Array[Array[Long]]] = None,
       centsOpt: Option[Seq[(Long, Array[Double], Double)]] = None)
-      : DataFrame = {
-    val corpus = emb(s, dir)
-    val probes = corpus.where(probeSlice(61))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("n2").as("pn2"))
-    val exactScored = corpus
-      .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-        col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
-    val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-      Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-    val pq = ivfPqTopN(s, dir, nprobe, cbOpt, centsOpt)
-      .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-    val all = Window.partitionBy()
-    exact.join(broadcast(pq), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (PQ hits, <= probes x k rows)
-      .groupBy("probe_id")
-      .agg(count(lit(1)).as("k_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall_permille", expr(s"n_hits * 1000 div $pqTopK"))
-      .withColumn("total_hits", sum(col("n_hits")).over(all))
-      .withColumn("n_probes", count(lit(1)).over(all))
-      .withColumn("overall_recall_permille",
-        expr(s"total_hits * 1000 div (n_probes * $pqTopK)"))
-      .drop("total_hits", "n_probes")
-      .orderBy("probe_id")
-  }
+      : DataFrame =
+    recallRollup(exactTop(s, dir), pqTopK,
+      "" -> ivfPqTopN(s, dir, nprobe, cbOpt, centsOpt))
 
   /** q225/q226 — scalar (int8) quantization search, the OTHER standard
     * compressed ANN tier beside PQ (4× compression, per-dim codes;
@@ -919,11 +864,7 @@ object SimilarityQueries extends graft.QueryFamily {
       .select(col("probe_id"), col("vec_id"),
         expr("aggregate(zip_with(deq, pmq, (a, b) -> a * b), 0L, " +
           "(acc, x) -> acc + x)").as("score"))
-    val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("score" -> true, "vec_id" -> false), pqTopK)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(desc("score"), asc("vec_id"))
-    top.withColumn("rn", row_number().over(w))
+    rankedTop(scored, pqTopK, "score")
   }
 
   /** q260: the exact top-k list is joined against all seven tier
@@ -944,19 +885,119 @@ object SimilarityQueries extends graft.QueryFamily {
     */
   private val lastPlanted = new graft.util.CacheSlot
 
-  /** Exact cosine top-k for an arbitrary (probe_id, pe, pn2) probe
-    * frame — the same broadcast-probes + bounded-heap construction
-    * the q29 gate and the q260 scoreboard run inline; q270/q271 feed
-    * it the planted probes.
+  /** The probe batch (probe_id, pe, pn2, extra…) of a (vec_id,
+    * embedding, n2) frame: the capped modular id slice.
     */
-  private def exactTopFor(corpus: DataFrame, probes: DataFrame): DataFrame = {
+  private def sliceProbes(frame: DataFrame, extra: Column*): DataFrame =
+    frame.where(probeSlice(61))
+      .select(Seq(col("vec_id").as("probe_id"), col("embedding").as("pe"),
+        col("n2").as("pn2")) ++ extra: _*)
+
+  /** The (probe_id, pe, pn2) probe frame of the probe-parameterized
+    * frames: the id slice of `corpus`, or the planted probes.
+    */
+  private def probesFor(corpus: DataFrame,
+      probesOpt: Option[DataFrame]): DataFrame = probesOpt match {
+    case None => sliceProbes(corpus)
+    case Some(pp) => pp.select(col("probe_id"), col("pvec").as("pe"),
+      col("pn2"))
+  }
+
+  /** Cosine of the probe vector `pe` against the candidate's
+    * `embedding` — the one scoring expression of every probe scan.
+    */
+  private def probeCosine: Column =
+    cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
+
+  /** `rn` within each probe by `score` (DESC when `high`, else ASC),
+    * vec_id ASC on ties.
+    */
+  private def rankBy(df: DataFrame, score: String = "cosine",
+      high: Boolean = true): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy("probe_id")
+      .orderBy(if (high) desc(score) else asc(score), asc("vec_id"))))
+
+  /** Per-probe top-n of `scored` with its rank `rn` ([[rankBy]]'s
+    * order): the bounded-heap TopK operator cuts to n rows per probe
+    * per partition before any sort, so the row_number window runs over
+    * ≤ n rows per probe.
+    */
+  private def rankedTop(scored: DataFrame, n: Int, score: String = "cosine",
+      high: Boolean = true): DataFrame =
+    rankBy(graft.plans.TopK.perGroup(scored, Seq("probe_id"),
+      Seq(score -> high, "vec_id" -> false), n), score, high)
+
+  /** Exact cosine top-k (probe_id, vec_id, cosine) — the ONE
+    * broadcast-probe exact scan: the probe batch broadcasts against
+    * the corpus and the bounded-heap TopK operator cuts candidates to
+    * k per probe before any sort (only k rows per probe per partition
+    * cross the shuffle). Every recall, MRR and nDCG eval takes its
+    * ground truth from here; q270/q271 pass the planted probes.
+    */
+  private def exactTop(s: SparkSession, dir: String, k: Int = pqTopK,
+      probesOpt: Option[DataFrame] = None): DataFrame = {
+    val corpus = emb(s, dir)
     val scored = corpus
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
+      .join(broadcast(probesFor(corpus, probesOpt)),  // hint audit: probe-batch-bounded (9-row probe slice)
+        col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"), probeCosine.as("cosine"))
     graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("cosine" -> true, "vec_id" -> false), pqTopK)
+      Seq("cosine" -> true, "vec_id" -> false), k)
+  }
+
+  /** Per-probe top-[[annK]] (probe_id, vec_id, key, cosine, rn) over
+    * the candidates that share a probe's routing key: q30/q193's LSH
+    * bucket, q37's IVF cell. `probes` carry the key as `p<key>`, one
+    * row per probed key. One scan for the ANN gates and for the ANN
+    * face of their recall evals.
+    */
+  private def routedTop(frame: DataFrame, probes: DataFrame,
+      key: String): DataFrame =
+    rankBy(frame
+      .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice, x 9 buckets under multi-probe)
+        col(key) === col(s"p$key") && col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"), col(key),
+        probeCosine.as("cosine")))
+      .where(col("rn") <= annK)
+
+  /** q193's multi-probe batch: each probe once per bucket of its
+    * Hamming-1 ball (its own bucket plus one sign flip per hyperplane).
+    */
+  private def multiProbes(bucketed: DataFrame): DataFrame =
+    sliceProbes(bucketed, explode(array((col("bucket") +:
+      (0 until lshPlanes).map(j => col("bucket").bitwiseXOR(lit(1L << j)))): _*))
+      .as("pbucket"))
+
+  /** Per-probe recall@k of tier hit lists against the `exact` top-k —
+    * ONE rollup for every recall eval. Columns: probe_id, k_exact,
+    * then per tier its hit count, its permille, and last the
+    * window-derived overall permilles. The single unnamed tier ("")
+    * yields n_hits / recall_permille / overall_recall_permille; a
+    * named tier t yields n_hits_t / t_recall_permille /
+    * overall_t_permille. Every list is ≤ k·|probes| rows: the tier
+    * sides broadcast and the rollup never touches the corpus.
+    */
+  private def recallRollup(exact: DataFrame, k: Int,
+      tiers: (String, DataFrame)*): DataFrame = {
+    def hits(t: String) = if (t.isEmpty) "n_hits" else s"n_hits_$t"
+    // `exact` joins unprojected: its (probe_id, vec_id) projection is
+    // the plan q260 caches, and a match would swap this scan for that
+    // cache whenever q260 ran earlier in the session
+    val joined = tiers.foldLeft(exact) {
+      case (df, (t, list)) => df.join(broadcast(list.select(col("probe_id"),  // hint audit: probe-bounded (tier hits, <= probes x k rows)
+        col("vec_id"), lit(1L).as(s"hit_$t"))), Seq("probe_id", "vec_id"), "left")
+    }
+    val names = tiers.map(_._1)
+    joined.groupBy("probe_id")
+      .agg(count(lit(1)).as("k_exact"), names.map(t =>
+        sum(coalesce(col(s"hit_$t"), lit(0L))).as(hits(t))): _*)
+      .select(col("*") +: (names.map(t =>
+        expr(s"${hits(t)} * 1000 div $k")
+          .as(if (t.isEmpty) "recall_permille" else s"${t}_recall_permille")) ++
+        names.map(t =>
+          expr(s"sum(${hits(t)}) OVER () * 1000 div (count(1) OVER () * $k)")
+            .as(s"overall_${if (t.isEmpty) "recall" else t}_permille"))): _*)
+      .orderBy("probe_id")
   }
 
   /** The matryoshka truncated-dim top-k (probe_id, vec_id) — ONE
@@ -1024,11 +1065,7 @@ object SimilarityQueries extends graft.QueryFamily {
       .select(col("probe_id"), col("vec_id"),
         expr("CAST(bit_count(w0 ^ p0) + bit_count(w1 ^ p1) AS BIGINT)")
           .as("hamming"))
-    val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("hamming" -> false, "vec_id" -> false), topN)
-    val w = Window.partitionBy("probe_id")
-      .orderBy(asc("hamming"), asc("vec_id"))
-    top.withColumn("rn", row_number().over(w))
+    rankedTop(scored, topN, "hamming", high = false)
   }
 
   /** The BQ CTE chain (through the ranked `br`) — mirrors [[bqTop]]:
@@ -1231,15 +1268,10 @@ object SimilarityQueries extends graft.QueryFamily {
         s"${ModelOpsQueries.deltaHi}-$delLo-$delHi-$n-$k-" + Staged.pathKey(dir)
     def staged(k: String)(build: => DataFrame): DataFrame =
       s.read.parquet(memoParquet(key(k))(build))
-    def oldSliceTopM: DataFrame = {
-      val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
-      knnTopM(knnScored(s, dir, knnCandidates(bandsOld, bandsOld)))
-        .select("src", "dst", "cos")
-    }
     kind match {
       case "basetopm" =>
         staged("basetopm")(knnBaseTopM(s, dir).select("src", "dst", "cos"))
-      case "dtopm" => staged("dtopm")(oldSliceTopM)
+      case "dtopm" => staged("dtopm")(oldSliceTopM(s, dir))
       case "ddiv" => staged("ddiv")(diversifySelect(s, dir,
         knnMergedPool(s, dir, knnStoredArtifact(s, dir, "dtopm"))))
       case "dref" => staged("dref")(knnTopM(
@@ -1306,19 +1338,13 @@ object SimilarityQueries extends graft.QueryFamily {
     * slice is banded (q296's incremental face must band at the same
     * width as the artifact it patches; a width migration — the rule
     * crossing its floor — forces a rebuild, as re-sharding does in
-    * any LSH build).
+    * any LSH build). `widthFromSlice` evaluates the rule on the SLICE
+    * count instead: q316's upper layers re-shard at their own member
+    * count (a delta/maintenance slice must NOT).
     */
   private def knnBands(s: SparkSession, dir: String,
-      slice: Option[Column] = None): DataFrame =
-    knnBandsW(s, dir, slice, widthFromSlice = false)
-
-  /** [[knnBands]] with the width rule evaluated on the SLICE count
-    * instead of the full corpus — q316's upper layers re-shard at
-    * their own member count (a delta/maintenance slice must NOT:
-    * q296/q315 band at the artifact's width, see the main doc).
-    */
-  private def knnBandsW(s: SparkSession, dir: String,
-      slice: Option[Column], widthFromSlice: Boolean): DataFrame = {
+      slice: Option[Column] = None,
+      widthFromSlice: Boolean = false): DataFrame = {
     val base = Tables(s, dir, "embeddings")
     val sliced = slice.fold(base)(base.where)
     val codes = sliced
@@ -1384,6 +1410,31 @@ object SimilarityQueries extends graft.QueryFamily {
   private[graft] def knnGraph(s: SparkSession, dir: String): DataFrame =
     knnSymmetrize(knnBaseTopM(s, dir))
 
+  /** The old slice's (corpus minus the q315 delta) directed top-M
+    * (src, dst, cos), banded at the full corpus's width.
+    */
+  private def oldSliceTopM(s: SparkSession, dir: String): DataFrame = {
+    val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
+    knnTopM(knnScored(s, dir, knnCandidates(bandsOld, bandsOld)))
+      .select("src", "dst", "cos")
+  }
+
+  /** The q296 merge: the full corpus's directed top-M from the old
+    * slice's stored top-M plus every banded pair touching a delta
+    * vector (delta × full covers delta-delta and delta→old; old ×
+    * delta covers the affected old nodes) — old-old pairs are never
+    * re-scored.
+    */
+  private def deltaMergedTopM(s: SparkSession, dir: String,
+      oldTopM: DataFrame): DataFrame = {
+    val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
+    val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
+    val newPairs = knnCandidates(bandsNew, knnBands(s, dir))
+      .unionByName(knnCandidates(bandsOld, bandsNew))
+      .distinct()
+    knnTopM(oldTopM.unionByName(knnScored(s, dir, newPairs)))
+  }
+
   /** One NN-descent refinement round (Dong, Charikar & Li, WWW 2011 —
     * public; the step production NSW builds run when wider LSH bands
     * thin the initial candidates): each node scores its current
@@ -1406,20 +1457,14 @@ object SimilarityQueries extends graft.QueryFamily {
   /** The NN-descent candidate pool BEFORE any cut: (stored directed
     * edges with their cosines) ∪ (exactly-scored fresh
     * neighbors-of-neighbors pairs). q300 top-M-cuts it; q304 feeds it
-    * to the diversifying selection.
+    * to the diversifying selection. `srcs` restricts it to a src set:
+    * the incremental faces recompute pools ONLY for touched nodes, and
+    * the semi-join cuts the NoN expansion's left side before the
+    * self-join fans out, so pool cost is ∝ |touched| × (2M)², never
+    * corpus-wide.
     */
   private[graft] def knnMergedPool(s: SparkSession, dir: String,
-      topm: DataFrame): DataFrame =
-    knnMergedPoolFor(s, dir, topm, None)
-
-  /** [[knnMergedPool]] restricted to an optional src set — the q315
-    * incremental face recomputes pools ONLY for touched nodes: the
-    * semi-join cuts the NoN expansion's left side before the self-join
-    * fans out, so pool cost is ∝ |touched| × (2M)², never corpus-wide.
-    * With `srcs = None` this is exactly the from-scratch pool.
-    */
-  private[graft] def knnMergedPoolFor(s: SparkSession, dir: String,
-      topm: DataFrame, srcs: Option[DataFrame]): DataFrame = {
+      topm: DataFrame, srcs: Option[DataFrame] = None): DataFrame = {
     val g = knnSymmetrize(topm)
     val gSrc = srcs.fold(g)(f => g.join(f, Seq("src"), "left_semi"))
     val nn = gSrc.select(col("src"), col("dst").as("mid"))
@@ -1530,13 +1575,6 @@ object SimilarityQueries extends graft.QueryFamily {
       s: SparkSession, dir: String): DataFrame =
     knnSymmetrize(knnDiversifiedTopM(s, dir))
 
-  /** q315's incremental-diversify pieces: (passthrough, recomputed,
-    * touched) directed selections/ids. Exposed so GraphAnnSpec can pin
-    * the passthrough/recompute split; the gate unions the first two.
-    * The stored artifacts (old directed top-M with cosines, old
-    * diversified selection) are recomputed here only because gates
-    * are self-contained — q158's premise.
-    */
   /** q315's pinned intermediates: the gate's DAG references each of
     * these many times (two diversify selections + the change/touched
     * derivations), and Spark — like any engine — re-evaluates an
@@ -1551,35 +1589,19 @@ object SimilarityQueries extends graft.QueryFamily {
   private val lastDdTouched = new graft.util.CacheSlot
   private val lastDdTouchedPool = new graft.util.CacheSlot
 
-  /** q315's change derivation — the cheap (no-diversify) half:
-    * (oldTopM, newTopM, touched). Separated so GraphAnnSpec can pin
-    * the passthrough-nonempty property at sf0.1 (where the corpus
-    * dwarfs the delta) without paying either diversify selection:
-    * passthrough nonempty ⟸ some old node with stored rows is
-    * untouched, i.e. oldTopM.srcs ∖ touched ≠ ∅.
+  /** The touched-node derivation both churn directions share, over the
+    * old/new directed top-M pair: touched = E1 ∪ N(E1), returned as
+    * (oldTopM, newTopM, touched) with touched pinned in `slot`.
     */
-  private[graft] def deltaDiversifyChange(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
-    val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
-    val bandsAll = knnBands(s, dir)
-    // stored artifact: the old corpus's directed top-M (cosines
-    // included) — STAGED once per corpus ([[knnStoredArtifact]])
-    val oldTopM = lastDdOldTopM.swap(
-      knnStoredArtifact(s, dir, "dtopm").cache())
-    // the q296 merge theorem gives the full-corpus directed top-M
-    // without re-scoring old-old pairs
-    val newPairs = knnCandidates(bandsNew, bandsAll)
-      .unionByName(knnCandidates(bandsOld, bandsNew))
-      .distinct()
-    val newTopM = lastDdNewTopM.swap(knnTopM(
-      oldTopM.unionByName(knnScored(s, dir, newPairs))).cache())
+  private def touchedChange(oldTopM: DataFrame, newTopM: DataFrame,
+      slot: graft.util.CacheSlot): (DataFrame, DataFrame, DataFrame) = {
     // E1: endpoints of the CHANGED directed edges — the (src, dst)
     // symmetric difference of the two top-M row sets (cosines are
     // pair-deterministic, so the pair set is the complete change
-    // signal; delta arrivals appear because their rows exist only on
-    // the new side, and any node whose top-M changed is an endpoint
-    // of one of its own changed rows, so Δ1 ⊆ E1)
+    // signal; arrivals appear because their rows exist only on the new
+    // side, deleted nodes because all their rows vanish, and any node
+    // whose top-M changed is an endpoint of one of its own changed
+    // rows, so Δ1 ⊆ E1)
     val e1 = oldTopM.select("src", "dst")
       .unionByName(newTopM.select("src", "dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("n"))
@@ -1595,25 +1617,65 @@ object SimilarityQueries extends graft.QueryFamily {
     val u = knnSymmetrize(oldTopM.select("src", "dst"))
       .unionByName(knnSymmetrize(newTopM.select("src", "dst")))
       .distinct()
-    def nbrs(ids: DataFrame): DataFrame =
-      u.join(ids.withColumnRenamed("src", "dst"), Seq("dst"))
-        .select("src").distinct()
-    val touched = lastDdTouched.swap(
-      e1.unionByName(nbrs(e1)).distinct().cache())
-    (oldTopM, newTopM, touched)
+    val nbrs = u.join(e1.withColumnRenamed("src", "dst"), Seq("dst"))
+      .select("src").distinct()
+    (oldTopM, newTopM, slot.swap(e1.unionByName(nbrs).distinct().cache()))
   }
 
-  private[graft] def deltaDiversifyParts(s: SparkSession, dir: String)
+  /** q315's change derivation — the cheap (no-diversify) half:
+    * (oldTopM, newTopM, touched). Separated so GraphAnnSpec can pin
+    * the passthrough-nonempty property at sf0.1 (where the corpus
+    * dwarfs the delta) without paying either diversify selection:
+    * passthrough nonempty ⟸ some old node with stored rows is
+    * untouched, i.e. oldTopM.srcs ∖ touched ≠ ∅.
+    */
+  private[graft] def deltaDiversifyChange(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (oldTopM, newTopM, touched) = deltaDiversifyChange(s, dir)
-    // stored artifact: the old corpus's diversified selection (staged)
-    val _ = oldTopM
-    val oldDiv = knnStoredArtifact(s, dir, "ddiv")
-    val recomputed = diversifySelect(s, dir, lastDdTouchedPool.swap(
-      knnMergedPoolFor(s, dir, newTopM, Some(touched)).cache()))
-    val passthrough = oldDiv.join(touched, Seq("src"), "left_anti")
-    (passthrough, recomputed, touched)
+    // stored artifact: the old corpus's directed top-M (cosines
+    // included) — STAGED once per corpus ([[knnStoredArtifact]])
+    val oldTopM = lastDdOldTopM.swap(
+      knnStoredArtifact(s, dir, "dtopm").cache())
+    // the q296 merge theorem gives the full-corpus directed top-M
+    // without re-scoring old-old pairs
+    val newTopM = lastDdNewTopM.swap(
+      deltaMergedTopM(s, dir, oldTopM).cache())
+    touchedChange(oldTopM, newTopM, lastDdTouched)
   }
+
+  /** The incremental maintenance step every k-NN maintenance gate runs
+    * over a change derivation: the STORED artifact's rows pass through
+    * for every untouched node, and touched nodes re-cut (`recut` — the
+    * top-M cut or the diversifying selection, both pure per-node
+    * functions of the merged pool) over the pool restricted to them
+    * (pinned in `poolSlot`). Returns (passthrough, recomputed,
+    * touched); GraphAnnSpec pins the split, the gates union the first
+    * two.
+    */
+  private def maintainParts(s: SparkSession, dir: String,
+      change: (DataFrame, DataFrame, DataFrame), stored: String,
+      poolSlot: graft.util.CacheSlot)(recut: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (_, newTopM, touched) = change
+    val old = knnStoredArtifact(s, dir, stored)
+    val recomputed = recut(poolSlot.swap(
+      knnMergedPool(s, dir, newTopM, Some(touched)).cache()))
+    (old.join(touched, Seq("src"), "left_anti"), recomputed, touched)
+  }
+
+  /** A maintenance gate's output: the maintained directed rows,
+    * symmetrized, at q294's node grain.
+    */
+  private def maintainedRollup(
+      parts: (DataFrame, DataFrame, DataFrame)): DataFrame =
+    knnRollup(knnSymmetrize(parts._1.unionByName(parts._2)))
+
+  /** q315's (passthrough, recomputed, touched) over the staged old
+    * diversified selection.
+    */
+  private[graft] def deltaDiversifyParts(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) =
+    maintainParts(s, dir, deltaDiversifyChange(s, dir), "ddiv",
+      lastDdTouchedPool)(diversifySelect(s, dir, _))
 
   /** q327's delete batch: vec_ids [200, 300) — 100 stored vectors,
     * disjoint from the q315 arrival slice ([[ModelOpsQueries.deltaLo]]),
@@ -1644,7 +1706,9 @@ object SimilarityQueries extends graft.QueryFamily {
     * ranked below its M-th neighbor, so removing them cannot move
     * the cut. Bands keep the ARTIFACT's width (full-corpus rule —
     * q296's convention; a deletion that crosses the width floor
-    * forces a rebuild, as re-sharding does in any LSH build).
+    * forces a rebuild, as re-sharding does in any LSH build). The
+    * touched set is [[touchedChange]]'s: every deleted node lands in
+    * E1, so it can never pass through.
     */
   private[graft] def deleteDiversifyChange(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1667,41 +1731,18 @@ object SimilarityQueries extends graft.QueryFamily {
       .join(t1, Seq("src"), "left_anti")
     val newTopM = lastXdNewTopM.swap(
       keptTopM.unionByName(recompTopM).cache())
-    // E1 ∪ N(E1): q315's touched-node derivation verbatim over the
-    // old/new pair — every deleted node lands in E1 (all its directed
-    // rows vanish), so it can never pass through
-    val e1 = oldTopM.select("src", "dst")
-      .unionByName(newTopM.select("src", "dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-      .where(col("n") === 1)
-      .select(explode(array(col("src"), col("dst"))).as("src"))
-      .distinct()
-    val u = knnSymmetrize(oldTopM.select("src", "dst"))
-      .unionByName(knnSymmetrize(newTopM.select("src", "dst")))
-      .distinct()
-    def nbrs(ids: DataFrame): DataFrame =
-      u.join(ids.withColumnRenamed("src", "dst"), Seq("dst"))
-        .select("src").distinct()
-    val touched = lastXdTouched.swap(
-      e1.unionByName(nbrs(e1)).distinct().cache())
-    (oldTopM, newTopM, touched)
+    touchedChange(oldTopM, newTopM, lastXdTouched)
   }
 
+  /** q327's (passthrough, recomputed, touched) over the staged
+    * full-corpus diversified selection; newTopM carries no deleted id
+    * anywhere, so the touched pools and selections are survivor-only
+    * by construction.
+    */
   private[graft] def deleteDiversifyParts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (oldTopM, newTopM, touched) = deleteDiversifyChange(s, dir)
-    // stored artifact: the full-corpus diversified selection (staged —
-    // see [[knnStoredArtifact]]; oldTopM is unused here now but stays
-    // in the tuple for the change derivation's consumers)
-    val _ = oldTopM
-    val oldDiv = knnStoredArtifact(s, dir, "xdiv")
-    // newTopM carries no deleted id anywhere, so the touched pools
-    // and selections are survivor-only by construction
-    val recomputed = diversifySelect(s, dir, lastXdTouchedPool.swap(
-      knnMergedPoolFor(s, dir, newTopM, Some(touched)).cache()))
-    val passthrough = oldDiv.join(touched, Seq("src"), "left_anti")
-    (passthrough, recomputed, touched)
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    maintainParts(s, dir, deleteDiversifyChange(s, dir), "xdiv",
+      lastXdTouchedPool)(diversifySelect(s, dir, _))
 
   /** q295's multi-entry greedy walk over an arbitrary (src, dst)
     * graph relation — shared by the gated q295 (the banded q294
@@ -1929,7 +1970,7 @@ object SimilarityQueries extends graft.QueryFamily {
     */
   private def hnswLayerGraph(s: SparkSession, dir: String,
       level: Int): DataFrame = {
-    val b = knnBandsW(s, dir,
+    val b = knnBands(s, dir,
       Some(hnswLevel(col("vec_id")) >= level), widthFromSlice = true)
     knnSymmetrize(knnRefineTopM(s, dir,
       knnTopM(knnScored(s, dir, knnCandidates(b, b)))))
@@ -2081,18 +2122,8 @@ object SimilarityQueries extends graft.QueryFamily {
     * corpus size.
     */
   private[graft] def mmrTop(s: SparkSession, dir: String): DataFrame = {
-    val corpus = emb(s, dir)
-    val probes = corpus.where(probeSlice(61))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("n2").as("pn2"))
-    val scored = corpus
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("rel"))
-    val sl = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("rel" -> true, "vec_id" -> false), pqRerankR)
-    val rows = corpus
+    val sl = exactTop(s, dir, pqRerankR).withColumnRenamed("cosine", "rel")
+    val rows = emb(s, dir)
       .join(broadcast(sl), Seq("vec_id"))  // hint audit: probe-bounded (<= probes x r shortlist rows)
       .select(col("probe_id"), col("vec_id"), col("rel"), col("embedding"))
       .collect()  // hint audit: probe-bounded collect (the serving node's re-rank set)
@@ -2154,9 +2185,7 @@ object SimilarityQueries extends graft.QueryFamily {
         norm2(col("embedding")).as("n2"))
       .where(!isEval)
       .join(broadcast(eval), col("vec_id") =!= col("eval_id"))  // hint audit: eval-horizon-bounded (capped id slice)
-      .select(col("vec_id"), col("eval_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
+      .select(col("vec_id"), col("eval_id"), probeCosine.as("cosine"))
       .where(col("cosine") > nearDupThreshold)
   }
 
@@ -2179,17 +2208,7 @@ object SimilarityQueries extends graft.QueryFamily {
       cbOpt: Option[Array[Array[Long]]] = None,
       centsOpt: Option[Seq[(Long, Array[Double], Double)]] = None)
       : DataFrame = {
-    val corpus = emb(s, dir)
-    val probes = corpus.where(probeSlice(61))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("n2").as("pn2"))
-    val scored = corpus
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
-    val exact1 = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("cosine" -> true, "vec_id" -> false), 1)
+    val exact1 = exactTop(s, dir, 1)
       .select(col("probe_id"), col("vec_id").as("true_id"))
     val ranked = ivfPqTopN(s, dir, nprobe, cbOpt, centsOpt)
       .select(col("probe_id"), col("vec_id").as("true_id"), col("rn"))
@@ -2215,21 +2234,8 @@ object SimilarityQueries extends graft.QueryFamily {
       cbOpt: Option[Array[Array[Long]]] = None,
       centsOpt: Option[Seq[(Long, Array[Double], Double)]] = None)
       : DataFrame = {
-    val corpus = emb(s, dir)
-    val probes = corpus.where(probeSlice(61))
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        col("n2").as("pn2"))
-    val scored = corpus
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-      .select(col("probe_id"), col("vec_id"),
-        cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-          .as("cosine"))
-    val exTop = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-      Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-    val wEx = Window.partitionBy("probe_id")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    val exact = exTop.withColumn("ex_rn", row_number().over(wEx))
-      .select(col("probe_id"), col("vec_id"), col("ex_rn"))
+    val exact = rankBy(exactTop(s, dir))
+      .select(col("probe_id"), col("vec_id"), col("rn").as("ex_rn"))
     val approx = ivfPqTopN(s, dir, nprobe, cbOpt, centsOpt)
       .select(col("probe_id"), col("vec_id"), col("rn"))
     val wArr = array(dcgWeightsMicro.map(lit(_)): _*)
@@ -2282,22 +2288,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // per probe per partition cross the shuffle, vs the window
     // formulation sorting every scored candidate. The row_number
     // window that derives `rn` then runs over <= k rows per probe.
-    "q29_cosine_topk" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val scored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), topK)
-      val w = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      top.withColumn("rn", row_number().over(w))
-        .orderBy("probe_id", "rn")
-    }),
+    "q29_cosine_topk" -> ((s, dir) =>
+      rankBy(exactTop(s, dir, topK)).orderBy("probe_id", "rn")),
 
     // Hard-negative mining for contrastive training: per probe, the
     // HIGHEST-cosine candidates that are still below the near-duplicate
@@ -2308,19 +2300,11 @@ object SimilarityQueries extends graft.QueryFamily {
     // top-k state.
     "q106_hard_negatives" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
       val scored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
+        .join(broadcast(sliceProbes(corpus)), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
+        .select(col("probe_id"), col("vec_id"), probeCosine.as("cosine"))
         .where(col("cosine") < hardNegTau)
-      val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), topK)
-      val w = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      top.withColumn("rn", row_number().over(w))
+      rankedTop(scored, topK)
         .orderBy("probe_id", "rn")
     }),
 
@@ -2340,14 +2324,11 @@ object SimilarityQueries extends graft.QueryFamily {
       val corpus = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label"),
           norm2(col("embedding")).as("n2"))
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("label").as("plabel"), col("n2").as("pn2"))
+      val probes = sliceProbes(corpus, col("label").as("plabel"))
       val scored = corpus
         .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
         .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
+          probeCosine.as("cosine"))
       scored.groupBy("probe_id")
         .agg(
           max(when(col("label") === col("plabel"),
@@ -2364,18 +2345,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // ANN: probes meet only their own hyperplane-sign bucket
     "q30_ann_lsh" -> ((s, dir) => {
       val bucketed = emb(s, dir).withColumn("bucket", lshBucket(col("embedding")))
-      val probes = bucketed.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"), col("bucket").as("pbucket"))
-      val w = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      bucketed.join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"), col("bucket"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= annK)
-        .orderBy("probe_id", "rn")
+      routedTop(bucketed, sliceProbes(bucketed, col("bucket").as("pbucket")),
+        "bucket").orderBy("probe_id", "rn")
     }),
 
     // IVF-flat ANN: vectors assigned to the argmax-cosine centroid
@@ -2392,31 +2363,15 @@ object SimilarityQueries extends graft.QueryFamily {
     // argmax of 8 broadcast-side cosines.)
     "q37_ann_ivf" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val cents: Array[(Long, Array[Float], Double)] = corpus
-        .where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       // argmax with the (cosine DESC, c_id ASC) tiebreak as a single
       // lexicographic array_max over struct(cosine, -c_id): each
       // centroid cosine is evaluated exactly once per row (no
       // when-chain subtree duplication). Shared helper — the KMeans
       // trainer refreshes this codebook with the same expression.
-      val best = bestCell(col("embedding"), col("n2"),
-        cents.toSeq.map { case (id, ce, n2) => (id, ce.map(_.toDouble), n2) })
+      val best = bestCell(col("embedding"), col("n2"), ivfCents(s, dir))
       val cells = corpus.select(col("vec_id"), col("embedding"), col("n2"),
         (-best.getField("nid")).as("cell"))
-      val probes = cells.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"), col("cell").as("pcell"))
-      val w = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      cells.join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-        col("cell") === col("pcell") && col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"), col("cell"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= annK)
+      routedTop(cells, sliceProbes(cells, col("cell").as("pcell")), "cell")
         .orderBy("probe_id", "rn")
     }),
 
@@ -2430,42 +2385,9 @@ object SimilarityQueries extends graft.QueryFamily {
     // the corpus cost is one broadcast-probe scan + one bucket join —
     // the two indexes being compared, nothing more. Integer permille.
     "q131_ann_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val bucketed = corpus.withColumn("bucket", lshBucket(col("embedding")))
-      val probes = bucketed.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"), col("bucket").as("pbucket"))
-      val exactScored = corpus
-        .join(broadcast(probes.drop("pbucket")),  // hint audit: probe-batch-bounded (9-row probe slice)
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), annK)
-      val wAnn = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      val ann = bucketed.join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-          col("bucket") === col("pbucket") && col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-        .withColumn("rn", row_number().over(wAnn))
-        .where(col("rn") <= annK)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      // both rank lists are ≤ k·|probes| rows; the ANN side broadcasts
-      // so the comparison join never sorts or shuffles the lists
-      exact.join(broadcast(ann), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (ANN hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $annK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $annK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
+      val bucketed = emb(s, dir).withColumn("bucket", lshBucket(col("embedding")))
+      recallRollup(exactTop(s, dir, annK), annK, "" -> routedTop(bucketed,
+        sliceProbes(bucketed, col("bucket").as("pbucket")), "bucket"))
     }),
 
     // near-dup screen: incoming batch (2% id slice) vs corpus
@@ -2536,24 +2458,13 @@ object SimilarityQueries extends graft.QueryFamily {
       // tree per PAIR instead of per vector (measured 28 s vs 0.5 s
       // for the pair stage at the 10× fixture).
       val codes = lastPqCodes.swap(base.select(col("vec_id"),
-        array((0 until pqM).map(m =>
-          pqBest(col("mq"), cb, m).getField("c")): _*).as("codes"))
-        .cache())
+        pqCodes(col("mq"), cb).as("codes")).cache())
       val probes = base.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"),
-          array((0 until pqM).flatMap(m => cb.indices.map(c =>
-            pqSubDist(col("mq"), cb(c), m))): _*).as("pd"))
-      val adc = (0 until pqM).map(m =>
-        element_at(col("pd"),
-          lit(m * pqK + 1) + element_at(col("codes"), m + 1)))
-        .reduce(_ + _)
+        .select(col("vec_id").as("probe_id"), pqTable(col("mq"), cb).as("pd"))
       val scored = codes
         .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice carrying 32-long ADC tables)
-        .select(col("probe_id"), col("vec_id"), adc.as("adc_dist"))
-      val top = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
-        Seq("adc_dist" -> false, "vec_id" -> false), pqTopK)
-      val w = Window.partitionBy("probe_id").orderBy(asc("adc_dist"), asc("vec_id"))
-      top.withColumn("rn", row_number().over(w))
+        .select(col("probe_id"), col("vec_id"), pqAdc.as("adc_dist"))
+      rankedTop(scored, pqTopK, "adc_dist", high = false)
         .orderBy("probe_id", "rn")
     }),
 
@@ -2627,33 +2538,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // recall@k of the SQ8 tier against the exact scan — the number
     // that places int8 on the compression/recall curve beside q180
     // (PQ nprobe=1) and q185 (PQ nprobe=4)
-    "q226_sq8_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-      val sq8 = sq8Top(s, dir)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      exact.join(broadcast(sq8), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (SQ8 hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $pqTopK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $pqTopK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
-    }),
+    "q226_sq8_recall" -> ((s, dir) =>
+      recallRollup(exactTop(s, dir), pqTopK, "" -> sq8Top(s, dir))),
 
     // Binary-quantization top-k — the third gated compressed tier
     // (64× vs SQ8's 4× and PQ's 32×): sign-bit codes, symmetric
@@ -2670,33 +2556,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // (1-bit). The three gated points are exactly what a deployment
     // reads to pick its tier (or to size a BQ-shortlist → re-rank
     // cascade, q229's device with this as the first stage).
-    "q250_bq_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-      val bq = bqTop(s, dir)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      exact.join(broadcast(bq), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (BQ hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $pqTopK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $pqTopK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
-    }),
+    "q250_bq_recall" -> ((s, dir) =>
+      recallRollup(exactTop(s, dir), pqTopK, "" -> bqTop(s, dir))),
 
     // Matryoshka (prefix-dim) truncated search priced against the
     // full-dim exact scan: the corpus is read NARROWER (first 16 of
@@ -2705,33 +2566,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // the eval reports per-probe + overall recall@k. Orthogonal to
     // quantization: a deployment composes prefix-dims × SQ8/BQ and
     // reads the two gated curves to pick the operating point.
-    "q251_mrl_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-      val ttop = mrlTop(s, dir)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      exact.join(broadcast(ttop), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (truncated hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $pqTopK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $pqTopK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
-    }),
+    "q251_mrl_recall" -> ((s, dir) =>
+      recallRollup(exactTop(s, dir), pqTopK, "" -> mrlTop(s, dir))),
 
     // BQ-shortlist → exact re-rank cascade: q229's IVFADC+R device
     // with the 1-bit tier as the FIRST stage — the hamming scan (pure
@@ -2752,45 +2588,12 @@ object SimilarityQueries extends graft.QueryFamily {
     // neighbor present), so the gap columns price exactly what the
     // refine stage buys over the 1-bit scan alone.
     "q255_bq_rerank_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
+      val exact = exactTop(s, dir)
       // ONE shortlist frame serves both faces (the q230 device): the
       // raw BQ@k face is the same hamming ranking truncated at k
       val sl = bqTop(s, dir, pqRerankR)
-      val rr = rerankFrom(s, dir, sl)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("rr_hit"))
-      val bq = sl.where(col("rn") <= pqTopK)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("bq_hit"))
-      val all = Window.partitionBy()
-      exact
-        .join(broadcast(rr), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (<= probes x k rerank rows)
-        .join(broadcast(bq), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (<= probes x k BQ rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("rr_hit"), lit(0L))).as("n_hits_rerank"),
-          sum(coalesce(col("bq_hit"), lit(0L))).as("n_hits_bq"))
-        .withColumn("rerank_recall_permille",
-          expr(s"n_hits_rerank * 1000 div $pqTopK"))
-        .withColumn("bq_recall_permille",
-          expr(s"n_hits_bq * 1000 div $pqTopK"))
-        .withColumn("tot_rr", sum(col("n_hits_rerank")).over(all))
-        .withColumn("tot_bq", sum(col("n_hits_bq")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_rerank_permille",
-          expr(s"tot_rr * 1000 div (n_probes * $pqTopK)"))
-        .withColumn("overall_bq_permille",
-          expr(s"tot_bq * 1000 div (n_probes * $pqTopK)"))
-        .drop("tot_rr", "tot_bq", "n_probes")
-        .orderBy("probe_id")
+      recallRollup(exact, pqTopK, "rerank" -> rerankFrom(s, dir, sl),
+        "bq" -> sl.where(col("rn") <= pqTopK))
     }),
 
     // MMR diversity re-rank — the serving-side answer to "my top-k
@@ -2814,19 +2617,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // composition proof — the scoreboard CANNOT drift from the gated
     // tiers because there is no second definition to drift.
     "q260_tier_scoreboard" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
       val exact = lastScoreboardExact.swap(
-        graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-          Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-          .select("probe_id", "vec_id").cache())
+        exactTop(s, dir).select("probe_id", "vec_id").cache())
       def recallOf(tier: String, hits: DataFrame): DataFrame =
         exact
           .join(broadcast(hits.withColumn("hit", lit(1L))),  // hint audit: probe-bounded (<= probes x k tier rows)
@@ -2874,11 +2666,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // q29 shape); the perturbation itself is a scan-stage projection.
     "q270_planted_truth" -> ((s, dir) => {
       val pp = plantedProbes(s, dir)
-      val exact = exactTopFor(emb(s, dir),
-        pp.select(col("probe_id"), col("pvec").as("pe"), col("pn2")))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(desc("cosine"), asc("vec_id"))
-      val ranked = exact.withColumn("rn", row_number().over(w))
+      val ranked = rankBy(exactTop(s, dir, probesOpt = Some(pp)))
       val all = Window.partitionBy()
       ranked
         .join(broadcast(pp.select(col("probe_id"), col("source_id"))),  // hint audit: probe-batch-bounded (9-row probe slice)
@@ -2928,8 +2716,7 @@ object SimilarityQueries extends graft.QueryFamily {
       val bqR = lastScoreboardBq.swap(
         bqTop(s, dir, pqRerankR, Some(pp)).cache())
       Seq(
-        ("exact", exactTopFor(emb(s, dir),
-          pp.select(col("probe_id"), col("pvec").as("pe"), col("pn2")))
+        ("exact", exactTop(s, dir, probesOpt = Some(pp))
           .select("probe_id", "vec_id")),
         ("bq1bit", bqR.where(col("rn") <= pqTopK)
           .select("probe_id", "vec_id")),
@@ -3019,25 +2806,10 @@ object SimilarityQueries extends graft.QueryFamily {
     // vectors are never re-read and old-old pairs are never
     // re-scored; old edges reuse their STORED cosines. Both faces
     // band at the full corpus's width (see knnBands).
-    "q296_delta_knn_graph" -> ((s, dir) => {
-      val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
-      val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
-      val bandsAll = knnBands(s, dir)
-      // the stored artifact (recomputed here only because gates are
-      // self-contained — q158's premise): old-corpus directed top-M
-      val oldTopM = knnTopM(
-        knnScored(s, dir, knnCandidates(bandsOld, bandsOld)))
-        .select("src", "dst", "cos")
-      // arrival candidates: every banded pair touching a delta vector
-      // (delta × full covers delta-delta and delta→old; old × delta
-      // covers the affected old nodes)
-      val newPairs = knnCandidates(bandsNew, bandsAll)
-        .unionByName(knnCandidates(bandsOld, bandsNew))
-        .distinct()
-      val merged = knnTopM(
-        oldTopM.unionByName(knnScored(s, dir, newPairs)))
-      knnRollup(knnSymmetrize(merged))
-    }),
+    // (the stored old-slice top-M is rebuilt here: gates are
+    // self-contained, q158's premise)
+    "q296_delta_knn_graph" -> ((s, dir) =>
+      knnRollup(knnSymmetrize(deltaMergedTopM(s, dir, oldSliceTopM(s, dir))))),
 
     // INCREMENTAL maintenance for the SHIPPED (diversified) build —
     // the q296 delta face covered only the raw banded top-M; the index
@@ -3056,7 +2828,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // pool (stored cosines are pair-deterministic) and its STORED
     // diversified rows pass through untouched — full vectors are
     // never re-read for it. Touched nodes re-run the selection over
-    // the pool RESTRICTED to them ([[knnMergedPoolFor]]: the
+    // the pool RESTRICTED to them ([[knnMergedPool]]: the
     // semi-join cuts the NoN fan-out before it happens, so recompute
     // cost is |touched|·(2M)² pool pairs + |touched|·R²/2 pairwise
     // cosines). The oracle is q304's from-scratch twin VERBATIM —
@@ -3070,10 +2842,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // build) that a deployment already has on disk, the gate
     // self-containment premise (q158). The rebuild-nightly story
     // becomes the same refresh-∝-delta contract as q138/q163/q296.
-    "q315_delta_knn_diversify" -> ((s, dir) => {
-      val (passthrough, recomputed, _) = deltaDiversifyParts(s, dir)
-      knnRollup(knnSymmetrize(passthrough.unionByName(recomputed)))
-    }),
+    "q315_delta_knn_diversify" -> ((s, dir) =>
+      maintainedRollup(deltaDiversifyParts(s, dir))),
 
     // The same delta face for the REFINED build (q300) — the other
     // production candidate q315's comment names: the touched-node
@@ -3084,16 +2854,9 @@ object SimilarityQueries extends graft.QueryFamily {
     // serves both, and the refined index gets the identical
     // refresh-∝-delta contract. Oracle is q300's from-scratch twin
     // VERBATIM.
-    "q319_delta_knn_refine" -> ((s, dir) => {
-      val (_, newTopM, touched) = deltaDiversifyChange(s, dir)
-      // stored artifact: the old corpus's refined directed top-M
-      // (staged — see [[knnStoredArtifact]])
-      val oldRef = knnStoredArtifact(s, dir, "dref")
-      val recomputed = knnTopM(lastDdTouchedPool.swap(
-        knnMergedPoolFor(s, dir, newTopM, Some(touched)).cache()))
-      val passthrough = oldRef.join(touched, Seq("src"), "left_anti")
-      knnRollup(knnSymmetrize(passthrough.unionByName(recomputed)))
-    }),
+    "q319_delta_knn_refine" -> ((s, dir) =>
+      maintainedRollup(maintainParts(s, dir, deltaDiversifyChange(s, dir),
+        "dref", lastDdTouchedPool)(knnTopM))),
 
     // INCREMENTAL MAINTENANCE UNDER DELETION — the other half of the
     // q315/q319 refresh contract: GDPR erasure and retention sweeps
@@ -3113,10 +2876,8 @@ object SimilarityQueries extends graft.QueryFamily {
     // out, hash-exact. At 100 TB: recompute ∝ (nodes citing the
     // deleted batch) + one graph hop — the same refresh-∝-delta
     // contract as q315, now for both directions of corpus churn.
-    "q327_delete_knn_diversify" -> ((s, dir) => {
-      val (passthrough, recomputed, _) = deleteDiversifyParts(s, dir)
-      knnRollup(knnSymmetrize(passthrough.unionByName(recomputed)))
-    }),
+    "q327_delete_knn_diversify" -> ((s, dir) =>
+      maintainedRollup(deleteDiversifyParts(s, dir))),
 
     // The deletion face for the REFINED build — completing the
     // builds × churn-directions matrix (q315/q319 insertion for
@@ -3126,16 +2887,9 @@ object SimilarityQueries extends graft.QueryFamily {
     // the same merged pool — refine cuts top-M over it, diversify
     // runs the heuristic over its top-R. Oracle is q300's
     // from-scratch twin over the survivor corpus.
-    "q331_delete_knn_refine" -> ((s, dir) => {
-      val (_, newTopM, touched) = deleteDiversifyChange(s, dir)
-      // stored artifact: the full corpus's refined directed top-M
-      // (staged — see [[knnStoredArtifact]])
-      val oldRef = knnStoredArtifact(s, dir, "xref")
-      val recomputed = knnTopM(lastXdTouchedPool.swap(
-        knnMergedPoolFor(s, dir, newTopM, Some(touched)).cache()))
-      val passthrough = oldRef.join(touched, Seq("src"), "left_anti")
-      knnRollup(knnSymmetrize(passthrough.unionByName(recomputed)))
-    }),
+    "q331_delete_knn_refine" -> ((s, dir) =>
+      maintainedRollup(maintainParts(s, dir, deleteDiversifyChange(s, dir),
+        "xref", lastXdTouchedPool)(knnTopM))),
 
     // Graph-based ANN, serve face — MULTI-ENTRY greedy descent over
     // the q294 graph (NSW's search primitive: hop to the neighbor
@@ -3223,11 +2977,7 @@ object SimilarityQueries extends graft.QueryFamily {
       val sd = structFixtureDir(s, dir)
       val pp = plantedProbes(s, sd)
       val corpus = emb(s, sd)
-      val centsD = corpus.where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id").collect()
-        .map(r => (r.getLong(0),
-          r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2)))
-        .toSeq
+      val centsD = ivfCents(s, sd)
       val occ = corpus.select(
           (-bestCell(col("embedding"), col("n2"), centsD)
             .getField("nid")).as("cell"))
@@ -3367,20 +3117,12 @@ object SimilarityQueries extends graft.QueryFamily {
       val corpus = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label"),
           norm2(col("embedding")).as("n2"))
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
       val scored = corpus
-        .join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
+        .join(broadcast(sliceProbes(corpus)), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
         .select(col("probe_id"), col("vec_id"), col("label"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val pre = graft.plans.TopK.perGroup(
-        scored.where(col("label").isin(filteredLabels: _*)),
-        Seq("probe_id"), Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-      val wp = Window.partitionBy("probe_id")
-        .orderBy(desc("cosine"), asc("vec_id"))
-      val preRanked = pre.withColumn("rn", row_number().over(wp))
+          probeCosine.as("cosine"))
+      val preRanked = rankedTop(
+        scored.where(col("label").isin(filteredLabels: _*)), pqTopK)
         .select(col("probe_id"), col("vec_id"), col("label"),
           col("cosine"), col("rn"))
       val post = graft.plans.TopK.perGroup(scored, Seq("probe_id"),
@@ -3412,47 +3154,13 @@ object SimilarityQueries extends graft.QueryFamily {
     // columns price exactly what the refine stage buys — the number
     // that decides whether to ship the second stage.
     "q230_rerank_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
+      val exact = exactTop(s, dir)
       // ONE shortlist frame serves both faces: the plain ADC@k face is
       // the same ranking truncated at k (rn <= k of the top-r), so the
       // codes build runs once and the theorem's premise is structural
       val sl = ivfPqTopN(s, dir, ivfNprobe, topN = pqRerankR)
-      val rr = rerankFrom(s, dir, sl)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("rr_hit"))
-      val adc = sl.where(col("rn") <= pqTopK)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("adc_hit"))
-      val all = Window.partitionBy()
-      exact
-        .join(broadcast(rr), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (<= probes x k rerank rows)
-        .join(broadcast(adc), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (<= probes x k ADC rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("rr_hit"), lit(0L))).as("n_hits_rerank"),
-          sum(coalesce(col("adc_hit"), lit(0L))).as("n_hits_adc"))
-        .withColumn("rerank_recall_permille",
-          expr(s"n_hits_rerank * 1000 div $pqTopK"))
-        .withColumn("adc_recall_permille",
-          expr(s"n_hits_adc * 1000 div $pqTopK"))
-        .withColumn("tot_rr", sum(col("n_hits_rerank")).over(all))
-        .withColumn("tot_adc", sum(col("n_hits_adc")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_rerank_permille",
-          expr(s"tot_rr * 1000 div (n_probes * $pqTopK)"))
-        .withColumn("overall_adc_permille",
-          expr(s"tot_adc * 1000 div (n_probes * $pqTopK)"))
-        .drop("tot_rr", "tot_adc", "n_probes")
-        .orderBy("probe_id")
+      recallRollup(exact, pqTopK, "rerank" -> rerankFrom(s, dir, sl),
+        "adc" -> sl.where(col("rn") <= pqTopK))
     }),
 
     // Graded, position-discounted ANN eval: nDCG@k of the IVF-PQ
@@ -3485,14 +3193,7 @@ object SimilarityQueries extends graft.QueryFamily {
     "q186_pq_delta_index" -> ((s, dir) => {
       val cb = pqCodebook(s, dir)
       val corpus = emb(s, dir)
-      val cents: Array[(Long, Array[Float], Double)] = corpus
-        .where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      val centsD = cents.toSeq.map { case (id, ce, n2) =>
-        (id, ce.map(_.toDouble), n2)
-      }
+      val centsD = ivfCents(s, dir)
       val oldIdx = pqCellIndex(pqCellCodeRows(
         corpus.where(!inDelta(col("vec_id"))), cb, centsD))
       val deltaIdx = pqCellIndex(pqCellCodeRows(
@@ -3523,14 +3224,7 @@ object SimilarityQueries extends graft.QueryFamily {
     "q189_pq_index_upsert" -> ((s, dir) => {
       val cb = pqCodebook(s, dir)
       val corpus = emb(s, dir)
-      val cents: Array[(Long, Array[Float], Double)] = corpus
-        .where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      val centsD = cents.toSeq.map { case (id, ce, n2) =>
-        (id, ce.map(_.toDouble), n2)
-      }
+      val centsD = ivfCents(s, dir)
       // tombstones arrive as DATA (a takedown list), not a predicate —
       // here a deterministic established-corpus id slice spread across
       // cells; delta inserts never collide with it
@@ -3573,15 +3267,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // broadcast-bounded centroid join.
     "q195_res_pq_encode" -> ((s, dir) => {
       val (assigned, cbRes, _, _) = resAssigned(s, dir)
-      val bests = (0 until pqM).map(m => pqBest(col("rq"), cbRes, m).as(s"b$m"))
-      assigned.select(col("vec_id") +: col("cell") +: bests: _*)
-        .select(col("vec_id"), col("cell"),
-          (0 until pqM).map(m =>
-            col(s"b$m").getField("c").cast("long") * lit(1L << (2 * m)))
-            .reduce(_ + _).as("packed_code"),
-          (0 until pqM).map(m => col(s"b$m").getField("d"))
-            .reduce(_ + _).as("qerr"))
-        .orderBy("vec_id")
+      pqEncoded(assigned, "rq", cbRes, Seq("vec_id", "cell")).orderBy("vec_id")
     }),
 
     // Residual IVF-PQ search at nprobe — q184's routing over q195's
@@ -3603,34 +3289,9 @@ object SimilarityQueries extends graft.QueryFamily {
     // on clustered data so residual norms shrink (the
     // tools/IndexPipeline loop), and this eval is the gate a
     // deployment checks before switching the corpus encoding.
-    "q197_res_pq_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val probes = corpus.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"))
-      val exactScored = corpus
-        .join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice)
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), pqTopK)
-      val pq = resIvfPqTop(s, dir, ivfNprobe)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      exact.join(broadcast(pq), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (PQ hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $pqTopK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $pqTopK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
-    }),
+    "q197_res_pq_recall" -> ((s, dir) =>
+      recallRollup(exactTop(s, dir), pqTopK,
+        "" -> resIvfPqTop(s, dir, ivfNprobe))),
 
     // IVF cell-balance audit — the index-health number BESIDE q168's
     // qerr: per-cell member share and balance vs the uniform ideal
@@ -3642,13 +3303,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // and windows over the cells-bounded (8-row) aggregate.
     "q192_ivf_cell_balance" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val cents: Array[(Long, Array[Float], Double)] = corpus
-        .where(col("vec_id").isin(centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      val best = bestCell(col("embedding"), col("n2"),
-        cents.toSeq.map { case (id, ce, n2) => (id, ce.map(_.toDouble), n2) })
+      val best = bestCell(col("embedding"), col("n2"), ivfCents(s, dir))
       val perCell = corpus
         .select((-best.getField("nid")).as("cell"))
         .groupBy("cell").agg(count(lit(1)).as("n_members"))
@@ -3675,19 +3330,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // join needs no dedup.
     "q193_ann_multiprobe" -> ((s, dir) => {
       val bucketed = emb(s, dir).withColumn("bucket", lshBucket(col("embedding")))
-      val probes = bucketed.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"),
-          explode(array((col("bucket") +: (0 until lshPlanes).map(j =>
-            col("bucket").bitwiseXOR(lit(1L << j)))): _*)).as("pbucket"))
-      val w = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      bucketed.join(broadcast(probes),  // hint audit: probe-batch-bounded (9-row probe slice x 9 probe buckets)
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"), col("bucket"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= annK)
+      routedTop(bucketed, multiProbes(bucketed), "bucket")
         .orderBy("probe_id", "rn")
     }),
 
@@ -3695,45 +3338,9 @@ object SimilarityQueries extends graft.QueryFamily {
     // measured payoff of the q193 knob, mirroring how q185 prices
     // q184's. Same probe-bounded comparison shape.
     "q194_multiprobe_recall" -> ((s, dir) => {
-      val corpus = emb(s, dir)
-      val bucketed = corpus.withColumn("bucket", lshBucket(col("embedding")))
-      val probes = bucketed.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"), col("bucket").as("pbucket"))
-      val exactScored = corpus
-        .join(broadcast(probes.drop("pbucket")),  // hint audit: probe-batch-bounded (9-row probe slice)
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-      val exact = graft.plans.TopK.perGroup(exactScored, Seq("probe_id"),
-        Seq("cosine" -> true, "vec_id" -> false), annK)
-      val mprobes = bucketed.where(probeSlice(61))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("n2").as("pn2"),
-          explode(array((col("bucket") +: (0 until lshPlanes).map(j =>
-            col("bucket").bitwiseXOR(lit(1L << j)))): _*)).as("pbucket"))
-      val wAnn = Window.partitionBy("probe_id").orderBy(desc("cosine"), asc("vec_id"))
-      val ann = bucketed.join(broadcast(mprobes),  // hint audit: probe-batch-bounded (9-row probe slice x 9 probe buckets)
-          col("bucket") === col("pbucket") && col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
-        .withColumn("rn", row_number().over(wAnn))
-        .where(col("rn") <= annK)
-        .select(col("probe_id"), col("vec_id"), lit(1L).as("hit"))
-      val all = Window.partitionBy()
-      exact.join(broadcast(ann), Seq("probe_id", "vec_id"), "left")  // hint audit: probe-bounded (ANN hits, <= probes x k rows)
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k_exact"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr(s"n_hits * 1000 div $annK"))
-        .withColumn("total_hits", sum(col("n_hits")).over(all))
-        .withColumn("n_probes", count(lit(1)).over(all))
-        .withColumn("overall_recall_permille",
-          expr(s"total_hits * 1000 div (n_probes * $annK)"))
-        .drop("total_hits", "n_probes")
-        .orderBy("probe_id")
+      val bucketed = emb(s, dir).withColumn("bucket", lshBucket(col("embedding")))
+      recallRollup(exactTop(s, dir, annK), annK,
+        "" -> routedTop(bucketed, multiProbes(bucketed), "bucket"))
     }),
 
     // SEMANTIC decontamination — the embedding face of q73's lexical
@@ -3757,9 +3364,7 @@ object SimilarityQueries extends graft.QueryFamily {
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
           col("n2").as("pn2"))
       corpus.join(broadcast(probes), col("vec_id") =!= col("probe_id"))  // hint audit: probe-batch-bounded (9-row probe slice)
-        .select(col("probe_id"), col("vec_id"),
-          cosineFrom(dot(col("pe"), col("embedding")), col("pn2"), col("n2"))
-            .as("cosine"))
+        .select(col("probe_id"), col("vec_id"), probeCosine.as("cosine"))
         .where(col("cosine") > nearDupThreshold)
         .orderBy("probe_id", "vec_id")
     }))

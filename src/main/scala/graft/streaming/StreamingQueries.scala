@@ -1057,8 +1057,7 @@ object StreamingQueries extends graft.QueryFamily {
       val d = graft.queries.Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val chType = d.schema("n_chars").dataType
-      val nDocs = d.count()
-      val gran = math.max(100L, nDocs / 50L)
+      val gran = graft.queries.ShapeOpsQueries.lakeGranFor(d.count())
       val updPred = expr(s"doc_id div $gran") === 1L &&
         col("doc_id") % 7 === 3
       val delPred = expr(s"doc_id div $gran") === 3L &&
@@ -2334,7 +2333,7 @@ object StreamingQueries extends graft.QueryFamily {
     // (the downstream layout), rewrites structural — each change
     // commit's keys live in ONE granule
     "q329_stream_cdc_apply" -> {
-      val g = "(SELECT GREATEST(100, COUNT(*) // 50) FROM documents)"
+      val g = graft.queries.ShapeOpsQueries.sqlLakeG
       val updP = s"(doc_id // $g = 1 AND doc_id % 7 = 3)"
       val delP = s"(doc_id // $g = 3 AND doc_id % 5 = 0)"
       val nf = s"(SELECT CAST(COUNT(DISTINCT doc_id // $g) AS BIGINT) " +

@@ -6,19 +6,17 @@ object ExplainAudit {
     val dir = "/root/testdata/sf0.01"
     // `--summary` prints one line of load-bearing operator counts per
     // query (all BATCH queries when none named) instead of full plans.
-    // Streaming queries execute eagerly and return a collected
-    // LocalRelation — their incremental plans live in StreamingSpec,
-    // so the default listing skips them rather than print zeros.
-    // q64 is likewise skipped: componentLabels runs count() actions in
-    // its fixpoint loop, so building its DataFrame executes full Spark
-    // jobs eagerly and the plan here would cover only the final rollup.
-    // q80 executes eagerly too (it must run under its pinned bloom
-    // confs) and returns a LocalRelation.
-    val streaming = Set("q59_stream_window", "q69_stream_dedup",
-      "q70_stream_sessions", "q71_stream_enrich", "q79_stream_join",
-      "q107_stream_kmv", "q130_stream_alerts", "q146_stream_outer_join",
-      "q154_stream_session_window",
-      "q64_dedup_clusters", "q150_keep_best", "q80_bloom_join")
+    // The `stream` family's gates execute eagerly and return a
+    // collected LocalRelation — their incremental plans live in
+    // StreamingSpec, so the default listing skips them rather than
+    // run them and print zeros. q64 is likewise skipped:
+    // componentLabels runs count() actions in its fixpoint loop, so
+    // building its DataFrame executes full Spark jobs eagerly and the
+    // plan here would cover only the final rollup. q80 executes
+    // eagerly too (it must run under its pinned bloom confs) and
+    // returns a LocalRelation.
+    val eager = graft.SparkEntry.families("stream") ++
+      Set("q64_dedup_clusters", "q150_keep_best", "q80_bloom_join")
     val (flags, qs) = args.partition(_.startsWith("--"))
     // `--no-aqe`: print the STATIC physical plan (AQE off), where the
     // ReuseExchangeAndSubquery preparation rule is applied visibly —
@@ -32,7 +30,7 @@ object ExplainAudit {
     if (flags.contains("--summary")) {
       val names =
         if (qs.nonEmpty) qs.toSeq
-        else graft.SparkEntry.queries.keys.toSeq.sorted.filterNot(streaming)
+        else graft.SparkEntry.queries.keys.toSeq.sorted.filterNot(eager)
       for (q <- names) {
         val plan =
           graft.SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
