@@ -27,8 +27,14 @@ import scala.collection.mutable
   *    `total_lines` (`:231,:730,:262`) — we split with limit -1;
   *  - node iteration order = insertion order (LinkedHashMap); a reload
   *    keeps the key's position, like a Python dict assignment.
+  *
+  * `maxLoadChars` bounds one load's content (default
+  * [[LogCatalog.defaultMaxLoadChars]]): a larger one throws
+  * [[LogCatalog.LoadTooLarge]] before any line is split, leaving the
+  * catalog as it was.
   */
-final class LogCatalog(val spark: SparkSession) {
+final class LogCatalog(val spark: SparkSession,
+                       maxLoadChars: Long = LogCatalog.defaultMaxLoadChars) {
 
   /** One node key's raw lines and the state derived from them. */
   private final class Node(val raw: DataFrame) {
@@ -38,13 +44,21 @@ final class LogCatalog(val spark: SparkSession) {
 
   private val storage = mutable.LinkedHashMap.empty[String, Node]
 
-  private def putLines(key: String, lines: Seq[String]): (Long, Int) = {
-    val rows = lines.zipWithIndex.map { case (l, i) => Row(key, (i + 1).toLong, l) }
+  /** Replaces `key`'s raw part with `content`'s lines. No job runs: the
+    * part is [[LogCatalog.rawPart]] over a few line-aligned slices of
+    * the content string, split into rows by the task that reads them.
+    */
+  private def putContent(key: String, content: String): (Long, Int) = {
+    checkSize(content)
+    val (lines, slices) = LogCatalog.slices(content, spark.sparkContext.defaultParallelism)
+    unions.clear()
     storage.get(key).foreach(_.classified.foreach(_.unpersist()))
-    storage(key) = new Node(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), Schemas.rawLine))
-    (lines.size.toLong, storage.size)
+    storage(key) = new Node(LogCatalog.rawPart(spark, key, slices))
+    (lines, storage.size)
   }
+
+  private def checkSize(content: String): Unit =
+    if (content.length > maxLoadChars) throw new LogCatalog.LoadTooLarge(content.length, maxLoadChars)
 
   private def emptyRaw: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.rawLine)
@@ -62,7 +76,7 @@ final class LogCatalog(val spark: SparkSession) {
     * parity as [[loadInline]].
     */
   def loadContent(nodeKey: String, content: String): (Long, Int) = synchronized {
-    putLines(nodeKey, content.split("\n", -1).toSeq) // Python str.split('\n') parity
+    putContent(nodeKey, content)
   }
 
   /** `load_logs_from_ssh`-shaped load from a (local or staged) file path,
@@ -77,18 +91,19 @@ final class LogCatalog(val spark: SparkSession) {
                tailLines: Option[Int] = None): (Long, Int) = synchronized {
     val content = spark.read.option("wholetext", "true").text(path)
       .collect().map(_.getString(0)).mkString("\n")
-    val all = content.split("\n", -1).toSeq
+    checkSize(content)
     // Emulate remote `tail -n N`: last N CONTENT lines; the trailing
     // empty element from a final newline survives the tail (tail's
     // output still ends with '\n'), exactly like the reference's
     // split of the tail output (`cassandra_log_analyzer.py:136-137,662`).
-    val lines = tailLines.fold(all) { n =>
+    val tailed = tailLines.fold(content) { n =>
+      val all = content.split("\n", -1).toSeq
       val (body, trailer) =
         if (all.nonEmpty && all.last.isEmpty) (all.dropRight(1), Seq(""))
         else (all, Seq.empty[String])
-      body.takeRight(n) ++ trailer
+      (body.takeRight(n) ++ trailer).mkString("\n")
     }
-    putLines(s"${nodeName}_$logType", lines)
+    putContent(s"${nodeName}_$logType", tailed)
   }
 
   /** Node keys in insertion order (= reference dict order). */
@@ -122,18 +137,23 @@ final class LogCatalog(val spark: SparkSession) {
 
   /** UNION ALL of the cached parse+classify parts of `keys` (unknown
     * keys skipped; none left yields an empty classified relation). The
-    * union itself is never cached — its parts are.
+    * union itself is never cached — its parts are. It is kept per set
+    * of known keys until the next load, because analysing a union of
+    * k parts costs each call tens of milliseconds of driver time.
     */
   def classifiedOf(keys: Seq[String]): DataFrame = synchronized {
-    val parts = keys.flatMap(storage.get).map { n =>
+    val known = keys.filter(storage.contains)
+    unions.getOrElseUpdate(known, known.map(storage).map { n =>
       n.classified.getOrElse {
         val df = ClusterAnalyzer.classify(n.raw).cache()
         n.classified = Some(df)
         df
       }
-    }
-    parts.reduceOption(_.unionByName(_)).getOrElse(ClusterAnalyzer.classify(emptyRaw))
+    }.reduceOption(_.unionByName(_)).getOrElse(ClusterAnalyzer.classify(emptyRaw)))
   }
+
+  /** [[classifiedOf]]'s unions, by their known keys; every load clears it. */
+  private val unions = mutable.HashMap.empty[Seq[String], DataFrame]
 
   /** The parse+classify relation of every node. */
   def classified: DataFrame = classifiedOf(nodeKeys)
@@ -155,4 +175,54 @@ final class LogCatalog(val spark: SparkSession) {
     }
     storage.toSeq.collect { case (k, n) if n.stats.exists(_.totalLines > 0) => k -> n.stats.get }
   }
+}
+
+object LogCatalog {
+
+  /** A load's character bound on this JVM: a sixteenth of the maximum
+    * heap. Loading n characters holds the request line, the content
+    * string and its split lines and rows at once, a few times 2n bytes
+    * as UTF-16, so one load stays well below half the heap.
+    */
+  def defaultMaxLoadChars: Long = Runtime.getRuntime.maxMemory / 16
+
+  /** `content`'s line count under Python's `split('\n')` (a trailing
+    * newline ends in one more, empty, line) and at most `n` slices of
+    * it: `(first line number, text)`, cut at newlines into runs of
+    * equal line counts, so that `text.split("\n", -1)` is exactly the
+    * run's lines. Every slice shares `content`'s parity: the lines of
+    * all slices, in order, are `content.split("\n", -1)`.
+    */
+  private[graft] def slices(content: String, n: Int): (Long, Seq[(Long, String)]) = {
+    val newlines = Array.newBuilder[Int]
+    var at = content.indexOf('\n')
+    while (at >= 0) { newlines += at; at = content.indexOf('\n', at + 1) }
+    val nl = newlines.result()
+    val lines = nl.length + 1
+    val k = math.min(n, lines)
+    // line i starts after newline i-1 and ends at newline i (or the end)
+    def start(i: Int) = if (i == 0) 0 else nl(i - 1) + 1
+    def end(i: Int) = if (i == nl.length) content.length else nl(i)
+    val cuts = (0 to k).map(j => (j.toLong * lines / k).toInt)
+    (lines.toLong, cuts.zip(cuts.tail).map { case (a, b) =>
+      (a + 1L, content.substring(start(a), end(b - 1)))
+    })
+  }
+
+  /** One node key's raw part over [[slices]]: one partition per slice,
+    * each split into `(node, line_number, value)` rows in line order
+    * when a task reads it. A slice ships as one string, where a
+    * parallelized row collection would ship (and serialize) one object
+    * graph per line with every task that reads the part.
+    */
+  private def rawPart(spark: SparkSession, key: String, slices: Seq[(Long, String)]): DataFrame = {
+    val rows = spark.sparkContext.parallelize(slices, slices.size).flatMap { case (first, text) =>
+      text.split("\n", -1).iterator.zipWithIndex.map { case (l, i) => Row(key, first + i, l) }
+    }
+    spark.createDataFrame(rows, Schemas.rawLine)
+  }
+
+  /** A load whose content exceeds the catalog's bound; nothing was loaded. */
+  final class LoadTooLarge(val chars: Long, val max: Long)
+      extends IllegalArgumentException(s"contenu trop volumineux: $chars caractères (maximum $max)")
 }

@@ -92,9 +92,11 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
         for {
           node <- req(args, "node_name")
           content <- req(args, "log_content")
+          loaded <- try Right(catalog.loadInline(node, content))
+            catch { case e: LogCatalog.LoadTooLarge => Left((-32602, s"Argument invalide: ${e.getMessage}")) }
         } yield {
           val logType = str(args, "log_type").getOrElse("system")
-          val (lines, total) = catalog.loadInline(node, content)
+          val (lines, total) = loaded
           s"Logs $logType chargés pour '$node'\n" +
             s"Nombre de lignes: $lines\nTotal nodes: $total"
         }

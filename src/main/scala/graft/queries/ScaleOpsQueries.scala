@@ -117,15 +117,8 @@ object ScaleOpsQueries extends graft.QueryFamily {
     // oracle reproduces via a correlated EXISTS over the same cells CTE.
     "q91_semantic_dedup" -> ((s, dir) => {
       val corpus = SimilarityQueries.emb(s, dir)
-      val cents: Seq[(Long, Array[Double], Double)] = corpus
-        .where(col("vec_id").isin(SimilarityQueries.centroidIds: _*))
-        .orderBy("vec_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble),
-          r.getDouble(2))).toSeq
       val best = graft.functions.VectorFunctions.bestCell(
-        col("embedding"), col("n2"),
-        cents.map { case (id, ce, n2) => (id, ce, n2) })
+        col("embedding"), col("n2"), SimilarityQueries.ivfCents(s, dir))
       val cells = corpus.select(col("vec_id"), col("embedding"), col("n2"),
         (-best.getField("nid")).as("cell"))
       val earlier = cells.select(col("vec_id").as("b_id"),

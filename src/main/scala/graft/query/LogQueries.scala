@@ -3,9 +3,10 @@ package graft.query
 import graft.analyze.ClusterAnalyzer
 import graft.ingest.LogCatalog
 import graft.model.{NodeStats, Recommendation}
-import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The analytical tools of the reference's MCP surface over a
   * [[LogCatalog]]: DataFrame plans, or local frames over its per-node
@@ -19,25 +20,36 @@ object LogQueries {
     * — stack traces and blanks are searchable), case-insensitive by
     * default (`(?i)` prepended, = `re.IGNORECASE`), optional node filter
     * where a missing node silently yields empty. Hits carry the 1-based
-    * per-node line number and the STRIPPED line.
+    * per-node line number and the STRIPPED line, unordered.
     *
-    * Scale: the rlike predicate evaluates inside the scan stage under
-    * whole-stage codegen — no shuffle at all; ordering/limit happen on
-    * the (usually tiny) hit set.
+    * The scan reads each node key's cached classified part
+    * ([[LogCatalog.classifiedOf]]), which holds the raw `value` beside
+    * `node` and `line_number`; column pruning leaves the scan only
+    * those three column buffers to decode, and the rlike predicate runs
+    * in the scan stage. A node that no analysis has read yet gets its
+    * classified part built (and cached) by the search.
     */
-  def searchLogs(catalog: LogCatalog, pattern: String,
-                 caseSensitive: Boolean = false,
-                 nodeFilter: Option[String] = None): DataFrame = {
+  def hits(catalog: LogCatalog, pattern: String,
+           caseSensitive: Boolean = false,
+           nodeFilter: Option[String] = None): DataFrame = {
     val p = if (caseSensitive) pattern else "(?i)" + pattern
     // fail fast on the driver for an invalid user pattern (the reference's
     // re.search raises immediately) instead of N task failures later
     java.util.regex.Pattern.compile(p)
-    val base = nodeFilter.fold(catalog.raw)(catalog.rawFor)
-    base.where(col("value").rlike(p))
+    catalog.classifiedOf(nodeFilter.fold(catalog.nodeKeys)(Seq(_)))
+      .where(col("value").rlike(p))
       .select(col("node"), col("line_number"),
         btrim(col("value"), lit(pyWhitespace)).as("content"))
-      .orderBy("node", "line_number")
   }
+
+  /** [[hits]] in `(node, line_number)` order. The global sort costs a
+    * range-sampling job and a sort shuffle; the MCP tool goes through
+    * [[searchLogsCapped]] instead, which needs neither.
+    */
+  def searchLogs(catalog: LogCatalog, pattern: String,
+                 caseSensitive: Boolean = false,
+                 nodeFilter: Option[String] = None): DataFrame =
+    hits(catalog, pattern, caseSensitive, nodeFilter).orderBy("node", "line_number")
 
   /** The characters Python's argument-less `str.strip()` removes
     * (`str.isspace`) — Spark's one-argument `trim` strips spaces only,
@@ -47,19 +59,51 @@ object LogQueries {
     "\t\n\u000b\u000c\r\u001c\u001d\u001e\u001f \u0085\u00a0\u1680" +
       ('\u2000' to '\u200a').mkString + "\u2028\u2029\u202f\u205f\u3000"
 
-  /** Search with display cap — the first 100 hits (collected) plus the
-    * total (`cassandra_log_analyzer.py:790-797`). The filtered relation
-    * is cached across the pair of jobs so the regex scan over the raw
-    * corpus runs ONCE (uncached, limit and count would each rescan
-    * every line), then dropped.
+  /** The display cap of `search_logs` (`cassandra_log_analyzer.py:792`). */
+  val SearchCap = 100
+
+  /** Search with display cap — the first [[SearchCap]] hits in
+    * [[searchLogs]]' order plus the total (`cassandra_log_analyzer.py:790-797`),
+    * from ONE Spark job over [[hits]] with no sort and no shuffle. The
+    * scan is coalesced to a task per core; each task folds its rows to
+    * their count and their first [[SearchCap]] in [[hitOrder]] (a bounded
+    * max-heap), and the driver merges those few rows. A partition of a
+    * part is one node's ascending line range, so rows arrive in such
+    * runs and, once a heap is full, most cost one comparison with its head.
     */
   def searchLogsCapped(catalog: LogCatalog, pattern: String,
                        caseSensitive: Boolean = false,
                        nodeFilter: Option[String] = None)
-      : (Array[org.apache.spark.sql.Row], Long) = {
-    val all = searchLogs(catalog, pattern, caseSensitive, nodeFilter).cache()
-    try (all.limit(100).collect(), all.count())
-    finally all.unpersist(blocking = false)
+      : (Array[Row], Long) = {
+    val (order, cap) = (hitOrder, SearchCap) // the task closure captures these, not this object
+    val scan = hits(catalog, pattern, caseSensitive, nodeFilter).queryExecution.toRdd
+    // every task deserializes the lineage of all the parts, so a task per
+    // core, each folding several partitions, pays that once per core
+    val folds = scan.coalesce(math.max(1, math.min(scan.getNumPartitions,
+        catalog.spark.sparkContext.defaultParallelism)))
+      .mapPartitions { rows =>
+        val heap = new java.util.PriorityQueue[InternalRow](cap, order.reverse)
+        var n = 0L
+        rows.foreach { r =>
+          n += 1
+          if (heap.size < cap) heap.add(r.copy())
+          else if (order.lt(r, heap.peek)) { heap.poll(); heap.add(r.copy()) }
+        }
+        Iterator((n, heap.toArray(Array.empty[InternalRow])))
+      }.collect()
+    val first = folds.flatMap(_._2).sorted(order).take(cap)
+      .map(r => Row(r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).toString))
+    (first, folds.map(_._1).sum)
+  }
+
+  /** `(node, line_number)` over [[hits]] rows, nodes in Spark's string
+    * order (unsigned UTF-8 bytes, `UTF8String.compareTo`) — the order
+    * `orderBy("node")` follows and `String.compareTo` does not for
+    * supplementary characters.
+    */
+  private val hitOrder: Ordering[InternalRow] = (a, b) => {
+    val c = a.getUTF8String(0).compareTo(b.getUTF8String(0))
+    if (c != 0) c else java.lang.Long.compare(a.getLong(1), b.getLong(1))
   }
 
   /** `get_errors` (`cassandra_log_analyzer.py:801-826`): error entries,
@@ -78,11 +122,9 @@ object LogQueries {
     ClusterAnalyzer.errorsByNode(catalog.classifiedOf(keys)).limit(limit)
   }
 
-  /** Spark's string order (unsigned UTF-8 bytes), which `orderBy("node")`
-    * follows and `String.compareTo` does not for supplementary characters.
-    */
+  /** [[hitOrder]]'s node order on driver-side strings. */
   private def sparkStringLess(a: String, b: String): Boolean =
-    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   /** `compare_nodes` (`cassandra_log_analyzer.py:828-842`): summary rows
     * for the requested node keys, in REQUEST order — a repeated node is

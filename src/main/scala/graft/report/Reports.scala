@@ -71,7 +71,8 @@ object Reports {
       sb ++= s"**${r.getString(0)}** (ligne ${r.getLong(1)})\n"
       sb ++= s"```\n${r.getString(2)}\n```\n\n"
     }
-    if (total > 100) sb ++= s"\n... et ${total - 100} résultats supplémentaires"
+    if (total > LogQueries.SearchCap)
+      sb ++= s"\n... et ${total - LogQueries.SearchCap} résultats supplémentaires"
     sb.result()
   }
 

@@ -1,0 +1,62 @@
+package graft
+
+import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
+import graft.mcp.McpDispatcher
+import org.json4s._
+
+/** Loads into the catalog: the content's line-aligned slices, and the
+  * load bound. A load above the catalog's character bound fails that
+  * request alone: the catalog keeps its nodes and their content, and the
+  * server answers -32602 and goes on. The bound is set small here; the
+  * default derives from the JVM's maximum heap.
+  */
+class CatalogLoadSpec extends SparkSuite {
+
+  test("slices hold exactly split('\\n', -1)'s lines, numbered from 1") {
+    val rnd = new scala.util.Random(7)
+    val contents = Seq("", "\n", "\n\n", "a", "a\n", "\na") ++
+      (1 to 200).map(_ => Seq.fill(rnd.nextInt(40))(if (rnd.nextInt(3) == 0) '\n' else 'x').mkString)
+    for (content <- contents; n <- 1 to 6) {
+      val lines = content.split("\n", -1).toSeq
+      val (count, slices) = LogCatalog.slices(content, n)
+      assert(count == lines.size)
+      assert(slices.size == math.min(n, lines.size))
+      val numbered = slices.flatMap { case (first, text) =>
+        text.split("\n", -1).toSeq.zipWithIndex.map { case (l, i) => (first + i, l) }
+      }
+      assert(numbered == lines.zipWithIndex.map { case (l, i) => (i + 1L, l) }, s"content=$content n=$n")
+      val sizes = slices.map(_._2.split("\n", -1).length)
+      assert(sizes.max - sizes.min <= 1)
+    }
+  }
+
+  test("the catalog refuses content above its bound and stays as it was") {
+    val c = new LogCatalog(spark, maxLoadChars = 16)
+    assert(c.loadInline("a", "x\ny") == ((2L, 1)))
+    assert(c.loadInline("b", "z" * 16) == ((1L, 2)))
+    val e = intercept[LogCatalog.LoadTooLarge](c.loadInline("a", "y" * 17))
+    assert(e.chars == 17 && e.max == 16)
+    intercept[LogCatalog.LoadTooLarge](c.loadInline("c", "\n" * 17))
+    assert(c.nodeKeys == Seq("a", "b"))
+    assert(c.stats.map { case (k, s) => k -> s.totalLines } == Seq("a" -> 2L, "b" -> 1L))
+  }
+
+  test("load_logs above the bound is a -32602 and the server goes on") {
+    val d = new McpDispatcher(new LogCatalog(spark, maxLoadChars = 32),
+      new RemoteFetcher(_ => new RemoteFetch.LocalShellRunner))
+    def load(node: String, content: String) = d.handle("tools/call", JObject(
+      "name" -> JString("load_logs"),
+      "arguments" -> JObject("node_name" -> JString(node), "log_content" -> JString(content))))
+    assert(load("n1", "ERROR one").isRight)
+    val Left((code, msg)) = load("n2", "e" * 33): @unchecked
+    assert(code == -32602 && msg.contains("33"))
+    assert(d.catalog.nodeKeys == Seq("n1"))
+    val Right(ok) = load("n3", "INFO two"): @unchecked
+    assert(compactText(ok).contains("Total nodes: 2"))
+  }
+
+  private def compactText(v: JValue): String = v \ "content" match {
+    case JArray(List(item)) => (item \ "text") match { case JString(t) => t; case o => o.toString }
+    case o => o.toString
+  }
+}

@@ -1,0 +1,103 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.ingest.LogCatalog
+import graft.query.LogQueries
+import graft.report.Reports
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** The capped search (`search_logs`' first 100 hits plus the total) on
+  * a catalog whose node keys are loaded out of Spark's string order:
+  * `node2` before `node10`, and two non-ASCII keys whose UTF-16 order
+  * (`String.compareTo`) is the reverse of their UTF-8 byte order.
+  */
+class SearchSpec extends SparkSuite {
+
+  private val fffd = "n\uFFFD" // UTF-8 EF BF BD
+  private val emoji = "n\uD83D\uDE00" // U+1F600, UTF-8 F0 9F 98 80
+  private val byteOrder = Seq("node10", "node2", fffd, emoji)
+
+  /** 30 hits spread over 90 lines: each of a part's 4 slices holds some. */
+  private def content(tag: String): String =
+    (1 to 90).map(i => if (i % 3 == 0) s"INFO [main] C:$i - $tag Hit $i" else s"INFO [main] C:$i - other $i")
+      .mkString("\n")
+
+  private def catalog(): LogCatalog = {
+    val c = new LogCatalog(spark)
+    Seq("node2", emoji, "node10", fffd).foreach(k => c.loadInline(k, content("old")))
+    c
+  }
+
+  private def assertCappedMatchesSorted(c: LogCatalog, pattern: String, cs: Boolean,
+                                        nf: Option[String]): (Array[org.apache.spark.sql.Row], Long) = {
+    val (first, total) = LogQueries.searchLogsCapped(c, pattern, cs, nf)
+    val sorted = LogQueries.searchLogs(c, pattern, cs, nf)
+    assert(first.toSeq == sorted.limit(100).collect().toSeq)
+    assert(total == sorted.count())
+    (first, total)
+  }
+
+  test("capped search = the sorted search's first 100 and count, nodes in byte order") {
+    val c = catalog()
+    val (first, total) = assertCappedMatchesSorted(c, "hit", cs = false, None)
+    assert(total == 120 && first.length == 100)
+    assert(first.map(_.getString(0)).distinct.toSeq == byteOrder)
+    assert(first.take(2).map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
+      Seq(("node10", 3L, "INFO [main] C:3 - old Hit 3"), ("node10", 6L, "INFO [main] C:6 - old Hit 6")))
+    // the hits of one node come from more than one partition of its part
+    val perPartition = LogQueries.hits(c, "hit", nodeFilter = Some("node2")).rdd
+      .mapPartitions(it => Iterator(it.size)).collect()
+    assert(perPartition.count(_ > 0) > 1)
+    assertCappedMatchesSorted(c, "Hit 9", cs = true, None)
+    assertCappedMatchesSorted(c, "hit", cs = true, None)
+    assertCappedMatchesSorted(c, "hit", cs = false, Some(emoji))
+  }
+
+  test("a reloaded node is searched with its new lines only") {
+    val c = catalog()
+    assert(LogQueries.searchLogsCapped(c, "old", nodeFilter = Some("node2"))._2 == 30)
+    c.loadInline("node2", "fresh one\nold-free line\nfresh two")
+    val (first, total) = assertCappedMatchesSorted(c, "fresh", cs = false, None)
+    assert(total == 2)
+    assert(first.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("node2", 1L), ("node2", 3L)))
+    assert(LogQueries.searchLogsCapped(c, "old ", nodeFilter = Some("node2"))._2 == 0)
+    assert(LogQueries.searchLogsCapped(c, "old ")._2 == 90)
+  }
+
+  test("a node_filter naming an unknown node finds nothing") {
+    assert(Reports.renderSearch(catalog(), "hit", nodeFilter = Some("ghost")) ==
+      "Aucun résultat pour: hit")
+  }
+
+  test("one Spark job per capped search") {
+    val c = catalog()
+    LogQueries.searchLogsCapped(c, "hit") // builds and caches the classified parts
+    val group = "search-spec-jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "capped searches")
+      LogQueries.searchLogsCapped(c, "hit")
+      LogQueries.searchLogsCapped(c, "HIT", caseSensitive = true)
+      LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some(fffd))
+      LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some("ghost"))
+      sc.clearJobGroup()
+      // the listener bus is asynchronous: wait for the jobs, then a
+      // little longer so that an extra one would be seen too
+      val deadline = System.nanoTime() + 10000000000L
+      while (jobs.get < 4 && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(300)
+      assert(jobs.get == 4)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}
