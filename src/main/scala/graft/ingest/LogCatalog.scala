@@ -2,6 +2,8 @@ package graft.ingest
 
 import graft.analyze.ClusterAnalyzer
 import graft.model.{NodeStats, Schemas}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import scala.collection.mutable
@@ -210,16 +212,27 @@ object LogCatalog {
   }
 
   /** One node key's raw part over [[slices]]: one partition per slice,
-    * each split into `(node, line_number, value)` rows in line order
-    * when a task reads it. A slice ships as one string, where a
+    * split into `(node, line_number, value)` rows in line order by the
+    * task that reads it. A slice ships as one string, where a
     * parallelized row collection would ship (and serialize) one object
-    * graph per line with every task that reads the part.
+    * graph per line with every task that reads the part. An RDD of its
+    * own, not `parallelize(...).flatMap`, because a load then runs no
+    * closure cleaning: a load is on the request path.
     */
-  private def rawPart(spark: SparkSession, key: String, slices: Seq[(Long, String)]): DataFrame = {
-    val rows = spark.sparkContext.parallelize(slices, slices.size).flatMap { case (first, text) =>
-      text.split("\n", -1).iterator.zipWithIndex.map { case (l, i) => Row(key, first + i, l) }
+  private def rawPart(spark: SparkSession, key: String, slices: Seq[(Long, String)]): DataFrame =
+    spark.createDataFrame(new SliceRDD(spark.sparkContext, key, slices), Schemas.rawLine)
+
+  private final class Slice(val index: Int, val first: Long, val text: String) extends Partition
+
+  private final class SliceRDD(sc: SparkContext, key: String, @transient slices: Seq[(Long, String)])
+      extends RDD[Row](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      slices.zipWithIndex.map { case ((first, text), i) => new Slice(i, first, text): Partition }.toArray
+
+    override def compute(split: Partition, context: TaskContext): Iterator[Row] = {
+      val s = split.asInstanceOf[Slice]
+      s.text.split("\n", -1).iterator.zipWithIndex.map { case (l, i) => Row(key, s.first + i, l) }
     }
-    spark.createDataFrame(rows, Schemas.rawLine)
   }
 
   /** A load whose content exceeds the catalog's bound; nothing was loaded. */
