@@ -47,7 +47,7 @@ final class LogCatalog(val spark: SparkSession,
   private val storage = mutable.LinkedHashMap.empty[String, Node]
 
   /** Replaces `key`'s raw part with `content`'s lines. No job runs: the
-    * part is [[LogCatalog.rawPart]] over a few line-aligned slices of
+    * part is a [[LogCatalog.SliceRDD]] over a few line-aligned slices of
     * the content string, split into rows by the task that reads them.
     */
   private def putContent(key: String, content: String): (Long, Int) = {
@@ -55,7 +55,8 @@ final class LogCatalog(val spark: SparkSession,
     val (lines, slices) = LogCatalog.slices(content, spark.sparkContext.defaultParallelism)
     unions.clear()
     storage.get(key).foreach(_.classified.foreach(_.unpersist()))
-    storage(key) = new Node(LogCatalog.rawPart(spark, key, slices))
+    storage(key) = new Node(spark.createDataFrame(
+      new LogCatalog.SliceRDD(spark.sparkContext, key, slices), Schemas.rawLine))
     (lines, storage.size)
   }
 
@@ -211,7 +212,7 @@ object LogCatalog {
     })
   }
 
-  /** One node key's raw part over [[slices]]: one partition per slice,
+  /** One node key's raw lines over [[slices]]: one partition per slice,
     * split into `(node, line_number, value)` rows in line order by the
     * task that reads it. A slice ships as one string, where a
     * parallelized row collection would ship (and serialize) one object
@@ -219,11 +220,6 @@ object LogCatalog {
     * own, not `parallelize(...).flatMap`, because a load then runs no
     * closure cleaning: a load is on the request path.
     */
-  private def rawPart(spark: SparkSession, key: String, slices: Seq[(Long, String)]): DataFrame =
-    spark.createDataFrame(new SliceRDD(spark.sparkContext, key, slices), Schemas.rawLine)
-
-  private final class Slice(val index: Int, val first: Long, val text: String) extends Partition
-
   private final class SliceRDD(sc: SparkContext, key: String, @transient slices: Seq[(Long, String)])
       extends RDD[Row](sc, Nil) {
     override protected def getPartitions: Array[Partition] =
@@ -234,6 +230,8 @@ object LogCatalog {
       s.text.split("\n", -1).iterator.zipWithIndex.map { case (l, i) => Row(key, s.first + i, l) }
     }
   }
+
+  private final class Slice(val index: Int, val first: Long, val text: String) extends Partition
 
   /** A load whose content exceeds the catalog's bound; nothing was loaded. */
   final class LoadTooLarge(val chars: Long, val max: Long)
