@@ -1,10 +1,12 @@
 package graft.analyze
 
 import graft.classify.IssueClassifier
-import graft.model.{NodeStats, Recommendation}
+import graft.functions.MultiMatch
+import graft.model.{NodeStats, Recommendation, Schemas}
 import graft.parse.LogLineParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** The flagship analysis — Spark mapping of `analyze_logs`
   * (`cassandra_log_analyzer.py:219-268`) and `_generate_recommendations`
@@ -19,11 +21,13 @@ import org.apache.spark.sql.functions._
   * the oracle queries and as the reference the driver-side forms are
   * tested against.
   *
-  * Scale notes (100 TB): [[nodeStats]] is a single scan + single hash
-  * aggregate keyed by node (map-side partial then final — the node
-  * cardinality is tiny so the shuffle is negligible); [[issueHistogram]]
-  * explodes at most 14 structs per line and aggregates on a 14-value key.
-  * No joins, no windows, no driver-side loops anywhere in the hot path.
+  * Scale notes (100 TB): the served per-node counts are one scan with
+  * no shuffle, a fold per task and a merge of 17 longs per node
+  * key on the driver (`LogCatalog.stats`); [[nodeStats]] is the same
+  * counts as a hash aggregate keyed by node, the DataFrame reference.
+  * [[issueHistogram]] explodes at most 14 structs per line and
+  * aggregates on a 14-value key. No joins, no windows, no per-row
+  * driver work anywhere in the hot path.
   */
 object ClusterAnalyzer {
 
@@ -31,17 +35,34 @@ object ClusterAnalyzer {
     * `total_lines` can be counted in the same scan. Adds:
     * level/timestamp/thread/clazz/line/message, parsed, issues,
     * is_error, is_warning.
+    *
+    * The 14 patterns run once per parsed message, as one
+    * [[MultiMatch.issueMask]] in a projection of its own; `issues`,
+    * `is_error` and `is_warning` are derived from that mask, which is
+    * then dropped. The optimizer does not inline a non-cheap expression
+    * into several uses, so the mask stays one evaluation per row. The
+    * columns equal [[IssueClassifier.issues]], `isError` and
+    * `isWarning` over the parsed lines, the rlike reference.
     */
   def classify(raw: DataFrame, lineCol: String = "value"): DataFrame = {
     val p = LogLineParser.parseKeepingUnmatched(raw, lineCol)
-    p.withColumn("issues",
-        when(col("parsed"), IssueClassifier.issues(col("message")))
-          .otherwise(array().cast(org.apache.spark.sql.types.ArrayType(graft.model.Schemas.issue))))
-      .withColumn("is_error",
-        col("parsed") && IssueClassifier.isError(col("level"), col("message")))
-      .withColumn("is_warning",
-        col("parsed") && IssueClassifier.isWarning(col("level"), col("message")))
+    val mask = col("issue_mask")
+    def hits(bits: Long): Column = mask.bitwiseAND(bits) =!= 0
+    val issues = array_compact(array(IssueClassifier.allPatterns.zipWithIndex.map {
+      case ((sev, t, _), i) => when(hits(1L << i), struct(lit(sev).as("severity"), lit(t).as("issueType")))
+    }: _*))
+    p.withColumn("issue_mask", MultiMatch.issueMask(col("message")))
+      .select(p.columns.toSeq.map(col) ++ Seq(
+        when(col("parsed"), issues).otherwise(array().cast(ArrayType(Schemas.issue))).as("issues"),
+        (col("parsed") && (col("level") === "ERROR" || hits(errorBits))).as("is_error"),
+        (col("parsed") && (col("level") === "WARN" || hits(warningBits))).as("is_warning")): _*)
   }
+
+  /** [[MultiMatch.issueMask]]'s bits of the error patterns (the first
+    * ten) and of the warning patterns (the last four).
+    */
+  private val errorBits = (1L << IssueClassifier.errorPatterns.size) - 1
+  private val warningBits = ((1L << IssueClassifier.allPatterns.size) - 1) ^ errorBits
 
   /** The 14 issue types in reference order — the column order of
     * [[nodeStats]] and the index order of `NodeStats.issueCounts`.

@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * `java.util.regex` (alternation, `(?:…)`, `.*`, `\.`, inline `(?i)`).
   * Implementation is pure built-ins (`rlike` + `array_compact`) so the
   * classifier stays inside whole-stage codegen; each literal pattern is
-  * compiled once per task. See graft.functions.MultiMatch for the
-  * single-pass custom-Expression variant used on the hot path.
+  * compiled once per task. The served path (`ClusterAnalyzer.classify`)
+  * derives the same columns from one graft.functions.MultiMatch pass;
+  * these forms are the reference it is tested against.
   */
 object IssueClassifier {
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,9 +19,9 @@ import java.util.regex.Pattern
   * branch structures in generated code. This expression makes ONE pass
   * over the pattern set with the compiled `Pattern[]` shared via a
   * codegen reference object, and returns a primitive long — no array
-  * allocation on the hot path. Downstream shaping (mask → issue structs)
-  * stays in built-in expressions, so only the scalar inner loop is
-  * custom.
+  * allocation on the hot path. Downstream shaping (mask → issue structs,
+  * `ClusterAnalyzer.classify`) stays in built-in expressions, so only
+  * the scalar inner loop is custom.
   *
   * `doGenCode` emits a plain Java loop — the expression participates in
   * whole-stage codegen rather than falling back to interpreted eval.
@@ -83,32 +82,4 @@ object MultiMatch {
   def issueMask(message: Column): Column =
     ColumnBridge.column(MultiMatch(ColumnBridge.expression(message),
       IssueClassifier.allPatterns.map(_._3)))
-
-  /** Drop-in replacement for [[IssueClassifier.issues]]: same
-    * `array<struct<severity,issueType>>` in the same order, but the 14
-    * regex evaluations collapse into one MultiMatch pass. The mask →
-    * struct expansion is built-in expressions over a literal array.
-    */
-  def issues(message: Column): Column = {
-    val mask = issueMask(message)
-    val entries = IssueClassifier.allPatterns.zipWithIndex.map {
-      case ((sev, t, _), i) =>
-        when(shiftright(mask, i).bitwiseAND(1) === 1,
-          struct(lit(sev).as("severity"), lit(t).as("issueType")))
-    }
-    array_compact(array(entries: _*))
-  }
-
-  /** Any-error / any-warning predicates from one shared mask. */
-  def anyError(message: Column): Column = {
-    val errorBits = (1L << IssueClassifier.errorPatterns.size) - 1
-    issueMask(message).bitwiseAND(errorBits) =!= 0
-  }
-
-  def anyWarning(message: Column): Column = {
-    val warnBits =
-      ((1L << IssueClassifier.allPatterns.size) - 1) ^
-        ((1L << IssueClassifier.errorPatterns.size) - 1)
-    issueMask(message).bitwiseAND(warnBits) =!= 0
-  }
 }

@@ -5,8 +5,11 @@ import graft.model.{NodeStats, Schemas}
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** The engine's replacement for the reference's session-global
   * `logs_storage: dict[node_key -> file content]`
@@ -16,7 +19,7 @@ import scala.collection.mutable
   * (`cassandra_log_analyzer.py:745,808,831,847`). Per node key:
   *  - the parse+classify part, cached the first time anything uses it;
   *  - its [[NodeStats]], computed for every node that lacks them in ONE
-  *    aggregate job ([[stats]]), then answered on the driver.
+  *    Spark job ([[stats]]), then answered on the driver.
   * A load replaces (and unpersists) only its own key's state, so the
   * next analysis after loading 1 of k nodes parses 1 node, not k.
   *
@@ -161,26 +164,70 @@ final class LogCatalog(val spark: SparkSession,
   /** The parse+classify relation of every node. */
   def classified: DataFrame = classifiedOf(nodeKeys)
 
-  /** Per-node stats in insertion order, computing those of every node
-    * that lacks them in one [[ClusterAnalyzer.nodeStats]] job. A node
-    * whose relation has no rows is absent, as in the reference's
-    * summary.
+  /** Per-node stats in insertion order. Those of every node that lacks
+    * them come from ONE Spark job with no shuffle: a [[LogCatalog.foldPerCore]]
+    * of [[LogCatalog.countRows]] over those nodes' classified parts,
+    * which builds the parts' cache in the same job. A node whose
+    * relation has no rows is absent, as in the reference's summary.
     */
   def stats: Seq[(String, NodeStats)] = synchronized {
     val missing = storage.collect { case (k, n) if n.stats.isEmpty => k }.toSeq
     if (missing.nonEmpty) {
-      val rows = ClusterAnalyzer.nodeStats(classifiedOf(missing)).collect()
-        .map(r => r.getString(0) -> NodeStats(r.getLong(1), r.getLong(2), r.getLong(3),
-          (4 until r.length).map(r.getLong)))
-        .toMap
-      val none = NodeStats(0L, 0L, 0L, ClusterAnalyzer.issueTypes.map(_ => 0L).toIndexedSeq)
-      missing.foreach(k => storage(k).stats = Some(rows.getOrElse(k, none)))
+      val counts = LogCatalog.foldPerCore(
+          classifiedOf(missing).select("node", "is_error", "is_warning", "issues"))(LogCatalog.countRows)
+        .flatten.groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map { case (x, y) => x + y })
+      missing.foreach { k =>
+        val c = counts.getOrElse(k, new Array[Long](3 + ClusterAnalyzer.issueTypes.size))
+        storage(k).stats = Some(NodeStats(c(0), c(1), c(2), c.drop(3).toIndexedSeq))
+      }
     }
     storage.toSeq.collect { case (k, n) if n.stats.exists(_.totalLines > 0) => k -> n.stats.get }
   }
 }
 
 object LogCatalog {
+
+  /** `fold` of each task's rows of `df`, collected: one Spark job whose
+    * scan is coalesced to a task per core. Every task of a job over the
+    * union of k classified parts deserializes the lineage of all k, so
+    * a task per core, each folding several partitions, pays that once
+    * per core. The rows are Spark's internal rows, valid until the next
+    * row is read.
+    */
+  private[graft] def foldPerCore[T: ClassTag](df: DataFrame)(fold: Iterator[InternalRow] => T): Array[T] = {
+    val scan = df.queryExecution.toRdd
+    scan.coalesce(math.max(1, math.min(scan.getNumPartitions, df.sparkSession.sparkContext.defaultParallelism)))
+      .mapPartitions(rows => Iterator(fold(rows))).collect()
+  }
+
+  /** [[LogCatalog.stats]]' fold over `(node, is_error, is_warning,
+    * issues)` rows: per node, the longs `errors, warnings, total_lines`
+    * and then one count per [[ClusterAnalyzer.issueTypes]] entry, the
+    * columns of [[ClusterAnalyzer.nodeStats]]. A partition is one
+    * node's line range, so rows come in runs of one node.
+    */
+  private def countRows(rows: Iterator[InternalRow]): Map[String, Array[Long]] = {
+    val types = ClusterAnalyzer.issueTypes.map(UTF8String.fromString).toArray
+    val byNode = mutable.HashMap.empty[String, Array[Long]]
+    var node: UTF8String = null
+    var c: Array[Long] = null
+    rows.foreach { r =>
+      if (node == null || node != r.getUTF8String(0)) {
+        node = r.getUTF8String(0).clone()
+        c = byNode.getOrElseUpdate(node.toString, new Array[Long](3 + types.length))
+      }
+      if (r.getBoolean(1)) c(0) += 1
+      if (r.getBoolean(2)) c(1) += 1
+      c(2) += 1
+      val issues = r.getArray(3)
+      var i = 0
+      while (i < issues.numElements) {
+        c(3 + types.indexOf(issues.getStruct(i, 2).getUTF8String(1))) += 1
+        i += 1
+      }
+    }
+    byNode.toMap
+  }
 
   /** A load's character bound on this JVM: a sixteenth of the maximum
     * heap. Loading n characters holds the request line, the content

@@ -64,9 +64,9 @@ object LogQueries {
 
   /** Search with display cap — the first [[SearchCap]] hits in
     * [[searchLogs]]' order plus the total (`cassandra_log_analyzer.py:790-797`),
-    * from ONE Spark job over [[hits]] with no sort and no shuffle. The
-    * scan is coalesced to a task per core; each task folds its rows to
-    * their count and their first [[SearchCap]] in [[hitOrder]] (a bounded
+    * from ONE Spark job over [[hits]] with no sort and no shuffle
+    * ([[LogCatalog.foldPerCore]]): each task folds its rows to their
+    * count and their first [[SearchCap]] in [[hitOrder]] (a bounded
     * max-heap), and the driver merges those few rows. A partition of a
     * part is one node's ascending line range, so rows arrive in such
     * runs and, once a heap is full, most cost one comparison with its head.
@@ -76,21 +76,16 @@ object LogQueries {
                        nodeFilter: Option[String] = None)
       : (Array[Row], Long) = {
     val (order, cap) = (hitOrder, SearchCap) // the task closure captures these, not this object
-    val scan = hits(catalog, pattern, caseSensitive, nodeFilter).queryExecution.toRdd
-    // every task deserializes the lineage of all the parts, so a task per
-    // core, each folding several partitions, pays that once per core
-    val folds = scan.coalesce(math.max(1, math.min(scan.getNumPartitions,
-        catalog.spark.sparkContext.defaultParallelism)))
-      .mapPartitions { rows =>
-        val heap = new java.util.PriorityQueue[InternalRow](cap, order.reverse)
-        var n = 0L
-        rows.foreach { r =>
-          n += 1
-          if (heap.size < cap) heap.add(r.copy())
-          else if (order.lt(r, heap.peek)) { heap.poll(); heap.add(r.copy()) }
-        }
-        Iterator((n, heap.toArray(Array.empty[InternalRow])))
-      }.collect()
+    val folds = LogCatalog.foldPerCore(hits(catalog, pattern, caseSensitive, nodeFilter)) { rows =>
+      val heap = new java.util.PriorityQueue[InternalRow](cap, order.reverse)
+      var n = 0L
+      rows.foreach { r =>
+        n += 1
+        if (heap.size < cap) heap.add(r.copy())
+        else if (order.lt(r, heap.peek)) { heap.poll(); heap.add(r.copy()) }
+      }
+      (n, heap.toArray(Array.empty[InternalRow]))
+    }
     val first = folds.flatMap(_._2).sorted(order).take(cap)
       .map(r => Row(r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).toString))
     (first, folds.map(_._1).sum)

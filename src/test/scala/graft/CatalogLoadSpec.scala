@@ -2,10 +2,11 @@ package graft
 
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.mcp.McpDispatcher
+import graft.report.Reports
 import org.json4s._
 
-/** Loads into the catalog: the content's line-aligned slices, and the
-  * load bound. A load above the catalog's character bound fails that
+/** Loads into the catalog: the content's line-aligned slices, the load
+  * bound, and the Spark work of the cold analysis that follows a load. A load above the catalog's character bound fails that
   * request alone: the catalog keeps its nodes and their content, and the
   * server answers -32602 and goes on. The bound is set small here; the
   * default derives from the JVM's maximum heap.
@@ -39,6 +40,19 @@ class CatalogLoadSpec extends SparkSuite {
     intercept[LogCatalog.LoadTooLarge](c.loadInline("c", "\n" * 17))
     assert(c.nodeKeys == Seq("a", "b"))
     assert(c.stats.map { case (k, s) => k -> s.totalLines } == Seq("a" -> 2L, "b" -> 1L))
+  }
+
+  test("a cold analysis after one reload runs one Spark job and writes no shuffle") {
+    val c = new LogCatalog(spark)
+    Seq("a", "b", "c").foreach(k => c.loadInline(k, "ERROR [t] [main] C:1 - Read timed out\nINFO [t] [main] C:2 - ok"))
+    Reports.renderAnalysis(c) // every node has its stats and its cached part
+    c.loadInline("b", "WARN [t] [main] C:1 - heap pressure\n")
+    val (jobs, shuffled) = sparkWork(Reports.renderAnalysis(c))
+    assert(jobs == 1 && shuffled == 0)
+    assert(sparkWork(Reports.renderAnalysis(c))._1 == 0)
+    assert(c.stats.map { case (k, s) => (k, s.errors, s.warnings, s.totalLines) } ==
+      Seq(("a", 1L, 0L, 2L), ("b", 0L, 1L, 2L), ("c", 1L, 0L, 2L)))
+    c.nodeKeys.foreach(k => c.classifiedOf(Seq(k)).unpersist(blocking = true))
   }
 
   test("load_logs above the bound is a -32602 and the server goes on") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.analyze.ClusterAnalyzer
 import graft.ingest.LogCatalog
+import graft.model.NodeStats
 import graft.report.Reports
 import org.scalacheck.{Gen, rng}
 
@@ -10,7 +11,8 @@ import org.scalacheck.{Gen, rng}
   * Seeded sequences of loads over 3–4 tiny nodes, reloads included;
   * after every load the stats-backed outputs are compared byte for byte
   * with a fresh catalog of the same final contents and with the
-  * DataFrame forms over `classify(catalog.raw)`.
+  * DataFrame forms over `classify(catalog.raw)`, and each node's stats
+  * row with `nodeStats`' row for it.
   */
 class IncrementalCatalogSpec extends SparkSuite {
 
@@ -115,6 +117,12 @@ class IncrementalCatalogSpec extends SparkSuite {
         dataFrameForms(fresh).foreach { case (call, want) =>
           assert(byCall(call) == want, s"$call after loading $node")
         }
+        // each node's 17 counts are the DataFrame aggregate's, row for row
+        val perNode = ClusterAnalyzer.nodeStats(ClusterAnalyzer.classify(inc.raw)).collect().map { r =>
+          assert(r.length == 4 + ClusterAnalyzer.issueTypes.size)
+          r.getString(0) -> NodeStats(r.getLong(1), r.getLong(2), r.getLong(3), (4 until r.length).map(r.getLong))
+        }.toMap
+        assert(inc.stats == inc.nodeKeys.flatMap(k => perNode.get(k).map(k -> _)), s"after loading $node")
         // per-type counts summed over nodes are the explode histogram
         val hist = ClusterAnalyzer.issueHistogram(ClusterAnalyzer.classify(inc.raw))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.ingest.LogCatalog
 import graft.query.LogQueries
 import graft.report.Reports
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The capped search (`search_logs`' first 100 hits plus the total) on
   * a catalog whose node keys are loaded out of Spark's string order:
@@ -73,31 +70,12 @@ class SearchSpec extends SparkSuite {
   test("one Spark job per capped search") {
     val c = catalog()
     LogQueries.searchLogsCapped(c, "hit") // builds and caches the classified parts
-    val group = "search-spec-jobs"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "capped searches")
+    val (jobs, _) = sparkWork {
       LogQueries.searchLogsCapped(c, "hit")
       LogQueries.searchLogsCapped(c, "HIT", caseSensitive = true)
       LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some(fffd))
       LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some("ghost"))
-      sc.clearJobGroup()
-      // the listener bus is asynchronous: wait for the jobs, then a
-      // little longer so that an extra one would be seen too
-      val deadline = System.nanoTime() + 10000000000L
-      while (jobs.get < 4 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(300)
-      assert(jobs.get == 4)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(jobs == 4)
   }
 }

@@ -1,11 +1,26 @@
 #!/usr/bin/env python3
-"""Compare two Bench per-query JSON files (the {"metric":"total",...} line
-persisted by Bench.scala). Usage: bench_diff.py A.json B.json [threshold]
-Prints per-query speedup (A/B), sorted; summarizes regressions/improvements
-beyond the threshold (default 10%)."""
+"""Compare benchmark runs. Two modes:
+
+    bench_diff.py A.json B.json [threshold]
+        Two graft.Bench per-query JSON files (the {"metric":"total",...}
+        line persisted by Bench.scala): per-query speedup (A/B), sorted,
+        and the regressions/improvements beyond the threshold (default 10%).
+
+    bench_diff.py runs.jsonl
+        A perfbench A/B: one JSON record per run with "workload", "side"
+        ("parent" or "change"), "seed", "correct", "failed" and
+        "metrics". Runs of one workload and seed on the two sides form a
+        pair. For each workload, one Markdown row per end-to-end metric
+        of BENCHMARK.json: each side's median [Q1, Q3], change/parent,
+        the pairs the change wins, the parent's IQR/median and a verdict.
+"""
 import json
 import math
+import os
+import statistics
 import sys
+
+BENCHMARK = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json")
 
 
 def load(p):
@@ -38,6 +53,68 @@ def main(a_path, b_path, thr=0.10):
         print(f"  {s:5.2f}x  A={va:7.3f}  B={vb:7.3f}  {k}")
 
 
+def quartiles(v):
+    """(Q1, median, Q3), linear interpolation between the order statistics."""
+    return tuple(statistics.quantiles(v, n=4, method="inclusive")) if len(v) > 1 else (v[0],) * 3
+
+
+def verdict(metric, parent, change, wins, pairs):
+    """The rule for a claimed gain and for a regression bound:
+    - gain: the change wins at least 9 in 10 pairs and the medians differ
+      by more than the parent's IQR;
+    - worse than bound: the change's median is worse by more than the bound;
+    - unresolved: either side's IQR/median is wider than the bound, unless
+      every change run is better than every parent run;
+    - otherwise within bound."""
+    lower = metric.get("better", "lower") == "lower"
+    sign = 1 if lower else -1
+    (p1, pm, p3), (_, cm, _) = quartiles(parent), quartiles(change)
+    if pairs and wins >= 0.9 * pairs and sign * (pm - cm) > p3 - p1:
+        return "gain"
+    if sign * (cm - pm) > metric["bound"] * pm:
+        return "worse than bound"
+    spread = max((q3 - q1) / q2 for q1, q2, q3 in (quartiles(parent), quartiles(change)) if q2)
+    all_better = (max(change) < min(parent)) if lower else (min(change) > max(parent))
+    if spread > metric["bound"] and not all_better:
+        return "unresolved"
+    return "within bound"
+
+
+def ab_table(path):
+    with open(BENCHMARK) as f:
+        metrics = json.load(f)["end_to_end"]
+    with open(path) as f:
+        runs = [json.loads(line) for line in f if line.strip()]
+    for workload in sorted({r["workload"] for r in runs}):
+        mine = [r for r in runs if r["workload"] == workload]
+        side = {s: {r["seed"]: r for r in mine if r["side"] == s} for s in ("parent", "change")}
+        seeds = sorted(set(side["parent"]) & set(side["change"]))
+        bad = [(r["side"], r["seed"]) for r in mine if not r.get("correct") or r.get("failed")]
+        print(f"### `{workload}`\n")
+        print(f"{len(side['parent'])} parent runs, {len(side['change'])} change runs, "
+              f"{len(seeds)} pairs; runs not correct or with failed ops: {bad or 'none'}\n")
+        print("| metric | parent | change | change/parent | wins | parent IQR/median | verdict |")
+        print("|---|---|---|---|---|---|---|")
+        for m in metrics:
+            name, lower = m["name"], m.get("better", "lower") == "lower"
+            p = [r["metrics"][name] for r in side["parent"].values()]
+            c = [r["metrics"][name] for r in side["change"].values()]
+            if not p or not c:
+                continue
+            wins = sum(1 for s in seeds
+                       if (side["change"][s]["metrics"][name] < side["parent"][s]["metrics"][name]) == lower
+                       and side["change"][s]["metrics"][name] != side["parent"][s]["metrics"][name])
+            (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
+            digits = 1 if pm >= 100 else 2
+            cell = lambda q1, q2, q3: f"{q2:.{digits}f} [{q1:.{digits}f}, {q3:.{digits}f}]"
+            print(f"| `{name}` | {cell(p1, pm, p3)} | {cell(c1, cm, c3)} | {cm / pm:.3f} | "
+                  f"{wins}/{len(seeds)} | {(p3 - p1) / pm:.3f} | {verdict(m, p, c, wins, len(seeds))} |")
+        print()
+
+
 if __name__ == "__main__":
-    thr = float(sys.argv[3]) if len(sys.argv) > 3 else 0.10
-    main(sys.argv[1], sys.argv[2], thr)
+    if len(sys.argv) == 2:
+        ab_table(sys.argv[1])
+    else:
+        thr = float(sys.argv[3]) if len(sys.argv) > 3 else 0.10
+        main(sys.argv[1], sys.argv[2], thr)
