@@ -143,23 +143,39 @@ final class LogCatalog(val spark: SparkSession,
 
   /** UNION ALL of the cached parse+classify parts of `keys` (unknown
     * keys skipped; none left yields an empty classified relation). The
-    * union itself is never cached — its parts are. It is kept per set
-    * of known keys until the next load, because analysing a union of
-    * k parts costs each call tens of milliseconds of driver time.
+    * union itself is never cached — its parts are. It is kept, with its
+    * [[linesOf]] projection, per set of known keys until the next load:
+    * analysing a union of k parts costs each call tens of milliseconds
+    * of driver time, and planning a scan of it, with its generated code,
+    * costs more.
     */
-  def classifiedOf(keys: Seq[String]): DataFrame = synchronized {
+  def classifiedOf(keys: Seq[String]): DataFrame = synchronized(unionOf(keys).classified)
+
+  /** [[classifiedOf]] projected to `(node, line_number, value)`, kept
+    * with that union: its scan, and the code generated for it, are
+    * planned once per set of known keys (`queryExecution.toRdd` is
+    * computed once per DataFrame), so a [[LogCatalog.foldPerCore]]
+    * over it plans and compiles nothing.
+    */
+  def linesOf(keys: Seq[String]): DataFrame = synchronized(unionOf(keys).lines)
+
+  private final class Union(val classified: DataFrame) {
+    lazy val lines: DataFrame = classified.select("node", "line_number", "value")
+  }
+
+  /** [[classifiedOf]]'s unions and [[linesOf]]'s scans, by known keys; every load clears it. */
+  private val unions = mutable.HashMap.empty[Seq[String], Union]
+
+  private def unionOf(keys: Seq[String]): Union = {
     val known = keys.filter(storage.contains)
-    unions.getOrElseUpdate(known, known.map(storage).map { n =>
+    unions.getOrElseUpdate(known, new Union(known.map(storage).map { n =>
       n.classified.getOrElse {
         val df = ClusterAnalyzer.classify(n.raw).cache()
         n.classified = Some(df)
         df
       }
-    }.reduceOption(_.unionByName(_)).getOrElse(ClusterAnalyzer.classify(emptyRaw)))
+    }.reduceOption(_.unionByName(_)).getOrElse(ClusterAnalyzer.classify(emptyRaw))))
   }
-
-  /** [[classifiedOf]]'s unions, by their known keys; every load clears it. */
-  private val unions = mutable.HashMap.empty[Seq[String], DataFrame]
 
   /** The parse+classify relation of every node. */
   def classified: DataFrame = classifiedOf(nodeKeys)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.util.regex.Pattern
+
 /** The analytical tools of the reference's MCP surface over a
   * [[LogCatalog]]: DataFrame plans, or local frames over its per-node
   * stats where those hold the answer. Each maps one handler of
@@ -22,25 +24,29 @@ object LogQueries {
     * where a missing node silently yields empty. Hits carry the 1-based
     * per-node line number and the STRIPPED line, unordered.
     *
-    * The scan reads each node key's cached classified part
+    * This DataFrame form scans each node key's cached classified part
     * ([[LogCatalog.classifiedOf]]), which holds the raw `value` beside
-    * `node` and `line_number`; column pruning leaves the scan only
-    * those three column buffers to decode, and the rlike predicate runs
-    * in the scan stage. A node that no analysis has read yet gets its
+    * `node` and `line_number`, under an `rlike` filter. It is the
+    * reference that [[searchLogsCapped]], the form the MCP tool runs,
+    * is tested against. A node that no analysis has read yet gets its
     * classified part built (and cached) by the search.
     */
   def hits(catalog: LogCatalog, pattern: String,
            caseSensitive: Boolean = false,
            nodeFilter: Option[String] = None): DataFrame = {
-    val p = if (caseSensitive) pattern else "(?i)" + pattern
-    // fail fast on the driver for an invalid user pattern (the reference's
-    // re.search raises immediately) instead of N task failures later
-    java.util.regex.Pattern.compile(p)
+    val p = userPattern(pattern, caseSensitive).pattern
     catalog.classifiedOf(nodeFilter.fold(catalog.nodeKeys)(Seq(_)))
       .where(col("value").rlike(p))
       .select(col("node"), col("line_number"),
         btrim(col("value"), lit(pyWhitespace)).as("content"))
   }
+
+  /** The search's pattern, compiled on the driver: an invalid user
+    * pattern fails here, before any job (the reference's `re.search`
+    * raises at once), instead of in every task later.
+    */
+  private def userPattern(pattern: String, caseSensitive: Boolean): Pattern =
+    Pattern.compile(if (caseSensitive) pattern else "(?i)" + pattern)
 
   /** [[hits]] in `(node, line_number)` order. The global sort costs a
     * range-sampling job and a sort shuffle; the MCP tool goes through
@@ -64,37 +70,48 @@ object LogQueries {
 
   /** Search with display cap — the first [[SearchCap]] hits in
     * [[searchLogs]]' order plus the total (`cassandra_log_analyzer.py:790-797`),
-    * from ONE Spark job over [[hits]] with no sort and no shuffle
-    * ([[LogCatalog.foldPerCore]]): each task folds its rows to their
+    * from ONE Spark job with no sort and no shuffle: a
+    * [[LogCatalog.foldPerCore]] over [[LogCatalog.linesOf]], a scan of
+    * `(node, line_number, value)` planned once per set of node keys, so
+    * the plan holds no pattern and a new pattern plans and compiles no
+    * code. Each task matches its rows' values with the pattern as
+    * Spark's `rlike` does (`Matcher.find`) and folds the hits to their
     * count and their first [[SearchCap]] in [[hitOrder]] (a bounded
-    * max-heap), and the driver merges those few rows. A partition of a
-    * part is one node's ascending line range, so rows arrive in such
-    * runs and, once a heap is full, most cost one comparison with its head.
+    * max-heap); the driver merges those few rows and strips their
+    * values with the `trim` that [[hits]]' `btrim` runs. A partition of
+    * a part is one node's ascending line range, so rows arrive in such
+    * runs and, once a heap is full, most hits cost one comparison with
+    * its head.
     */
   def searchLogsCapped(catalog: LogCatalog, pattern: String,
                        caseSensitive: Boolean = false,
                        nodeFilter: Option[String] = None)
       : (Array[Row], Long) = {
+    val p = userPattern(pattern, caseSensitive)
     val (order, cap) = (hitOrder, SearchCap) // the task closure captures these, not this object
-    val folds = LogCatalog.foldPerCore(hits(catalog, pattern, caseSensitive, nodeFilter)) { rows =>
+    val folds = LogCatalog.foldPerCore(catalog.linesOf(nodeFilter.fold(catalog.nodeKeys)(Seq(_)))) { rows =>
       val heap = new java.util.PriorityQueue[InternalRow](cap, order.reverse)
+      val m = p.matcher("")
       var n = 0L
       rows.foreach { r =>
-        n += 1
-        if (heap.size < cap) heap.add(r.copy())
-        else if (order.lt(r, heap.peek)) { heap.poll(); heap.add(r.copy()) }
+        if (m.reset(r.getUTF8String(2).toString).find()) {
+          n += 1
+          if (heap.size < cap) heap.add(r.copy())
+          else if (order.lt(r, heap.peek)) { heap.poll(); heap.add(r.copy()) }
+        }
       }
       (n, heap.toArray(Array.empty[InternalRow]))
     }
+    val strip = UTF8String.fromString(pyWhitespace)
     val first = folds.flatMap(_._2).sorted(order).take(cap)
-      .map(r => Row(r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).toString))
+      .map(r => Row(r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).trim(strip).toString))
     (first, folds.map(_._1).sum)
   }
 
-  /** `(node, line_number)` over [[hits]] rows, nodes in Spark's string
-    * order (unsigned UTF-8 bytes, `UTF8String.compareTo`) — the order
-    * `orderBy("node")` follows and `String.compareTo` does not for
-    * supplementary characters.
+  /** `(node, line_number)` over rows that start with those columns,
+    * nodes in Spark's string order (unsigned UTF-8 bytes,
+    * `UTF8String.compareTo`) — the order `orderBy("node")` follows and
+    * `String.compareTo` does not for supplementary characters.
     */
   private val hitOrder: Ordering[InternalRow] = (a, b) => {
     val c = a.getUTF8String(0).compareTo(b.getUTF8String(0))

@@ -3,6 +3,7 @@ package graft
 import graft.ingest.LogCatalog
 import graft.query.LogQueries
 import graft.report.Reports
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** The capped search (`search_logs`' first 100 hits plus the total) on
   * a catalog whose node keys are loaded out of Spark's string order:
@@ -65,6 +66,45 @@ class SearchSpec extends SparkSuite {
   test("a node_filter naming an unknown node finds nothing") {
     assert(Reports.renderSearch(catalog(), "hit", nodeFilter = Some("ghost")) ==
       "Aucun résultat pour: hit")
+  }
+
+  test("the capped fold matches the rlike/btrim reference on edge lines and patterns") {
+    val c = new LogCatalog(spark)
+    c.loadInline("edge", Seq(
+      "\tERROR tab-led", "ERROR tab-ended\t", "\u00a0ERROR nbsp\u00a0", "\u3000ERROR ideographic\u3000",
+      "\u2028ERROR line separator\u2028", "", "error lower-case", "WARN [main] C:1 - Failed to flush",
+      "java.lang.RuntimeException: boom", "\tat org.apache.cassandra.db.Memtable.flush(Memtable.java:42)",
+      "", "INFO done").mkString("\n"))
+    c.loadInline("other", "ERROR elsewhere\n\t ERROR both \u00a0\n")
+    val (stripped, _) = assertCappedMatchesSorted(c, "error", cs = false, None)
+    assert(stripped.map(_.getString(2)).toSeq.take(5) == Seq("ERROR tab-led", "ERROR tab-ended",
+      "ERROR nbsp", "ERROR ideographic", "ERROR line separator"))
+    assert(assertCappedMatchesSorted(c, "^$", cs = false, None)._2 == 3) // two blanks + the trailing one
+    assertCappedMatchesSorted(c, "^$", cs = true, Some("other"))
+    assert(assertCappedMatchesSorted(c, "(?-i)ERROR", cs = false, None)._2 == 7)
+    val (frame, n) = assertCappedMatchesSorted(c, "Memtable\\.java:\\d+", cs = false, None)
+    assert(n == 1 && frame.head.getString(2) == "at org.apache.cassandra.db.Memtable.flush(Memtable.java:42)")
+    assertCappedMatchesSorted(c, "\\s$", cs = false, None)
+    val full = catalog()
+    assert(assertCappedMatchesSorted(full, ".", cs = false, None)._2 == 4 * 90)
+  }
+
+  test("the search scan is planned once per key set: no rlike, no new generated code") {
+    val c = catalog()
+    val keys = c.nodeKeys
+    LogQueries.searchLogsCapped(c, "hit")
+    val lines = c.linesOf(keys)
+    val scan = lines.queryExecution.toRdd
+    LogQueries.searchLogsCapped(c, "other \\d")
+    assert(c.linesOf(keys) eq lines)
+    assert(c.linesOf(keys).queryExecution.toRdd eq scan)
+    assert(LogQueries.hits(c, "hit").queryExecution.executedPlan.toString.toLowerCase.contains("rlike"))
+    assert(!lines.queryExecution.executedPlan.toString.toLowerCase.contains("rlike"))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(LogQueries.searchLogsCapped(c, "C:1\\d - old")._2 == 4 * 3)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+    c.loadInline("node2", "fresh")
+    assert(!(c.linesOf(keys) eq lines))
   }
 
   test("one Spark job per capped search") {

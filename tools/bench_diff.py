@@ -13,6 +13,9 @@
         pair. For each workload, one Markdown row per end-to-end metric
         of BENCHMARK.json: each side's median [Q1, Q3], change/parent,
         the pairs the change wins, the parent's IQR/median and a verdict.
+        Then, from each record's "by_op_p50_ms", one row per tool that
+        either side ran: each side's median [Q1, Q3] of the per-run p50
+        and change/parent.
 """
 import json
 import math
@@ -105,11 +108,28 @@ def ab_table(path):
                        if (side["change"][s]["metrics"][name] < side["parent"][s]["metrics"][name]) == lower
                        and side["change"][s]["metrics"][name] != side["parent"][s]["metrics"][name])
             (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
-            digits = 1 if pm >= 100 else 2
-            cell = lambda q1, q2, q3: f"{q2:.{digits}f} [{q1:.{digits}f}, {q3:.{digits}f}]"
-            print(f"| `{name}` | {cell(p1, pm, p3)} | {cell(c1, cm, c3)} | {cm / pm:.3f} | "
+            print(f"| `{name}` | {cell_of((p1, pm, p3))} | {cell_of((c1, cm, c3))} | {cm / pm:.3f} | "
                   f"{wins}/{len(seeds)} | {(p3 - p1) / pm:.3f} | {verdict(m, p, c, wins, len(seeds))} |")
         print()
+        tools = list(dict.fromkeys(t for r in mine for t in r.get("by_op_p50_ms", {})))
+        print("| tool p50 (ms) | parent | change | change/parent |")
+        print("|---|---|---|---|")
+        for t in tools:
+            p, c = ([r["by_op_p50_ms"][t] for r in side[s].values() if r.get("by_op_p50_ms", {}).get(t) is not None]
+                    for s in ("parent", "change"))
+            if not p and not c:
+                continue
+            cells = [cell_of(quartiles(v)) if v else "–" for v in (p, c)]
+            ratio = f"{statistics.median(c) / statistics.median(p):.3f}" if p and c and statistics.median(p) else "–"
+            print(f"| `{t}` | {cells[0]} | {cells[1]} | {ratio} |")
+        print()
+
+
+def cell_of(q):
+    """median [Q1, Q3], one decimal from 100 up and two below."""
+    q1, q2, q3 = q
+    digits = 1 if q2 >= 100 else 2
+    return f"{q2:.{digits}f} [{q1:.{digits}f}, {q3:.{digits}f}]"
 
 
 if __name__ == "__main__":
