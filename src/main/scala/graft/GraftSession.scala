@@ -11,11 +11,9 @@ import org.apache.spark.sql.SparkSession
   *    `spark.sql.shuffle.partitions`); unset means the JVM's available
   *    processors.
   *  - `SPARK_GRAFT_MASTER`: master URL; unset means `local[cpus]`.
-  *  - `SPARK_GRAFT_PARALLELISM_FIRST` (default `false`) and
-  *    `SPARK_GRAFT_CACHED_PLAN_AQE` (default `true`): the AQE pair below,
-  *    overridable so it can be A/B-measured at identical code.
   *
-  * The AQE pair:
+  * The AQE pair, both runtime confs, so a per-query A/B sets them for
+  * one run (`graft.tools.Profile <sfDir> <prefix> key=value`):
   *  - `coalescePartitions.parallelismFirst=false` lets AQE size
   *    post-shuffle partitions by bytes (`advisoryPartitionSizeInBytes`).
   *    With Spark's default `true` it refuses to coalesce below the core
@@ -50,10 +48,8 @@ object GraftSession {
           .appName(appName)
           .withExtensions(new graft.plans.GraftExtensions)
           .config("spark.sql.shuffle.partitions", cpus.toString)
-          .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-          .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
+          .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+          .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.sql.legacy.parquet.nanosAsLong", "true")
           .config("spark.ui.enabled", "false")

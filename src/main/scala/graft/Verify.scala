@@ -32,7 +32,8 @@ object Verify {
     spark.stop()
   }
 
-  private def selected(only: Option[Seq[String]], name: String): Boolean =
+  /** Whether `name` starts with one of the prefixes (every name when none). */
+  private[graft] def selected(only: Option[Seq[String]], name: String): Boolean =
     only.forall(_.exists(name.startsWith))
 
   /** oracle_sql.json's text. With no prefixes (the driver's mode) it

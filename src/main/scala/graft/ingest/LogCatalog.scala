@@ -85,33 +85,6 @@ final class LogCatalog(val spark: SparkSession,
     putContent(nodeKey, content)
   }
 
-  /** `load_logs_from_ssh`-shaped load from a (local or staged) file path,
-    * keyed `{node}_{type}` (`cassandra_log_analyzer.py:661,671`).
-    * `tailLines` mirrors the reference's remote `tail -n N` limit
-    * pushdown (`:136-137`) — only the last N lines enter the engine.
-    *
-    * Reads via `wholetext` + split so the trailing-newline empty line is
-    * preserved exactly like `cat file | split('\n')`.
-    */
-  def loadFile(nodeName: String, logType: String, path: String,
-               tailLines: Option[Int] = None): (Long, Int) = synchronized {
-    val content = spark.read.option("wholetext", "true").text(path)
-      .collect().map(_.getString(0)).mkString("\n")
-    checkSize(content)
-    // Emulate remote `tail -n N`: last N CONTENT lines; the trailing
-    // empty element from a final newline survives the tail (tail's
-    // output still ends with '\n'), exactly like the reference's
-    // split of the tail output (`cassandra_log_analyzer.py:136-137,662`).
-    val tailed = tailLines.fold(content) { n =>
-      val all = content.split("\n", -1).toSeq
-      val (body, trailer) =
-        if (all.nonEmpty && all.last.isEmpty) (all.dropRight(1), Seq(""))
-        else (all, Seq.empty[String])
-      (body.takeRight(n) ++ trailer).mkString("\n")
-    }
-    putContent(s"${nodeName}_$logType", tailed)
-  }
-
   /** Node keys in insertion order (= reference dict order). */
   def nodeKeys: Seq[String] = synchronized(storage.keys.toSeq)
 
@@ -129,16 +102,8 @@ final class LogCatalog(val spark: SparkSession,
 
   /** UNION ALL of every node's raw lines (SURVEY.md §2.7 U1). */
   def raw: DataFrame = synchronized {
-    require(storage.nonEmpty, "no logs loaded — use loadInline/loadFile first")
+    require(storage.nonEmpty, "no logs loaded — use loadInline/loadContent first")
     storage.values.map(_.raw).reduce(_.unionByName(_))
-  }
-
-  /** Raw lines of one node key; a missing key yields an EMPTY relation,
-    * not an error (`logs_storage.get(node_filter, "")` quirk,
-    * `cassandra_log_analyzer.py:780`).
-    */
-  def rawFor(nodeKey: String): DataFrame = synchronized {
-    storage.get(nodeKey).fold(emptyRaw)(_.raw)
   }
 
   /** UNION ALL of the cached parse+classify parts of `keys` (unknown

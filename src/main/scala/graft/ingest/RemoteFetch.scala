@@ -176,6 +176,8 @@ object RemoteFetch {
   final case class CommandFailed(detail: String) extends FetchError {
     def message = s"Command failed: $detail"
   }
+  /** The fetched log is above the catalog's load bound; nothing was loaded. */
+  final case class TooLarge(message: String) extends FetchError
 }
 
 /** Pooled fetcher over a runner factory (injectable for tests). */
@@ -241,10 +243,6 @@ final class RemoteFetcher(
     } catch { case _: Exception => Seq.empty }
   }
 
-  /** Fetch + load into the catalog under `{node}_{type}` — the
-    * `load_logs_from_ssh` pipeline (`cassandra_log_analyzer.py:632-689`)
-    * minus the transport.
-    */
   /** `{logDirectory}/{type}.log` — the one place the remote path is
     * built (`cassandra_log_analyzer.py:658`).
     */
@@ -255,32 +253,32 @@ final class RemoteFetcher(
   private def nodeKey(nodeName: String, logType: String): String =
     s"${nodeName}_$logType"
 
+  /** A fetched log into the catalog under `{node}_{type}`. A log above
+    * the catalog's bound is that log's error alone, so the logs before
+    * and after it still load.
+    */
+  private def insert(catalog: LogCatalog, nodeName: String, logType: String,
+      fetched: Either[FetchError, String]): Either[FetchError, (Long, Int)] =
+    fetched.flatMap { content =>
+      try Right(catalog.loadContent(nodeKey(nodeName, logType), content))
+      catch { case e: LogCatalog.LoadTooLarge => Left(TooLarge(e.getMessage)) }
+    }
+
+  /** Fetch + load — the `load_logs_from_ssh` pipeline
+    * (`cassandra_log_analyzer.py:632-689`) minus the transport.
+    */
   def loadNode(catalog: LogCatalog, cfg: NodeConfig, nodeName: String,
       logType: String = "system",
       tailLines: Option[Int] = None): Either[FetchError, (Long, Int)] =
-    readLogFile(cfg, logPath(cfg, logType), tailLines).map { content =>
-      catalog.loadContent(nodeKey(nodeName, logType), content)
-    }
+    insert(catalog, nodeName, logType, readLogFile(cfg, logPath(cfg, logType), tailLines))
 
   /** `load_logs_from_all_nodes` — but PARALLEL. The reference awaits
     * nodes one at a time (`cassandra_log_analyzer.py:704-714`, SURVEY
     * §2.10), so a 100-node fetch pays 100 sequential round-trips; here
-    * every node fetches concurrently and results keep the caller's
-    * node order. One node's failure (expected Left OR a thrown
-    * transport exception) never loses the others' results.
-    */
-  def loadAll(catalog: LogCatalog,
-      nodes: Seq[(String, NodeConfig)],
-      logType: String = "system",
-      tailLines: Option[Int] = None,
-      timeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(10, "min"))
-      : Seq[(String, Either[FetchError, (Long, Int)])] =
-    loadAllTypes(catalog, nodes, Seq(logType), tailLines, timeout)
-      .map { case (name, _, res) => name -> res }
-
-  /** Multi-type variant: every (node, type) pair fetches concurrently,
-    * but catalog insertion runs node-major (`node1_system, node1_debug,
+    * every (node, type) pair fetches concurrently and results keep the
+    * caller's node order. One log's failure (expected Left OR a thrown
+    * transport exception) never loses the others' results. Catalog
+    * insertion runs node-major (`node1_system, node1_debug,
     * node2_system, ...`) — the reference loads types per node inside
     * its node loop (`cassandra_log_analyzer.py:704-714`), and key
     * insertion order is a load-bearing report-ordering semantic.
@@ -316,8 +314,7 @@ final class RemoteFetcher(
         case Some(scala.util.Failure(e)) => Left(CommandFailed(e.toString))
         case None => Left(CommandFailed(s"fetch timed out after $timeout"))
       }
-      (name, logType, res.map(content =>
-        catalog.loadContent(nodeKey(name, logType), content)))
+      (name, logType, insert(catalog, name, logType, res))
     }
   }
 }

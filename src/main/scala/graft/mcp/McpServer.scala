@@ -239,7 +239,7 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
     }
 
   /** `load_logs_from_all_nodes` (`cassandra_log_analyzer.py:691-722`)
-    * — but the fetches run in PARALLEL via [[RemoteFetcher.loadAll]]
+    * — but the fetches run in PARALLEL via [[RemoteFetcher.loadAllTypes]]
     * where the reference awaits nodes one at a time.
     */
   private def loadAllNodes(args: JValue): Either[(Int, String), String] =

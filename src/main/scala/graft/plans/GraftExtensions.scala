@@ -33,6 +33,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
   }
 
+  /** A sketch aggregate's integer `k` argument. */
+  private def intLiteral(e: Expression, fn: String): Int = {
+    require(e.foldable, s"$fn k must be a literal")
+    e.eval() match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case s: Short => s.toInt
+      case b: Byte => b.toInt
+      case other => throw new IllegalArgumentException(
+        s"$fn k must be an integer literal, got $other")
+    }
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => CollapseRLikeOrChains)
     ext.injectPlannerStrategy(_ => TopKStrategy)
@@ -73,15 +86,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "k_min_values"),
       (exprs: Seq[Expression]) => {
         require(exprs.size == 2, "k_min_values(expr, k)")
-        require(exprs(1).foldable, "k_min_values k must be a literal")
-        val k = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case s: Short => s.toInt
-          case b: Byte => b.toInt
-          case other => throw new IllegalArgumentException(
-            s"k_min_values k must be an integer literal, got $other")
-        }
+        val k = intLiteral(exprs(1), "k_min_values")
         // integral inputs cast up to BIGINT here (the aggregate itself
         // requires LongType so non-numeric inputs still fail analysis)
         import org.apache.spark.sql.types._
@@ -102,15 +107,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "misra_gries"),
       (exprs: Seq[Expression]) => {
         require(exprs.size == 2, "misra_gries(expr, k)")
-        require(exprs(1).foldable, "misra_gries k must be a literal")
-        val k = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case s: Short => s.toInt
-          case b: Byte => b.toInt
-          case other => throw new IllegalArgumentException(
-            s"misra_gries k must be an integer literal, got $other")
-        }
+        val k = intLiteral(exprs(1), "misra_gries")
         graft.functions.MisraGries(exprs.head, k)
       }))
   }

@@ -81,9 +81,6 @@ object LogStreams {
           .when(col("errors") >= threshold * 2, "HIGH")
           .otherwise("MEDIUM").as("severity"))
 
-  /** One issue occurrence on one node at one event time. */
-  case class IssueEvent(node: String, issueType: String, eventUs: Long)
-
   /** Open-incident state carried between micro-batches. */
   case class IncidentState(startUs: Long, lastUs: Long, count: Long)
 

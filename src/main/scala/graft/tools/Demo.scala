@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.ingest.LogCatalog
+import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.query.LogQueries
 import graft.report.Reports
 
@@ -24,11 +24,16 @@ object Demo {
       ).mkString("\n") + "\n")
     println(s"== load_logs: $lines1 lignes, $nodes1 nodes")
 
+    // the file's `tail -n 3` runs at the source, as a remote fetch's does
     args.headOption.foreach { path =>
-      if (new java.io.File(path).exists()) {
-        val (n, total) = catalog.loadFile("node2", "system", path, tailLines = Some(3))
-        println(s"== load from file (tail -n 3): $n lignes, $total node keys")
-      } else println(s"== [skip] log file not found: $path")
+      val local = RemoteFetch.NodeConfig("localhost", sys.props("user.name"))
+      new RemoteFetcher(_ => new RemoteFetch.LocalShellRunner)
+        .readLogFile(local, path, tailLines = Some(3)) match {
+        case Right(content) =>
+          val (n, total) = catalog.loadContent("node2_system", content)
+          println(s"== load from file (tail -n 3): $n lignes, $total node keys")
+        case Left(e) => println(s"== [skip] ${e.message}")
+      }
     }
 
     println("\n==== analyze_cluster ====")

@@ -3,6 +3,7 @@ package graft
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.mcp.McpDispatcher
 import graft.report.Reports
+import graft.util.SparkWork
 import org.json4s._
 
 /** Loads into the catalog: the content's line-aligned slices, the load
@@ -47,9 +48,9 @@ class CatalogLoadSpec extends SparkSuite {
     Seq("a", "b", "c").foreach(k => c.loadInline(k, "ERROR [t] [main] C:1 - Read timed out\nINFO [t] [main] C:2 - ok"))
     Reports.renderAnalysis(c) // every node has its stats and its cached part
     c.loadInline("b", "WARN [t] [main] C:1 - heap pressure\n")
-    val (jobs, shuffled) = sparkWork(Reports.renderAnalysis(c))
-    assert(jobs == 1 && shuffled == 0)
-    assert(sparkWork(Reports.renderAnalysis(c))._1 == 0)
+    val (_, cold) = SparkWork.of(spark)(Reports.renderAnalysis(c))
+    assert(cold.jobs == 1 && cold.shuffleBytes == 0)
+    assert(SparkWork.of(spark)(Reports.renderAnalysis(c))._2.jobs == 0)
     assert(c.stats.map { case (k, s) => (k, s.errors, s.warnings, s.totalLines) } ==
       Seq(("a", 1L, 0L, 2L), ("b", 0L, 1L, 2L), ("c", 1L, 0L, 2L)))
     c.nodeKeys.foreach(k => c.classifiedOf(Seq(k)).unpersist(blocking = true))
@@ -67,6 +68,38 @@ class CatalogLoadSpec extends SparkSuite {
     assert(d.catalog.nodeKeys == Seq("n1"))
     val Right(ok) = load("n3", "INFO two"): @unchecked
     assert(compactText(ok).contains("Total nodes: 2"))
+  }
+
+  test("a fetched log above the bound fails that log alone, on both SSH load tools") {
+    val root = java.nio.file.Files.createTempDirectory("graft-fetch-bound")
+    try {
+      def logDir(name: String, system: String, debug: String) = {
+        val d = java.nio.file.Files.createDirectories(root.resolve(name))
+        java.nio.file.Files.writeString(d.resolve("system.log"), system)
+        java.nio.file.Files.writeString(d.resolve("debug.log"), debug)
+        d.toString
+      }
+      val big = logDir("big", "ERROR one\nINFO two\nok\n", "d" * 100)
+      val small = logDir("small", "INFO three\n", "WARN four\n")
+      val d = new McpDispatcher(new LogCatalog(spark, maxLoadChars = 32),
+        new RemoteFetcher(_ => new RemoteFetch.LocalShellRunner))
+      def call(tool: String, args: (String, JValue)*) =
+        d.handle("tools/call", JObject("name" -> JString(tool), "arguments" -> JObject(args.toList)))
+      def configure(node: String, dir: String) = call("configure_ssh_node", "node_name" -> JString(node),
+        "host" -> JString("localhost"), "username" -> JString("u"), "log_directory" -> JString(dir))
+      val tooLarge = "ERREUR: contenu trop volumineux: 100 caractères (maximum 32)"
+      assert(configure("a", big).isRight)
+      val Right(ssh) = call("load_logs_from_ssh", "node_name" -> JString("a"), "log_type" -> JString("both")): @unchecked
+      assert(compactText(ssh).contains("  - system.log (4 lignes)"))
+      assert(compactText(ssh).contains(s"  - debug.log ($tooLarge)"))
+      assert(d.catalog.nodeKeys == Seq("a_system"))
+      assert(configure("b", small).isRight)
+      val Right(all) = call("load_logs_from_all_nodes", "log_type" -> JString("both")): @unchecked
+      assert(compactText(all).contains("Succès: 1/2"))
+      assert(compactText(all).contains(s"ERREUR a: ${tooLarge.stripPrefix("ERREUR: ")}"))
+      assert(compactText(all).contains("OK b"))
+      assert(d.catalog.nodeKeys == Seq("a_system", "b_system", "b_debug"))
+    } finally graft.util.FileUtils.deleteRecursively(root)
   }
 
   private def compactText(v: JValue): String = v \ "content" match {

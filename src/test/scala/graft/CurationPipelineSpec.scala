@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.tools.CurationPipeline
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.util.SparkWork
 import org.apache.spark.sql.functions._
 
 /** The composed curation funnel on sf0.001: monotone stage counts,
@@ -24,19 +24,10 @@ class CurationPipelineSpec extends SparkSuite {
     // old one-count-per-stage lineage-recompute shape = 71 — the bound
     // sits between them, and each job it saves is a full corpus scan
     // at real scale.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val jobCounter = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(jobCounter)
     try {
-      val f = CurationPipeline.run(spark, dir, out)
-      Thread.sleep(500) // listener bus is async; undercount only passes
-      spark.sparkContext.removeSparkListener(jobCounter)
-      info(s"spark jobs for one run: ${jobs.get}")
-      assert(jobs.get <= 65, s"job budget blown: ${jobs.get} jobs")
+      val (f, work) = SparkWork.of(spark)(CurationPipeline.run(spark, dir, out))
+      info(s"spark jobs for one run: ${work.jobs}")
+      assert(work.jobs <= 65, s"job budget blown: ${work.jobs} jobs")
 
       // stage counts must equal the independently (naively) recomputed
       // per-stage filters — the single-aggregate funnel is an

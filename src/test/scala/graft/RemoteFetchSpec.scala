@@ -3,6 +3,7 @@ package graft
 import graft.ingest.{LogCatalog, RemoteFetcher}
 import graft.ingest.RemoteFetch._
 import java.nio.file.Files
+import org.apache.spark.sql.functions.col
 
 /** SSH-layer semantics via the local shell runner: tail limit pushdown,
   * split('\n') line counting parity, file-not-found detection, empty-on-
@@ -78,7 +79,7 @@ class RemoteFetchSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val r = fetcher.loadNode(catalog, cfg, "node1", "system", Some(5))
     assert(r === Right((6L, 1))) // 5 tail lines + trailing empty
     assert(catalog.nodeKeys === Seq("node1_system"))
-    assert(catalog.rawFor("node1_system").count() === 6)
+    assert(catalog.raw.where(col("node") === "node1_system").count() === 6)
   }
 
   test("password auth: sshpass command shape, env-only password, injection guards") {
@@ -123,7 +124,8 @@ class RemoteFetchSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       "nodeA" -> cfg,
       "ghost" -> cfg.copy(logDirectory = "/no/such/dir"),
       "nodeC" -> cfg)
-    val results = fetcher.loadAll(catalog, nodes, "system", Some(3))
+    val results = fetcher.loadAllTypes(catalog, nodes, Seq("system"), Some(3))
+      .map { case (name, _, res) => name -> res }
     assert(results.map(_._1) === Seq("nodeB", "nodeA", "ghost", "nodeC"))
     // catalog insertion order == caller order (reference dict-order
     // semantics), with the failed node absent

@@ -3,6 +3,7 @@ package graft
 import graft.ingest.LogCatalog
 import graft.query.LogQueries
 import graft.report.Reports
+import graft.util.SparkWork
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** The capped search (`search_logs`' first 100 hits plus the total) on
@@ -110,12 +111,12 @@ class SearchSpec extends SparkSuite {
   test("one Spark job per capped search") {
     val c = catalog()
     LogQueries.searchLogsCapped(c, "hit") // builds and caches the classified parts
-    val (jobs, _) = sparkWork {
+    val (_, work) = SparkWork.of(spark) {
       LogQueries.searchLogsCapped(c, "hit")
       LogQueries.searchLogsCapped(c, "HIT", caseSensitive = true)
       LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some(fffd))
       LogQueries.searchLogsCapped(c, "hit", nodeFilter = Some("ghost"))
     }
-    assert(jobs == 4)
+    assert(work.jobs == 4)
   }
 }
