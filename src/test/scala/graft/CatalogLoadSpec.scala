@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.mcp.McpDispatcher
 import graft.report.Reports
@@ -9,7 +11,8 @@ import org.json4s._
 /** Loads into the catalog: the content's line-aligned slices, the load
   * bound, and the Spark work of the cold analysis that follows a load. A load above the catalog's character bound fails that
   * request alone: the catalog keeps its nodes and their content, and the
-  * server answers -32602 and goes on. The bound is set small here; the
+  * server answers -32602 and goes on. A fetched log above it fails that
+  * log alone. The bound is set small here; the
   * default derives from the JVM's maximum heap.
   */
 class CatalogLoadSpec extends SparkSuite {
@@ -71,12 +74,12 @@ class CatalogLoadSpec extends SparkSuite {
   }
 
   test("a fetched log above the bound fails that log alone, on both SSH load tools") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fetch-bound")
+    val root = Files.createTempDirectory("graft-fetch-bound")
     try {
       def logDir(name: String, system: String, debug: String) = {
-        val d = java.nio.file.Files.createDirectories(root.resolve(name))
-        java.nio.file.Files.writeString(d.resolve("system.log"), system)
-        java.nio.file.Files.writeString(d.resolve("debug.log"), debug)
+        val d = Files.createDirectories(root.resolve(name))
+        Files.writeString(d.resolve("system.log"), system)
+        Files.writeString(d.resolve("debug.log"), debug)
         d.toString
       }
       val big = logDir("big", "ERROR one\nINFO two\nok\n", "d" * 100)
