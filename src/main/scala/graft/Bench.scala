@@ -2,11 +2,6 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // comma-separated allowlist for targeted iteration (dev only; the
-    // driver runs the full set)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    def included(name: String): Boolean = only.forall(_.contains(name))
     val spark = GraftSession.getOrCreate("graft-bench")
     val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Warm EVERY query once at the smallest scale factor: plan shapes are
@@ -27,11 +22,9 @@ object Bench {
     // parquet scan instead of their actual expression work.
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.queryExecution.toRdd.foreach(_ => ())
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (included(name)) {
-        try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-        spark.catalog.clearCache() // per-query cache()s must not accumulate
-      }
+    SparkEntry.queries.foreach { case (_, fn) =>
+      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+      spark.catalog.clearCache() // per-query cache()s must not accumulate
     }
     // Timed phase: 3 FULL PASSES over the suite, per-query MIN across
     // passes (min over successful runs is the standard low-variance
@@ -42,24 +35,22 @@ object Bench {
     // pass-interleaving puts ~a full suite length between samples and a
     // transient must recur over the same region of EVERY pass to
     // corrupt a min.
-    val names = SparkEntry.queries.keys.toSeq.filter(included)
+    val names = SparkEntry.queries.keys.toSeq
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     val failures = scala.collection.mutable.Map.empty[String, String]
     val passTotals = (1 to 3).map { _ =>
       val p0 = System.nanoTime()
       SparkEntry.queries.foreach { case (name, fn) =>
-        if (included(name)) {
-          val t0 = System.nanoTime()
-          try {
-            run(fn(spark, sfDir))
-            samples(name) = (System.nanoTime() - t0) / 1e9 :: samples(name)
-          } catch { case e: Throwable =>
-            failures(name) = e.getClass.getName
-            System.err.println(s"[bench] $name failed: $e")
-          }
-          spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        try {
+          run(fn(spark, sfDir))
+          samples(name) = (System.nanoTime() - t0) / 1e9 :: samples(name)
+        } catch { case e: Throwable =>
+          failures(name) = e.getClass.getName
+          System.err.println(s"[bench] $name failed: $e")
         }
+        spark.catalog.clearCache()
       }
       (System.nanoTime() - p0) / 1e9
     }

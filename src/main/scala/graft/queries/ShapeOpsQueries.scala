@@ -1525,22 +1525,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
       // candidate list — skip the rewrite phase entirely and commit
       // only the inserts, keeping the funnel columns at 0 (the
       // logical-upsert oracle's zero-update row)
-      val cands =
-        if (nUpd == 0L) Seq.empty[(String, Long, Long)]
-        else {
-          val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
-          // phase 1: manifest-stats candidates
-          active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
-        }
-      // phase 2: candidates that actually contain a match
-      val matchedParts =
-        if (cands.isEmpty) Array.empty[String]
-        else s.read.parquet(cands.map(_._1): _*)
-          .where(matchedPred)
-          .select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0))  // hint audit: manifest-sized (one row per matched part file)
-      val hits = cands.filter { case (p, _, _) =>
-        matchedParts.exists(_.contains(p + "/")) }
+      val (cands, hits) = mergeFunnel(s, active,
+        Option.when(nUpd > 0L)((kmm.getLong(0), kmm.getLong(1))), matchedPred)
       // CoW rewrites: all rows of each hit file, updates applied;
       // doc_id stats carry over (keys are untouched by the update)
       val chType = snapshot.schema("n_chars").dataType
@@ -1553,18 +1539,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
           .coalesce(1).write.mode("overwrite").parquet(rp)
         ("add", rp, mn, mx)
       }
-      // the inserts file: 50 new ids past the snapshot maximum
-      val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
-      val ip = s"$stage/mins"
-      s.range(1, 51)
-        .select((lit(maxId) + col("id")).as("doc_id"),
-          lit("merged").as("source"),
-          (lit(100L) + (lit(maxId) + col("id")) % 97)
-            .cast(chType).as("n_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(ip)
-      require(LakeLog.commit(s, stage.toString, 3,
-        hits.map { case (p, _, _) => LakeLog.remove(p) } ++
-          rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
+      commitMergeInserts(s, stage.toString, snapshot,
+        hits.map { case (p, _, _) => LakeLog.remove(p) } ++ rewriteAdds)
       // the post-merge snapshot, resolved from the log
       lakeStats(s.read.parquet(asOfFiles(s, stage.toString, 3): _*),
         Seq(lit(active.size.toLong).as("n_files_active"),
@@ -1917,20 +1893,9 @@ object ShapeOpsQueries extends graft.QueryFamily {
           count(when(updPred, lit(1)))).head()
       val nMatched = kmm.getLong(2)
       val (nDel, nUpd) = (kmm.getLong(3), kmm.getLong(4))
-      val cands =
-        if (nMatched == 0L) Seq.empty[(String, Long, Long)]
-        else {
-          val (k0, k1) = (kmm.getLong(0), kmm.getLong(1))
-          active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 }
-        }
-      val matchedParts =
-        if (cands.isEmpty) Array.empty[String]
-        else s.read.parquet(cands.map(_._1): _*)
-          .where(matchedPred)
-          .select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0))  // hint audit: manifest-sized
-      val hits = cands.filter { case (p, _, _) =>
-        matchedParts.exists(_.contains(p + "/")) }
+      val (cands, hits) = mergeFunnel(s, active,
+        Option.when(nMatched > 0L)((kmm.getLong(0), kmm.getLong(1))),
+        matchedPred)
       val chType = snapshot.schema("n_chars").dataType
       // CoW rewrites: delete rows filtered OUT, update rows updated;
       // stats recomputed from the rewrite (deletes can shrink them);
@@ -1948,17 +1913,8 @@ object ShapeOpsQueries extends graft.QueryFamily {
         if (mm.getLong(2) == 0L) None
         else Some(("add", rp, mm.getLong(0), mm.getLong(1)))
       }
-      val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
-      val ip = s"$stage/mins"
-      s.range(1, 51)
-        .select((lit(maxId) + col("id")).as("doc_id"),
-          lit("merged").as("source"),
-          (lit(100L) + (lit(maxId) + col("id")) % 97)
-            .cast(chType).as("n_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(ip)
-      require(LakeLog.commit(s, stage.toString, 3,
-        hits.map { case (p, _, _) => LakeLog.remove(p) } ++
-          rewriteAdds :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
+      commitMergeInserts(s, stage.toString, snapshot,
+        hits.map { case (p, _, _) => LakeLog.remove(p) } ++ rewriteAdds)
       lakeStats(s.read.parquet(asOfFiles(s, stage.toString, 3): _*),
         Seq(lit(active.size.toLong).as("n_files_active"),
           lit(cands.size.toLong).as("n_files_cand_stats"),
@@ -2608,6 +2564,46 @@ object ShapeOpsQueries extends graft.QueryFamily {
     */
   private val mixChecksum =
     Seq("mix_checksum" -> sum(col("doc_id") * col("n_chars").cast("long")))
+
+  /** The MERGE gates' (q321/q324) file funnel over the `active`
+    * entries: phase 1 keeps the files whose manifest [min,max] overlaps
+    * the matched keys' range `keys` (none when no row matches); phase 2
+    * keeps the candidates that actually contain a `matched` row, found
+    * in one distributed read with `input_file_name` mapped back to the
+    * manifest entries. Returns (candidates, hits).
+    */
+  private def mergeFunnel(s: SparkSession, active: Seq[(String, Long, Long)],
+      keys: Option[(Long, Long)], matched: Column)
+      : (Seq[(String, Long, Long)], Seq[(String, Long, Long)]) = {
+    val cands = keys.fold(Seq.empty[(String, Long, Long)]) { case (k0, k1) =>
+      active.filter { case (_, mn, mx) => mx >= k0 && mn <= k1 } }
+    val matchedParts =
+      if (cands.isEmpty) Array.empty[String]
+      else s.read.parquet(cands.map(_._1): _*)
+        .where(matched)
+        .select(input_file_name().as("f")).distinct()
+        .collect().map(_.getString(0))  // hint audit: manifest-sized (one row per matched part file)
+    (cands, cands.filter { case (p, _, _) =>
+      matchedParts.exists(_.contains(p + "/")) })
+  }
+
+  /** The MERGE gates' insert arm and commit: 50 new ids past the
+    * `snapshot` maximum land as the one file `stage/mins`, committed
+    * with the rewrite's `changes` as version 3.
+    */
+  private def commitMergeInserts(s: SparkSession, stage: String,
+      snapshot: DataFrame, changes: Seq[LakeLog.Entry]): Unit = {
+    val maxId = snapshot.agg(max(col("doc_id"))).head().getLong(0)
+    val ip = s"$stage/mins"
+    s.range(1, 51)
+      .select((lit(maxId) + col("id")).as("doc_id"),
+        lit("merged").as("source"),
+        (lit(100L) + (lit(maxId) + col("id")) % 97)
+          .cast(snapshot.schema("n_chars").dataType).as("n_chars"))
+      .coalesce(1).write.mode("overwrite").parquet(ip)
+    require(LakeLog.commit(s, stage, 3,
+      changes :+ LakeLog.add(ip, maxId + 1, maxId + 50)))
+  }
 
   /** One version's gated rollup over its RESOLVED file set: row
     * count, char sum, and the q267 key checksum (the per-version

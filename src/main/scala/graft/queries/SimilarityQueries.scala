@@ -1271,7 +1271,7 @@ object SimilarityQueries extends graft.QueryFamily {
     kind match {
       case "basetopm" =>
         staged("basetopm")(knnBaseTopM(s, dir).select("src", "dst", "cos"))
-      case "dtopm" => staged("dtopm")(oldSliceTopM(s, dir))
+      case "dtopm" => staged("dtopm")(oldSliceTopM(s, dir, knnBands(s, dir)))
       case "ddiv" => staged("ddiv")(diversifySelect(s, dir,
         knnMergedPool(s, dir, knnStoredArtifact(s, dir, "dtopm"))))
       case "dref" => staged("dref")(knnTopM(
@@ -1334,24 +1334,27 @@ object SimilarityQueries extends graft.QueryFamily {
     * fixed-8-bit build measured 11× at 10× data (pairs ∝ n²/256)
     * while real builds add ~log₂(growth) band bits to hold buckets
     * constant. Both engines derive the same two-level rule off
-    * COUNT(embeddings). Always the FULL corpus's width, whatever
-    * slice is banded (q296's incremental face must band at the same
-    * width as the artifact it patches; a width migration — the rule
-    * crossing its floor — forces a rebuild, as re-sharding does in
-    * any LSH build). `widthFromSlice` evaluates the rule on the SLICE
-    * count instead: q316's upper layers re-shard at their own member
-    * count (a delta/maintenance slice must NOT).
+    * COUNT(embeddings). The full corpus is banded once per gate, so
+    * every slice a gate bands — q296's old and new slices, q327's
+    * survivors — is a `.where` on `vec_id` over these rows (the filter
+    * still reaches the scan) at the FULL corpus's width: q296's
+    * incremental face must band at the same width as the artifact it
+    * patches; a width migration — the rule crossing its floor — forces
+    * a rebuild, as re-sharding does in any LSH build.
     */
-  private def knnBands(s: SparkSession, dir: String,
-      slice: Option[Column] = None,
-      widthFromSlice: Boolean = false): DataFrame = {
-    val base = Tables(s, dir, "embeddings")
-    val sliced = slice.fold(base)(base.where)
-    val codes = sliced
+  private def knnBands(s: SparkSession, dir: String): DataFrame = {
+    val corpus = Tables(s, dir, "embeddings")
+    bandRows(corpus, corpus.count())
+  }
+
+  /** `rows`' banded sign-sketch rows at the width the rule picks for
+    * `n` vectors. q316's upper layers pass their own member count: they
+    * re-shard at it (a delta/maintenance slice must NOT).
+    */
+  private def bandRows(rows: DataFrame, n: Long): DataFrame = {
+    val codes = rows
       .select(col("vec_id"), bqWord(0).as("w0"), bqWord(bqWordBits).as("w1"))
-    val wide = (if (widthFromSlice) sliced.count()
-      else base.count()) > knnBandFloor
-    val bits = if (wide) 16 else 8
+    val bits = if (n > knnBandFloor) 16 else 8
     val nb = 64 / bits
     val mask = (1L << bits) - 1L
     val bandCols = (0 until nb).map { b =>
@@ -1413,8 +1416,9 @@ object SimilarityQueries extends graft.QueryFamily {
   /** The old slice's (corpus minus the q315 delta) directed top-M
     * (src, dst, cos), banded at the full corpus's width.
     */
-  private def oldSliceTopM(s: SparkSession, dir: String): DataFrame = {
-    val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
+  private def oldSliceTopM(s: SparkSession, dir: String,
+      bands: DataFrame): DataFrame = {
+    val bandsOld = bands.where(!inDelta(col("vec_id")))
     knnTopM(knnScored(s, dir, knnCandidates(bandsOld, bandsOld)))
       .select("src", "dst", "cos")
   }
@@ -1423,13 +1427,13 @@ object SimilarityQueries extends graft.QueryFamily {
     * slice's stored top-M plus every banded pair touching a delta
     * vector (delta × full covers delta-delta and delta→old; old ×
     * delta covers the affected old nodes) — old-old pairs are never
-    * re-scored.
+    * re-scored. `bands` is the full corpus's [[knnBands]].
     */
   private def deltaMergedTopM(s: SparkSession, dir: String,
-      oldTopM: DataFrame): DataFrame = {
-    val bandsOld = knnBands(s, dir, Some(!inDelta(col("vec_id"))))
-    val bandsNew = knnBands(s, dir, Some(inDelta(col("vec_id"))))
-    val newPairs = knnCandidates(bandsNew, knnBands(s, dir))
+      bands: DataFrame, oldTopM: DataFrame): DataFrame = {
+    val bandsOld = bands.where(!inDelta(col("vec_id")))
+    val bandsNew = bands.where(inDelta(col("vec_id")))
+    val newPairs = knnCandidates(bandsNew, bands)
       .unionByName(knnCandidates(bandsOld, bandsNew))
       .distinct()
     knnTopM(oldTopM.unionByName(knnScored(s, dir, newPairs)))
@@ -1638,7 +1642,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // the q296 merge theorem gives the full-corpus directed top-M
     // without re-scoring old-old pairs
     val newTopM = lastDdNewTopM.swap(
-      deltaMergedTopM(s, dir, oldTopM).cache())
+      deltaMergedTopM(s, dir, knnBands(s, dir), oldTopM).cache())
     touchedChange(oldTopM, newTopM, lastDdTouched)
   }
 
@@ -1721,7 +1725,7 @@ object SimilarityQueries extends graft.QueryFamily {
     // T1: survivors whose stored top-M cites a deleted neighbor
     val t1 = oldTopM.where(isDel(col("dst")) && !isDel(col("src")))
       .select("src").distinct()
-    val bandsSurv = knnBands(s, dir, Some(!isDel(col("vec_id"))))
+    val bandsSurv = knnBands(s, dir).where(!isDel(col("vec_id")))
     val bandsT1 = bandsSurv.join(t1.withColumnRenamed("src", "vec_id"),
       Seq("vec_id"), "left_semi")
     val recompTopM =
@@ -1970,8 +1974,9 @@ object SimilarityQueries extends graft.QueryFamily {
     */
   private def hnswLayerGraph(s: SparkSession, dir: String,
       level: Int): DataFrame = {
-    val b = knnBands(s, dir,
-      Some(hnswLevel(col("vec_id")) >= level), widthFromSlice = true)
+    val members = Tables(s, dir, "embeddings")
+      .where(hnswLevel(col("vec_id")) >= level)
+    val b = bandRows(members, members.count())
     knnSymmetrize(knnRefineTopM(s, dir,
       knnTopM(knnScored(s, dir, knnCandidates(b, b)))))
   }
@@ -2808,8 +2813,11 @@ object SimilarityQueries extends graft.QueryFamily {
     // band at the full corpus's width (see knnBands).
     // (the stored old-slice top-M is rebuilt here: gates are
     // self-contained, q158's premise)
-    "q296_delta_knn_graph" -> ((s, dir) =>
-      knnRollup(knnSymmetrize(deltaMergedTopM(s, dir, oldSliceTopM(s, dir))))),
+    "q296_delta_knn_graph" -> ((s, dir) => {
+      val bands = knnBands(s, dir)
+      knnRollup(knnSymmetrize(
+        deltaMergedTopM(s, dir, bands, oldSliceTopM(s, dir, bands))))
+    }),
 
     // INCREMENTAL maintenance for the SHIPPED (diversified) build —
     // the q296 delta face covered only the raw banded top-M; the index

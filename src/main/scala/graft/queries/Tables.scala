@@ -38,9 +38,12 @@ object Tables {
     * epoch-nanos long (exact nanos when the fixture carries them,
     * µs·1000 otherwise — matching DuckDB's `epoch_ns(ts)` either way).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizedEvents(apply(spark, dir, "events"))
+
+  /** [[events]]' normalization of raw `events` rows, batch or stream. */
+  def normalizedEvents(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val raw = apply(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts_ns", col("ts"))

@@ -6,7 +6,7 @@ import java.nio.file.attribute.FileTime
 import graft.queries.ModelOpsQueries.inDelta
 import graft.util.{FileUtils, LakeLog, Staged}
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.{DecimalType, StructType}
@@ -74,24 +74,39 @@ object StreamingQueries extends graft.QueryFamily {
     */
   private val ttlDelayUs = 2L * 86400L * 1000000L
 
-  /** q70's custom state: the open session plus how many sessions this
-    * user has already closed (so the timeout flush can number it).
+  /** The open session of q70 and q281 plus how many sessions this user
+    * has already closed (so the timeout flush can number it).
     */
   // NOT private: the state/object encoders generate Java that must
   // reach the constructor
-  case class SessionState(startUs: Long, lastUs: Long, n: Long, sid: Long)
+  case class SessionState(startUs: Long, lastUs: Long, n: Long, sid: Long) {
+    /** The event-time timeout (ms) that closes this session. */
+    def expiryMs: Long = lastUs / 1000L + gapMs
+    def out(user: Long): SessionOut = SessionOut(user, sid, n, startUs, lastUs)
+  }
   case class SessionOut(
       user_id: Long, session_id: Long, n_events: Long,
       start_us: Long, end_us: Long)
 
-  /** q281 state: q70's session accumulator plus the registered
-    * timer's expiry — the new API allows MANY timers per key (where
-    * GroupState.setTimeoutTimestamp silently replaced), so an update
-    * must delete the stale timer explicitly, and the expiry lives in
-    * state to know which one.
+  /** Folds one batch of `user`'s event times (µs) into the open session
+    * `open`; a gap over [[gapUs]] closes it. Returns the sessions closed,
+    * oldest first, and the session left open. The times are sorted here:
+    * the grouped iterator has no order contract. The session semantics
+    * of q70 and q281, whichever stateful operator holds the state.
     */
-  case class TwsSession(
-      startUs: Long, lastUs: Long, n: Long, sid: Long, expiryMs: Long)
+  private def foldSessions(user: Long, open: Option[SessionState],
+      times: Iterator[Long]): (Iterator[SessionOut], Option[SessionState]) = {
+    val (closed, last) = times.toSeq.sorted.foldLeft(
+      (List.empty[SessionOut], open)) {
+      case ((done, Some(st)), t) if t - st.lastUs > gapUs =>
+        (st.out(user) :: done, Some(SessionState(t, t, 1, st.sid + 1)))
+      case ((done, Some(st)), t) =>
+        (done, Some(st.copy(lastUs = math.max(st.lastUs, t), n = st.n + 1)))
+      case ((done, None), t) =>
+        (done, Some(SessionState(t, t, 1, 1)))
+    }
+    (closed.reverseIterator, last)
+  }
 
   /** q70's gap-session semantics re-expressed in Spark 4's
     * StatefulProcessor API (`transformWithState` — the successor to
@@ -105,45 +120,36 @@ object StreamingQueries extends graft.QueryFamily {
     */
   private class TwsSessionProcessor extends StatefulProcessor[
       Long, (Long, Long, java.sql.Timestamp), SessionOut] {
-    @transient private var st: ValueState[TwsSession] = _
+    @transient private var st: ValueState[SessionState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       st = getHandle.getValueState("session",
-        Encoders.product[TwsSession], TTLConfig.NONE)
+        Encoders.product[SessionState], TTLConfig.NONE)
 
     override def handleInputRows(user: Long,
         rows: Iterator[(Long, Long, java.sql.Timestamp)],
         tv: TimerValues): Iterator[SessionOut] = {
-      // the grouped iterator has no order contract (q70's rule)
-      val times = rows.map(_._2).toSeq.sorted
       val prev = if (st.exists()) Some(st.get()) else None
+      // the API allows MANY timers per key (where
+      // GroupState.setTimeoutTimestamp replaced), so an update deletes
+      // the stale one explicitly
       prev.foreach(s => getHandle.deleteTimer(s.expiryMs))
-      val (closed, open) = times.foldLeft(
-        (List.empty[SessionOut], prev)) {
-        case ((done, Some(s)), t) if t - s.lastUs > gapUs =>
-          (SessionOut(user, s.sid, s.n, s.startUs, s.lastUs) :: done,
-            Some(TwsSession(t, t, 1, s.sid + 1, 0L)))
-        case ((done, Some(s)), t) =>
-          (done, Some(s.copy(lastUs = math.max(s.lastUs, t), n = s.n + 1)))
-        case ((done, None), t) =>
-          (done, Some(TwsSession(t, t, 1, 1, 0L)))
-      }
+      val (closed, open) = foldSessions(user, prev, rows.map(_._2))
       open.foreach { s =>
-        val expiry = s.lastUs / 1000L + gapMs
-        st.update(s.copy(expiryMs = expiry))
-        getHandle.registerTimer(expiry)
+        st.update(s)
+        getHandle.registerTimer(s.expiryMs)
       }
-      closed.reverseIterator
+      closed
     }
 
     override def handleExpiredTimer(user: Long, tv: TimerValues,
         info: ExpiredTimerInfo): Iterator[SessionOut] = {
       // guard against a stale timer surviving a missed delete: only
-      // the expiry recorded in state flushes
+      // the open session's own expiry flushes
       if (st.exists() && st.get().expiryMs == info.getExpiryTimeInMs) {
         val s = st.get()
         st.clear()
-        Iterator(SessionOut(user, s.sid, s.n, s.startUs, s.lastUs))
+        Iterator(s.out(user))
       } else Iterator.empty
     }
   }
@@ -203,6 +209,105 @@ object StreamingQueries extends graft.QueryFamily {
     val stage = Staged.dir(root, "src")
     Files.copy(src, stage.resolve(s"$table.parquet"))
     (stage, s.read.parquet(src.toString).schema)
+  }
+
+  /** The parquet files under `src` as a file stream; `perFile` makes
+    * each file its own micro-batch (in mtime order).
+    */
+  private def fileStream(s: SparkSession, src: Path, schema: StructType,
+      perFile: Boolean = false): DataFrame = {
+    val reader = s.readStream.schema(schema)
+    (if (perFile) reader.option("maxFilesPerTrigger", "1") else reader)
+      .parquet(src.toString)
+  }
+
+  /** The fixture table `table` as a one-file stream ([[stageFixture]]). */
+  private def fixtureStream(s: SparkSession, dir: String, root: Path,
+      table: String): DataFrame = {
+    val (stage, schema) = stageFixture(s, dir, root, table)
+    fileStream(s, stage, schema)
+  }
+
+  /** An events stream with `event_time` (from `ts`) watermarked `delay`
+    * behind. It adds no other column: a stateful operator keeps every
+    * input column in its state (q69's dropDuplicates does), so a gate
+    * that needs the µs long reads it back as `unix_micros(event_time)`.
+    */
+  private def watermarked(events: DataFrame,
+      delay: String = "10 minutes"): DataFrame =
+    events.withColumn("event_time", timestamp_micros(tsUs(events.schema)))
+      .withWatermark("event_time", delay)
+
+  /** The q189 arrival slice (`inDelta` on `key`) of fixture `table` as a
+    * stream: the whole fixture file is staged (a copy, no Spark job) and
+    * the stream filters it.
+    */
+  private def deltaStream(s: SparkSession, dir: String, root: Path,
+      table: String, key: String): DataFrame =
+    fixtureStream(s, dir, root, table).where(inDelta(col(key)))
+
+  /** The attribution shape of q79, q146 and q283: each purchase matched
+    * to the same user's clicks in the 30 minutes before it. Both sides
+    * are file streams of their own over the staged events, watermarked
+    * 10 minutes; the interval condition lets the join's state evict rows
+    * once the watermark passes them. Columns: `p_`/`c_` + `user`,
+    * `event`, `us`, `time`.
+    */
+  private def attributionJoin(s: SparkSession, dir: String, root: Path,
+      joinType: String = "inner"): DataFrame = {
+    val (stage, schema) = stageFixture(s, dir, root, "events")
+    def side(evType: String, prefix: String) =
+      fileStream(s, stage, schema)
+        .where(col("event_type") === evType)
+        .withColumn(s"${prefix}_us", tsUs(schema))
+        .withColumn(s"${prefix}_time",
+          timestamp_micros(col(s"${prefix}_us")))
+        .withWatermark(s"${prefix}_time", "10 minutes")
+        .select(col("user_id").as(s"${prefix}_user"),
+          col("event_id").as(s"${prefix}_event"),
+          col(s"${prefix}_us"), col(s"${prefix}_time"))
+    side("purchase", "p").join(side("click", "c"),
+      col("p_user") === col("c_user") &&
+        col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
+        col("c_time") <= col("p_time"),
+      joinType)
+  }
+
+  /** Per (5-minute window, event_type) event counts and exact decimal
+    * value sums of a watermarked events stream — q59's aggregate, which
+    * q292 runs across a restart.
+    */
+  private def valueWindows(events: DataFrame): DataFrame = events
+    .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
+    .agg(count(lit(1)).as("n_events"),
+      sum(col("value").cast(dec2)).as("sv"))
+    .select(unix_micros(col("window.start")).as("window_us"),
+      col("event_type"), col("n_events"),
+      col("sv").cast("double").as("sum_value"))
+
+  /** The events' log lines split at the 2/3 point of their time range,
+    * as q188 and q199 screen them: returns the history window (the first
+    * two thirds, a batch frame with `us`) and the recent third as a
+    * stream — its raw events landed as the one file `root/src/t2.parquet`
+    * and rendered through the same [[Tables.normalizedEvents]] and
+    * `logsOf` as the batch side.
+    */
+  private def recentThird(s: SparkSession, dir: String, root: Path)
+      : (DataFrame, DataFrame) = {
+    import graft.queries.{LogDomainQueries, Tables}
+    val src = Paths.get(s"$dir/events.parquet")
+    val stage = Staged.dir(root, "src")
+    val schema = s.read.parquet(src.toString).schema
+    val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
+      .withColumn("us", expr("ts_ns div 1000"))
+    val mm = lines.agg(min(col("us")), max(col("us"))).head()
+    val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 2 / 3
+    landFile(s.read.parquet(src.toString)
+        .withColumn("us", tsUs(schema)).where(col("us") >= cut)
+        .select(schema.fieldNames.map(col).toSeq: _*),
+      stage.resolve("t2.parquet"))
+    (lines.where(col("us") < cut), LogDomainQueries.Corpus.logsOf(
+      Tables.normalizedEvents(fileStream(s, stage, schema))))
   }
 
   /** `df` landed as the one parquet file `f` (a single-task write, so
@@ -292,9 +397,7 @@ object StreamingQueries extends graft.QueryFamily {
     */
   private def eachBatch(s: SparkSession, src: Path, schema: StructType,
       root: Path)(fn: (DataFrame, Long) => Unit): Unit =
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
+    fileStream(s, src, schema, perFile = true)
       .writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) => fn(df, batchId) }
       .option("checkpointLocation", Staged.dir(root, "ckpt").toString)
@@ -310,24 +413,60 @@ object StreamingQueries extends graft.QueryFamily {
           col("n_docs"), col("sum_chars"), col("key_checksum"))
     }.reduce(_ unionByName _).orderBy("version", "source")
 
-  /** Shared multi-batch staging: split the events fixture into three
-    * TIME-thirds (t0/t1/t2, rows ts-ordered within each) and land them
-    * in `dest` with ascending mtimes in `arrivalOrder` (mtimes order
+  /** Versions 0..2 of the time-thirds ingest lake at `lake` (q287,
+    * q293), each resolved from its committed manifests as a lake reader
+    * would: files, rows and the event_id checksum.
+    */
+  private def ingestVersions(s: SparkSession, lake: Path): DataFrame =
+    (0 to 2).map { v =>
+      val files = LakeLog.adds(s, lake.toString, v)
+      s.read.parquet(files: _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(expr(graft.queries.ShapeOpsQueries
+            .manifestTerm("event_id"))).as("key_checksum"))
+        .select(lit(v.toLong).as("version"),
+          lit(files.length.toLong).as("n_files"),
+          col("n_rows"), col("key_checksum"))
+    }.reduce(_ unionByName _).orderBy("version")
+
+  /** The events fixture's time-thirds ([[stageTimeThirds]] under
+    * `root/src`) streamed one file per micro-batch into `commit`, empty
+    * batches skipped. Returns the source directory.
+    */
+  private def thirdsInto(s: SparkSession, dir: String, root: Path)(
+      commit: (DataFrame, Long) => Unit): Path = {
+    val stage = Staged.dir(root, "src")
+    val schema = stageTimeThirds(s, dir, stage)
+    eachBatch(s, stage, schema, root) { (df, batchId) =>
+      if (!df.isEmpty) commit(df, batchId)
+    }
+    stage
+  }
+
+  /** The events fixture split into three TIME-thirds ([[stageThirds]]
+    * on the µs timestamp). Returns the fixture schema.
+    */
+  private def stageTimeThirds(s: SparkSession, dir: String, dest: Path,
+      arrivalOrder: Seq[Int] = Seq(0, 1, 2)): StructType = {
+    val events = graft.queries.Tables(s, dir, "events")
+    stageThirds(events, tsUs(events.schema), dest, arrivalOrder)
+  }
+
+  /** Shared multi-batch staging: split `rows` into three thirds of the
+    * range of `key` (t0/t1/t2, rows `key`-ordered within each) and land
+    * them in `dest` with ascending mtimes in `arrivalOrder` (mtimes order
     * FileStreamSource's processing; with maxFilesPerTrigger=1 each
     * file is its own micro-batch). One scan, one single-task
     * partitioned write (row order preserved per third), then the part
     * files move into place. `arrivalOrder` lists thirds in the order
     * they arrive — Seq(1, 2, 0) stages the corpus's OLDEST third last
-    * (q282's late-data scenario). Returns the fixture schema
-    * (readStream needs it explicitly).
+    * (q282's late-data scenario). Returns `rows`' schema (readStream
+    * needs it explicitly).
     */
-  private def stageTimeThirds(s: SparkSession, dir: String, dest: Path,
-      arrivalOrder: Seq[Int] = Seq(0, 1, 2))
-      : StructType = {
-    val src = Paths.get(s"$dir/events.parquet")
-    val batch = s.read.parquet(src.toString)
-    val schema = batch.schema
-    val withUs = batch.withColumn("us", tsUs(schema))
+  private def stageThirds(rows: DataFrame, key: Column, dest: Path,
+      arrivalOrder: Seq[Int] = Seq(0, 1, 2)): StructType = {
+    val schema = rows.schema
+    val withUs = rows.withColumn("us", key)
     val mm = withUs.agg(min(col("us")), max(col("us"))).head()
     val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
     val t1 = tmin + (tmax - tmin) / 3
@@ -339,7 +478,7 @@ object StreamingQueries extends graft.QueryFamily {
         when(col("us") < t1, 0).when(col("us") < t2, 1).otherwise(2))
       .select((schema.fieldNames.map(col) :+ col("third") :+ col("us")).toSeq: _*)
       .coalesce(1)
-      // explicit (third, us) sort: gates whose oracle derives
+      // explicit (third, key) sort: gates whose oracle derives
       // per-key first-seen as MIN(us) need each staged third
       // ts-ordered — a contract, not an accident (the ordering also
       // satisfies the writer's `third` requirement, so no second
@@ -378,10 +517,7 @@ object StreamingQueries extends graft.QueryFamily {
     */
   private def sessionWindowRun(s: SparkSession, dir: String)(
       gate: DataFrame => DataFrame): DataFrame = gateRun(s, "q154") { root =>
-    val (stage, schema) = stageFixture(s, dir, root, "events")
-    val agg = s.readStream.schema(schema).parquet(stage.toString)
-      .withColumn("event_time", timestamp_micros(tsUs(schema)))
-      .withWatermark("event_time", "10 minutes")
+    val agg = watermarked(fixtureStream(s, dir, root, "events"))
       .groupBy(col("user_id"), session_window(col("event_time"), "1 hour"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
@@ -424,16 +560,7 @@ object StreamingQueries extends graft.QueryFamily {
     // E20 oracle-gated: per-(5-min window, event_type) counts + decimal
     // value sums, emitted by Append-mode watermark eviction.
     "q59_stream_window" -> ((s, dir) => gateRun(s, "q59") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      val agg = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", "10 minutes")
-        .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast(dec2)).as("sv"))
-        .select(unix_micros(col("window.start")).as("window_us"),
-          col("event_type"), col("n_events"),
-          col("sv").cast("double").as("sum_value"))
+      val agg = valueWindows(watermarked(fixtureStream(s, dir, root, "events")))
       drainToMemory(s, root, agg) { sink =>
         // tiny by construction: one row per closed (5-minute window ×
         // event_type)
@@ -455,14 +582,11 @@ object StreamingQueries extends graft.QueryFamily {
     // advance — the streaming distinct-users dashboard that never
     // stores a user set.
     "q107_stream_kmv" -> ((s, dir) => gateRun(s, "q107") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
       val k = streamKmvK
       val h = graft.functions.TextFunctions.spreadHash(
         col("user_id").cast("string"))
       val p = graft.functions.TextFunctions.P
-      val agg = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", "10 minutes")
+      val agg = watermarked(fixtureStream(s, dir, root, "events"))
         .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
         .agg(graft.functions.KMinValues(h, k).as("sketch"))
         .select(unix_micros(col("window.start")).as("window_us"),
@@ -500,10 +624,7 @@ object StreamingQueries extends graft.QueryFamily {
     // (non-key columns of "the first row" are arrival-order-dependent
     // by definition). Oracle: plain SELECT DISTINCT.
     "q69_stream_dedup" -> ((s, dir) => gateRun(s, "q69") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      val dedup = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", "10 minutes")
+      val dedup = watermarked(fixtureStream(s, dir, root, "events"))
         .dropDuplicates("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
       drainToMemory(s, root, dedup) { sink =>
@@ -522,15 +643,12 @@ object StreamingQueries extends graft.QueryFamily {
     // open session emitted iff end_ms + gap < watermark_ms.
     "q70_stream_sessions" -> ((s, dir) => gateRun(s, "q70") { root =>
       import s.implicits._
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      val sessions = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("ts_us", tsUs(schema))
-        .withColumn("event_time", timestamp_micros(col("ts_us")))
-        .withWatermark("event_time", "10 minutes")
+      val sessions = watermarked(fixtureStream(s, dir, root, "events"))
         // the watermarked column must survive into the stateful op's
         // input (UnsupportedOperationChecker requires it), even
         // though the state function reads the µs long
-        .select(col("user_id").as[Long], col("ts_us").as[Long],
+        .select(col("user_id").as[Long],
+          unix_micros(col("event_time")).as[Long],
           col("event_time").as[java.sql.Timestamp])
         .groupByKey(_._1)
         .flatMapGroupsWithState[SessionState, SessionOut](
@@ -539,25 +657,15 @@ object StreamingQueries extends graft.QueryFamily {
             if (state.hasTimedOut) {
               val st = state.get
               state.remove()
-              Iterator(SessionOut(user, st.sid, st.n, st.startUs, st.lastUs))
+              Iterator(st.out(user))
             } else {
-              val times = rows.map(_._2).toSeq.sorted
-              val (closed, open) = times.foldLeft(
-                (List.empty[SessionOut], state.getOption)) {
-                case ((done, Some(st)), t) if t - st.lastUs > gapUs =>
-                  (SessionOut(user, st.sid, st.n, st.startUs, st.lastUs) :: done,
-                    Some(SessionState(t, t, 1, st.sid + 1)))
-                case ((done, Some(st)), t) =>
-                  (done, Some(SessionState(st.startUs, math.max(st.lastUs, t),
-                    st.n + 1, st.sid)))
-                case ((done, None), t) =>
-                  (done, Some(SessionState(t, t, 1, 1)))
-              }
+              val (closed, open) =
+                foldSessions(user, state.getOption, rows.map(_._2))
               open.foreach { st =>
                 state.update(st)
-                state.setTimeoutTimestamp(st.lastUs / 1000L + gapMs)
+                state.setTimeoutTimestamp(st.expiryMs)
               }
-              closed.reverseIterator
+              closed
             }
         }
       drainToMemory(s, root, sessions.toDF()) { sink =>
@@ -577,12 +685,9 @@ object StreamingQueries extends graft.QueryFamily {
     // watermark-bounded exactly like q70's.
     "q281_tws_sessions" -> ((s, dir) => gateRun(s, "q281") { root =>
       import s.implicits._
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      val sessions = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("ts_us", tsUs(schema))
-        .withColumn("event_time", timestamp_micros(col("ts_us")))
-        .withWatermark("event_time", "10 minutes")
-        .select(col("user_id").as[Long], col("ts_us").as[Long],
+      val sessions = watermarked(fixtureStream(s, dir, root, "events"))
+        .select(col("user_id").as[Long],
+          unix_micros(col("event_time")).as[Long],
           col("event_time").as[java.sql.Timestamp])
         .groupByKey(_._1)
         .transformWithState(new TwsSessionProcessor,
@@ -629,11 +734,7 @@ object StreamingQueries extends graft.QueryFamily {
       // arrival order = middle third, last third, FIRST third (the
       // stragglers)
       val schema = stageTimeThirds(s, dir, stage, Seq(1, 2, 0))
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", "10 minutes")
+      val agg = watermarked(fileStream(s, stage, schema, perFile = true))
         .groupBy(window(col("event_time"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("window_us"),
@@ -659,22 +760,7 @@ object StreamingQueries extends graft.QueryFamily {
     // State: join buffers a 30-min horizon per user; agg holds open
     // windows — both watermark-bounded.
     "q283_stream_join_agg" -> ((s, dir) => gateRun(s, "q283") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      def side(evType: String, prefix: String) =
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("event_type") === evType)
-          .withColumn(s"${prefix}_us", tsUs(schema))
-          .withColumn(s"${prefix}_time",
-            timestamp_micros(col(s"${prefix}_us")))
-          .withWatermark(s"${prefix}_time", "10 minutes")
-          .select(col("user_id").as(s"${prefix}_user"),
-            col("event_id").as(s"${prefix}_event"),
-            col(s"${prefix}_us"), col(s"${prefix}_time"))
-      val joined = side("purchase", "p").join(side("click", "c"),
-        col("p_user") === col("c_user") &&
-          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-          col("c_time") <= col("p_time"))
-      val agg = joined
+      val agg = attributionJoin(s, dir, root)
         .groupBy(window(col("p_time"), "5 minutes"))
         .agg(count(lit(1)).as("n_matches"))
         .select(unix_micros(col("window.start")).as("window_us"),
@@ -699,24 +785,11 @@ object StreamingQueries extends graft.QueryFamily {
     // batch once (data bandwidth) + an O(1) manifest append; as-of
     // reads stay metadata-resolved exactly as q274.
     "q287_stream_lake_ingest" -> ((s, dir) => gateRun(s, "q287") { root =>
-      val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "lake")
-      val schema = stageTimeThirds(s, dir, stage)
-      eachBatch(s, stage, schema, root) { (df, batchId) =>
-        if (!df.isEmpty) commitFile(s, lake, batchId, "data/b", df)
+      thirdsInto(s, dir, root) { (df, batchId) =>
+        commitFile(s, lake, batchId, "data/b", df)
       }
-      // as-of(v) resolved from the committed manifests, as a lake
-      // reader would
-      (0 to 2).map { v =>
-        val files = LakeLog.adds(s, lake.toString, v)
-        s.read.parquet(files: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(expr(graft.queries.ShapeOpsQueries
-              .manifestTerm("event_id"))).as("key_checksum"))
-          .select(lit(v.toLong).as("version"),
-            lit(files.length.toLong).as("n_files"),
-            col("n_rows"), col("key_checksum"))
-      }.reduce(_ unionByName _).orderBy("version")
+      ingestVersions(s, lake)
     }),
 
     // RESTART-WITH-NEW-DATA recovery — exactly-once across a REAL
@@ -751,18 +824,8 @@ object StreamingQueries extends graft.QueryFamily {
         Files.move(hold.resolve(s"t$i.parquet"),
           stage.resolve(s"t$i.parquet"))
       def run(): Unit = {
-        val agg = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString)
-          .withColumn("event_time", timestamp_micros(tsUs(schema)))
-          .withWatermark("event_time", "10 minutes")
-          .groupBy(window(col("event_time"), "5 minutes"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(dec2)).as("sv"))
-          .select(unix_micros(col("window.start")).as("window_us"),
-            col("event_type"), col("n_events"),
-            col("sv").cast("double").as("sum_value"))
+        val agg = valueWindows(
+          watermarked(fileStream(s, stage, schema, perFile = true)))
         // the state width is pinned in the checkpoint at FIRST start;
         // both runs start inside the same gate-width wrapper, so they
         // agree by contract
@@ -801,35 +864,22 @@ object StreamingQueries extends graft.QueryFamily {
     // this is exactly Delta's txn-version dedup: one O(1) log probe
     // per batch, no data read.
     "q293_stream_sink_fencing" -> ((s, dir) => gateRun(s, "q293") { root =>
-      val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "lake")
-      val schema = stageTimeThirds(s, dir, stage)
       // the FENCED committer — one definition for the live writer
       // and the zombie replay: log probe before any work, then
       // LakeLog's put-if-absent commit
       def fencedCommit(df: DataFrame, batchId: Long): Boolean =
         !LakeLog.exists(lake.toString, batchId) &&
           commitFile(s, lake, batchId, "data/b", df)
-      eachBatch(s, stage, schema, root) { (df, batchId) =>
-        if (!df.isEmpty) fencedCommit(df, batchId)
-      }
+      val stage = thirdsInto(s, dir, root)(fencedCommit(_, _))
       // the zombie: an old writer instance re-emits batch 1 — with
       // t2's payload, so a broken fence cannot hide behind an
       // idempotent byte-identical overwrite; the fence must no-op
       // before any work
       val replayFenced = !fencedCommit(
         s.read.parquet(stage.resolve("t2.parquet").toString), 1L)
-      (0 to 2).map { v =>
-        val files = LakeLog.adds(s, lake.toString, v)
-        s.read.parquet(files: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(expr(graft.queries.ShapeOpsQueries
-              .manifestTerm("event_id"))).as("key_checksum"))
-          .select(lit(v.toLong).as("version"),
-            lit(files.length.toLong).as("n_files"),
-            col("n_rows"), col("key_checksum"),
-            lit(v == 1 && replayFenced).as("replay_fenced"))
-      }.reduce(_ unionByName _).orderBy("version")
+      ingestVersions(s, lake)
+        .withColumn("replay_fenced", col("version") === 1L && lit(replayFenced))
     }),
 
     // STREAMING MATERIALIZED VIEW — the composition production
@@ -851,9 +901,7 @@ object StreamingQueries extends graft.QueryFamily {
     // never rescanned; recovery is the checkpoint + the last
     // committed version, exactly Delta's streaming-upsert pattern.
     "q306_stream_matview" -> ((s, dir) => gateRun(s, "q306") { root =>
-      val stage = Staged.dir(root, "src")
       val lake = Staged.dir(root, "mv")
-      val schema = stageTimeThirds(s, dir, stage)
       // the MV committer — one definition for the live writer and
       // the zombie replay (q293's fence shape, with the fold)
       def mvCommit(df: DataFrame, batchId: Long): Boolean =
@@ -871,9 +919,7 @@ object StreamingQueries extends graft.QueryFamily {
                 sum(col("sv")).as("sv"))
           commitFile(s, lake, batchId, "agg/v", merged)
         }
-      eachBatch(s, stage, schema, root) { (df, batchId) =>
-        if (!df.isEmpty) mvCommit(df, batchId)
-      }
+      val stage = thirdsInto(s, dir, root)(mvCommit(_, _))
       // the zombie: an old writer re-emits batch 1 with t2's
       // payload (distinguishable — q293's convention); the fence
       // must no-op before any fold or file write
@@ -1223,12 +1269,9 @@ object StreamingQueries extends graft.QueryFamily {
     // flush.
     "q130_stream_alerts" -> ((s, dir) => gateRun(s, "q130") { root =>
       import s.implicits._
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      val alerts = s.readStream.schema(schema).parquet(stage.toString)
-        .withColumn("ts_us", tsUs(schema))
-        .withColumn("event_time", timestamp_micros(col("ts_us")))
-        .withWatermark("event_time", "10 minutes")
-        .select(col("event_type").as[String], col("ts_us").as[Long],
+      val alerts = watermarked(fixtureStream(s, dir, root, "events"))
+        .select(col("event_type").as[String],
+          unix_micros(col("event_time")).as[Long],
           col("event_time").as[java.sql.Timestamp])
         .groupByKey(_._1)
         .flatMapGroupsWithState[AlertState, AlertOut](
@@ -1289,21 +1332,7 @@ object StreamingQueries extends graft.QueryFamily {
     // side's buffered window to 30 minutes + watermark delay of rows
     // per user.
     "q79_stream_join" -> ((s, dir) => gateRun(s, "q79") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      def side(evType: String, prefix: String) =
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("event_type") === evType)
-          .withColumn(s"${prefix}_us", tsUs(schema))
-          .withColumn(s"${prefix}_time",
-            timestamp_micros(col(s"${prefix}_us")))
-          .withWatermark(s"${prefix}_time", "10 minutes")
-          .select(col("user_id").as(s"${prefix}_user"),
-            col("event_id").as(s"${prefix}_event"),
-            col(s"${prefix}_us"), col(s"${prefix}_time"))
-      val joined = side("purchase", "p").join(side("click", "c"),
-        col("p_user") === col("c_user") &&
-          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-          col("c_time") <= col("p_time"))
+      val joined = attributionJoin(s, dir, root)
         .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
           (col("p_us") - col("c_us")).as("delta_us"))
       // a stream-stream join keeps FOUR state stores per shuffle
@@ -1330,22 +1359,7 @@ object StreamingQueries extends graft.QueryFamily {
     // exact threshold: wm = min over both sides of floor-ms(max event
     // time) minus the 10-minute delay.
     "q146_stream_outer_join" -> ((s, dir) => gateRun(s, "q146") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
-      def side(evType: String, prefix: String) =
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(col("event_type") === evType)
-          .withColumn(s"${prefix}_us", tsUs(schema))
-          .withColumn(s"${prefix}_time",
-            timestamp_micros(col(s"${prefix}_us")))
-          .withWatermark(s"${prefix}_time", "10 minutes")
-          .select(col("user_id").as(s"${prefix}_user"),
-            col("event_id").as(s"${prefix}_event"),
-            col(s"${prefix}_us"), col(s"${prefix}_time"))
-      val joined = side("purchase", "p").join(side("click", "c"),
-        col("p_user") === col("c_user") &&
-          col("c_time") >= col("p_time") - expr("INTERVAL 30 MINUTES") &&
-          col("c_time") <= col("p_time"),
-        "leftOuter")
+      val joined = attributionJoin(s, dir, root, "leftOuter")
         .select(col("p_user").as("user_id"), col("p_event"), col("c_event"),
           (col("p_us") - col("c_us")).as("delta_us"))
       drainToMemory(s, root, joined) { sink =>
@@ -1406,7 +1420,6 @@ object StreamingQueries extends graft.QueryFamily {
     "q158_stream_delta_dedup" -> ((s, dir) => gateRun(s, "q158") { root =>
       import graft.functions.TextFunctions.{tokens, minhashK, minhashBands, minhashBandRows}
       val src = Paths.get(s"$dir/documents.parquet")
-      val (stage, schema) = stageFixture(s, dir, root, "documents")
       def sigOf(df: DataFrame) = df
         .select(col("doc_id"), array_distinct(
           graft.functions.ShingleHash(tokens(col("text")), 3)).as("hs"))
@@ -1434,8 +1447,7 @@ object StreamingQueries extends graft.QueryFamily {
       // deployment stores the index bucketed on the band key so the
       // per-micro-batch join shuffles only the arriving delta
       val matches = bands(sigOf(
-          s.readStream.schema(schema).parquet(stage.toString)
-            .where(inDelta(col("doc_id")))))
+          deltaStream(s, dir, root, "documents", "doc_id")))
         .join(index, Seq("band", "h1", "h2"))
         .select(col("doc_id"), col("match_id"),
           col("sig").as("sd"), col("si"))
@@ -1490,7 +1502,7 @@ object StreamingQueries extends graft.QueryFamily {
     // attribute changes, not events), broadcast or bucket-joined per
     // micro-batch; per-batch work ∝ arriving observations.
     "q259_stream_pit" -> ((s, dir) => gateRun(s, "q259") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val events = fixtureStream(s, dir, root, "events")
       // the static side IS the q74 gate's history — one definition
       // (scd2Frame), renamed to the serving row's column contract
       val scd2 = graft.queries.PipelineOpsQueries.scd2Frame(s, dir)
@@ -1498,11 +1510,11 @@ object StreamingQueries extends graft.QueryFamily {
           col("version").as("pit_version"),
           col("valid_from_us").as("valid_from"),
           col("valid_to_us").as("valid_to"))
-      val probes = s.readStream.schema(schema).parquet(stage.toString)
+      val probes = events
         .where(col("event_id") %
           graft.queries.PipelineOpsQueries.pitProbeMod === 0)
         .select(col("user_id"), col("event_id").as("probe_id"),
-          tsUs(schema).as("asof_us"))
+          tsUs(events.schema).as("asof_us"))
       val joined = probes.join(scd2,
           probes("user_id") === scd2("user_id") &&
             col("valid_from") <= col("asof_us") &&
@@ -1516,13 +1528,11 @@ object StreamingQueries extends graft.QueryFamily {
 
     "q164_stream_index" -> ((s, dir) => gateRun(s, "q164") { root =>
       val src = Paths.get(s"$dir/documents.parquet")
-      val (stage, schema) = stageFixture(s, dir, root, "documents")
       // the SHARED index aggregation (CorpusOpsQueries.shardedIndex)
       // applied to the streaming frame — one contract, three build
       // paths
       val deltaIdx = graft.queries.CorpusOpsQueries.shardedIndex(
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("doc_id"))))
+        deltaStream(s, dir, root, "documents", "doc_id"))
       drainToMemory(s, root, deltaIdx, OutputMode.Complete) { sink =>
         val oldIdx = graft.queries.CorpusOpsQueries.shardedIndex(
           s.read.parquet(src.toString)
@@ -1563,9 +1573,7 @@ object StreamingQueries extends graft.QueryFamily {
       val now = System.currentTimeMillis()
       stageHalf(0, "half0.parquet", now - 120000)
       stageHalf(1, "half1.parquet", now - 60000)
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
+      val agg = fileStream(s, stage, schema, perFile = true)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(dec2)).as("sv"))
@@ -1617,11 +1625,8 @@ object StreamingQueries extends graft.QueryFamily {
     "q178_stream_dedup_ttl" -> ((s, dir) => gateRun(s, "q178") { root =>
       val stage = Staged.dir(root, "src")
       val schema = stageTimeThirds(s, dir, stage)
-      val dedup = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withColumn("event_time", timestamp_micros(tsUs(schema)))
-        .withWatermark("event_time", s"${ttlDelayUs / 1000000L} seconds")
+      val dedup = watermarked(fileStream(s, stage, schema, perFile = true),
+          s"${ttlDelayUs / 1000000L} seconds")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
       drainToMemory(s, root, dedup) { sink =>
@@ -1650,34 +1655,17 @@ object StreamingQueries extends graft.QueryFamily {
     // fixture because the gate must be self-contained (q158's
     // premise).
     "q188_stream_template_emergence" -> ((s, dir) => gateRun(s, "q188") { root =>
-      import graft.queries.{LogDomainQueries, Tables}
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
-        .withColumn("us", expr("ts_ns div 1000"))
-      val mm = lines.agg(min(col("us")), max(col("us"))).head()
-      val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
-      val cut = tmin + (tmax - tmin) * 2 / 3
+      import graft.queries.LogDomainQueries
+      // the screened slice (the most recent third) streams as ONE file
+      val (history, recent) = recentThird(s, dir, root)
       // the catalog: history-window templates with >= 1% support
-      val histT = lines.where(col("us") < cut)
+      val histT = history
         .select(LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
         .groupBy("template").agg(count(lit(1)).as("n_lines"))
       val totalHist = histT.agg(sum(col("n_lines"))).head().getLong(0)
       val catalog = histT.where(col("n_lines") * 100L >= totalHist)
         .select("template")
-      // stage the screened slice (the most recent third) as ONE file
-      landFile(s.read.parquet(src.toString)
-          .withColumn("us", tsUs(schema)).where(col("us") >= cut)
-          .select(schema.fieldNames.map(col).toSeq: _*),
-        stage.resolve("t2.parquet"))
-      val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
-      val streamNorm = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          streamRaw.withColumn("ts_ns", col("ts"))
-        case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
-      }
-      val emergent = LogDomainQueries.Corpus.logsOf(streamNorm)
+      val emergent = recent
         .select(col("node"), col("event_id"),
           LogDomainQueries.Corpus.templateOf(col("line")).as("template"))
         .join(broadcast(catalog), Seq("template"), "left_anti")  // hint audit: template-catalog-bounded (log formats are finite)
@@ -1707,19 +1695,12 @@ object StreamingQueries extends graft.QueryFamily {
     // the old index is never re-derived from raw embeddings.
     "q204_stream_vec_ingest" -> ((s, dir) => gateRun(s, "q204") { root =>
       import graft.queries.SimilarityQueries
-      val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      landFile(s.read.parquet(src.toString)
-          .where(inDelta(col("vec_id"))),
-        stage.resolve("delta.parquet"))
       val deltaCodes = SimilarityQueries.pqCodeRowsFor(s, dir,
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("vec_id"))))
+        deltaStream(s, dir, root, "embeddings", "vec_id"))
       drainToMemory(s, root, deltaCodes) { sink =>
         val oldIdx = SimilarityQueries.pqCellIndexOf(
           SimilarityQueries.pqCodeRowsFor(s, dir,
-            s.read.parquet(src.toString)
+            graft.queries.Tables(s, dir, "embeddings")
               .where(!inDelta(col("vec_id")))))
         val deltaIdx = SimilarityQueries.pqCellIndexOf(sink)
         oldIdx.union(deltaIdx)
@@ -1747,15 +1728,8 @@ object StreamingQueries extends graft.QueryFamily {
     // twin VERBATIM — streaming build ≡ incremental ≡ from-scratch.
     "q221_stream_frontier" -> ((s, dir) => gateRun(s, "q221") { root =>
       import graft.queries.CrawlOpsQueries
-      val src = Paths.get(s"$dir/documents.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      landFile(s.read.parquet(src.toString)
-          .where(inDelta(col("doc_id"))),
-        stage.resolve("delta.parquet"))
       val deltaKept = CrawlOpsQueries.frontierKeptOf(
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("doc_id"))))
+        deltaStream(s, dir, root, "documents", "doc_id"))
       drainToMemory(s, root, deltaKept, OutputMode.Complete) { sink =>
         val old = CrawlOpsQueries.frontierKept(s, dir, !inDelta(col("doc_id")))
         CrawlOpsQueries.frontierSchedule(
@@ -1781,18 +1755,12 @@ object StreamingQueries extends graft.QueryFamily {
     // corpus-scale.
     "q237_stream_edges" -> ((s, dir) => gateRun(s, "q237") { root =>
       import graft.queries.CrawlOpsQueries
-      val src = Paths.get(s"$dir/documents.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      landFile(s.read.parquet(src.toString)
-          .where(inDelta(col("doc_id"))),
-        stage.resolve("delta.parquet"))
       val deltaEdges = CrawlOpsQueries.hostEdges(
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("doc_id"))))
+        deltaStream(s, dir, root, "documents", "doc_id"))
       drainToMemory(s, root, deltaEdges, OutputMode.Complete) { sink =>
         val oldEdges = CrawlOpsQueries.hostEdges(
-          s.read.parquet(src.toString).where(!inDelta(col("doc_id"))))
+          graft.queries.Tables(s, dir, "documents")
+            .where(!inDelta(col("doc_id"))))
         val merged = oldEdges.unionByName(sink)
           .groupBy("src", "dst").agg(sum(col("w")).as("w"))
         CrawlOpsQueries.pagerankFrom(merged)
@@ -1814,18 +1782,12 @@ object StreamingQueries extends graft.QueryFamily {
     // is ONE ~17 KB buffer regardless of arrival volume.
     "q241_stream_gramian" -> ((s, dir) => gateRun(s, "q241") { root =>
       import graft.queries.ModelOpsQueries
-      val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      landFile(s.read.parquet(src.toString)
-          .where(inDelta(col("vec_id"))),
-        stage.resolve("delta.parquet"))
       val deltaCells = ModelOpsQueries.momentCells(
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("vec_id"))))
+        deltaStream(s, dir, root, "embeddings", "vec_id"))
       drainToMemory(s, root, deltaCells, OutputMode.Complete) { sink =>
         val oldCells = ModelOpsQueries.momentCells(
-          s.read.parquet(src.toString).where(!inDelta(col("vec_id"))))
+          graft.queries.Tables(s, dir, "embeddings")
+            .where(!inDelta(col("vec_id"))))
         ModelOpsQueries.momentReport(
           oldCells.unionByName(sink)
             .groupBy("i", "j").agg(sum(col("v")).as("v")))
@@ -1847,15 +1809,8 @@ object StreamingQueries extends graft.QueryFamily {
     // O(1) eval slice.
     "q218_stream_decontam" -> ((s, dir) => gateRun(s, "q218") { root =>
       import graft.queries.SimilarityQueries
-      val src = Paths.get(s"$dir/embeddings.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      landFile(s.read.parquet(src.toString)
-          .where(inDelta(col("vec_id"))),
-        stage.resolve("delta.parquet"))
       val hits = SimilarityQueries.decontamHits(s, dir,
-        s.readStream.schema(schema).parquet(stage.toString)
-          .where(inDelta(col("vec_id"))))
+        deltaStream(s, dir, root, "embeddings", "vec_id"))
       drainToMemory(s, root, hits) { sink =>
         SimilarityQueries.decontamRollup(sink)
           .orderBy("vec_id")
@@ -1884,14 +1839,8 @@ object StreamingQueries extends graft.QueryFamily {
     // baseline probe is a bounded broadcast.
     "q209_stream_quality_drift" -> ((s, dir) => gateRun(s, "q209") { root =>
       import graft.functions.TextFunctions
-      val src = Paths.get(s"$dir/documents.parquet")
       val stage = Staged.dir(root, "src")
-      val batch = s.read.parquet(src.toString)
-      val schema = batch.schema
-      val mm = batch.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (dmin, dmax) = (mm.getLong(0), mm.getLong(1))
-      val d1 = dmin + (dmax - dmin) / 3
-      val d2 = dmin + (dmax - dmin) * 2 / 3
+      val batch = graft.queries.Tables(s, dir, "documents")
       // quality permille, identical on the batch (baseline) and
       // streaming (per-window) sides — the q174 construction
       def withQp(df: DataFrame): DataFrame = df
@@ -1903,30 +1852,9 @@ object StreamingQueries extends graft.QueryFamily {
       val baseline = withQp(batch).groupBy("source")
         .agg(count(lit(1)).as("bn"), sum(col("qp")).as("bsum"))
         .select(col("source"), expr("bsum div bn").as("base_mean"))
-      // stage three doc_id-ordered thirds, mtime-ordered (q178's
-      // one-pass partitioned write; the explicit sort is the
-      // ts-order contract, not an accident of fixture order)
-      val tmp = root.resolve("w")
-      val now = System.currentTimeMillis()
-      batch
-        .withColumn("third",
-          when(col("doc_id") < d1, 0).when(col("doc_id") < d2, 1)
-            .otherwise(2))
-        .coalesce(1)
-        .sortWithinPartitions(col("third"), col("doc_id"))
-        .write.partitionBy("third").mode("overwrite")
-        .parquet(tmp.toString)
-      for (i <- 0 to 2) {
-        val part = FileUtils.firstParquet(tmp.resolve(s"third=$i"))
-        Files.move(part, stage.resolve(s"t$i.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(stage.resolve(s"t$i.parquet"),
-          FileTime.fromMillis(
-            now - (3 - i) * 60000L))
-      }
-      val agg = withQp(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
+      // three doc_id-ordered thirds, mtime-ordered (q178's staging)
+      val schema = stageThirds(batch, col("doc_id"), stage)
+      val agg = withQp(fileStream(s, stage, schema, perFile = true))
         .withColumn("event_time",
           timestamp_micros(col("doc_id") * lit(1000000L)))
         .withWatermark("event_time", s"${qualityDriftDelayUs / 1000000L} seconds")
@@ -1961,34 +1889,18 @@ object StreamingQueries extends graft.QueryFamily {
     // posexplode bounded by params/line + one broadcast probe per
     // micro-batch — the cheapest possible alerting path.
     "q199_stream_slot_anomaly" -> ((s, dir) => gateRun(s, "q199") { root =>
-      import graft.queries.{LogDomainQueries, Tables}
-      val src = Paths.get(s"$dir/events.parquet")
-      val stage = Staged.dir(root, "src")
-      val schema = s.read.parquet(src.toString).schema
-      val lines = LogDomainQueries.Corpus.logsOf(Tables.events(s, dir))
-        .withColumn("us", expr("ts_ns div 1000"))
-      val mm = lines.agg(min(col("us")), max(col("us"))).head()
-      val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 2 / 3
+      import graft.queries.LogDomainQueries
+      val (history, recent) = recentThird(s, dir, root)
       def slots(df: DataFrame) = df.select(
           LogDomainQueries.Corpus.templateOf(col("line")).as("template"),
           posexplode(LogDomainQueries.Corpus.numRuns(col("line")))
             .as(Seq("slot", "v")))
         .select(col("template"), col("slot").cast("long").as("slot"),
           col("v").cast("long").as("v"))
-      val envelopes = slots(lines.where(col("us") < cut))
+      val envelopes = slots(history)
         .groupBy("template", "slot")
         .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      landFile(s.read.parquet(src.toString)
-          .withColumn("us", tsUs(schema)).where(col("us") >= cut)
-          .select(schema.fieldNames.map(col).toSeq: _*),
-        stage.resolve("t2.parquet"))
-      val streamRaw = s.readStream.schema(schema).parquet(stage.toString)
-      val streamNorm = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          streamRaw.withColumn("ts_ns", col("ts"))
-        case t => streamRaw.withColumn("ts_ns", Tables.tsUs(t) * lit(1000L))
-      }
-      val alerts = slots(LogDomainQueries.Corpus.logsOf(streamNorm))
+      val alerts = slots(recent)
         .join(broadcast(envelopes), Seq("template", "slot"))  // hint audit: (template x slot)-bounded (log formats are finite)
         .where(col("v") < col("lo") || col("v") > col("hi"))
         .select(col("template"), col("slot"), col("v"))
@@ -2006,10 +1918,10 @@ object StreamingQueries extends graft.QueryFamily {
     // stream state, no stream shuffle. Aggregation happens post-sink
     // (the gated contract is the enriched row set).
     "q71_stream_enrich" -> ((s, dir) => gateRun(s, "q71") { root =>
-      val (stage, schema) = stageFixture(s, dir, root, "events")
+      val events = fixtureStream(s, dir, root, "events")
       val dim = s.read.parquet(s"$dir/nation.parquet")
         .select(col("n_nationkey"), col("n_name"))
-      val enriched = s.readStream.schema(schema).parquet(stage.toString)
+      val enriched = events
         .withColumn("n_nationkey", col("user_id") % 25)
         .join(broadcast(dim), "n_nationkey")  // hint audit: dimension table (25-row nation)
         .select(col("event_id"), col("n_name"),
@@ -2056,6 +1968,69 @@ object StreamingQueries extends graft.QueryFamily {
        |   OR (a.end_us // 1000) + $gapMs < (SELECT w FROM wm)
        |ORDER BY a.user_id, a.session_id""".stripMargin
 
+  /** q59's twin, and q292's: the window arithmetic plus the Append-mode
+    * emission predicate — the watermark is the ms-floored max event time
+    * minus the delay, and only windows whose END has passed it are in
+    * the output.
+    */
+  private def valueWindowsSql: String =
+    s"""WITH e AS (SELECT (epoch_us(ts) // $windowUs) * $windowUs AS window_us,
+       |                  event_type, value FROM events),
+       |wm AS (SELECT MAX(epoch_ms(ts)) * 1000 - $delayUs AS w FROM events)
+       |SELECT window_us, event_type, COUNT(*) AS n_events,
+       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       |FROM e WHERE window_us + $windowUs <= (SELECT w FROM wm)
+       |GROUP BY window_us, event_type
+       |ORDER BY window_us, event_type""".stripMargin
+
+  /** q287's twin, each version the cumulative time-thirds prefix of the
+    * stream; q293 appends its fenced flag as `extra` columns.
+    */
+  private def ingestVersionsSql(extra: String): String =
+    s"""WITH e AS (SELECT epoch_us(ts) AS us, event_id FROM events),
+       |mm AS (SELECT MIN(us) AS tmin, MAX(us) AS tmax FROM e),
+       |c AS (SELECT tmin + (tmax - tmin) // 3 AS t1,
+       |        tmin + (tmax - tmin) * 2 // 3 AS t2 FROM mm),
+       |r AS (
+       |  SELECT 0 AS version, 1 AS n_files, us, event_id FROM e
+       |  WHERE us < (SELECT t1 FROM c)
+       |  UNION ALL
+       |  SELECT 1, 2, us, event_id FROM e WHERE us < (SELECT t2 FROM c)
+       |  UNION ALL
+       |  SELECT 2, 3, us, event_id FROM e)
+       |SELECT CAST(version AS BIGINT) AS version,
+       |  CAST(n_files AS BIGINT) AS n_files,
+       |  CAST(COUNT(*) AS BIGINT) AS n_rows,
+       |  CAST(SUM(${graft.queries.ShapeOpsQueries.manifestTerm("event_id")})
+       |    AS BIGINT) AS key_checksum$extra
+       |FROM r GROUP BY version, n_files ORDER BY version""".stripMargin
+
+  /** One version's per-source rollup of the documents where `pred`
+    * holds, with `chars` as the measure: the row of the change-feed
+    * consumers' oracles (q317, q328, q333).
+    */
+  private def sourceRollupSql(v: Int, chars: String, pred: String): String =
+    s"""SELECT CAST($v AS BIGINT) AS version, source,
+       |  CAST(COUNT(*) AS BIGINT) AS n_docs,
+       |  CAST(SUM($chars) AS BIGINT) AS sum_chars,
+       |  CAST(SUM(${graft.queries.ShapeOpsQueries
+               .manifestTerm("doc_id")}) AS BIGINT) AS key_checksum
+       |FROM documents WHERE $pred GROUP BY source""".stripMargin
+
+  /** q317's twin, and q333's: every maintained version ≡ the
+    * from-scratch as-of rollup, reconstructed from the q274 staging
+    * predicates (v0 = the doc_id%3≠2 initial load, v1 = +delta, v2 = the
+    * CoW delete) — q299's twin at EVERY version, not just the last.
+    */
+  private def lakeVersionsSql: String =
+    s"""SELECT * FROM (
+       |${sourceRollupSql(0, "n_chars", "doc_id % 3 <> 2")}
+       |UNION ALL
+       |${sourceRollupSql(1, "n_chars", "TRUE")}
+       |UNION ALL
+       |${sourceRollupSql(2, "n_chars", graft.queries.ShapeOpsQueries.sqlLakeV2Pred)}
+       |) ORDER BY version, source""".stripMargin
+
   def oracle: Map[String, String] = Map(
     // the q163/q186 convention taken one step further: the oracle IS
     // the batch twin's SQL VERBATIM (one definition, zero drift) —
@@ -2063,63 +2038,15 @@ object StreamingQueries extends graft.QueryFamily {
     // union+window PIT bit-for-bit
     "q259_stream_pit" ->
       graft.queries.PipelineOpsQueries.oracle("q256_pit_join"),
-    // Same window arithmetic + the Append-mode emission predicate: the
-    // watermark is the ms-floored max event time minus the delay, and
-    // only windows whose END has passed it are in the output.
-    "q59_stream_window" ->
-      s"""WITH e AS (SELECT (epoch_us(ts) // $windowUs) * $windowUs AS window_us,
-         |                  event_type, value FROM events),
-         |wm AS (SELECT MAX(epoch_ms(ts)) * 1000 - $delayUs AS w FROM events)
-         |SELECT window_us, event_type, COUNT(*) AS n_events,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         |FROM e WHERE window_us + $windowUs <= (SELECT w FROM wm)
-         |GROUP BY window_us, event_type
-         |ORDER BY window_us, event_type""".stripMargin,
+    "q59_stream_window" -> valueWindowsSql,
     "q69_stream_dedup" ->
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""".stripMargin,
-    // identical to q138's twin on purpose: streaming execution of the
-    // delta screen must be bit-identical to the batch execution
-    "q158_stream_delta_dedup" -> {
-      import graft.functions.TextFunctions.{sqlShingleHashes, sqlMinhash, minhashK, minhashBands, minhashBandRows}
-      val lo = graft.queries.ModelOpsQueries.deltaLo
-      val hi = graft.queries.ModelOpsQueries.deltaHi
-      val sigList = (0 until minhashK).map(k => sqlMinhash("hs", k))
-        .mkString("[", ",\n    ", "]")
-      s"""WITH hashes AS (SELECT doc_id, ${sqlShingleHashes("text")} AS hs
-         |      FROM documents),
-         |sig AS (SELECT doc_id, $sigList AS sig FROM hashes
-         |        WHERE len(hs) > 0),
-         |bands AS (
-         |  SELECT doc_id, sig, CAST(i AS INT) AS band,
-         |    sig[CAST($minhashBandRows * i + 1 AS INT)] AS h1,
-         |    sig[CAST($minhashBandRows * i + 2 AS INT)] AS h2
-         |  FROM sig, range(0, $minhashBands) r(i)),
-         |cand AS (
-         |  SELECT DISTINCT d.doc_id AS doc_id, i.doc_id AS match_id,
-         |    d.sig AS sd, i.sig AS si
-         |  FROM bands d JOIN bands i
-         |    ON i.band = d.band AND i.h1 = d.h1 AND i.h2 = d.h2
-         |    AND d.doc_id >= $lo AND d.doc_id < $hi
-         |    AND (i.doc_id < $lo OR i.doc_id >= $hi)),
-         |est AS (
-         |  SELECT doc_id, match_id,
-         |    CAST(len(list_filter(range(1, ${minhashK + 1}),
-         |      i -> sd[CAST(i AS INT)] = si[CAST(i AS INT)])) AS BIGINT) AS m
-         |  FROM cand),
-         |best AS (
-         |  SELECT doc_id,
-         |    arg_max(match_id, m * 10000000 - match_id) AS best_match,
-         |    CAST(arg_max(m, m * 10000000 - match_id) AS DOUBLE)
-         |      / $minhashK AS best_est,
-         |    CAST(COUNT(*) AS BIGINT) AS n_candidates
-         |  FROM est GROUP BY doc_id)
-         |SELECT s.doc_id, COALESCE(b.n_candidates, 0) AS n_candidates,
-         |  b.best_match, b.best_est
-         |FROM sig s LEFT JOIN best b ON b.doc_id = s.doc_id
-         |WHERE s.doc_id >= $lo AND s.doc_id < $hi
-         |ORDER BY s.doc_id""".stripMargin
-    },
+    // q138's twin VERBATIM (`ModelOpsQueries.oracle`): streaming
+    // execution of the delta screen must be bit-identical to the batch
+    // execution
+    "q158_stream_delta_dedup" ->
+      graft.queries.ModelOpsQueries.oracle("q138_delta_dedup"),
     // the from-scratch twin (shared constant): the streaming-built
     // delta index merged with the old index must equal the full index
     // bit-for-bit (delta doc_ids are disjoint)
@@ -2174,7 +2101,8 @@ object StreamingQueries extends graft.QueryFamily {
     // event time minus the delay) — Spark fires the timeout when the
     // watermark advances STRICTLY beyond the set timestamp.
     "q70_stream_sessions" -> gapSessionsSql,
-    // q281 is gated against q70's oracle VERBATIM: transformWithState
+    // q281 is gated against q70's oracle VERBATIM, the one
+    // `gapSessionsSql`: transformWithState
     // timers fire under the same strict-< watermark rule as
     // GroupState timeouts, so the two stateful operators must emit
     // the identical session set — the incremental-API cross-proof
@@ -2224,25 +2152,7 @@ object StreamingQueries extends graft.QueryFamily {
          |WHERE (p_us // $windowUs) * $windowUs + $windowUs
          |  <= (SELECT w FROM wm)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // each version = the cumulative time-thirds prefix of the stream
-    "q287_stream_lake_ingest" ->
-      s"""WITH e AS (SELECT epoch_us(ts) AS us, event_id FROM events),
-         |mm AS (SELECT MIN(us) AS tmin, MAX(us) AS tmax FROM e),
-         |c AS (SELECT tmin + (tmax - tmin) // 3 AS t1,
-         |        tmin + (tmax - tmin) * 2 // 3 AS t2 FROM mm),
-         |r AS (
-         |  SELECT 0 AS version, 1 AS n_files, us, event_id FROM e
-         |  WHERE us < (SELECT t1 FROM c)
-         |  UNION ALL
-         |  SELECT 1, 2, us, event_id FROM e WHERE us < (SELECT t2 FROM c)
-         |  UNION ALL
-         |  SELECT 2, 3, us, event_id FROM e)
-         |SELECT CAST(version AS BIGINT) AS version,
-         |  CAST(n_files AS BIGINT) AS n_files,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(SUM(${graft.queries.ShapeOpsQueries.manifestTerm("event_id")})
-         |    AS BIGINT) AS key_checksum
-         |FROM r GROUP BY version, n_files ORDER BY version""".stripMargin,
+    "q287_stream_lake_ingest" -> ingestVersionsSql(""),
     // each version of the materialized view = the cumulative-thirds
     // rollup at the (version, event_type) grain; the fold's decimal
     // exactness is what lets a value SUM hash-gate across three
@@ -2267,38 +2177,14 @@ object StreamingQueries extends graft.QueryFamily {
          |  version = 1 AS replay_fenced
          |FROM r GROUP BY version, event_type
          |ORDER BY version, event_type""".stripMargin,
-    // every maintained version ≡ the from-scratch as-of rollup,
-    // reconstructed from the q274 staging predicates (v0 = the
-    // doc_id%3≠2 initial load, v1 = +delta, v2 = the CoW delete) —
-    // q299's twin at EVERY version, not just the last
-    "q317_stream_cdf_consume" -> {
-      def row(v: Int, pred: String) =
-        s"""SELECT CAST($v AS BIGINT) AS version, source,
-           |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-           |  CAST(SUM(${graft.queries.ShapeOpsQueries
-                 .manifestTerm("doc_id")}) AS BIGINT) AS key_checksum
-           |FROM documents WHERE $pred GROUP BY source""".stripMargin
-      s"""SELECT * FROM (
-         |${row(0, "doc_id % 3 <> 2")}
-         |UNION ALL
-         |${row(1, "TRUE")}
-         |UNION ALL
-         |${row(2, graft.queries.ShapeOpsQueries.sqlLakeV2Pred)}
-         |) ORDER BY version, source""".stripMargin
-    },
+    "q317_stream_cdf_consume" -> lakeVersionsSql,
     // every maintained version reconstructed logically: v1 applies
     // the update (+500 on the even/7≡3 slice — an aggregate a
     // key-netting consumer misses entirely), v2 drops the odd/5≡0
     // slice; counts v0→v1 equal, sums differ
     "q328_stream_cdf_update" -> {
       def row(v: Int, chars: String, pred: String) =
-        s"""SELECT CAST($v AS BIGINT) AS version, source,
-           |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM($chars) AS BIGINT) AS sum_chars,
-           |  CAST(SUM(${graft.queries.ShapeOpsQueries
-                 .manifestTerm("doc_id")}) AS BIGINT) AS key_checksum
-           |FROM documents WHERE $pred GROUP BY source""".stripMargin
+        sourceRollupSql(v, chars, pred)
       val upd = "CASE WHEN doc_id % 2 = 0 AND doc_id % 7 = 3 " +
         "THEN n_chars + 500 ELSE n_chars END"
       s"""SELECT * FROM (
@@ -2309,25 +2195,11 @@ object StreamingQueries extends graft.QueryFamily {
          |${row(2, upd, "NOT (doc_id % 2 = 1 AND doc_id % 5 = 0)")}
          |) ORDER BY version, source""".stripMargin
     },
-    // q317's oracle VERBATIM: the maintained versions must equal the
-    // from-scratch as-of rollups whichever path produced them —
-    // bootstrap + tail here, full replay there
-    "q333_stream_bootstrap_tail" -> {
-      def row(v: Int, pred: String) =
-        s"""SELECT CAST($v AS BIGINT) AS version, source,
-           |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-           |  CAST(SUM(${graft.queries.ShapeOpsQueries
-                 .manifestTerm("doc_id")}) AS BIGINT) AS key_checksum
-           |FROM documents WHERE $pred GROUP BY source""".stripMargin
-      s"""SELECT * FROM (
-         |${row(0, "doc_id % 3 <> 2")}
-         |UNION ALL
-         |${row(1, "TRUE")}
-         |UNION ALL
-         |${row(2, graft.queries.ShapeOpsQueries.sqlLakeV2Pred)}
-         |) ORDER BY version, source""".stripMargin
-    },
+    // q317's oracle VERBATIM, the one `lakeVersionsSql`: the
+    // maintained versions must equal the from-scratch as-of rollups
+    // whichever path produced them — bootstrap + tail here, full
+    // replay there
+    "q333_stream_bootstrap_tail" -> lakeVersionsSql,
     // every downstream version reconstructed logically (update applied
     // at v1, delete at v2); file counts from the granule arithmetic
     // (the downstream layout), rewrites structural — each change
@@ -2358,38 +2230,13 @@ object StreamingQueries extends graft.QueryFamily {
          |) ORDER BY version""".stripMargin
     },
     // exactly-once across the resume: the split run's union must be
-    // the one-continuous-run result — q59's SQL VERBATIM (same agg,
-    // same emission predicate; one definition, zero drift)
-    "q292_stream_restart_recovery" ->
-      s"""WITH e AS (SELECT (epoch_us(ts) // $windowUs) * $windowUs AS window_us,
-         |                  event_type, value FROM events),
-         |wm AS (SELECT MAX(epoch_ms(ts)) * 1000 - $delayUs AS w FROM events)
-         |SELECT window_us, event_type, COUNT(*) AS n_events,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         |FROM e WHERE window_us + $windowUs <= (SELECT w FROM wm)
-         |GROUP BY window_us, event_type
-         |ORDER BY window_us, event_type""".stripMargin,
+    // the one-continuous-run result — q59's SQL VERBATIM, the one
+    // `valueWindowsSql` (same agg, same emission predicate)
+    "q292_stream_restart_recovery" -> valueWindowsSql,
     // q287's cumulative-thirds reconstruction, unchanged by the
     // zombie replay (the fence's whole contract) + the fenced flag
     "q293_stream_sink_fencing" ->
-      s"""WITH e AS (SELECT epoch_us(ts) AS us, event_id FROM events),
-         |mm AS (SELECT MIN(us) AS tmin, MAX(us) AS tmax FROM e),
-         |c AS (SELECT tmin + (tmax - tmin) // 3 AS t1,
-         |        tmin + (tmax - tmin) * 2 // 3 AS t2 FROM mm),
-         |r AS (
-         |  SELECT 0 AS version, 1 AS n_files, us, event_id FROM e
-         |  WHERE us < (SELECT t1 FROM c)
-         |  UNION ALL
-         |  SELECT 1, 2, us, event_id FROM e WHERE us < (SELECT t2 FROM c)
-         |  UNION ALL
-         |  SELECT 2, 3, us, event_id FROM e)
-         |SELECT CAST(version AS BIGINT) AS version,
-         |  CAST(n_files AS BIGINT) AS n_files,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(SUM(${graft.queries.ShapeOpsQueries.manifestTerm("event_id")})
-         |    AS BIGINT) AS key_checksum,
-         |  version = 1 AS replay_fenced
-         |FROM r GROUP BY version, n_files ORDER BY version""".stripMargin,
+      ingestVersionsSql(",\n  version = 1 AS replay_fenced"),
     "q79_stream_join" ->
       """WITH p AS (SELECT user_id, event_id AS p_event, epoch_us(ts) AS p_us
         |           FROM events WHERE event_type = 'purchase'),

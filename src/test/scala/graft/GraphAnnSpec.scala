@@ -17,6 +17,18 @@ class GraphAnnSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  test("q296 bands the corpus once: the band width costs one count, " +
+      "not one per banded slice") {
+    // 30 jobs before the corpus was banded once per gate: four
+    // embeddings counts (old slice, then old, new and full in the
+    // merge), each with its own read; the slices are now filters on
+    // one banded frame
+    val parentJobs = 30
+    val Seq((_, work)) = graft.tools.Profile.run(spark, dir, Seq("q296_"))
+    assert(work.get.jobs <= parentJobs - 3,
+      s"q296 ran ${work.get.jobs} Spark jobs")
+  }
+
   test("staged stored artifacts are content-identical to fresh builds " +
       "(the round-19 memoized-index discipline cannot drift)") {
     import graft.queries.SimilarityQueries._

@@ -172,6 +172,12 @@ class StreamingSpec extends SparkSuite {
     assert(gotNull === expectedNull)
   }
 
+  test("verbatim oracle twins stay one text: q292 = q59, q333 = q317") {
+    val oracle = graft.streaming.StreamingQueries.oracle
+    assert(oracle("q292_stream_restart_recovery") === oracle("q59_stream_window"))
+    assert(oracle("q333_stream_bootstrap_tail") === oracle("q317_stream_cdf_consume"))
+  }
+
   test("streamingDedup drops same-key duplicates within the watermark") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
